@@ -18,15 +18,46 @@ observable semantics:
 
 Implemented with the JVM Hadoop FileSystem through the SparkContext so the
 same code runs against any Hadoop-compatible store, not just local disk.
+
+Like the namenode's in-memory inode tree, the catalog keeps a handle per
+table it has resolved (`table`): the `DataFrame` of one
+`spark.read.parquet` (schema and file index already resolved) and, once
+asked for, its sorted partition keys. A handle is valid for one version
+of the table, stamped by the modification time of the `_SUCCESS` marker
+that every `put` rewrites, so each request costs one FileSystem stat
+instead of a schema-inference job.
 """
 
 from __future__ import annotations
 
+import threading
+from dataclasses import dataclass
 from datetime import datetime
 
-from pyspark.sql import SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["EdfsCatalog"]
+from .sources import scan as SCN
+
+__all__ = ["EdfsCatalog", "TableHandle"]
+
+
+@dataclass
+class TableHandle:
+    """One resolved version of a table. `stamp` is the `_SUCCESS`
+    modification time it was read at (None for a table without the
+    marker, which is never cached)."""
+
+    stamp: int | None
+    df: DataFrame
+    keys: list | None = None
+
+    def partition_keys(self) -> list:
+        """Sorted partition keys, computed on first use; a racing second
+        computation stores the same list."""
+        if self.keys is None:
+            self.keys = SCN.list_partitions(self.df)
+        return self.keys
 
 
 class EdfsCatalog:
@@ -39,6 +70,10 @@ class EdfsCatalog:
         self._Path = jvm.org.apache.hadoop.fs.Path
         self._fs = self._Path(self.warehouse).getFileSystem(self._hadoop_conf)
         self._fs.mkdirs(self._Path(self.warehouse))
+        # table path -> handle; the HTTP server runs each request on its
+        # own thread, so the dict is only touched under the lock
+        self._handles: dict[str, TableHandle] = {}
+        self._lock = threading.Lock()
 
     def _resolve(self, path: str):
         path = "/" + path.strip("/")
@@ -116,8 +151,40 @@ class EdfsCatalog:
             if len(children) > 0 and not self._is_table_dir(p):
                 raise OSError(f"rm: {norm}: directory is not empty")
         self._fs.delete(p, True)
+        with self._lock:
+            self._handles.pop(self.warehouse + norm, None)
         return {"removed": norm}
 
     def table_path(self, path: str) -> str:
         _, norm = self._resolve(path)
         return self.warehouse + norm
+
+    def _stamp(self, p) -> int | None:
+        """Modification time of the table's `_SUCCESS` marker, or None
+        when there is none."""
+        try:
+            return int(self._fs.getFileStatus(self._Path(p, "_SUCCESS")).getModificationTime())
+        except Py4JJavaError as e:
+            if "FileNotFoundException" in e.java_exception.getClass().getName():
+                return None
+            raise
+
+    def table(self, path: str) -> TableHandle:
+        """The handle for the table at `path`, re-read only when its
+        `_SUCCESS` stamp changed since the cached handle was made. The
+        stamp is taken before the read, so a handle is never older than
+        its stamp. A table without the marker is read fresh every time."""
+        p, norm = self._resolve(path)
+        key = self.warehouse + norm
+        stamp = self._stamp(p)
+        if stamp is None:
+            if not self._fs.exists(p):
+                raise FileNotFoundError(f"{norm}: no such file or directory")
+            return TableHandle(None, self.spark.read.parquet(key))
+        with self._lock:
+            handle = self._handles.get(key)
+        if handle is None or handle.stamp != stamp:
+            handle = TableHandle(stamp, self.spark.read.parquet(key))
+            with self._lock:
+                self._handles[key] = handle
+        return handle

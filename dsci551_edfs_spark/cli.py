@@ -24,11 +24,14 @@ EDFS204 empty, EDFS400 user error. Aggregates format as
 "The overall {x} is {v:.3f}" (`combined_flask.py:770`).
 
 Intentional divergence: `getPartitionLocations` returns
-`{partition: {key, rows, files}}` rather than the reference's replica map
+`{partitions: {k: {key, rows}}}` rather than the reference's replica map
 `{Replica k: {partition: {datanode: block}}}` (`combined_flask.py:477-487`)
 — replication/datanode placement is delegated to the storage layer
 (HDFS/object store) per SURVEY.md §1.3, so there is no replica dimension
-to report; `files` lists the physical parquet files backing the partition.
+to report; each partition gives its key and row count.
+
+Every table a command reads comes from `EdfsCatalog.table`, a handle that
+is resolved once per table version and reused across requests.
 
 Run: ``python -m dsci551_edfs_spark.cli [--warehouse DIR]`` for a REPL, or
 pass a single command after ``--``.
@@ -37,6 +40,7 @@ pass a single command after ``--``.
 from __future__ import annotations
 
 import json
+import os
 import shlex
 import sys
 
@@ -94,11 +98,6 @@ class EdfsShell:
     def _err(self, msg: str) -> dict:
         return {"response": msg, "status": "EDFS400"}
 
-    def _table(self, path: str) -> str:
-        if not self.catalog.exists(path):
-            raise FileNotFoundError(f"{path}: no such file or directory")
-        return self.catalog.table_path(path)
-
     def _agg(self, kind: str, args: list[str], bound_col: str | None = None) -> dict:
         if bound_col is not None:
             # hardcoded-column route (fs_commands.py:396-460): the column is
@@ -109,7 +108,7 @@ class EdfsShell:
         path, col = args[0], args[1]
         debug = len(args) >= 3 and args[2].lower() == "true"
         hash_value = args[3] if len(args) >= 4 else None
-        df = self.spark.read.parquet(self._table(path))
+        df = self.catalog.table(path).df
         fn = {"avg": AGG.get_avg, "max": AGG.get_max, "min": AGG.get_min}[kind]
         value = fn(df, col, hash_value=hash_value)
         out = {"result": AGG.format_result(kind, value)}
@@ -144,7 +143,7 @@ class EdfsShell:
                 # an action envelope the frontend (or REPL) acts on
                 return self._ok({"action": "clear"})
             if cmd == "cat":
-                df = SCN.cat(self.spark, self._table(args[0]))
+                df = SCN.cat(self.catalog.table(args[0]).df)
                 return self._ok(self._emit_csv(df))
             if cmd == "rm":
                 return self._ok(self.catalog.rm(args[0]))
@@ -159,10 +158,11 @@ class EdfsShell:
                 return self._ok(manifest)
             if cmd == "getPartitionLocations":
                 return self._ok(
-                    SCN.get_partition_locations(self.spark, self._table(args[0]))
+                    SCN.get_partition_locations(self.catalog.table(args[0]).df)
                 )
             if cmd == "readPartition":
-                df = SCN.read_partition(self.spark, self._table(args[0]), int(args[1]))
+                table = self.catalog.table(args[0])
+                df = SCN.read_partition(table.df, int(args[1]), table.partition_keys())
                 return self._ok(self._emit_csv(df))
             if cmd == "getAvg":
                 return self._agg("avg", args)
@@ -237,7 +237,11 @@ def repl(shell: EdfsShell, input_fn=input, write=None) -> int:
 
 def main(argv: list[str] | None = None) -> int:
     argv = sys.argv[1:] if argv is None else argv
-    warehouse = "/root/repo/.scratch/warehouse"
+    scratch = os.environ.get(
+        "SPARK_GRAFT_SCRATCH",
+        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"),
+    )
+    warehouse = os.path.join(scratch, "warehouse")
     if "--warehouse" in argv:
         i = argv.index("--warehouse")
         warehouse = argv[i + 1]

@@ -102,7 +102,7 @@ def edfs_cat_roundtrip(spark, sf_dir):
     `combined_flask.py:324-436` + `:270-322` end-to-end."""
     dest = _scratch_dir("cat")
     ING.put_dataframe(_t(spark, sf_dir, "region"), dest, 3, "r_regionkey")
-    return SCN.cat(spark, dest)
+    return SCN.cat(spark.read.parquet(dest))
 
 
 @q(
@@ -115,7 +115,7 @@ def edfs_read_partition(spark, sf_dir):
     (`combined_flask.py:492-547`)."""
     dest = _scratch_dir("rp")
     ING.put_dataframe(_t(spark, sf_dir, "lineitem"), dest, 3, "l_returnflag")
-    return SCN.read_partition(spark, dest, 1)
+    return SCN.read_partition(spark.read.parquet(dest), 1)
 
 
 # =====================================================================

@@ -148,13 +148,26 @@ def put_dataframe(
     out.repartition(F.col(PARTITION_COL)).write.mode("overwrite").partitionBy(
         PARTITION_COL
     ).parquet(destination)
-    n_parts = out.select(PARTITION_COL).distinct().count()
     return {
         "destination": destination,
         "partition_column": PARTITION_COL,
         "source_hash_column": hash_col,
-        "num_partitions": int(n_parts),
+        "num_partitions": _count_partition_dirs(df.sparkSession, destination),
     }
+
+
+def _count_partition_dirs(spark: SparkSession, destination: str) -> int:
+    """Partition count of a table just written: one `PARTITION_COL=<value>`
+    directory per distinct value, listed with the Hadoop FileSystem
+    rather than by re-running the ingest pipeline for a distinct count."""
+    path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(destination)
+    fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    prefix = PARTITION_COL + "="
+    return sum(
+        1
+        for st in fs.listStatus(path)
+        if st.isDirectory() and st.getPath().getName().startswith(prefix)
+    )
 
 
 def put(

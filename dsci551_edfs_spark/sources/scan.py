@@ -10,6 +10,10 @@ Reference semantics:
 - `getPartitionLocations?path` returns the partition map
   (`combined_flask.py:438-490`).
 
+Every function takes the table's `DataFrame` (as the aggregates do), so
+a caller that already holds a resolved table — the shell's catalog
+handle — pays no second read or schema inference.
+
 Spark design: a `cat` is an order-restoring parquet scan; a `readPartition`
 is a **partition-pruned** scan (filter on the Hive partition column reaches
 the DataSource and prunes directories — no data read outside the target
@@ -20,7 +24,7 @@ re-implemented.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .ingest import INDEX_COL, PARTITION_COL
@@ -28,12 +32,15 @@ from .ingest import INDEX_COL, PARTITION_COL
 __all__ = ["cat", "read_partition", "get_partition_locations", "list_partitions"]
 
 
-def _read(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+def _key_order(key):
+    """Sort key for partition values: nulls first, like Spark's ascending
+    order."""
+    return (key is not None, key)
 
 
-def cat(spark: SparkSession, path: str) -> DataFrame:
-    """Full scan with ingest-order restoration (`combined_flask.py:313-314`).
+def cat(df: DataFrame) -> DataFrame:
+    """Full scan of a table frame with ingest-order restoration
+    (`combined_flask.py:313-314`).
 
     ``monotonically_increasing_id`` is monotone in ingest order, so sorting
     by it restores the original row order; the column is then dropped, as the
@@ -41,60 +48,56 @@ def cat(spark: SparkSession, path: str) -> DataFrame:
     callers that don't need a total order should skip `cat` and scan
     directly.
     """
-    df = _read(spark, path)
     drop = [c for c in (INDEX_COL, PARTITION_COL) if c in df.columns]
     if INDEX_COL in df.columns:
         df = df.orderBy(INDEX_COL)
     return df.drop(*drop)
 
 
-def list_partitions(spark: SparkSession, path: str) -> list[str]:
+def list_partitions(df: DataFrame) -> list:
     """Sorted distinct partition-key values (a metadata-only scan: only the
     partition column is read, which for a Hive layout is directory names)."""
-    df = _read(spark, path)
     if PARTITION_COL not in df.columns:
         return []
     rows = df.select(PARTITION_COL).distinct().collect()
-    return sorted(r[0] for r in rows)
+    return sorted((r[0] for r in rows), key=_key_order)
 
 
-def read_partition(spark: SparkSession, path: str, partition: int) -> DataFrame:
+def read_partition(df: DataFrame, partition: int, keys: list | None = None) -> DataFrame:
     """1-indexed single-partition read (`combined_flask.py:492-547`).
 
     Partition numbering = 1-based index into the sorted distinct partition
     keys (the reference numbers blocks by ingest ``order``/``offset``; with a
-    Hive layout the key itself is the stable identity). The filter on the
-    partition column is pushed down → Catalyst prunes to one directory.
+    Hive layout the key itself is the stable identity). `keys` are those
+    sorted keys when the caller already has them, else `list_partitions`
+    computes them. The filter on the partition column is pushed down →
+    Catalyst prunes to one directory.
     """
-    keys = list_partitions(spark, path)
+    if keys is None:
+        keys = list_partitions(df)
     if not 1 <= partition <= len(keys):
         raise IndexError(f"partition {partition} out of range 1..{len(keys)}")
-    key = keys[partition - 1]
-    df = _read(spark, path).filter(F.col(PARTITION_COL) == key)
+    df = df.filter(F.col(PARTITION_COL) == keys[partition - 1])
     if INDEX_COL in df.columns:
         df = df.orderBy(INDEX_COL)
     return df.drop(PARTITION_COL, INDEX_COL)
 
 
-def get_partition_locations(spark: SparkSession, path: str) -> dict:
-    """Partition map: {partition# → {key, rows, files}}.
+def get_partition_locations(df: DataFrame) -> dict:
+    """Partition map: {partition# → {key, rows}}.
 
     The reference returns {replica → {partition# → {datanode → block_id}}}
     (`combined_flask.py:477-487`); replica/datanode placement belongs to the
-    storage layer here, so the map reports the partition key, row count and
-    backing file count instead — the information a query planner actually
-    uses.
+    storage layer here, so the map reports each partition's key and row
+    count instead. A table without a partition column maps each scan split
+    to `{key: None}`. At most one row per key comes back, so the rows are
+    sorted on the driver rather than by a Spark sort.
     """
-    df = _read(spark, path)
     if PARTITION_COL not in df.columns:
         n = df.rdd.getNumPartitions()
         return {"partitions": {i + 1: {"key": None} for i in range(n)}}
-    counts = (
-        df.groupBy(PARTITION_COL)
-        .agg(F.count("*").alias("rows"))
-        .orderBy(PARTITION_COL)
-        .collect()
-    )
+    counts = df.groupBy(PARTITION_COL).agg(F.count("*").alias("rows")).collect()
+    counts.sort(key=lambda r: _key_order(r[PARTITION_COL]))
     return {
         "partitions": {
             i + 1: {"key": r[PARTITION_COL], "rows": r["rows"]}

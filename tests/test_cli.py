@@ -2,14 +2,17 @@
 through one session against a scratch warehouse (mkdir → put → ls → cat →
 getPartitionLocations → readPartition → aggregates → rm)."""
 
+import contextlib
 import csv
 import io
 import os
 import tempfile
+import uuid
 
 import pytest
 
-from dsci551_edfs_spark.cli import EdfsShell
+from dsci551_edfs_spark.cli import EdfsShell, main
+from dsci551_edfs_spark.operators import aggregates as AGG
 from dsci551_edfs_spark.sources.registry import load_table
 
 SCRATCH = "/root/repo/.scratch/test_cli"
@@ -173,3 +176,125 @@ def test_cli_query_dispatch(shell):
     assert "bpe_train_merges  (rows-only)" not in listing["response"]
     bad = shell.execute("query no_such_thing")
     assert bad["status"] != "EDFS200"
+
+
+# ------------------------------------------------ table-handle freshness
+
+
+def _write_csv(name: str, values: list[int]) -> str:
+    """A tiny CSV `id,g,v` with g alternating 0/1 and the given v's."""
+    path = os.path.join(SCRATCH, name)
+    with open(path, "w") as f:
+        f.write("id,g,v\n")
+        for i, v in enumerate(values):
+            f.write(f"{i},{i % 2},{v}\n")
+    return path
+
+
+def _avg(shell, path: str, col: str = "v") -> str:
+    out = shell.execute(f"getAvg {path} {col}")
+    assert out["status"] == "EDFS200", out
+    return out["response"]["result"]
+
+
+def test_overwriting_put_is_read_fresh(shell):
+    first = _write_csv("fresh_1.csv", [1, 2, 3])
+    second = _write_csv("fresh_2.csv", [10, 20, 30])
+    assert shell.execute(f"put {first} /fresh/t.csv 2 g")["status"] == "EDFS200"
+    assert _avg(shell, "/fresh/t.csv") == "The overall average is 2.000"
+    assert shell.execute(f"put {second} /fresh/t.csv 2 g")["status"] == "EDFS200"
+    assert _avg(shell, "/fresh/t.csv") == "The overall average is 20.000"
+
+
+def test_rm_drops_the_handle(shell):
+    two_keys = _write_csv("rm_1.csv", [1, 2, 3, 4])
+    one_key = _write_csv("rm_2.csv", [7])  # only g=0
+    assert shell.execute(f"put {two_keys} /gone/t.csv 2 g")["status"] == "EDFS200"
+    assert _avg(shell, "/gone/t.csv") == "The overall average is 2.500"
+    assert shell.execute("readPartition /gone/t.csv 2")["status"] == "EDFS200"
+
+    assert shell.execute("rm /gone/t.csv")["status"] == "EDFS200"
+    assert shell.execute("cat /gone/t.csv")["status"] == "EDFS400"
+    assert shell.execute("readPartition /gone/t.csv 1")["status"] == "EDFS400"
+
+    assert shell.execute(f"put {one_key} /gone/t.csv 2 g")["status"] == "EDFS200"
+    assert _avg(shell, "/gone/t.csv") == "The overall average is 7.000"
+    # partition keys come from the new version too: one key left
+    assert shell.execute("readPartition /gone/t.csv 1")["status"] == "EDFS200"
+    assert shell.execute("readPartition /gone/t.csv 2")["status"] == "EDFS400"
+
+
+def test_put_from_another_shell_is_seen(spark, shell):
+    old = _write_csv("other_1.csv", [1, 2, 3, 4])
+    new = _write_csv("other_2.csv", [5])
+    assert shell.execute(f"put {old} /shared/t.csv 2 g")["status"] == "EDFS200"
+    assert _avg(shell, "/shared/t.csv") == "The overall average is 2.500"
+    assert shell.execute("readPartition /shared/t.csv 2")["status"] == "EDFS200"
+
+    other = EdfsShell(spark, shell.catalog.warehouse)
+    assert other.execute(f"put {new} /shared/t.csv 2 g")["status"] == "EDFS200"
+    assert _avg(shell, "/shared/t.csv") == "The overall average is 5.000"
+    cat = shell.execute("cat /shared/t.csv")["response"]
+    assert [r["v"] for r in csv.DictReader(io.StringIO(cat))] == ["5"]
+    assert shell.execute("readPartition /shared/t.csv 2")["status"] == "EDFS400"
+
+
+def test_default_warehouse_follows_scratch_env(spark, tmp_path, monkeypatch, capsys):
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
+    assert main(["--", "mkdir", "/m"]) == 0
+    assert '"EDFS200"' in capsys.readouterr().out
+    assert (tmp_path / "warehouse" / "m").is_dir()
+
+
+# ------------------------------------------------------- job counts
+
+
+@contextlib.contextmanager
+def _job_group(spark):
+    """Run the block's Spark jobs in a fresh job group; yields a callable
+    returning how many jobs the group has launched so far."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        yield lambda: len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_warm_aggregate_runs_only_its_own_jobs(spark, shell, nation_csv):
+    assert shell.execute(f"put {nation_csv} /jobs/agg.csv 4 n_regionkey")[
+        "status"
+    ] == "EDFS200"
+    _avg(shell, "/jobs/agg.csv", "n_nationkey")  # resolves the handle
+    df = spark.read.parquet(shell.catalog.table_path("/jobs/agg.csv"))
+
+    with _job_group(spark) as jobs:
+        AGG.get_avg(df, "n_nationkey")
+        own = jobs()
+    with _job_group(spark) as jobs:
+        _avg(shell, "/jobs/agg.csv", "n_nationkey")
+        warm = jobs()
+    with _job_group(spark) as jobs:
+        _avg(EdfsShell(spark, shell.catalog.warehouse), "/jobs/agg.csv", "n_nationkey")
+        cold = jobs()
+    assert own >= 1
+    assert warm == own
+    # a shell that has not read the table yet pays schema inference
+    assert cold > own
+
+
+def test_warm_read_partition_runs_no_job_before_emit(spark, shell, nation_csv, monkeypatch):
+    assert shell.execute(f"put {nation_csv} /jobs/rp.csv 4 n_regionkey")[
+        "status"
+    ] == "EDFS200"
+    assert shell.execute("readPartition /jobs/rp.csv 1")["status"] == "EDFS200"
+
+    before_emit = []
+    with _job_group(spark) as jobs:
+        monkeypatch.setattr(
+            EdfsShell, "_emit_csv", lambda self, df: before_emit.append(jobs()) or ""
+        )
+        assert shell.execute("readPartition /jobs/rp.csv 2")["status"] == "EDFS200"
+    assert before_emit == [0]

@@ -7,6 +7,7 @@ import csv
 import io
 import json
 import os
+import sys
 import tempfile
 import urllib.parse
 import urllib.request
@@ -103,6 +104,35 @@ def test_full_session_over_http(server, nation_csv):
 
     assert get(server, "rm", path="/data/nation.csv")["status"] == "EDFS200"
     assert get(server, "rm", path="/data")["status"] == "EDFS200"
+
+
+def test_concurrent_cold_aggregates_agree(server, nation_csv):
+    """8 requests race to resolve one table's handle; every one answers."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    out = get(
+        server,
+        "put",
+        source=nation_csv,
+        destination="/conc/nation.csv",
+        partitions=4,
+        hash="n_regionkey",
+    )
+    assert out["status"] == "EDFS200"
+
+    def avg(_):
+        return get(server, "getAvg", path="/conc/nation.csv", col="n_nationkey")
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # interleave the handler threads finely
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            futures = [pool.submit(avg, i) for i in range(8)]
+            outs = [f.result(timeout=120) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    assert [o["status"] for o in outs] == ["EDFS200"] * 8
+    assert {o["response"]["result"] for o in outs} == {"The overall average is 12.000"}
 
 
 def test_firebase_alias_family(server, nation_csv):

@@ -22,7 +22,7 @@ def test_put_cat_restores_order(spark, dest):
     rows = [(i, f"v{i}") for i in range(100)]
     df = spark.createDataFrame(rows, "id int, val string").repartition(4)
     ingest.put_dataframe(df.orderBy("id"), dest, 4, "val")
-    out = scan.cat(spark, dest).collect()
+    out = scan.cat(spark.read.parquet(dest)).collect()
     # cat restores ingest order via the index column (combined_flask.py:313-314)
     assert [r["id"] for r in out] == sorted(r["id"] for r in out)
     assert set(out[0].asDict()) == {"id", "val"}
@@ -30,21 +30,26 @@ def test_put_cat_restores_order(spark, dest):
 
 def test_null_hash_keys_form_own_partition(spark, dest):
     # nulls filled with "NULL" sentinel → own partition (combined_flask.py:405-408)
-    rows = [("x", 1), ("y", 2), (None, 3), (None, 4)]
+    rows = [("x", 1), ("y", 2), (None, 3), (None, 4), ("", 5)]
     df = spark.createDataFrame(rows, "k string, v int")
     ingest.put_dataframe(df, dest, 2, "k")
-    keys = scan.list_partitions(spark, dest)
+    keys = scan.list_partitions(spark.read.parquet(dest))
     assert "NULL" in keys
-    locs = scan.get_partition_locations(spark, dest)
+    # an empty-string key is written as Hive's default partition and reads
+    # back as a null key, which sorts first, as in Spark's ascending order
+    assert keys == [None, "NULL", "x", "y"]
+    locs = scan.get_partition_locations(spark.read.parquet(dest))
+    assert [v["key"] for v in locs["partitions"].values()] == keys
     by_key = {v["key"]: v["rows"] for v in locs["partitions"].values()}
     assert by_key["NULL"] == 2
+    assert by_key[None] == 1
 
 
 def test_numeric_null_hash_fill_zero(spark, dest):
     rows = [(1.5, 1), (None, 2)]
     df = spark.createDataFrame(rows, "k double, v int")
     ingest.put_dataframe(df, dest, 2, "k")
-    keys = scan.list_partitions(spark, dest)
+    keys = scan.list_partitions(spark.read.parquet(dest))
     assert any(k in ("0", "0.0") for k in keys)
 
 
@@ -52,10 +57,11 @@ def test_range_binning_fallback(spark, dest):
     # no hash column → equal-width bins on first column labeled index_i
     # (combined_flask.py:411-415, :1241-1242)
     df = spark.createDataFrame([(float(i),) for i in range(100)], "x double")
-    ingest.put_dataframe(df, dest, 4, None)
-    keys = scan.list_partitions(spark, dest)
+    manifest = ingest.put_dataframe(df, dest, 4, None)
+    assert manifest["num_partitions"] == 4
+    keys = scan.list_partitions(spark.read.parquet(dest))
     assert keys == ["index_0", "index_1", "index_2", "index_3"]
-    locs = scan.get_partition_locations(spark, dest)
+    locs = scan.get_partition_locations(spark.read.parquet(dest))
     sizes = [v["rows"] for v in locs["partitions"].values()]
     assert sum(sizes) == 100
     assert max(sizes) - min(sizes) <= 1  # equal-width on uniform data
@@ -64,10 +70,10 @@ def test_range_binning_fallback(spark, dest):
 def test_read_partition_pruned_and_bounds(spark, dest):
     df = spark.createDataFrame([(k, i) for i, k in enumerate("aabbcc")], "k string, v int")
     ingest.put_dataframe(df, dest, 3, "k")
-    p1 = scan.read_partition(spark, dest, 1)
+    p1 = scan.read_partition(spark.read.parquet(dest), 1)
     assert {r["k"] for r in p1.collect()} == {"a"}
     with pytest.raises(IndexError):
-        scan.read_partition(spark, dest, 4)
+        scan.read_partition(spark.read.parquet(dest), 4)
     # the partition filter must reach the scan as a partition filter
     from dsci551_edfs_spark.plans.debug import explain_str
 
@@ -89,7 +95,7 @@ def test_put_csv_end_to_end(spark, tmp_path, dest):
     src.write_text("k,v\na,1\nb,2\na,3\n")
     manifest = ingest.put(spark, str(src), dest, 2, "k")
     assert manifest["num_partitions"] == 2
-    out = scan.cat(spark, dest).collect()
+    out = scan.cat(spark.read.parquet(dest)).collect()
     assert [(r["k"], r["v"]) for r in out] == [("a", 1), ("b", 2), ("a", 3)]
 
 
