@@ -378,6 +378,54 @@ def _prev_canonicals(here: str, rnd: int, n: int = 2) -> list[dict]:
     return out
 
 
+def _median_spread(xs: list[float]) -> tuple[float, float]:
+    """(median, max - min) of ``xs``, rounded to ms; the upper median
+    when ``len(xs)`` is even."""
+    xs = sorted(xs)
+    return round(xs[len(xs) // 2], 3), round(xs[-1] - xs[0], 3)
+
+
+def _timed_runs(
+    spark, name: str, fn, sf_dir: str, reps: int, release_cached
+) -> dict:
+    """THE timed region: build query ``name``'s plan with ``fn`` and
+    force it with a noop-sink write (full materialization, no driver
+    transfer), ``reps`` times, then ``release_cached()`` its pinned
+    intermediates. Runs 2..n deliberately reuse run 1's pinned
+    intermediates via CacheManager plan matching (warm steady state).
+
+    Returns each run's ``(construct_s, exec_s)`` under "runs", the
+    median and max-min spread of the run totals, and — for a
+    `_SPLIT_PROVIDERS` query whose components were read after every
+    run — the medians of its startup/steady components under "split"
+    (None otherwise)."""
+    runs: list[tuple[float, float]] = []
+    comps = []
+    for _ in range(reps):
+        t0 = time.perf_counter()
+        df = fn(spark, sf_dir)
+        t1 = time.perf_counter()
+        df.write.mode("overwrite").format("noop").save()
+        runs.append((t1 - t0, time.perf_counter() - t1))
+        c = _split_components(name)
+        if c is not None:
+            comps.append(c)
+    release_cached()
+    median_s, spread_s = _median_spread([c + e for c, e in runs])
+    split = None
+    if len(comps) == len(runs):
+        k_start, k_steady = _SPLIT_PROVIDERS[name][2:]
+        steady_s, steady_spread = _median_spread([c[1] for c in comps])
+        split = {
+            "startup_key": k_start,
+            "startup_s": _median_spread([c[0] for c in comps])[0],
+            "steady_key": k_steady,
+            "steady_s": steady_s,
+            "steady_spread": steady_spread,
+        }
+    return {"runs": runs, "median_s": median_s, "spread_s": spread_s, "split": split}
+
+
 def _measure_r1_quiet(
     spark, queries: dict, r1_set: list[str], release_cached, reps: int = 5
 ) -> dict:
@@ -391,16 +439,8 @@ def _measure_r1_quiet(
     t: dict[str, float] = {}
     s: dict[str, float] = {}
     for name in r1_set:
-        fn = queries[name]
-        runs = []
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            fn(spark, SF_DIR).write.mode("overwrite").format("noop").save()
-            runs.append(time.perf_counter() - t0)
-        release_cached()
-        runs.sort()
-        t[name] = round(runs[len(runs) // 2], 3)
-        s[name] = round(runs[-1] - runs[0], 3)
+        r = _timed_runs(spark, name, queries[name], SF_DIR, reps, release_cached)
+        t[name], s[name] = r["median_s"], r["spread_s"]
     return {
         "method": f"median_of_{reps}",
         "total_s": round(sum(t.values()), 3),
@@ -617,40 +657,16 @@ def main() -> None:
     spreads: dict[str, float] = {}
     splits: dict[str, dict] = {}
     for name in HEADLINE:
-        fn = QUERIES[name]
         # median-of-3: the ±30% ambient band around best-of-2 mis-flagged
         # regressions two rounds running; a 3-run median is stable against
         # a single slow outlier while still reporting steady-state
-        # throughput (runs 2-3 reuse run 1's pinned intermediates via
-        # CacheManager plan matching — deliberate: the 100 TB posture
-        # cares about warm steady state, and release between runs would
-        # change the methodology mid-history)
-        runs = []
-        comps = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            df = fn(spark, SF_DIR)
-            df.write.mode("overwrite").format("noop").save()
-            runs.append(time.perf_counter() - t0)
-            c = _split_components(name)
-            if c is not None:
-                comps.append(c)
-        release_cached()  # between queries only
-        if len(comps) == len(runs):
-            # component medians reported directly; timings[name] stays
-            # the FULL median for cross-round comparability
-            startups = sorted(c[0] for c in comps)
-            steady = sorted(c[1] for c in comps)
-            splits[name] = {
-                "startup_key": _SPLIT_PROVIDERS[name][2],
-                "startup_s": round(startups[1], 3),
-                "steady_key": _SPLIT_PROVIDERS[name][3],
-                "steady_s": round(steady[1], 3),
-                "steady_spread": round(steady[2] - steady[0], 3),
-            }
-        runs.sort()
-        timings[name] = round(runs[1], 3)
-        spreads[name] = round(runs[2] - runs[0], 3)
+        # throughput (release between runs would change the methodology
+        # mid-history). timings[name] stays the FULL median for
+        # cross-round comparability; split components are reported apart
+        r = _timed_runs(spark, name, QUERIES[name], SF_DIR, 3, release_cached)
+        timings[name], spreads[name] = r["median_s"], r["spread_s"]
+        if r["split"] is not None:
+            splits[name] = r["split"]
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     # the suite has grown every round (r1: 25 queries, r4: 40); the r1

@@ -237,11 +237,9 @@ def repl(shell: EdfsShell, input_fn=input, write=None) -> int:
 
 def main(argv: list[str] | None = None) -> int:
     argv = sys.argv[1:] if argv is None else argv
-    scratch = os.environ.get(
-        "SPARK_GRAFT_SCRATCH",
-        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"),
-    )
-    warehouse = os.path.join(scratch, "warehouse")
+    from .memo import scratch_root
+
+    warehouse = os.path.join(scratch_root(), "warehouse")
     if "--warehouse" in argv:
         i = argv.index("--warehouse")
         warehouse = argv[i + 1]

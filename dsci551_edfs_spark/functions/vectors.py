@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = ["as_double", "dot", "norm", "cosine", "l2_distance", "normalize"]
+__all__ = ["as_double", "dot", "norm", "normalize"]
 
 
 def as_double(v: Column | str) -> Column:
@@ -31,20 +31,6 @@ def dot(a: Column, b: Column) -> Column:
 
 def norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
 
 
 def normalize(a: Column) -> Column:

@@ -37,7 +37,19 @@ from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
-SCRATCH = os.environ.get("SPARK_GRAFT_SCRATCH", "/root/repo/.scratch")
+
+def scratch_root() -> str:
+    """The one scratch root every program write falls under:
+    $SPARK_GRAFT_SCRATCH, else `.scratch` next to the package."""
+    return os.environ.get(
+        "SPARK_GRAFT_SCRATCH",
+        os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+        ),
+    )
+
+
+SCRATCH = scratch_root()
 
 # build seconds observed by THIS process, keyed by memo tag; 0.0 when the
 # artifact was already on disk. bench.py reads this to itemize

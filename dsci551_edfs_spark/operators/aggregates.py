@@ -49,10 +49,6 @@ __all__ = [
     "partition_debug",
     "format_result",
     "HARDCODED_AVG_COLUMNS",
-    "get_avg_family_income",
-    "get_avg_time_in_us",
-    "get_avg_grip_strength",
-    "get_avg_arm_circumference",
 ]
 
 # Hardcoded-column endpoints, surface parity with the reference's NHANES
@@ -96,26 +92,6 @@ def get_avg(df: DataFrame, col: str, hash_value: Any | None = None) -> float | N
     validate_numeric(df, col)
     row = _prune(df, hash_value).agg(F.avg(col).alias("v")).collect()[0]
     return row["v"]
-
-
-def get_avg_family_income(df: DataFrame, hash_value: Any | None = None) -> float | None:
-    """`getAvgFamilyIncome` (`fs_commands.py:396-427`): avg of INDFMIN2."""
-    return get_avg(df, HARDCODED_AVG_COLUMNS["getAvgFamilyIncome"], hash_value)
-
-
-def get_avg_time_in_us(df: DataFrame, hash_value: Any | None = None) -> float | None:
-    """`getAvgTimeInUS` (`fs_commands.py:428-460`): avg of DMDYRSUS."""
-    return get_avg(df, HARDCODED_AVG_COLUMNS["getAvgTimeInUS"], hash_value)
-
-
-def get_avg_grip_strength(df: DataFrame, hash_value: Any | None = None) -> float | None:
-    """`firebase_getAvgGripStrn` (`proj-firebase-flask.py:637-671`): avg MGDCGSZ."""
-    return get_avg(df, HARDCODED_AVG_COLUMNS["firebase_getAvgGripStrn"], hash_value)
-
-
-def get_avg_arm_circumference(df: DataFrame, hash_value: Any | None = None) -> float | None:
-    """`firebase_getAvgArmCircum` (`proj-firebase-flask.py:672-703`): avg BMXARMC."""
-    return get_avg(df, HARDCODED_AVG_COLUMNS["firebase_getAvgArmCircum"], hash_value)
 
 
 def get_max(

@@ -25,7 +25,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["join", "top_k", "union_all", "intersect", "except_all", "distinct", "rollup_agg", "cube_agg"]
+__all__ = ["join", "top_k", "union_all", "intersect", "except_all", "distinct"]
 
 
 def join(
@@ -61,11 +61,3 @@ def except_all(a: DataFrame, b: DataFrame, all: bool = False) -> DataFrame:
 
 def distinct(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
     return df.dropDuplicates(subset) if subset else df.distinct()
-
-
-def rollup_agg(df: DataFrame, group_cols: Sequence[str], *aggs: Column) -> DataFrame:
-    return df.rollup(*group_cols).agg(*aggs)
-
-
-def cube_agg(df: DataFrame, group_cols: Sequence[str], *aggs: Column) -> DataFrame:
-    return df.cube(*group_cols).agg(*aggs)

@@ -541,11 +541,11 @@ def minhash_dedup_pairs(
     (e.g. the per-corpus `shared_text_layout.shingle_sets` memo), so the
     tokenize+gram scan is skipped (optimization r14).
     """
-    shingled = (
+    shingled = _persist(
         shingled
         if shingled is not None
         else shingle_df(_spread(df), text_col, id_col, n)
-    ).cache()
+    )
     # persist the signatures BEFORE banding: _banded slices `sig` once per
     # band, and with the map-side fold signature (minhash_sig_expr) an
     # unpinned projection would be CollapseProject-inlined into every

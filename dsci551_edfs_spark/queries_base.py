@@ -39,7 +39,7 @@ from .sources.registry import load_table
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
-SCRATCH = "/root/repo/.scratch"
+SCRATCH = MEMO.SCRATCH
 
 
 def q(name: str, oracle: str | None = None):

@@ -25,7 +25,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["write_bucketed", "read_bucketed", "bucketed_join"]
+__all__ = ["write_bucketed", "bucketed_join"]
 
 
 def write_bucketed(
@@ -53,10 +53,6 @@ def write_bucketed(
     if sort:
         writer = writer.sortBy(*keys)
     writer.saveAsTable(table)
-
-
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
 
 
 def bucketed_join(

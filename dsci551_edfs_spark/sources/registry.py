@@ -1,9 +1,8 @@
 """Table registry: load the driver-generated parquet tables for an sf dir.
 
 The reference's only "catalog" was an inode tree (`combined_flask.py:44-47`);
-here the catalog is simply the parquet directory plus ``spark.catalog`` temp
-views. Column pruning + predicate pushdown are free because every load is a
-plain parquet scan.
+here the catalog is simply the parquet directory. Column pruning + predicate
+pushdown are free because every load is a plain parquet scan.
 """
 
 from __future__ import annotations
@@ -27,7 +26,7 @@ TABLES = (
     "embeddings",
 )
 
-__all__ = ["TABLES", "load_table", "register_all", "clear_plan_cache"]
+__all__ = ["TABLES", "load_table", "clear_plan_cache"]
 
 # (session id, sf_dir, table, file fingerprint) -> DataFrame. A DataFrame
 # is an immutable logical plan: rebuilding it per call re-reads parquet
@@ -121,17 +120,3 @@ def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFra
         # session TZ is pinned UTC above, so NTZ→LTZ keeps the same instant
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def register_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every table as a temp view (for spark.sql queries) and
-    return the DataFrames keyed by name."""
-    out: dict[str, DataFrame] = {}
-    for name in TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if not os.path.exists(path):
-            continue
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

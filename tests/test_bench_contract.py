@@ -4,11 +4,12 @@ the r1-comparable subset stays frozen (it is the ONLY cross-round
 comparable number), and every memoized query maps to a real memo tag."""
 
 import importlib
+import os
 import sys
 
 
 def _bench():
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     return importlib.import_module("bench")
 
 
@@ -359,6 +360,74 @@ def test_r1_quiet_median_measurement(spark):
     assert out["total_s"] == round(sum(out["queries"].values()), 3)
     assert "ambient_cpu_frac" in out["ambient_load"]
     assert all(v >= 0 for v in out["spread_max_minus_min"].values())
+    # the shared timed region both bench passes go through: one
+    # (construct_s, exec_s) pair per run, the median/spread of the run
+    # totals, and release_cached once after the query's runs
+    released = []
+    r = bench._timed_runs(
+        spark, "slow", fake["slow"], "unused", 5, lambda: released.append(1)
+    )
+    assert len(r["runs"]) == 5 and released == [1]
+    assert all(c >= 0 and e >= 0 for c, e in r["runs"])
+    totals = sorted(c + e for c, e in r["runs"])
+    assert r["median_s"] == round(totals[2], 3)
+    assert r["spread_s"] == round(totals[-1] - totals[0], 3)
+    assert r["split"] is None  # not a _SPLIT_PROVIDERS query
     # wiring: main() assigns the headline field from the dedicated pass
     src = inspect.getsource(bench.main)
     assert '"value_r1_comparable_25q": r1_quiet["total_s"]' in src
+
+
+def test_measure_tool_first_steady_growth_and_errors(
+    spark, sf_dir, monkeypatch, capsys
+):
+    """tools/measure.py end to end on the shared timed region: per
+    window, first-call and steady columns per query, a raising query
+    recorded as an error (the run goes on), and growth ratios against
+    the first --sf."""
+    import json
+
+    _bench()  # repo root on sys.path
+    from dsci551_edfs_spark.queries import QUERIES
+    from tools import measure
+
+    def boom(_spark, _sf):
+        raise RuntimeError("boom")
+
+    monkeypatch.setitem(QUERIES, "boom_query", boom)
+    measure.main(
+        ["-n", "2", "--sf", sf_dir, "--sf", sf_dir, "pmr_avg", "boom_query"]
+    )
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["reps"] == 2 and "code_sha" in out
+    assert [w["sf_dir"] for w in out["windows"]] == [sf_dir, sf_dir]
+    for w in out["windows"]:
+        q = w["queries"]["pmr_avg"]
+        assert set(q["first"]) == {"construct_s", "exec_s"}
+        assert set(q["steady"]) == {"construct_s", "exec_s", "total_s", "spread_s"}
+        assert all(v >= 0 for v in [*q["first"].values(), *q["steady"].values()])
+        assert w["queries"]["boom_query"] == {"error": "RuntimeError: boom"}
+        assert w["total_s"] == q["steady"]["total_s"]
+        assert 0.0 <= w["ambient_cpu_frac"] <= 1.0
+        assert w["memo_warm"] == {}  # neither query is memoized
+    assert "growth" not in out["windows"][0]
+    growth = out["windows"][1]["growth"]
+    assert set(growth) == {"pmr_avg", "boom_query"}
+    assert growth["boom_query"] is None
+    assert growth["pmr_avg"] > 0
+
+
+def test_check_correctness_import_stays_bench_free():
+    """perfbench imports `value_hash` from tools.check_correctness; that
+    import must not pull in bench (its code_sha stamp is imported only
+    on the --json path)."""
+    import subprocess
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    probe = (
+        "import sys\n"
+        "from tools.check_correctness import value_hash\n"
+        "assert 'bench' not in sys.modules\n"
+        "assert value_hash([(1, 'a')], ['x', 'y'])\n"
+    )
+    subprocess.run([sys.executable, "-c", probe], cwd=root, check=True)

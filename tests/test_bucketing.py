@@ -8,12 +8,13 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from dsci551_edfs_spark import memo as MEMO
 from dsci551_edfs_spark.plans.debug import explain_str
 from dsci551_edfs_spark.sources.bucketing import bucketed_join, write_bucketed
 from dsci551_edfs_spark.sources.registry import load_table
 
 SF = "/root/testdata/sf0.001"
-SCRATCH = "/root/repo/.scratch/bucketed_tables"
+SCRATCH = os.path.join(MEMO.SCRATCH, "bucketed_tables")
 
 
 @pytest.fixture(scope="module")

@@ -11,11 +11,12 @@ import uuid
 
 import pytest
 
+from dsci551_edfs_spark import memo as MEMO
 from dsci551_edfs_spark.cli import EdfsShell, main
 from dsci551_edfs_spark.operators import aggregates as AGG
 from dsci551_edfs_spark.sources.registry import load_table
 
-SCRATCH = "/root/repo/.scratch/test_cli"
+SCRATCH = os.path.join(MEMO.SCRATCH, "test_cli")
 
 
 @pytest.fixture(scope="module")

@@ -14,11 +14,12 @@ import urllib.request
 
 import pytest
 
+from dsci551_edfs_spark import memo as MEMO
 from dsci551_edfs_spark.cli import EdfsShell
 from dsci551_edfs_spark.http_api import start_server
 from dsci551_edfs_spark.sources.registry import load_table
 
-SCRATCH = "/root/repo/.scratch/test_http"
+SCRATCH = os.path.join(MEMO.SCRATCH, "test_http")
 
 
 @pytest.fixture(scope="module")

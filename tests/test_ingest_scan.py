@@ -5,9 +5,10 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from dsci551_edfs_spark import memo as MEMO
 from dsci551_edfs_spark.sources import ingest, scan
 
-SCRATCH = "/root/repo/.scratch/test_ingest"
+SCRATCH = os.path.join(MEMO.SCRATCH, "test_ingest")
 
 
 @pytest.fixture()
@@ -149,7 +150,7 @@ def test_edfs_datasource_pushdown_prunes_partitions(spark, sf_dir):
     from pyspark.sql.datasource import EqualTo
 
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    scratch = "/root/repo/.scratch"
+    scratch = MEMO.SCRATCH
     os.makedirs(scratch, exist_ok=True)
     dest = tempfile.mkdtemp(prefix="eds_t_", dir=scratch)
     base = spark.createDataFrame(
@@ -202,7 +203,7 @@ def test_edfs_datasource_pushdown_block_subsplit(spark, sf_dir):
     from pyspark.sql.datasource import EqualTo
 
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    scratch = "/root/repo/.scratch"
+    scratch = MEMO.SCRATCH
     os.makedirs(scratch, exist_ok=True)
     dest = tempfile.mkdtemp(prefix="eds_b_", dir=scratch)
     rows = [(i, 7) for i in range(10)] + [(100 + i, 70) for i in range(3)]
@@ -248,7 +249,7 @@ def test_edfs_stream_tail_exactly_once(spark, sf_dir):
     from dsci551_edfs_spark.sources.edfs_datasource import register_edfs
     from dsci551_edfs_spark.sources.ingest import put_dataframe
 
-    scratch = "/root/repo/.scratch"
+    scratch = MEMO.SCRATCH
     os.makedirs(scratch, exist_ok=True)
     dest = tempfile.mkdtemp(prefix="eds_s_", dir=scratch)
     base = spark.createDataFrame(
@@ -305,7 +306,7 @@ def test_edfs_stream_cursor_restart_exactly_once(spark):
     from dsci551_edfs_spark.sources.edfs_datasource import register_edfs
     from dsci551_edfs_spark.sources.ingest import put_dataframe
 
-    scratch = "/root/repo/.scratch"
+    scratch = MEMO.SCRATCH
     os.makedirs(scratch, exist_ok=True)
     dest = tempfile.mkdtemp(prefix="eds_r_", dir=scratch)
     ckpt = tempfile.mkdtemp(prefix="eds_r_ck_", dir=scratch)

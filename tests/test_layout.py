@@ -9,10 +9,11 @@ import tempfile
 
 from pyspark.sql import functions as F
 
+from dsci551_edfs_spark import memo as MEMO
 from dsci551_edfs_spark.sources.layout import spread_bits16, zorder_layout, zvalue16
 from dsci551_edfs_spark.sources.registry import load_table
 
-SCRATCH = "/root/repo/.scratch/test_layout"
+SCRATCH = os.path.join(MEMO.SCRATCH, "test_layout")
 
 
 def _py_spread(x):

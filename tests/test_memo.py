@@ -16,6 +16,35 @@ def scratch(tmp_path, monkeypatch):
     return str(tmp_path)
 
 
+def test_scratch_root_follows_env(tmp_path):
+    """One scratch root: with SPARK_GRAFT_SCRATCH set, the memo store,
+    the query catalog's scratch dirs and their shared constant all land
+    under it (a fresh interpreter, since the root is read at import)."""
+    import json
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    probe = (
+        "import json\n"
+        "from dsci551_edfs_spark import memo, queries_base\n"
+        "print(json.dumps([queries_base.SCRATCH, memo.SCRATCH,"
+        " queries_base._scratch_dir('x')]))"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe],
+        cwd=root,
+        env=dict(os.environ, SPARK_GRAFT_SCRATCH=str(tmp_path)),
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout
+    qb, memo_root, made = json.loads(out.strip().splitlines()[-1])
+    assert qb == memo_root == str(tmp_path)
+    assert os.path.dirname(made) == str(tmp_path)
+    assert os.path.basename(made).startswith("x_")
+
+
 def test_memo_path_deterministic_and_version_sensitive(scratch, sf_dir):
     p1 = MEMO.memo_path("t", sf_dir, ["region"])
     assert p1 == MEMO.memo_path("t", sf_dir, ["region"])

@@ -36,6 +36,21 @@ def test_minhash_finds_near_dups(docs):
     assert all(4 not in p for p in found)
 
 
+def test_minhash_pins_are_released(docs):
+    """Every frame the MinHash pipeline pins is released by
+    `release_cached`, including an injected `shingled` frame: a pin left
+    behind stays cached for the session and later plans match it."""
+    from pyspark import StorageLevel
+
+    shingled = DD.shingle_df(docs.filter("doc_id <= 4"))
+    DD.minhash_dedup_pairs(
+        docs.filter("doc_id <= 4"), threshold=0.5, shingled=shingled
+    ).collect()
+    assert shingled.storageLevel != StorageLevel.NONE
+    DD.release_cached()
+    assert shingled.storageLevel == StorageLevel.NONE
+
+
 def test_minhash_recall_vs_exact(spark, sf_dir):
     """On real documents, LSH candidates must recover the exact-Jaccard
     ground truth at threshold 0.5."""
@@ -918,6 +933,7 @@ def test_ivf_index_persist_roundtrip_and_pruning(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
+    from dsci551_edfs_spark import memo as MEMO
     from dsci551_edfs_spark.pipeline import similarity as SIM
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -928,7 +944,7 @@ def test_ivf_index_persist_roundtrip_and_pruning(spark, sf_dir):
         for r in SIM.ivf_topk(bucketed, cents, queries, k=5, n_probe=4).collect()
     }
 
-    scratch = "/root/repo/.scratch"
+    scratch = MEMO.SCRATCH
     os.makedirs(scratch, exist_ok=True)
     path = tempfile.mkdtemp(prefix="ivf_idx_", dir=scratch)
     SIM.save_ivf_index(bucketed, cents, path)

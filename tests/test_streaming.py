@@ -7,10 +7,11 @@ import tempfile
 
 import pytest
 
+from dsci551_edfs_spark import memo as MEMO
 from dsci551_edfs_spark.sources.registry import load_table
 from dsci551_edfs_spark.streaming import windows as SW
 
-SCRATCH = "/root/repo/.scratch/test_streaming"
+SCRATCH = os.path.join(MEMO.SCRATCH, "test_streaming")
 
 
 @pytest.fixture(scope="module")

@@ -14,11 +14,12 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import bench  # noqa: E402
 
-OUT_DIR = "/root/repo/plans/r14"
+OUT_DIR = os.path.join(ROOT, "plans", "r14")
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 

@@ -1,20 +1,22 @@
 """Build a REAL scale bump of ALL ten tables (documents, embeddings,
 events + the seven TPC-H-shaped relational tables) at K x sf0.1 under
 the gitignored scratch dir —
-unlike tools/scale_probe.py's in-plan K-inflation (which replicates rows
-inside one query), this grows the THINGS a real sf bump grows:
+unlike in-plan K-inflation (which replicates rows inside one query),
+this grows the THINGS a real sf bump grows:
 
 - keyspace: every copy gets fresh doc/vec/user/event ids, and copy
   content is DECORRELATED from its base row (per-copy token suffix on
   EVERY token => zero cross-copy shared shingles; dimension-rotated +
   sign-flipped embeddings => cross-copy cosine ~ 0), so the near-dup /
   ANN structure per unit of data matches the base corpus instead of the
-  every-copy-is-a-twin shape the probe deliberately measures;
+  every-copy-is-a-twin shape in-plan inflation produces;
 - file count: each table is written as multiple parquet files, so scan
   parallelism and footer overheads grow like a real corpus.
 
 Usage: python tools/make_scaled_corpus.py [K] [out_dir]
-Defaults: K=5 (an "sf0.5"), out_dir=/root/repo/.scratch/sf0.5.
+Defaults: K=5 (an "sf0.5"), out_dir=<scratch root>/sf0.5 (the scratch
+root is dsci551_edfs_spark.memo.SCRATCH). Measure it against its base
+with `tools/measure.py --sf <BASE> --sf <out_dir>`.
 """
 
 from __future__ import annotations
@@ -22,7 +24,7 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 BASE = "/root/testdata/sf0.1"
 
@@ -31,14 +33,11 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from dsci551_edfs_spark import get_spark
+    from dsci551_edfs_spark.memo import SCRATCH
     from dsci551_edfs_spark.sources.registry import load_table
 
     k = int(sys.argv[1]) if len(sys.argv) > 1 else 5
-    out = (
-        sys.argv[2]
-        if len(sys.argv) > 2
-        else f"/root/repo/.scratch/sf0.{k}"
-    )
+    out = sys.argv[2] if len(sys.argv) > 2 else os.path.join(SCRATCH, f"sf0.{k}")
     os.makedirs(out, exist_ok=True)
     spark = get_spark("make-scaled-corpus")
     spark.sparkContext.setLogLevel("ERROR")
@@ -57,7 +56,7 @@ def main() -> None:
             # copy 0 keeps the base text verbatim; copies > 0 suffix every
             # NON-STOPWORD token with an alphanumeric copy tag: content
             # trigrams break (near-dup structure grows ~linearly, not as
-            # the all-copies-are-twins probe shape), while the stopwords
+            # the all-copies-are-twins shape), while the stopwords
             # the lang-id/quality gate keys on survive, so the scaled
             # corpus flows through the full pipeline instead of being
             # dropped at the gate
