@@ -259,52 +259,6 @@ HEADLINE = [
 ]
 
 
-# queries with a fixed multi-job/stream-machinery cost that belongs in
-# its own column: (module, attr) of a LAST-run timing dict the query
-# populates, plus which key is the fixed "startup" part and which is
-# the steady operator cost. bench reports medians of BOTH components
-# directly (verdict r11: these queries carried in-window spreads 10x
-# the suite norm because checkpoint startup / cache build landed in
-# one median; measuring the named components shows each is stable —
-# gate drain spread <0.1 s, cv folds ~0.5 s — while the full-run
-# median keeps cross-round comparability).
-_SPLIT_PROVIDERS: dict[str, tuple[str, str, str, str]] = {
-    "streaming_quality_gate": (
-        "dsci551_edfs_spark.streaming.quality_gate",
-        "LAST_TIMINGS",
-        "stream_startup_s",
-        "stream_drain_s",
-    ),
-    "quality_lr_cv": (
-        "dsci551_edfs_spark.pipeline.classifier",
-        "LAST_CV_TIMINGS",
-        "feature_build_s",
-        "cv_folds_s",
-    ),
-    "streaming_conformal_coverage": (
-        "dsci551_edfs_spark.streaming.conformal_monitor",
-        "LAST_TIMINGS",
-        "stream_startup_s",
-        "stream_drain_s",
-    ),
-}
-
-
-def _split_components(name: str) -> tuple[float, float] | None:
-    """(startup_s, steady_s) of the JUST-FINISHED run of a split query,
-    read off its module's last-run timing dict."""
-    import importlib
-
-    prov = _SPLIT_PROVIDERS.get(name)
-    if prov is None:
-        return None
-    mod, attr, k_start, k_steady = prov
-    d = getattr(importlib.import_module(mod), attr, {})
-    if k_start not in d or k_steady not in d:
-        return None
-    return float(d[k_start]), float(d[k_steady])
-
-
 def _drift_flags(
     prevs: dict | list[dict],
     timings: dict,
@@ -395,10 +349,15 @@ def _timed_runs(
     intermediates via CacheManager plan matching (warm steady state).
 
     Returns each run's ``(construct_s, exec_s)`` under "runs", the
-    median and max-min spread of the run totals, and — for a
-    `_SPLIT_PROVIDERS` query whose components were read after every
-    run — the medians of its startup/steady components under "split"
-    (None otherwise)."""
+    median and max-min spread of the run totals, and — for a query
+    declared with `@q(split=...)` whose timing dict held both keys
+    after every run — the medians of its startup/steady components
+    under "split" (None otherwise). The split names the query's fixed
+    multi-job/stream-machinery cost, which would otherwise land in one
+    median with a spread 10x the suite norm."""
+    from dsci551_edfs_spark.queries_base import SPLITS
+
+    timings, k_start, k_steady = SPLITS.get(name, ({}, "", ""))
     runs: list[tuple[float, float]] = []
     comps = []
     for _ in range(reps):
@@ -407,14 +366,12 @@ def _timed_runs(
         t1 = time.perf_counter()
         df.write.mode("overwrite").format("noop").save()
         runs.append((t1 - t0, time.perf_counter() - t1))
-        c = _split_components(name)
-        if c is not None:
-            comps.append(c)
+        if k_start in timings and k_steady in timings:
+            comps.append((float(timings[k_start]), float(timings[k_steady])))
     release_cached()
     median_s, spread_s = _median_spread([c + e for c, e in runs])
     split = None
     if len(comps) == len(runs):
-        k_start, k_steady = _SPLIT_PROVIDERS[name][2:]
         steady_s, steady_spread = _median_spread([c[1] for c in comps])
         split = {
             "startup_key": k_start,

@@ -41,6 +41,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from .cli import DEFAULT_SF_DIR, EdfsShell
 from .operators import aggregates as AGG
+from .session import get_spark
 
 #: route -> (required params, trailing optional params), in the
 #: positional order EdfsShell.run expects (combined_flask.py:85-697)
@@ -164,23 +165,23 @@ def start_server(
 
 
 def main(argv: list[str] | None = None) -> int:
+    """Serve the EDFS shell over HTTP with the session and default
+    warehouse `cli.main` uses, so both surfaces serve the same tables."""
     import argparse
-    import tempfile
+    import os
 
-    from pyspark.sql import SparkSession
+    from .memo import scratch_root
 
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--host", default="127.0.0.1")
     ap.add_argument("--port", type=int, default=5000)
     ap.add_argument(
-        "--warehouse", default=None, help="EDFS warehouse dir (default: tmp)"
+        "--warehouse",
+        default=os.path.join(scratch_root(), "warehouse"),
+        help="EDFS warehouse dir (default: <scratch root>/warehouse)",
     )
     ns = ap.parse_args(argv)
-    spark = (
-        SparkSession.builder.master("local[*]").appName("edfs-http").getOrCreate()
-    )
-    wh = ns.warehouse or tempfile.mkdtemp(prefix="edfs_wh_")
-    shell = EdfsShell(spark, wh)
+    shell = EdfsShell(get_spark("edfs-http"), ns.warehouse)
     server = make_server(shell, ns.host, ns.port)
     print(f"EDFS HTTP API on http://{ns.host}:{server.server_address[1]}")
     try:

@@ -29,9 +29,11 @@ snapshot/commit id instead of local stat().
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import os
 import shutil
+import threading
 import time
 from typing import Callable, Sequence
 
@@ -51,10 +53,15 @@ def scratch_root() -> str:
 
 SCRATCH = scratch_root()
 
-# build seconds observed by THIS process, keyed by memo tag; 0.0 when the
-# artifact was already on disk. bench.py reads this to itemize
-# once-per-corpus build cost separately from steady-state probe medians.
+# seconds THIS process spent building each memo tag, accumulated over
+# its builds and exclusive of memo builds nested inside them (0.0 when
+# the artifact was already on disk), so sum(BUILD_SECONDS.values()) is
+# the real build time whatever the call order. bench.py reads this to
+# itemize once-per-corpus build cost apart from steady-state medians.
 BUILD_SECONDS: dict[str, float] = {}
+_BUILD_LOCK = threading.Lock()
+# per thread: the nested-build seconds of each build in progress
+_BUILDING = threading.local()
 
 # (session id, memo path) -> served DataFrame plan (see dataframe_memo)
 _READ_PLAN_CACHE: dict[tuple[int, str], DataFrame] = {}
@@ -133,6 +140,25 @@ def _prune_stale(keep_path: str) -> None:
             shutil.rmtree(os.path.join(parent, d), ignore_errors=True)
 
 
+@contextlib.contextmanager
+def _booked_build(tag: str):
+    """Time one successful build of ``tag`` into BUILD_SECONDS[tag],
+    minus the time of memo builds nested inside it (a layout whose
+    build serves another memo): those are booked to their own tags."""
+    stack = _BUILDING.__dict__.setdefault("stack", [])
+    stack.append(0.0)
+    t0 = time.perf_counter()
+    try:
+        yield
+    finally:
+        nested = stack.pop()
+    total = time.perf_counter() - t0
+    if stack:
+        stack[-1] += total
+    with _BUILD_LOCK:
+        BUILD_SECONDS[tag] = BUILD_SECONDS.get(tag, 0.0) + total - nested
+
+
 def dataframe_memo(
     spark: SparkSession,
     tag: str,
@@ -150,11 +176,10 @@ def dataframe_memo(
     path = memo_path(tag, sf_dir, tables, version=version)
     key = (id(spark), path)
     if not is_ready(path):
-        t0 = time.perf_counter()
-        tmp = f"{path}.tmp.{os.getpid()}"
-        build().write.mode("overwrite").parquet(tmp)
-        _promote(tmp, path)
-        BUILD_SECONDS[tag] = round(time.perf_counter() - t0, 3)
+        with _booked_build(tag):
+            tmp = f"{path}.tmp.{os.getpid()}"
+            build().write.mode("overwrite").parquet(tmp)
+            _promote(tmp, path)
         # a rebuild means the dir was wiped mid-session: any plan cached
         # BEFORE the wipe lists the deleted part files — evict it
         _READ_PLAN_CACHE.pop(key, None)
@@ -202,12 +227,11 @@ def layout_memo(
     layout-relative files whose presence means "complete"."""
     path = memo_path(tag, sf_dir, tables, version=version)
     if not is_ready(path, markers):
-        t0 = time.perf_counter()
-        tmp = f"{path}.tmp.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        build(tmp)
-        _promote(tmp, path)
-        BUILD_SECONDS[tag] = round(time.perf_counter() - t0, 3)
+        with _booked_build(tag):
+            tmp = f"{path}.tmp.{os.getpid()}"
+            shutil.rmtree(tmp, ignore_errors=True)
+            build(tmp)
+            _promote(tmp, path)
     else:
         BUILD_SECONDS.setdefault(tag, 0.0)
     return path

@@ -76,7 +76,7 @@ def _neighbor_jaccard_oracle_sql() -> str:
     """
 
 
-@q("neighbor_jaccard_pairs", _neighbor_jaccard_oracle_sql())
+@q("neighbor_jaccard_pairs", _neighbor_jaccard_oracle_sql(), memo=True)
 def neighbor_jaccard_pairs(spark, sf_dir):
     """Structural substitutes in the strong co-purchase graph: part
     pairs whose neighborhoods overlap with Jaccard ≥ 1/3 (and ≥2 shared
@@ -111,6 +111,7 @@ def neighbor_jaccard_pairs(spark, sf_dir):
     FROM c JOIN sz sa ON sa.doc_id = ia JOIN sz sb ON sb.doc_id = ib
     WHERE 3 * inter >= sa.sz + sb.sz
     """,
+    memo=True,
 )
 def prefix_filter_jaccard_pairs(spark, sf_dir):
     """Exact 3-gram-shingle Jaccard ≥ 1/2 pairs via PREFIX FILTERING —
@@ -1663,7 +1664,7 @@ def _minhash_pr_oracle_sql() -> str:
     """
 
 
-@q("minhash_pr_eval", _minhash_pr_oracle_sql())
+@q("minhash_pr_eval", _minhash_pr_oracle_sql(), memo=True)
 def minhash_pr_eval(spark, sf_dir):
     """Dedup-quality evaluation harness: precision/recall of the
     MinHash-LSH CANDIDATE stage (16 bands of 4, pre-verification)

@@ -28,6 +28,8 @@ from .q_embeddings import (
     _QM_FEATURES_SQL,
 )
 from .q_layout_round5 import _STRONG_EDGES_SQL, _strong_copurchase_edges
+from .pipeline.classifier import LAST_CV_TIMINGS
+from .streaming.quality_gate import LAST_TIMINGS as _GATE_TIMINGS
 
 @q(
     "hbos_outlier_scores",
@@ -184,7 +186,7 @@ def _kcore_oracle_sql(k: int = 3, rounds: int = 12) -> str:
     return "".join(parts)
 
 
-@q("kcore_copurchase", _kcore_oracle_sql())
+@q("kcore_copurchase", _kcore_oracle_sql(), memo=True)
 def kcore_copurchase(spark, sf_dir):
     """Bounded-round k-core decomposition (k=3, 12 peel rounds) of the
     strong co-purchase graph — the graph-density backbone extractor
@@ -835,6 +837,7 @@ def mmr_select_diverse(spark, sf_dir):
           FROM scored)
     WHERE rnk <= 5
     """,
+    memo=True,
 )
 def hashed_tfidf_knn(spark, sf_dir):
     """Lexical k-NN with NO vocabulary object: hashed TF-IDF vectors
@@ -1181,7 +1184,7 @@ def _lr_scored_frame(spark, sf_dir):
     )
 
 
-@q("quality_lr_calibration", _lr_calibration_oracle_sql(3))
+@q("quality_lr_calibration", _lr_calibration_oracle_sql(3), memo=True)
 def quality_lr_calibration(spark, sf_dir):
     """Close the loop `quality_calibration_bins` opened with a rule-based
     stand-in: score the WHOLE corpus with the in-engine-TRAINED
@@ -1324,7 +1327,12 @@ def _lr_gate_oracle_sql(rounds: int = 3, threshold_p4: int = 4500) -> str:
     )
 
 
-@q("streaming_quality_gate", _lr_gate_oracle_sql(3, 4500))
+@q(
+    "streaming_quality_gate",
+    _lr_gate_oracle_sql(3, 4500),
+    memo=True,
+    split=(_GATE_TIMINGS, "stream_startup_s", "stream_drain_s"),
+)
 def streaming_quality_gate(spark, sf_dir):
     """DEPLOY the trained quality classifier over a document STREAM —
     the missing half of `quality_lr_train`, and a real Structured
@@ -1356,7 +1364,11 @@ def streaming_quality_gate(spark, sf_dir):
     )
 
 
-@q("quality_lr_cv", _lr_cv_oracle_sql(3, 2))
+@q(
+    "quality_lr_cv",
+    _lr_cv_oracle_sql(3, 2),
+    split=(LAST_CV_TIMINGS, "feature_build_s", "cv_folds_s"),
+)
 def quality_lr_cv(spark, sf_dir):
     """3-fold cross-validation of the quality classifier — the "does it
     GENERALIZE" audit before trusting the model on unseen crawl. Folds
@@ -1461,7 +1473,7 @@ def _lr_auc_oracle_sql(rounds: int = 3) -> str:
     )
 
 
-@q("quality_lr_auc", _lr_auc_oracle_sql(3))
+@q("quality_lr_auc", _lr_auc_oracle_sql(3), memo=True)
 def quality_lr_auc(spark, sf_dir):
     """Close the classifier evaluation loop with exact ROC-AUC and
     PR-AUC — the one number a 100 TB quality-gate decision is made on —
@@ -1572,7 +1584,7 @@ def _lr_threshold_oracle_sql(rounds: int = 3, step: int = 500) -> str:
     )
 
 
-@q("quality_lr_threshold_sweep", _lr_threshold_oracle_sql(3, 500))
+@q("quality_lr_threshold_sweep", _lr_threshold_oracle_sql(3, 500), memo=True)
 def quality_lr_threshold_sweep(spark, sf_dir):
     """Pick the OPERATING POINT: confusion counts and exact-integer
     precision/recall/F1 for the trained quality classifier at every
@@ -1789,7 +1801,7 @@ def _lr_ece_oracle_sql(rounds: int = 3) -> str:
     )
 
 
-@q("quality_lr_ece", _lr_ece_oracle_sql(3))
+@q("quality_lr_ece", _lr_ece_oracle_sql(3), memo=True)
 def quality_lr_ece(spark, sf_dir):
     """Expected Calibration Error — the ONE number read off the decile
     reliability table (`quality_lr_calibration`): ECE = Σ_b (n_b/n) ·

@@ -386,6 +386,7 @@ def corpus_mixture_weighted(spark, sf_dir):
              AS weight_ppm""",
     )
     + " FROM lab",
+    memo=True,
 )
 def duplicate_reweighting(spark, sf_dir):
     """Soft dedup: instead of dropping near-duplicates, weight every doc
@@ -460,6 +461,7 @@ def stream_static_enrich(spark, sf_dir):
            round(round(sum(value), 3) / count(*), 3) AS avg_value
     FROM events GROUP BY 1, 2
     """,
+    memo=True,
 )
 def hypertable_rollup_day(spark, sf_dir):
     """Hypertable continuous aggregate: materialize an HOURLY rollup of
@@ -568,6 +570,7 @@ _DECONTAM_CTES = f"""
     FROM documents d JOIN clean USING (doc_id)
     GROUP BY d.source
     """,
+    memo=True,
 )
 def curation_pipeline_e2e(spark, sf_dir):
     """FLAGSHIP composition — the whole curation recipe as ONE lazy plan:
@@ -639,6 +642,7 @@ def curation_pipeline_e2e(spark, sf_dir):
            coalesce(h.overlap_ngrams, 0) >= 1 AS contaminated
     FROM train tr LEFT JOIN hits h USING (doc_id)
     """,
+    memo=True,
 )
 def decontam_overlap(spark, sf_dir):
     """GPT-3/PaLM-style benchmark decontamination stats: per training doc,

@@ -590,7 +590,7 @@ def _pq_oracle_sql(ivf: bool = False) -> str:
     """
 
 
-@q("ann_topk_pq", _pq_oracle_sql())
+@q("ann_topk_pq", _pq_oracle_sql(), memo=True)
 def ann_topk_pq(spark, sf_dir):
     """Product-quantization two-stage top-5 for 10 query vectors: ADC
     shortlist over 16-subspace × 64-code codes (12 bytes/vector vs 512

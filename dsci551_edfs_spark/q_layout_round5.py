@@ -319,6 +319,7 @@ def char_entropy_quality(spark, sf_dir):
     LEFT JOIN hits h USING (doc_id)
     LEFT JOIN hits5 h5 USING (doc_id)
     """,
+    memo=True,
 )
 def decontam_multi_n(spark, sf_dir):
     """Multi-n decontamination report (the GPT-3 appendix-C recipe runs
@@ -931,6 +932,7 @@ def events_late_data_audit(spark, sf_dir):
     FROM e e1 JOIN e e2 ON e1.y = e2.x
               JOIN e e3 ON e3.x = e1.x AND e3.y = e2.y
     """,
+    memo=True,
 )
 def copurchase_triangles(spark, sf_dir):
     """Triangle count of the STRONG part co-purchase graph (parts
@@ -994,6 +996,7 @@ def copurchase_triangles(spark, sf_dir):
     WHERE 4 * CAST(d.dot AS HUGEINT) * d.dot >= CAST(na.n2 AS HUGEINT) * nb.n2
       AND d.dot > 0
     """,
+    memo=True,
 )
 def tfidf_doc_pairs(spark, sf_dir):
     """Sparse TF-IDF cosine similarity pairs (cos ≥ 0.5) via an inverted
@@ -1316,6 +1319,7 @@ def _strong_copurchase_edges(spark, sf_dir):
                 AS BIGINT) AS gcc_ppm
     FROM wd, t
     """,
+    memo=True,
 )
 def copurchase_clustering_coeff(spark, sf_dir):
     """Global clustering coefficient of the strong co-purchase graph —
@@ -1351,6 +1355,7 @@ def copurchase_clustering_coeff(spark, sf_dir):
              FROM c2) WHERE rn = 1)
     SELECT node, CAST(label AS BIGINT) AS label FROM l2
     """,
+    memo=True,
 )
 def copurchase_communities(spark, sf_dir):
     """Community detection on the strong co-purchase graph: 2 rounds of

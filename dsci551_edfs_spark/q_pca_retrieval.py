@@ -121,6 +121,7 @@ def embedding_pca_project(spark, sf_dir):
     FROM perq p JOIN nrel n USING (term)
     ORDER BY p.term
     """,
+    memo=True,
 )
 def retrieval_eval_metrics(spark, sf_dir):
     """IR evaluation loop (pipeline/retrieval.py:bm25_eval_metrics): each
@@ -191,6 +192,7 @@ def retrieval_eval_metrics(spark, sf_dir):
     FROM dcg d JOIN idcg i USING (term)
     ORDER BY d.term
     """.format(toks=_TOKENS_SQL),
+    memo=True,
 )
 def retrieval_ndcg(spark, sf_dir):
     """nDCG@20 with GRADED relevance (gain = min(tf,4) above the tf≥2
@@ -540,6 +542,7 @@ def phrase_search(spark, sf_dir):
     SELECT n_nationkey, n_name, n_regionkey
     FROM nation WHERE n_regionkey = 1
     """,
+    memo=True,
 )
 def edfs_datasource_scan(spark, sf_dir):
     """EDFS as a REGISTERED Spark format (sources/edfs_datasource.py,
@@ -656,6 +659,7 @@ def nested_order_items(spark, sf_dir):
     SELECT node, CAST(min(d) AS BIGINT) AS hops
     FROM walk GROUP BY node
     """,
+    memo=True,
 )
 def copurchase_bfs_hops(spark, sf_dir):
     """Single-source shortest hops (operators/graph.py:bfs_hops) over the
@@ -892,6 +896,7 @@ def budget_select_corpus(spark, sf_dir):
     SELECT node AS vec_id, CAST(min(r) AS BIGINT) AS cluster_id
     FROM reach GROUP BY node
     """,
+    memo=True,
 )
 def embedding_single_linkage(spark, sf_dir):
     """Single-linkage clustering of the embedding corpus at a cosine
@@ -940,6 +945,7 @@ def embedding_single_linkage(spark, sf_dir):
            CAST(vec_id AS BIGINT) AS cluster_id
     FROM embeddings
     """,
+    memo=True,
 )
 def embedding_single_linkage_lsh(spark, sf_dir):
     """The 100 TB production path for single-linkage clustering: RP-LSH
@@ -1529,7 +1535,7 @@ def aqp_sampled_revenue(spark, sf_dir):
     )
 
 
-@q("ann_ivf_persisted", _ivf_oracle_sql("vec_id < 5"))
+@q("ann_ivf_persisted", _ivf_oracle_sql("vec_id < 5"), memo=True)
 def ann_ivf_persisted(spark, sf_dir):
     """Disk-backed IVF search (pipeline/similarity.py save/load/
     ivf_topk_pruned): the index is a hive LAYOUT — corpus partitioned by

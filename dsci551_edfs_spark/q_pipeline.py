@@ -59,6 +59,7 @@ _SHINGLES_SQL = f"""
       FROM s a, s b WHERE a.doc_id < b.doc_id)
     WHERE jaccard >= 0.2
     """,
+    memo=True,
 )
 def ngram_jaccard_pairs(spark, sf_dir):
     """EXACT 3-gram Jaccard near-dup pairs via inverted-index join — the
@@ -88,6 +89,7 @@ def ngram_jaccard_pairs(spark, sf_dir):
       FROM s a, s b WHERE a.doc_id < b.doc_id)
     WHERE containment >= 0.5
     """,
+    memo=True,
 )
 def containment_dup_pairs(spark, sf_dir):
     """Doc-inside-doc detection: |∩| / min(|A|,|B|) ≥ 0.5 — Broder's
@@ -150,7 +152,7 @@ def dedup_clusters(spark, sf_dir):
     ).orderBy("doc_id")
 
 
-@q("dedup_clusters_star", _CLUSTERS_ORACLE)
+@q("dedup_clusters_star", _CLUSTERS_ORACLE, memo=True)
 def dedup_clusters_star(spark, sf_dir):
     """Same cluster assignment computed through the alternating
     large-star/small-star components (Kiveris et al. 2014) instead of
@@ -199,6 +201,7 @@ def dedup_clusters_star(spark, sf_dir):
     FROM g JOIN firsts f USING (gram)
     GROUP BY g.doc_id
     """,
+    memo=True,
 )
 def doc_novelty_scores(spark, sf_dir):
     """Memorization-risk / novelty audit: per document, the share of its
@@ -388,7 +391,7 @@ def _minhash_oracle_sql(estimate: bool = False) -> str:
     """
 
 
-@q("minhash_dedup_pairs", _minhash_oracle_sql())
+@q("minhash_dedup_pairs", _minhash_oracle_sql(), memo=True)
 def minhash_dedup_pairs(spark, sf_dir):
     """MinHash(64)+LSH(16 bands) near-dup pairs, exact-verified at
     jaccard ≥ 0.5. Full oracle (was rows-only): the registered demo runs
@@ -652,7 +655,7 @@ def _knn_ivf_oracle_sql() -> str:
     """
 
 
-@q("knn_label_vote_ivf", _knn_ivf_oracle_sql())
+@q("knn_label_vote_ivf", _knn_ivf_oracle_sql(), memo=True)
 def knn_label_vote_ivf(spark, sf_dir):
     """The documented 100 TB swap, demonstrated at the registered-query
     level: the SAME majority vote as `knn_label_vote`, but the neighbor

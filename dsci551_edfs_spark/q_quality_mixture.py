@@ -1163,6 +1163,7 @@ def tfidf_keywords(spark, sf_dir):
     FROM scored GROUP BY doc_id
     ORDER BY score_micro DESC, doc_id LIMIT 20
     """,
+    memo=True,
 )
 def bm25_search_topk(spark, sf_dir):
     """Ranked full-text retrieval: BM25 (Lucene non-negative idf, k1=1.2,
@@ -1231,6 +1232,7 @@ def bm25_search_topk(spark, sf_dir):
     FROM contrib GROUP BY doc_id
     ORDER BY rrf_micro DESC, doc_id LIMIT 20
     """,
+    memo=True,
 )
 def hybrid_rrf_search(spark, sf_dir):
     """Hybrid retrieval, the RAG-corpus shape: BM25 leg ({dup, hash,
@@ -1292,6 +1294,7 @@ def sessionize_events(spark, sf_dir):
 @q(
     "sessionize_events_bucketed",
     ORACLES.get("sessionize_events"),
+    memo=True,
 )
 def sessionize_events_bucketed(spark, sf_dir):
     """Identical contract and oracle to `sessionize_events`, run over a

@@ -181,7 +181,7 @@ def _incremental_near_oracle_sql() -> str:
     """
 
 
-@q("incremental_dedup_near", _incremental_near_oracle_sql())
+@q("incremental_dedup_near", _incremental_near_oracle_sql(), memo=True)
 def incremental_dedup_near(spark, sf_dir):
     """NEAR-duplicate incremental gate: the %5==0 shard is deduped
     against the rest of the corpus by MinHash-LSH — the corpus side
@@ -702,7 +702,7 @@ def corpus_datacard(spark, sf_dir):
     )
 
 
-@q("corpus_prep_pipeline", _corpus_prep_pipeline_oracle_sql())
+@q("corpus_prep_pipeline", _corpus_prep_pipeline_oracle_sql(), memo=True)
 def corpus_prep_pipeline(spark, sf_dir):
     """The full training-data recipe end-to-end: quality gate -> language
     keep-list -> exact dedup -> MinHash near-dedup -> surviving corpus
@@ -986,6 +986,7 @@ def profile_orders(spark, sf_dir):
            CAST(vec_id + 1000000 AS BIGINT) AS id_b
     FROM embeddings
     """,
+    memo=True,
 )
 def embedding_dup_pairs_lsh(spark, sf_dir):
     """The 100 TB scale path for embedding near-dup: multi-table random-

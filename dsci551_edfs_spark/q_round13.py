@@ -31,6 +31,7 @@ from .q_analytics_b import (
     _lr_scored_frame,
     _lr_trained_model,
 )
+from .streaming.conformal_monitor import LAST_TIMINGS as _COVERAGE_TIMINGS
 
 
 def _lr_trajectory(spark, sf_dir):
@@ -100,7 +101,7 @@ def _cartography_oracle_sql(rounds: int = 3) -> str:
     )
 
 
-@q("dataset_cartography", _cartography_oracle_sql(3))
+@q("dataset_cartography", _cartography_oracle_sql(3), memo=True)
 def dataset_cartography(spark, sf_dir):
     """Dataset cartography (Swayamdipta et al. 2020, "Dataset
     Cartography: Mapping and Diagnosing Datasets with Training
@@ -211,7 +212,7 @@ def _conformal_oracle_sql(rounds: int = 3) -> str:
     )
 
 
-@q("conformal_gate_threshold", _conformal_oracle_sql(3))
+@q("conformal_gate_threshold", _conformal_oracle_sql(3), memo=True)
 def conformal_gate_threshold(spark, sf_dir):
     """Split-conformal calibration of the quality gate (Vovk et al.;
     the distribution-free coverage recipe): on a deterministic md5
@@ -330,7 +331,7 @@ def _confident_joint_oracle_sql(rounds: int = 3) -> str:
     )
 
 
-@q("label_noise_confident_joint", _confident_joint_oracle_sql(3))
+@q("label_noise_confident_joint", _confident_joint_oracle_sql(3), memo=True)
 def label_noise_confident_joint(spark, sf_dir):
     """Confident-learning label-noise audit (Northcutt et al. 2021,
     "Confident Learning: Estimating Uncertainty in Dataset Labels"):
@@ -437,7 +438,7 @@ def _fairness_oracle_sql(rounds: int = 3) -> str:
     )
 
 
-@q("gate_fairness_audit", _fairness_oracle_sql(3))
+@q("gate_fairness_audit", _fairness_oracle_sql(3), memo=True)
 def gate_fairness_audit(spark, sf_dir):
     """Disparate-impact audit of the quality gate: per-SOURCE pass rate
     at the t = 5000 operating point with exact round-half-up micro
@@ -774,7 +775,12 @@ def _streaming_conformal_oracle_sql(rounds: int = 3) -> str:
     )
 
 
-@q("streaming_conformal_coverage", _streaming_conformal_oracle_sql(3))
+@q(
+    "streaming_conformal_coverage",
+    _streaming_conformal_oracle_sql(3),
+    memo=True,
+    split=(_COVERAGE_TIMINGS, "stream_startup_s", "stream_drain_s"),
+)
 def streaming_conformal_coverage(spark, sf_dir):
     """Deploy-time CONFORMAL COVERAGE monitor as a real Structured
     Streaming run — the third fully oracle-checked streaming op (after
@@ -1257,7 +1263,7 @@ def _ivf_tombstone_oracle() -> str:
     )
 
 
-@q("ann_ivf_tombstone_delete", _ivf_tombstone_oracle())
+@q("ann_ivf_tombstone_delete", _ivf_tombstone_oracle(), memo=True)
 def ann_ivf_tombstone_delete(spark, sf_dir):
     """GDPR delete meets the vector index: when rows must disappear
     from a 100 TB IVF layout NOW, you don't re-cluster — you tombstone.

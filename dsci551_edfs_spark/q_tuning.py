@@ -496,6 +496,7 @@ _CENTS = "CAST(floor({p} * 100 + 0.5) AS BIGINT)"
     FROM merged m JOIN customer c ON m.o_custkey = c.c_custkey
     GROUP BY 1
     """,
+    memo=True,
 )
 def ivm_segment_revenue(spark, sf_dir):
     """Incremental view maintenance: a revenue-by-segment aggregate view

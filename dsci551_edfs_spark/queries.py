@@ -1,57 +1,25 @@
-"""Query catalog facade: every implemented operator exposed as a
+"""Query catalog: every implemented operator exposed as a
 (spark, sf_dir) -> DataFrame callable, with a DuckDB oracle SQL string
 where the semantics are ANSI-SQL-expressible.
 
-Round-13 split: the catalog body lives in per-family q_* modules (each
-<3,000 lines); importing THIS module imports them all, so
-`from dsci551_edfs_spark.queries import QUERIES, ORACLES` keeps working
-unchanged, and every name the monolith used to expose (helpers included)
-is re-exported below for test/tool compatibility.
+Importing this module imports every family module (q_* and
+queries_tpch), each of which registers its queries with `@q`, so
+`from dsci551_edfs_spark.queries import QUERIES, ORACLES` sees the whole
+catalog. Helpers are imported from the module that defines them.
 
-Naming contract and FP policy are documented in queries_base.py.
+Naming contract, FP policy and the `@q` declaration are documented in
+queries_base.py.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession  # noqa: F401
-from pyspark.sql import functions as F  # noqa: F401
+import time
 
-from . import memo as MEMO  # noqa: E402
-from .queries_base import (  # noqa: F401
-    ORACLES,
-    QUERIES,
-    SCRATCH,
-    _scratch_dir,
-    _t,
-    q,
-)
+from pyspark.sql import SparkSession
 
-from . import q_reference  # noqa: E402,F401  (registry side effects)
-from . import q_pipeline  # noqa: E402,F401  (registry side effects)
-from . import q_media_temporal  # noqa: E402,F401  (registry side effects)
-from . import q_relational_ext  # noqa: E402,F401  (registry side effects)
-from . import q_curation  # noqa: E402,F401  (registry side effects)
-from . import q_embeddings  # noqa: E402,F401  (registry side effects)
-from . import q_quality_mixture  # noqa: E402,F401  (registry side effects)
-from . import q_layout_round5  # noqa: E402,F401  (registry side effects)
-from . import q_pca_retrieval  # noqa: E402,F401  (registry side effects)
-from . import q_tuning  # noqa: E402,F401  (registry side effects)
-from . import q_analytics_a  # noqa: E402,F401  (registry side effects)
-from . import q_analytics_b  # noqa: E402,F401  (registry side effects)
-from . import q_round13  # noqa: E402,F401  (registry side effects)
-
-# Extended TPC-H-shape relational coverage registers itself via @q on import.
-from . import queries_tpch  # noqa: E402,F401  (registry side effects)
-
-# Re-export the full former-monolith surface: tests, tools and notebooks
-# imported module-level helpers by name (e.g. _sample_codebooks,
-# _LSH_CONFIGS, _BLOCKING_TRUTH_CAP); make every family-module global
-# reachable here so the split is invisible to importers. Explicit names
-# win; this only fills gaps, never overwrites.
-import sys as _sys
-
-_self = _sys.modules[__name__]
-for _m in (
+from . import memo as MEMO
+# import order is registration order
+from . import (  # noqa: F401  (registry side effects)
     q_reference,
     q_pipeline,
     q_media_temporal,
@@ -65,107 +33,40 @@ for _m in (
     q_analytics_a,
     q_analytics_b,
     q_round13,
-):
-    for _k, _v in vars(_m).items():
-        if not _k.startswith("__") and not hasattr(_self, _k):
-            setattr(_self, _k, _v)
-del _sys, _self, _m, _k, _v
-
-MEMOIZED_QUERIES: dict[str, str] = {
-    "copurchase_triangles": "copurchase_strong_edges",
-    "copurchase_bfs_hops": "bfs_hops",
-    "dedup_clusters_star": "dedup_clusters_star",
-    "embedding_single_linkage": "sl_labels",
-    "embedding_single_linkage_lsh": "sl_labels_lsh",
-    "ann_ivf_persisted": "ivf_idx",
-    "knn_label_vote_ivf": "ivf_idx",
-    "ann_ivf_tombstone_delete": "ivf_idx",
-    "edfs_datasource_scan": "edfs_layout",
-    "hypertable_rollup_day": "rollup_hour",
-    "sessionize_events_bucketed": "sess_bucket",
-    "embedding_dup_pairs_lsh": "emb_twins",
-    "ann_topk_pq": "pq_codes_s16x64",
-    "ivm_segment_revenue": "ivm_seg_rev_base",
-    # r14 shared text layout (sources/shared_text_layout.py): tokenize/
-    # shingle the corpus once, serve the token-shuffle family from the
-    # bucketed artifacts. Tags carry the default bucket-count suffix
-    # (spark.dsci551.textLayoutBuckets=16); a non-default bucket conf
-    # builds a differently-tagged layout whose cost lands in
-    # first_call_s instead of build_s — attribution-only, never timing.
-    # Order matters: the first query declaring a tag absorbs its build,
-    # and shingle3_posting's build itself serves from shingle3_sets.
-    "ngram_jaccard_pairs": "shingle3_posting_b16",
-    "containment_dup_pairs": "shingle3_posting_b16",
-    "minhash_dedup_pairs": "shingle3_sets",
-    "minhash_pr_eval": "shingle3_sets",
-    "hashed_tfidf_knn": "tok_tf_b16",
-    "tfidf_doc_pairs": "tok_tf_b16",
-    "streaming_quality_gate": "tok_tf_b16",
-    # r14 batch 2: the BM25 family reads tok_tf + the tok_doc_stats
-    # statistics sibling (built from it — attributed to the family's
-    # first query, which runs after hashed_tfidf_knn has absorbed the
-    # tok_tf build itself); the decontamination family and the e2e/prep
-    # pipelines read the gram-hash posting
-    "bm25_search_topk": "tok_doc_stats_b16",
-    "hybrid_rrf_search": "tok_tf_b16",
-    "retrieval_eval_metrics": "tok_tf_b16",
-    "retrieval_ndcg": "tok_tf_b16",
-    "decontam_overlap": "shingle3_posting_b16",
-    "curation_pipeline_e2e": "shingle3_posting_b16",
-    "corpus_prep_pipeline": "shingle3_sets",
-    "decontam_multi_n": "gram5_posting",
-    "prefix_filter_jaccard_pairs": "shingle3_sets",
-    "incremental_dedup_near": "shingle3_sets",
-    "doc_novelty_scores": "shingle3_sets",
-    # all four LR-metric queries serve the SAME memoized scored frame
-    # (which itself builds/serves the lr_model_r3 model memo inside its
-    # build); warm_memos dedups the build by tag, so it is attributed
-    # once, to quality_lr_calibration (ledger order) — ADVICE r12: every
-    # consumer of the memo is declared, so no standalone timing can
-    # land a cold build inside a query median
-    "quality_lr_calibration": "lr_scored_r3",
-    "quality_lr_auc": "lr_scored_r3",
-    "quality_lr_threshold_sweep": "lr_scored_r3",
-    "quality_lr_ece": "lr_scored_r3",
-    # round-13 consumers of the fit-once artifacts: cartography reads
-    # the full GD trajectory memo; the other three read the scored frame
-    "dataset_cartography": "lr_traj_r3",
-    "conformal_gate_threshold": "lr_scored_r3",
-    "label_noise_confident_joint": "lr_scored_r3",
-    "gate_fairness_audit": "lr_scored_r3",
-    # the streaming coverage monitor freezes t4 off the scored frame
-    # (and the model memo inside it) before the stream starts
-    "streaming_conformal_coverage": "lr_scored_r3",
-}
+    queries_tpch,
+)
+from .queries_base import (  # noqa: F401
+    MEMO_QUERIES,
+    ORACLES,
+    QUERIES,
+    SCRATCH,
+    _scratch_dir,
+    _t,
+    q,
+)
 
 
 def warm_memos(spark: SparkSession, sf_dir: str) -> dict[str, dict]:
     """Force every per-corpus memo to exist (building on first-ever run,
-    reloading from the memo store otherwise) and itemize the cost:
-    `first_call_s` is this call end-to-end, `build_s` the once-per-corpus
-    build inside it (0.0 = served from disk). bench.py runs this OUTSIDE
-    the timed region so per-query medians measure steady-state probes —
-    honest accounting, since the builds really do happen once per corpus
-    version, not per query."""
-    import time as _time
-
+    reloading from the memo store otherwise) by calling each
+    `@q(memo=True)` query once, in registration order, and itemize the
+    cost: `first_call_s` is that call end-to-end, `build_s` the memo
+    build seconds booked during it (0.0 = everything it reads was on
+    disk or already built by an earlier query). memo.BUILD_SECONDS counts
+    each build once, so the `build_s` values sum to the real build time.
+    bench.py runs this OUTSIDE the timed region so per-query medians
+    measure steady-state probes."""
     out: dict[str, dict] = {}
-    seen_tags: set[str] = set()
-    for qname, tag in MEMOIZED_QUERIES.items():
-        t0 = _time.perf_counter()
+    built = round(sum(MEMO.BUILD_SECONDS.values()), 3)
+    for qname in MEMO_QUERIES:
+        t0 = time.perf_counter()
         QUERIES[qname](spark, sf_dir).write.mode("overwrite").format(
             "noop"
         ).save()
+        first_call_s = round(time.perf_counter() - t0, 3)
+        before, built = built, round(sum(MEMO.BUILD_SECONDS.values()), 3)
         out[qname] = {
-            "first_call_s": round(_time.perf_counter() - t0, 3),
-            # a tag shared by several queries (ivf_idx) builds ONCE —
-            # attribute its build to the first query in ledger order so
-            # the build total is a real sum, not a double count
-            "build_s": (
-                MEMO.BUILD_SECONDS.get(tag, 0.0)
-                if tag not in seen_tags
-                else 0.0
-            ),
+            "first_call_s": first_call_s,
+            "build_s": round(built - before, 3),
         }
-        seen_tags.add(tag)
     return out

@@ -1,8 +1,13 @@
-"""Registry core for the query catalog (round-13 split): the
-QUERIES/ORACLES dicts, the @q decorator, and the shared loader
-helpers every per-family module imports. The catalog itself lives
-in the q_* family modules; `queries.py` is the facade that imports
-them all and re-exports the full surface.
+"""Registry core for the query catalog: the @q decorator, the records
+it fills, and the shared loader helpers every family module imports.
+The catalog itself lives in the q_* family modules and queries_tpch;
+`queries.py` imports them all so the registry is complete.
+
+`@q` is the one place a query's facts are written: its name, its DuckDB
+oracle (ORACLES), whether its first call builds or serves a per-corpus
+memo (MEMO_QUERIES, warmed by `queries.warm_memos` outside the bench's
+timed region), and, for a query with a fixed multi-job startup cost,
+the last-run timing dict bench.py splits its median by (SPLITS).
 
 Every implemented operator is exposed as a
 (spark, sf_dir) -> DataFrame callable, with a DuckDB oracle SQL string
@@ -38,15 +43,34 @@ from .sources.registry import load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
+# memo=True queries, in registration order
+MEMO_QUERIES: list[str] = []
+# split=... queries: (last-run timing dict, startup key, steady key)
+SPLITS: dict[str, tuple[dict[str, float], str, str]] = {}
 
 SCRATCH = MEMO.SCRATCH
 
 
-def q(name: str, oracle: str | None = None):
+def q(
+    name: str,
+    oracle: str | None = None,
+    *,
+    memo: bool = False,
+    split: tuple[dict[str, float], str, str] | None = None,
+):
+    """Register ``name``. ``memo=True``: its first call builds or serves
+    a per-corpus memo (`memo.dataframe_memo`/`layout_memo`).
+    ``split=(timings, startup_key, steady_key)``: each run leaves its
+    fixed startup and steady operator seconds in ``timings``."""
+
     def deco(fn):
         QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle
+        if memo:
+            MEMO_QUERIES.append(name)
+        if split is not None:
+            SPLITS[name] = split
         return fn
 
     return deco

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .queries import _t, q
+from .queries_base import _t, q
 
 __all__: list[str] = []
 

@@ -23,16 +23,15 @@ posting self-join and the tf⨝df joins that consume them plan with NO
 Exchange — the keyed shuffle is paid once at write, exactly the
 bucketing contract sources/bucketing.py documents.
 
-Bucket count: ``spark.dsci551.textLayoutBuckets`` (default 16). At
-production scale size it to ~(artifact bytes / 128 MiB) — a property of
-the corpus, not the local core count; the default keeps test-scale
-artifacts at a sane handful of files while still giving the local bench
-16-way scan parallelism.
+Bucket count: ``_N_BUCKETS`` (16). At production scale size it to
+~(artifact bytes / 128 MiB) — a property of the corpus, not the local
+core count; 16 keeps test-scale artifacts at a sane handful of files
+while still giving the local bench 16-way scan parallelism.
 
-The memo path embeds the corpus fingerprint AND the bucket count, so
-regenerated data or a re-sized layout never serves stale buckets; the
-catalog entry is session-scoped and re-declared (cached per session)
-over the settled location on first use.
+The memo tag embeds the bucket count and the memo path the corpus
+fingerprint, so regenerated data or a re-sized layout never serves
+stale buckets; the catalog entry is session-scoped and re-declared
+(cached per session) over the settled location on first use.
 """
 
 from __future__ import annotations
@@ -55,15 +54,10 @@ __all__ = [
     "multi_gram_posting",
 ]
 
-_BUCKETS_CONF = "spark.dsci551.textLayoutBuckets"
-_DEFAULT_BUCKETS = 16
+_N_BUCKETS = 16
 
 # (session id, memo path) -> declared catalog table name
 _DECLARED: dict[tuple[int, str], str] = {}
-
-
-def _n_buckets(spark: SparkSession) -> int:
-    return int(spark.conf.get(_BUCKETS_CONF, str(_DEFAULT_BUCKETS)))
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -79,7 +73,6 @@ def _serve_bucketed(
     stem: str,
     cols_ddl: str,
     key: str,
-    n_buckets: int,
 ) -> DataFrame:
     """Session-scoped catalog declaration of a settled bucketed layout
     (bucket metadata lives in the catalog, not the files — a bare
@@ -92,17 +85,17 @@ def _serve_bucketed(
         spark.sql(
             f"CREATE TABLE {tname} ({cols_ddl}) USING PARQUET "
             f"CLUSTERED BY ({key}) SORTED BY ({key}) "
-            f"INTO {n_buckets} BUCKETS LOCATION '{path}'"
+            f"INTO {_N_BUCKETS} BUCKETS LOCATION '{path}'"
         )
         _DECLARED[ck] = tname
     return spark.table(tname)
 
 
-def _build_bucketed(df: DataFrame, key: str, n_buckets: int, tmp: str) -> None:
+def _build_bucketed(df: DataFrame, key: str, tmp: str) -> None:
     from .bucketing import write_bucketed
 
     scratch_name = f"_shared_text_build_{abs(hash(tmp)) % 10**8}"
-    write_bucketed(df, scratch_name, key, n_buckets, tmp)
+    write_bucketed(df, scratch_name, key, _N_BUCKETS, tmp)
     df.sparkSession.sql(f"DROP TABLE IF EXISTS {scratch_name}")
 
 
@@ -112,8 +105,6 @@ def token_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
     and tf⨝df joins read it exchange-free. Identical arithmetic to the
     inline ``explode(tokens) → groupBy(id, token) count`` every
     consumer previously ran."""
-    nb = _n_buckets(spark)
-
     def build(tmp: str) -> None:
         d = _docs(spark, sf_dir)
         tf = (
@@ -124,14 +115,14 @@ def token_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("id", "token")
             .agg(F.count("*").cast("long").alias("tf"))
         )
-        _build_bucketed(tf, "token", nb, tmp)
+        _build_bucketed(tf, "token", tmp)
 
     path = MEMO.layout_memo(
-        f"tok_tf_b{nb}", sf_dir, ["documents"], build, markers=["_SUCCESS"]
+        f"tok_tf_b{_N_BUCKETS}", sf_dir, ["documents"], build, markers=["_SUCCESS"]
     )
     return _serve_bucketed(
         spark, path, "tok_tf", "id bigint, token string, tf bigint",
-        "token", nb,
+        "token",
     )
 
 
@@ -155,7 +146,7 @@ def token_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return MEMO.dataframe_memo(
-        spark, f"tok_doc_stats_b{_n_buckets(spark)}", sf_dir,
+        spark, f"tok_doc_stats_b{_N_BUCKETS}", sf_dir,
         ["documents"], build,
     )
 
@@ -182,8 +173,6 @@ def shingle_posting(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`dedup._pair_intersections`) reads its DF-count aggregate, its
     DF-prune semi-join and its candidate self-join all exchange-free.
     Row set identical to the inline explode of `shingle_sets`."""
-    nb = _n_buckets(spark)
-
     def build(tmp: str) -> None:
         sized = shingle_sets(spark, sf_dir).select(
             "id", F.size("shingles").alias("n_sh"), "shingles"
@@ -193,10 +182,10 @@ def shingle_posting(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_sh").cast("int").alias("n_sh"),
             F.explode("shingles").alias("shingle"),
         ).select("id", "n_sh", F.xxhash64("shingle").alias("shash"))
-        _build_bucketed(posting, "shash", nb, tmp)
+        _build_bucketed(posting, "shash", tmp)
 
     path = MEMO.layout_memo(
-        f"shingle3_posting_b{nb}",
+        f"shingle3_posting_b{_N_BUCKETS}",
         sf_dir,
         ["documents"],
         build,
@@ -204,7 +193,7 @@ def shingle_posting(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return _serve_bucketed(
         spark, path, "shingle3_posting", "id bigint, n_sh int, shash bigint",
-        "shash", nb,
+        "shash",
     )
 
 

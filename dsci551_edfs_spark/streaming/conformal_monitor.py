@@ -51,9 +51,9 @@ __all__ = [
 #: marginal guarantee the split-conformal threshold promises.
 COVERAGE_TARGET_MICRO = 900_000
 
-#: wall-clock split of the LAST conformal_coverage_stream run —
-#: bench.py reads this through _SPLIT_PROVIDERS so the fixed stream
-#: machinery cost (checkpoint + query startup) is itemized apart from
+#: wall-clock split of the LAST conformal_coverage_stream run — the
+#: query's @q(split=...) declaration names it, so bench.py itemizes the
+#: fixed stream machinery cost (checkpoint + query startup) apart from
 #: the steady per-batch scoring drain:
 #:   stream_startup_s   .start() -> first foreachBatch invocation
 #:   stream_drain_s     first batch -> stream termination

@@ -1,7 +1,8 @@
 """bench.py contract lints — cheap import-level checks that the driver's
 evidence pipeline cannot silently rot: every HEADLINE name resolves,
 the r1-comparable subset stays frozen (it is the ONLY cross-round
-comparable number), and every memoized query maps to a real memo tag."""
+comparable number), and the `@q` memo/split declarations match the
+code they describe."""
 
 import importlib
 import os
@@ -62,29 +63,34 @@ def test_r1_comparable_prefix_is_frozen():
 def test_queries_split_import_surface():
     """Round-13 split pin (verdict r12 #5): the per-family q_* modules
     register into the shared dicts, no module exceeds 3,000 lines, and
-    every name external consumers import from `queries` still resolves
-    on the facade — the split is invisible to importers."""
+    the facade exposes the registry and its entry points only — helpers
+    are imported from the module that defines them."""
     import inspect
 
     import dsci551_edfs_spark.queries as Q
+    from dsci551_edfs_spark import q_analytics_b, q_embeddings, q_reference, q_tuning
 
-    # the full former-monolith import surface used by tests/tools/entry
     for name in (
         "QUERIES",
         "ORACLES",
-        "MEMOIZED_QUERIES",
+        "SCRATCH",
         "warm_memos",
         "_t",
         "_scratch_dir",
         "q",
-        "_BLOCKING_TRUTH_CAP",
-        "_sample_codebooks",
-        "_LSH_CONFIGS",
-        "_lsh_detect_p_sql",
-        "_lr_scored_frame",
-        "_lr_trained_model",
     ):
         assert hasattr(Q, name), name
+    # no re-export of family-module globals
+    for mod, name in (
+        (q_embeddings, "_BLOCKING_TRUTH_CAP"),
+        (q_embeddings, "_sample_codebooks"),
+        (q_tuning, "_LSH_CONFIGS"),
+        (q_tuning, "_lsh_detect_p_sql"),
+        (q_analytics_b, "_lr_scored_frame"),
+        (q_analytics_b, "_lr_trained_model"),
+    ):
+        assert hasattr(mod, name) and not hasattr(Q, name), name
+    assert len([k for k in vars(Q) if not k.startswith("__")]) < 40
     assert len(Q.QUERIES) >= 307
     assert set(Q.ORACLES) <= set(Q.QUERIES)
     # size bound: the maintainability risk the split exists to remove
@@ -98,17 +104,20 @@ def test_queries_split_import_surface():
                 n = sum(1 for _ in fh)
             assert n <= 3000, f"{f} has {n} lines (>3000)"
     # registration really comes from the family modules
-    from dsci551_edfs_spark import q_analytics_b, q_reference
-
     assert inspect.getmodule(Q.QUERIES["pmr_avg"]) is q_reference
     assert inspect.getmodule(Q.QUERIES["quality_lr_ece"]) is q_analytics_b
 
 
 def test_memoized_queries_resolve():
-    from dsci551_edfs_spark.queries import MEMOIZED_QUERIES, QUERIES
+    """Every `@q(memo=True)` query is registered once and benched."""
+    bench = _bench()
+    from dsci551_edfs_spark.queries import QUERIES
+    from dsci551_edfs_spark.queries_base import MEMO_QUERIES
 
-    for qname in MEMOIZED_QUERIES:
+    assert len(set(MEMO_QUERIES)) == len(MEMO_QUERIES)
+    for qname in MEMO_QUERIES:
         assert qname in QUERIES, qname
+        assert qname in bench.HEADLINE, qname
 
 
 # ---------------------------------------------------------- timed purity
@@ -153,53 +162,137 @@ _WRITE_MARKERS = (
 _MEMO_MARKERS = ("layout_memo(", "dataframe_memo(")
 
 
-def _package_callees(fn, depth=3, seen=None):
-    """fn plus the package-defined functions it references, transitively
-    to `depth` levels — PRUNED at memo-store boundaries: a frame whose
-    source routes through dataframe_memo/layout_memo is exempt and its
-    callees are not descended into (whatever they write runs
-    once-per-corpus, warmed outside the timed region; memo.py's own
-    writers are beneath that boundary by construction). Resolution is
-    static: names that look like calls in the source are looked up in
-    fn's globals (following one `module.attr` hop), keeping only
-    functions defined under dsci551_edfs_spark. This closes the r9
-    one-level gap where a write inside a helper with an unlisted name
-    passed the lint silently."""
-    import inspect
+def _local_imports(fn, src):
+    """name -> object for the package imports written INSIDE fn's
+    source (`from .x import y [as z]`, `from . import m`), parsed with
+    ast: the function-local import idiom every shared-layout consumer
+    uses, invisible to fn's globals."""
+    import ast
+    import importlib
+    import textwrap
+
+    out = {}
+    for node in ast.walk(ast.parse(textwrap.dedent(src))):
+        if not isinstance(node, ast.ImportFrom):
+            continue
+        base = (
+            fn.__module__.rsplit(".", node.level)[0] if node.level else ""
+        )
+        mod = ".".join(p for p in (base, node.module) if p)
+        if not mod.startswith("dsci551_edfs_spark"):
+            continue
+        holder = importlib.import_module(mod)
+        for alias in node.names:
+            obj = getattr(holder, alias.name, None)
+            if obj is None:  # a submodule not yet imported
+                obj = importlib.import_module(f"{mod}.{alias.name}")
+            out[alias.asname or alias.name] = obj
+    return out
+
+
+def _callees(fn, src):
+    """The package-defined functions fn's source references. Resolution
+    is static: names that look like calls in the source are looked up
+    in fn's globals and its function-local imports (following one
+    `module.attr` hop), keeping only functions defined under
+    dsci551_edfs_spark."""
     import re
     import types
 
+    ns = {**getattr(fn, "__globals__", {}), **_local_imports(fn, src)}
+    targets = []
+    for name in re.findall(r"\b([A-Za-z_]\w*)\s*\(", src):
+        obj = ns.get(name)
+        if obj is not None:
+            targets.append(obj)
+    for mod, attr in re.findall(r"\b([A-Za-z_]\w*)\.([A-Za-z_]\w*)\s*\(", src):
+        holder = ns.get(mod)
+        if isinstance(holder, types.ModuleType):
+            obj = getattr(holder, attr, None)
+            if obj is not None:
+                targets.append(obj)
+    return [
+        obj
+        for obj in targets
+        if isinstance(obj, types.FunctionType)
+        and getattr(obj, "__module__", "").startswith("dsci551_edfs_spark")
+    ]
+
+
+def _source(fn):
+    import inspect
+
+    try:
+        return inspect.getsource(fn)
+    except (OSError, TypeError):
+        return None
+
+
+def _package_callees(fn, depth=3, seen=None):
+    """fn plus the package-defined functions it references (`_callees`),
+    transitively to `depth` levels — PRUNED at memo-store boundaries: a
+    frame whose source routes through dataframe_memo/layout_memo is
+    exempt and its callees are not descended into (whatever they write
+    runs once-per-corpus, warmed outside the timed region; memo.py's
+    own writers are beneath that boundary by construction). This closes
+    the r9 one-level gap where a write inside a helper with an unlisted
+    name passed the lint silently."""
     if seen is None:
         seen = set()
     if fn in seen or depth < 0:
         return []
     seen.add(fn)
-    try:
-        src = inspect.getsource(fn)
-    except (OSError, TypeError):
+    src = _source(fn)
+    if src is None:
         return []
     if any(m in src for m in _MEMO_MARKERS):
         return []  # memo boundary: frame and its subtree are untimed
     out = [(fn, src)]
-    g = getattr(fn, "__globals__", {})
-    targets = []
-    for name in re.findall(r"\b([A-Za-z_]\w*)\s*\(", src):
-        obj = g.get(name)
-        if obj is not None:
-            targets.append(obj)
-    for mod, attr in re.findall(r"\b([A-Za-z_]\w*)\.([A-Za-z_]\w*)\s*\(", src):
-        holder = g.get(mod)
-        if isinstance(holder, types.ModuleType):
-            obj = getattr(holder, attr, None)
-            if obj is not None:
-                targets.append(obj)
-    for obj in targets:
-        if (
-            isinstance(obj, types.FunctionType)
-            and getattr(obj, "__module__", "").startswith("dsci551_edfs_spark")
-        ):
-            out.extend(_package_callees(obj, depth - 1, seen))
+    for obj in _callees(fn, src):
+        out.extend(_package_callees(obj, depth - 1, seen))
     return out
+
+
+def _reaches_memo(fn, depth=3):
+    """Whether a frame within `depth` levels of fn's package call graph
+    (breadth first, so each function is read at its shallowest level)
+    calls dataframe_memo/layout_memo."""
+    frontier, seen = [fn], {fn}
+    for _ in range(depth + 1):
+        nxt = []
+        for f in frontier:
+            src = _source(f)
+            if src is None:
+                continue
+            if any(m in src for m in _MEMO_MARKERS):
+                return True
+            for g in _callees(f, src):
+                if g not in seen:
+                    seen.add(g)
+                    nxt.append(g)
+        frontier = nxt
+    return False
+
+
+def test_memo_declarations_match_code():
+    """`@q(memo=True)` is the one record of which queries read a
+    per-corpus memo: every declared query reaches dataframe_memo/
+    layout_memo in its package call graph, and every HEADLINE query that
+    reaches one is declared — an undeclared consumer is warmed only if
+    another query happens to build its memo first, or a standalone
+    timing lands the cold build inside its median (SCALE.md)."""
+    bench = _bench()
+    from dsci551_edfs_spark.queries import QUERIES
+    from dsci551_edfs_spark.queries_base import MEMO_QUERIES
+
+    unreached = [n for n in MEMO_QUERIES if not _reaches_memo(QUERIES[n])]
+    undeclared = [
+        n
+        for n in bench.HEADLINE
+        if n not in MEMO_QUERIES and _reaches_memo(QUERIES[n])
+    ]
+    assert not unreached, f"declared memo=True, no memo reached: {unreached}"
+    assert not undeclared, f"reach a memo, not declared: {undeclared}"
 
 
 def test_headline_timed_regions_do_not_ingest():
@@ -272,22 +365,17 @@ def test_ambient_load_metric_shape():
 
 
 def test_split_providers_resolve():
-    """Every multi-job split provider maps a real HEADLINE query to a
-    real module-level last-run timing dict (verdict r11 #4)."""
-    import importlib
-
+    """Every `@q(split=...)` declaration names a benched query, a real
+    last-run timing dict and two distinct `*_s` keys (verdict r11 #4)."""
     bench = _bench()
     from dsci551_edfs_spark.queries import QUERIES
+    from dsci551_edfs_spark.queries_base import SPLITS
 
-    assert set(bench._SPLIT_PROVIDERS) >= {
-        "streaming_quality_gate",
-        "quality_lr_cv",
-    }
-    for qname, (mod, attr, k_start, k_steady) in bench._SPLIT_PROVIDERS.items():
+    assert set(SPLITS) >= {"streaming_quality_gate", "quality_lr_cv"}
+    for qname, (timings, k_start, k_steady) in SPLITS.items():
         assert qname in QUERIES, qname
         assert qname in bench.HEADLINE, qname
-        d = getattr(importlib.import_module(mod), attr)
-        assert isinstance(d, dict)
+        assert isinstance(timings, dict)
         assert k_start.endswith("_s") and k_steady.endswith("_s")
         assert k_start != k_steady
 
@@ -372,7 +460,7 @@ def test_r1_quiet_median_measurement(spark):
     totals = sorted(c + e for c, e in r["runs"])
     assert r["median_s"] == round(totals[2], 3)
     assert r["spread_s"] == round(totals[-1] - totals[0], 3)
-    assert r["split"] is None  # not a _SPLIT_PROVIDERS query
+    assert r["split"] is None  # not declared with @q(split=...)
     # wiring: main() assigns the headline field from the dedicated pass
     src = inspect.getsource(bench.main)
     assert '"value_r1_comparable_25q": r1_quiet["total_s"]' in src

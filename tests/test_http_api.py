@@ -227,3 +227,38 @@ def test_engine_exception_becomes_edfs500_envelope(server):
     # no business crossing a network boundary
     assert "\n" not in out["response"]
     assert len(out["response"]) <= 250
+
+
+def test_main_serves_get_spark_session_and_cli_warehouse(
+    spark, tmp_path, monkeypatch
+):
+    """`python -m dsci551_edfs_spark.http_api` takes its session from
+    `session.get_spark` (UTC pin, AQE, partition-type inference off —
+    the settings `cli.main` and the tests run with) and defaults its
+    warehouse to the CLI's `<scratch root>/warehouse`."""
+    from dsci551_edfs_spark import http_api
+
+    apps, shells = [], []
+
+    def fake_get_spark(app_name="edfs-spark", extra_conf=None):
+        apps.append(app_name)
+        return spark
+
+    class Server:
+        server_address = ("127.0.0.1", 0)
+
+        def serve_forever(self):
+            raise KeyboardInterrupt
+
+    def fake_make_server(shell, host, port):
+        shells.append(shell)
+        return Server()
+
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
+    monkeypatch.setattr(http_api, "get_spark", fake_get_spark)
+    monkeypatch.setattr(http_api, "make_server", fake_make_server)
+    assert http_api.main([]) == 0
+    assert apps == ["edfs-http"]
+    (shell,) = shells
+    assert shell.spark is spark
+    assert shell.catalog.warehouse == str(tmp_path / "warehouse")

@@ -116,6 +116,65 @@ def test_layout_memo_markers_gate_readiness(scratch, spark, sf_dir):
     assert path2 == path and MEMO.BUILD_SECONDS["lay"] == 0.0
 
 
+def test_nested_build_seconds_count_once(scratch, spark, sf_dir):
+    """A layout whose build serves another memo (shingle_posting over
+    shingle_sets): each tag books only its own build seconds, so the
+    tags sum to no more than the wall time that actually ran."""
+    import time
+
+    def inner():
+        time.sleep(0.5)
+        return spark.range(3)
+
+    def outer(tmp):
+        served = MEMO.dataframe_memo(spark, "inner", sf_dir, ["region"], inner)
+        served.write.parquet(tmp)
+
+    t0 = time.perf_counter()
+    MEMO.layout_memo("outer", sf_dir, ["region"], outer, markers=("_SUCCESS",))
+    wall = time.perf_counter() - t0
+    assert MEMO.BUILD_SECONDS["inner"] >= 0.5
+    assert MEMO.BUILD_SECONDS["outer"] > 0
+    assert MEMO.BUILD_SECONDS["inner"] + MEMO.BUILD_SECONDS["outer"] <= wall
+
+
+def test_build_seconds_exact_across_threads(scratch, monkeypatch):
+    """16 threads each book 200 nested builds on a per-thread fake clock
+    that ticks 1 s per read: every inner build books 1 s and every
+    outer 2 s, so a lost update, or a nesting stack shared between
+    threads, breaks the exact totals."""
+    import sys
+    import threading
+    import types
+
+    ticks = threading.local()
+
+    def perf_counter():
+        ticks.n = getattr(ticks, "n", 0) + 1
+        return float(ticks.n)
+
+    monkeypatch.setattr(MEMO, "time", types.SimpleNamespace(perf_counter=perf_counter))
+
+    def work():
+        for _ in range(200):
+            with MEMO._booked_build("outer"):
+                with MEMO._booked_build("inner"):
+                    pass
+
+    threads = [threading.Thread(target=work) for _ in range(16)]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert MEMO.BUILD_SECONDS == {"inner": 3200.0, "outer": 6400.0}
+
+
 def test_stale_fingerprint_pruned_same_corpus_only(scratch, spark, sf_dir, tmp_path):
     """Regenerated test data changes the fingerprint → the superseded
     memo is GC'd on the next build; memos of the SAME tag for OTHER

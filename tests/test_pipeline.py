@@ -714,10 +714,10 @@ def test_pq_topk_recall_and_rerank(spark, sf_dir):
 
 def test_pq_sample_codebooks_recall(spark, sf_dir):
     """The oracle-restatable demo codebooks (k-means iters=0, first-64
-    init — queries._sample_codebooks) must still deliver near-exact
+    init — q_embeddings._sample_codebooks) must still deliver near-exact
     recall through the two-stage shortlist+rerank, since the registered
     full-oracle queries run them."""
-    from dsci551_edfs_spark.queries import _sample_codebooks
+    from dsci551_edfs_spark.q_embeddings import _sample_codebooks
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)

@@ -8,11 +8,8 @@ from pyspark.sql import functions as F
 
 from dsci551_edfs_spark.pipeline import dedup as DD
 from dsci551_edfs_spark.pipeline import similarity as SIM
-from dsci551_edfs_spark.queries import (
-    _LSH_CONFIGS,
-    _lsh_detect_p_sql,
-    QUERIES,
-)
+from dsci551_edfs_spark.q_tuning import _LSH_CONFIGS, _lsh_detect_p_sql
+from dsci551_edfs_spark.queries import QUERIES
 
 
 # ------------------------------------------------ exact_substring_dedup

@@ -118,7 +118,8 @@ def test_blocking_recall_sampled_truth_engages(spark, tmp_path):
     the SAME slice) — executable code, not a docstring promise."""
     import hashlib
 
-    from dsci551_edfs_spark.queries import _BLOCKING_TRUTH_CAP, QUERIES
+    from dsci551_edfs_spark.q_embeddings import _BLOCKING_TRUTH_CAP
+    from dsci551_edfs_spark.queries import QUERIES
 
     sf = str(tmp_path / "sf_big_emb")
     os.makedirs(sf)
