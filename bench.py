@@ -428,7 +428,6 @@ def _wipe_corpus_memos(sf_dir: str) -> int:
         shutil.rmtree(d, ignore_errors=True)
         n += 1
     MEMO.BUILD_SECONDS.clear()
-    MEMO.clear_plan_cache()
     return n
 
 

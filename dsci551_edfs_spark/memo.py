@@ -19,7 +19,14 @@ mtime under the sf_dir), so:
 
 Builds are atomic: write into a pid-suffixed tmp dir, `os.rename` into
 place. Concurrent builders race benignly — one rename wins, the loser
-discards its tmp and reads the winner's artifact.
+discards its tmp and reads the winner's artifact. A tmp dir whose pid
+is no longer alive is a killed build; the next promote of its tag
+sweeps it.
+
+Session values (read plans, catalog declarations, small driver-side
+fits) are cached in ONE place, `session_cached`: a store on the
+SparkSession object, each entry checked against the version stamp of
+the data it came from, so a rebuilt or regenerated source is a miss.
 
 At 100 TB the same contract holds with the scratch root pointed at the
 shared filesystem / object store the cluster already uses for shuffle
@@ -35,9 +42,11 @@ import os
 import shutil
 import threading
 import time
-from typing import Callable, Sequence
+from typing import Callable, Hashable, Sequence, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
+
+T = TypeVar("T")
 
 
 def scratch_root() -> str:
@@ -63,8 +72,41 @@ _BUILD_LOCK = threading.Lock()
 # per thread: the nested-build seconds of each build in progress
 _BUILDING = threading.local()
 
-# (session id, memo path) -> served DataFrame plan (see dataframe_memo)
-_READ_PLAN_CACHE: dict[tuple[int, str], DataFrame] = {}
+_SESSION_LOCK = threading.Lock()
+
+
+def session_cached(
+    spark: SparkSession, key: Hashable, stamp: Hashable, make: Callable[[], T]
+) -> T:
+    """The value ``make()`` built for ``key`` in this session, built
+    again when ``stamp`` differs from the stamp stored with it. A
+    ``None`` stamp (no version to check against) is never cached.
+
+    The store is a dict on the session object, so it is freed with the
+    session and a new session (``newSession()``) starts empty. ``make``
+    runs outside the lock: two threads may both build on a miss, and
+    the later one's value is kept.
+    """
+    if stamp is None:
+        return make()
+    with _SESSION_LOCK:
+        store = spark.__dict__.setdefault("_edfs_session_store", {})
+        hit = store.get(key)
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
+    value = make()
+    with _SESSION_LOCK:
+        store[key] = (stamp, value)
+    return value
+
+
+def success_stamp(path: str) -> int | None:
+    """mtime_ns of ``path``'s ``_SUCCESS`` marker: changes whenever the
+    artifact is rebuilt; ``None`` when it is not there."""
+    try:
+        return os.stat(os.path.join(path, "_SUCCESS")).st_mtime_ns
+    except OSError:
+        return None
 
 
 def corpus_fingerprint(sf_dir: str, tables: Sequence[str]) -> str:
@@ -117,13 +159,25 @@ def _promote(tmp: str, path: str) -> None:
     _prune_stale(path)
 
 
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # alive, owned by another user
+        pass
+    return True
+
+
 def _prune_stale(keep_path: str) -> None:
     """Drop sibling memos of the same tag built against OLD corpus
     fingerprints (testdata regeneration changes the hash, so superseded
-    artifacts would otherwise accumulate forever). Best-effort: a
-    concurrent reader of a stale memo only exists if it is mid-migration
-    across corpus versions, which the fingerprint contract already
-    declares undefined."""
+    artifacts would otherwise accumulate forever), and the tmp dirs of
+    its builders whose pid is dead (a killed build leaves its
+    ``.tmp.<pid>`` behind). A live pid's tmp dir is a concurrent build
+    and is kept. Best-effort: a concurrent reader of a stale memo only
+    exists if it is mid-migration across corpus versions, which the
+    fingerprint contract already declares undefined."""
     parent, base = os.path.split(keep_path)
     tag = base.rsplit("_", 1)[0]
     try:
@@ -131,13 +185,12 @@ def _prune_stale(keep_path: str) -> None:
     except OSError:
         return
     for d in siblings:
-        if (
-            d.startswith(f"{tag}_")
-            and d != base
-            and not d.startswith(f"{base}.tmp")
-            and d.rsplit("_", 1)[0] == tag
-        ):
-            shutil.rmtree(os.path.join(parent, d), ignore_errors=True)
+        stem, _, pid = d.partition(".tmp.")
+        if d == base or stem.rsplit("_", 1)[0] != tag:
+            continue
+        if pid and (not pid.isdigit() or _pid_alive(int(pid))):
+            continue
+        shutil.rmtree(os.path.join(parent, d), ignore_errors=True)
 
 
 @contextlib.contextmanager
@@ -174,43 +227,22 @@ def dataframe_memo(
     later caller, in any process or SparkSession, pays only the read.
     """
     path = memo_path(tag, sf_dir, tables, version=version)
-    key = (id(spark), path)
     if not is_ready(path):
         with _booked_build(tag):
             tmp = f"{path}.tmp.{os.getpid()}"
             build().write.mode("overwrite").parquet(tmp)
             _promote(tmp, path)
-        # a rebuild means the dir was wiped mid-session: any plan cached
-        # BEFORE the wipe lists the deleted part files — evict it
-        _READ_PLAN_CACHE.pop(key, None)
     else:
         BUILD_SECONDS.setdefault(tag, 0.0)
-    # plan cache, same rationale as sources.registry._PLAN_CACHE: the
-    # read plan costs a parquet-footer pass + a py4j analysis round-trip
-    # per call. No staleness hazard in the steady state — the memo PATH
-    # embeds the source-corpus fingerprint, so a regenerated corpus is a
-    # different path, and a wiped-and-rebuilt dir evicts above.
-    cached = _READ_PLAN_CACHE.get(key)
-    if cached is not None:
-        return cached
-    df = spark.read.parquet(path)
-    _READ_PLAN_CACHE[key] = df
-    return df
-
-
-def clear_plan_cache(spark: SparkSession | None = None) -> int:
-    """Drop memo read-plan cache entries — all of them, or one session's
-    (same hook `sources.registry.clear_plan_cache` provides for the
-    table-plan cache; without it, entries pin stopped SparkSessions).
-    Returns the number of entries dropped."""
-    if spark is None:
-        n = len(_READ_PLAN_CACHE)
-        _READ_PLAN_CACHE.clear()
-        return n
-    keys = [k for k in _READ_PLAN_CACHE if k[0] == id(spark)]
-    for k in keys:
-        del _READ_PLAN_CACHE[k]
-    return len(keys)
+    # the read plan costs a parquet-footer pass + a py4j analysis
+    # round-trip per call; a rebuild (a dir wiped mid-session) writes a
+    # new _SUCCESS, so a plan listing the deleted part files is a miss
+    return session_cached(
+        spark,
+        ("dataframe_memo", path),
+        success_stamp(path),
+        lambda: spark.read.parquet(path),
+    )
 
 
 def layout_memo(

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import as_double
 
-__all__ = ["gram_matrix", "pca_components", "pca_components_cached", "pca_project"]
+__all__ = ["gram_matrix", "pca_components", "pca_project"]
 
 
 def _round_away(x: np.ndarray) -> np.ndarray:
@@ -145,31 +145,16 @@ def pca_components(
     return vals[order], comps, mean_q / scale
 
 
-# driver-side memo for fitted components: the moment pass is corpus-sized,
-# the result is k·d doubles — the same "fit once, project many" contract as
-# the PQ codebook cache. Keyed by the DataFrame's logical plan string, so a
-# different source/filter refits; deterministic because the moments are.
-_COMPONENT_CACHE: dict[tuple, tuple] = {}
-
-
-def pca_components_cached(
-    df: DataFrame, k: int = 2, vec_col: str = "embedding", scale: int = 1000
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    key = (df._jdf.queryExecution().logical().toString(), k, vec_col, scale)
-    if key not in _COMPONENT_CACHE:
-        _COMPONENT_CACHE[key] = pca_components(df, k=k, vec_col=vec_col, scale=scale)
-    return _COMPONENT_CACHE[key]
-
-
 def pca_project(
     df: DataFrame,
-    k: int = 2,
+    comps: np.ndarray,
+    mean: np.ndarray,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    scale: int = 1000,
 ) -> DataFrame:
     """(id, pc1_micro … pck_micro): every embedding projected onto the
-    top-k principal components, micro-int rounded.
+    k fitted components ``comps`` (k×d, from `pca_components`) about
+    ``mean``, micro-int rounded.
 
     The corpus-sized pass is pure codegen: the k components and the mean
     are broadcast as LITERAL arrays (k·d doubles — bytes, not a join)
@@ -180,7 +165,6 @@ def pca_project(
     contracts (orthonormality, variance ordering, numpy parity) instead
     of a DuckDB oracle.
     """
-    _, comps, mean = pca_components_cached(df, k=k, vec_col=vec_col, scale=scale)
     centered = F.zip_with(
         as_double(vec_col),
         F.array(*[F.lit(float(m)) for m in mean]),

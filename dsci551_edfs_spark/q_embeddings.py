@@ -410,46 +410,38 @@ def margin_knn_pairs(spark, sf_dir):
     )
 
 
-# (session id, table fingerprint, n_codes) -> (ids, unit row matrix).
-# The normalized low-id sample rows are PART OF THE PQ INDEX (they are
-# the codebooks that produced the memoized code table), so they are as
-# cacheable as the codes: without this, every serve of the index re-ran
-# the 64-row collect job (r10: ~0.2 s of a 1.6 s op). Fingerprint-keyed
-# like the table plan cache, so regenerated testdata misses cleanly.
-_SAMPLE_CACHE: dict[tuple, "object"] = {}
-
-
-def _sample_unit_rows(emb, n_rows: int = 64, *, _cache_key=None):
-    """(ids, matrix) of the `vec_id < n_rows` vectors, unit-normalized BY
-    SPARK's own expression (so downstream float math is bit-identical to
-    what the oracle restates). Bounded driver collect, cached per corpus
-    version when `_cache_key` is supplied."""
+def _sample_unit_rows(spark, sf_dir, n_rows: int = 64):
+    """(ids, matrix) of the `vec_id < n_rows` embeddings, unit-normalized
+    BY SPARK's own expression (so downstream float math is bit-identical
+    to what the oracle restates). A bounded driver collect, cached per
+    session and embeddings version: the normalized low-id rows are PART
+    OF THE PQ INDEX (the codebooks that produced the memoized code
+    table), so without the cache every serve of the index re-ran the
+    64-row collect job (r10: ~0.2 s of a 1.6 s op)."""
     import numpy as np
 
     from .functions.vectors import as_double, normalize
+    from .sources.registry import table_cached
 
-    key = None
-    if _cache_key is not None:
-        key = (*_cache_key, n_rows)
-        hit = _SAMPLE_CACHE.get(key)
-        if hit is not None:
-            return hit
-    rows = (
-        emb.filter(F.col("vec_id") < n_rows)
-        .select("vec_id", normalize(as_double("embedding")).alias("v"))
-        .orderBy("vec_id")
-        .collect()
+    def collect():
+        rows = (
+            _t(spark, sf_dir, "embeddings")
+            .filter(F.col("vec_id") < n_rows)
+            .select("vec_id", normalize(as_double("embedding")).alias("v"))
+            .orderBy("vec_id")
+            .collect()
+        )
+        return (
+            np.array([r["vec_id"] for r in rows]),
+            np.array([r["v"] for r in rows], dtype=np.float64),
+        )
+
+    return table_cached(
+        spark, sf_dir, "embeddings", ("_sample_unit_rows", n_rows), collect
     )
-    out = (
-        np.array([r["vec_id"] for r in rows]),
-        np.array([r["v"] for r in rows], dtype=np.float64),
-    )
-    if key is not None:
-        _SAMPLE_CACHE[key] = out
-    return out
 
 
-def _sample_codebooks(emb, n_codes: int = 64, n_subspaces: int = 16, *, _cache_key=None):
+def _sample_codebooks(spark, sf_dir, n_codes: int = 64, n_subspaces: int = 16):
     """Sample-as-codebook PQ 'training' (Lloyd with iters=0 and first-id
     init): codebook[j][c] = subspace-j slice of the c-th lowest-id UNIT
     vector. A legitimate degenerate PQ recipe — and, unlike the seeded
@@ -457,21 +449,10 @@ def _sample_codebooks(emb, n_codes: int = 64, n_subspaces: int = 16, *, _cache_k
     product (normalize = sequential double fold), so DuckDB re-derives
     the identical codebooks FROM THE DATA and the registered demos carry
     full oracles."""
-    _ids, mat = _sample_unit_rows(emb, n_codes, _cache_key=_cache_key)
+    _ids, mat = _sample_unit_rows(spark, sf_dir, n_codes)
     n, dim = mat.shape
     dsub = dim // n_subspaces
     return mat.reshape(n, n_subspaces, dsub).transpose(1, 0, 2).copy()
-
-
-def _codebook_cache_key(spark, sf_dir: str) -> tuple:
-    """Session + embeddings-file identity, same recipe as the registry's
-    plan cache."""
-    import os as _os
-
-    from .sources.registry import _table_fingerprint
-
-    path = _os.path.join(_os.path.abspath(sf_dir), "embeddings.parquet")
-    return (id(spark), _table_fingerprint(path))
 
 
 def _pq_oracle_sql(ivf: bool = False) -> str:
@@ -607,8 +588,7 @@ def ann_topk_pq(spark, sf_dir):
     the corpus every call (mapInPandas plans never cache-match across
     calls)."""
     emb = _t(spark, sf_dir, "embeddings")
-    ckey = _codebook_cache_key(spark, sf_dir)
-    cb = _sample_codebooks(emb, _cache_key=ckey)
+    cb = _sample_codebooks(spark, sf_dir)
     codes = MEMO.dataframe_memo(
         spark,
         "pq_codes_s16x64",
@@ -621,7 +601,7 @@ def ann_topk_pq(spark, sf_dir):
     # serving-path shape) instead of re-scanning + re-normalizing the
     # table per call; values are the Spark-normalized doubles, so the
     # oracle math is unchanged
-    sids, smat = _sample_unit_rows(emb, _cache_key=ckey)
+    sids, smat = _sample_unit_rows(spark, sf_dir)
     qmask = sids < 10
     out = SIM.pq_topk(
         emb,

@@ -9,11 +9,7 @@ from __future__ import annotations
 
 from .queries_base import DD, F, MEMO, ORACLES, SIM, TXT, Window, _t, q
 from .q_pipeline import _DOT_SQL, _NORM_SQL, _TOKENS_SQL
-from .q_embeddings import (
-    _codebook_cache_key,
-    _pq_oracle_sql,
-    _sample_codebooks,
-)
+from .q_embeddings import _pq_oracle_sql, _sample_codebooks
 
 def _c4_pages(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
@@ -266,9 +262,7 @@ def ann_topk_ivf_pq(spark, sf_dir):
         n_subspaces=16,
         n_codes=64,
         rerank_k=50,
-        codebooks=_sample_codebooks(
-            emb, _cache_key=_codebook_cache_key(spark, sf_dir)
-        ),
+        codebooks=_sample_codebooks(spark, sf_dir),
     )
     return out.select(
         "query_id",

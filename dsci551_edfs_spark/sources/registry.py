@@ -8,10 +8,13 @@ pushdown are free because every load is a plain parquet scan.
 from __future__ import annotations
 
 import os
+from typing import Any, Callable, Hashable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .. import memo as MEMO
 
 TABLES = (
     "region",
@@ -26,22 +29,7 @@ TABLES = (
     "embeddings",
 )
 
-__all__ = ["TABLES", "load_table", "clear_plan_cache"]
-
-# (session id, sf_dir, table, file fingerprint) -> DataFrame. A DataFrame
-# is an immutable logical plan: rebuilding it per call re-reads parquet
-# footers and pays a py4j analysis round-trip (~0.1 s), which r9 profiling
-# showed was a large share of the per-query driver overhead across the
-# 102-query bench (42 s of plan construction suite-wide). Keyed by
-# id(session): a cached DataFrame keeps its session object alive
-# (df.sparkSession), so the id cannot be recycled onto a different live
-# session; a replaced/restarted session is a new object and misses
-# cleanly. The fingerprint (size + mtime_ns of the table's files — same
-# identity the memo store uses) makes in-place regeneration of the test
-# data a clean miss instead of a stale file index; the superseded entry
-# is evicted on the spot. This is what a real catalog does: resolve a
-# table to ONE plan per (session, table version), not one per mention.
-_PLAN_CACHE: dict[tuple[int, str, str], tuple[str, DataFrame]] = {}
+__all__ = ["TABLES", "load_table", "table_cached"]
 
 
 def _table_fingerprint(path: str) -> str:
@@ -60,21 +48,15 @@ def _table_fingerprint(path: str) -> str:
         return "missing"
 
 
-def clear_plan_cache(spark: SparkSession | None = None) -> None:
-    """Drop cached table plans — all of them, or one session's. The
-    cache otherwise retains entries for stopped sessions (pinning their
-    SparkSession objects); long-lived multi-session hosts should clear
-    on session teardown. Also clears the memo read-plan cache (its twin;
-    one teardown hook covers both)."""
-    from .. import memo as _memo
-
-    _memo.clear_plan_cache(spark)
-    if spark is None:
-        _PLAN_CACHE.clear()
-        return
-    sid = id(spark)
-    for key in [k for k in _PLAN_CACHE if k[0] == sid]:
-        del _PLAN_CACHE[key]
+def table_cached(
+    spark: SparkSession, sf_dir: str, name: str, key: Hashable, make: Callable[[], Any]
+) -> Any:
+    """``make()``'s value for ``key`` derived from table ``name``, built
+    once per session and per version of the table's files (their size +
+    mtime_ns fingerprint, the identity the memo store uses): in-place
+    regeneration of the data is a clean miss, not a stale file index."""
+    path = os.path.join(os.path.abspath(sf_dir), f"{name}.parquet")
+    return MEMO.session_cached(spark, (key, path), _table_fingerprint(path), make)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -84,16 +66,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     `events.ts` is written as parquet TIMESTAMP(NANOS), which Spark's
     reader rejects; we read it via the nanosAsLong legacy mode and convert
     to TimestampType (microsecond floor) — a zero-copy long→timestamp cast
-    inside codegen, applied only for that table."""
+    inside codegen, applied only for that table.
+
+    A DataFrame is an immutable logical plan, and rebuilding it per call
+    re-reads parquet footers and pays a py4j analysis round-trip (~0.1 s;
+    42 s of plan construction across the 102-query bench in r9), so the
+    plan is resolved ONCE per (session, table version), not once per
+    mention — what a real catalog does."""
     sf_dir = os.path.abspath(sf_dir)
-    key = (id(spark), sf_dir, name)
-    fp = _table_fingerprint(os.path.join(sf_dir, f"{name}.parquet"))
-    cached = _PLAN_CACHE.get(key)
-    if cached is not None and cached[0] == fp:
-        return cached[1]
-    df = _load_table_uncached(spark, sf_dir, name)
-    _PLAN_CACHE[key] = (fp, df)
-    return df
+    return table_cached(
+        spark, sf_dir, name, "load_table",
+        lambda: _load_table_uncached(spark, sf_dir, name),
+    )
 
 
 def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

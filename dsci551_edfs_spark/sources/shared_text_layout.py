@@ -30,8 +30,10 @@ while still giving the local bench 16-way scan parallelism.
 
 The memo tag embeds the bucket count and the memo path the corpus
 fingerprint, so regenerated data or a re-sized layout never serves
-stale buckets; the catalog entry is session-scoped and re-declared
-(cached per session) over the settled location on first use.
+stale buckets. The catalog entry is session-scoped: it is declared over
+the settled location on first use and again whenever the layout's
+``_SUCCESS`` changes (a wiped-and-rebuilt layout), through
+``memo.session_cached``.
 """
 
 from __future__ import annotations
@@ -56,9 +58,6 @@ __all__ = [
 
 _N_BUCKETS = 16
 
-# (session id, memo path) -> declared catalog table name
-_DECLARED: dict[tuple[int, str], str] = {}
-
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.hints import spread_small
@@ -77,9 +76,7 @@ def _serve_bucketed(
     """Session-scoped catalog declaration of a settled bucketed layout
     (bucket metadata lives in the catalog, not the files — a bare
     ``spark.read.parquet`` would lose the partitioning)."""
-    ck = (id(spark), path)
-    tname = _DECLARED.get(ck)
-    if tname is None:
+    def declare() -> str:
         tname = f"{stem}_{re.sub(r'[^A-Za-z0-9_]', '_', path.rsplit('/', 1)[-1])}"
         spark.sql(f"DROP TABLE IF EXISTS {tname}")
         spark.sql(
@@ -87,8 +84,13 @@ def _serve_bucketed(
             f"CLUSTERED BY ({key}) SORTED BY ({key}) "
             f"INTO {_N_BUCKETS} BUCKETS LOCATION '{path}'"
         )
-        _DECLARED[ck] = tname
-    return spark.table(tname)
+        return tname
+
+    return spark.table(
+        MEMO.session_cached(
+            spark, ("_serve_bucketed", path), MEMO.success_stamp(path), declare
+        )
+    )
 
 
 def _build_bucketed(df: DataFrame, key: str, tmp: str) -> None:

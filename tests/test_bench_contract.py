@@ -519,3 +519,51 @@ def test_check_correctness_import_stays_bench_free():
         "assert value_hash([(1, 'a')], ['x', 'y'])\n"
     )
     subprocess.run([sys.executable, "-c", probe], cwd=root, check=True)
+
+
+# module-level containers the package may hold; each has a lifetime
+# of its own (the query registry, per-process build seconds, the
+# per-query pins and timings that a per-query scope object is to own).
+# A value cached per session goes through memo.session_cached instead.
+_MODULE_STATE_ALLOWED = {
+    "QUERIES", "ORACLES", "MEMO_QUERIES", "SPLITS", "BUILD_SECONDS",
+    "_CACHED", "LAST_TIMINGS", "LAST_CV_TIMINGS",
+}
+
+
+def test_no_private_session_caches():
+    """No `id(...)` keys (a collected object's id is reused) and no new
+    module-level `{}`/`[]` outside the allowlist anywhere in the
+    package (`__all__` declarations aside)."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "dsci551_edfs_spark"
+    id_calls, state = [], []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        rel = path.relative_to(pkg.parent)
+        id_calls += [
+            f"{rel}:{n.lineno}"
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Name)
+            and n.func.id == "id"
+        ]
+        for n in tree.body:
+            if not isinstance(n, (ast.Assign, ast.AnnAssign)):
+                continue
+            empty = (isinstance(n.value, ast.Dict) and not n.value.keys) or (
+                isinstance(n.value, ast.List) and not n.value.elts
+            )
+            targets = n.targets if isinstance(n, ast.Assign) else [n.target]
+            state += [
+                f"{rel}:{t.id}"
+                for t in targets
+                if empty
+                and isinstance(t, ast.Name)
+                and t.id != "__all__"
+                and t.id not in _MODULE_STATE_ALLOWED
+            ]
+    assert not id_calls, id_calls
+    assert not state, state

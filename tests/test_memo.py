@@ -206,10 +206,14 @@ def test_stale_fingerprint_pruned_same_corpus_only(scratch, spark, sf_dir, tmp_p
     assert MEMO.is_ready(p_main)  # other corpus untouched
 
 
-def test_load_table_plan_cache_identity(spark, sf_dir):
+def test_load_table_plan_cache_identity(spark, sf_dir, tmp_path):
     """load_table resolves a table to ONE DataFrame per (session,
-    sf_dir, table) — the r9 plan cache that removed ~0.1 s of py4j
-    re-resolution per mention across the bench suite."""
+    table version) — the r9 plan cache that removed ~0.1 s of py4j
+    re-resolution per mention across the bench suite. A new session
+    resolves its own plan, and rewriting a table's file is a new
+    version."""
+    import shutil
+
     from dsci551_edfs_spark.sources.registry import load_table
 
     a = load_table(spark, sf_dir, "nation")
@@ -221,6 +225,129 @@ def test_load_table_plan_cache_identity(spark, sf_dir):
     # normalization)
     d = load_table(spark, sf_dir.rstrip("/") + "/", "nation")
     assert d is a
+
+    other = spark.newSession()
+    e = load_table(other, sf_dir, "nation")
+    assert e is not a and e.sparkSession is other
+    assert load_table(other, sf_dir, "nation") is e
+    assert load_table(spark, sf_dir, "nation") is a
+
+    alt = tmp_path / "alt_sf"
+    alt.mkdir()
+    src = os.path.join(sf_dir, "nation.parquet")
+    dst = str(alt / "nation.parquet")
+    (shutil.copytree if os.path.isdir(src) else shutil.copy)(src, dst)
+    f = load_table(spark, str(alt), "nation")
+    assert load_table(spark, str(alt), "nation") is f
+    os.utime(dst, (1, 1))
+    g = load_table(spark, str(alt), "nation")
+    assert g is not f
+    assert g.count() == a.count()
+
+
+def test_session_cached_stamps_and_sessions(spark):
+    """memo.session_cached: one value per (session, key), rebuilt when
+    the stamp changes, never cached under a None stamp."""
+    made = []
+
+    def make():
+        made.append(1)
+        return len(made)
+
+    key = ("test_session_cached", object())
+    assert MEMO.session_cached(spark, key, "v1", make) == 1
+    assert MEMO.session_cached(spark, key, "v1", make) == 1
+    assert MEMO.session_cached(spark, key, "v2", make) == 2
+    assert MEMO.session_cached(spark, key, None, make) == 3
+    assert MEMO.session_cached(spark, key, None, make) == 4
+    assert MEMO.session_cached(spark, key, "v2", make) == 2
+    assert MEMO.session_cached(spark.newSession(), key, "v2", make) == 5
+
+
+def test_session_cached_threads_lose_no_entry(spark):
+    """16 threads (more than cores) fill one fresh session's store with
+    a shortened switch interval: every key written is there afterwards,
+    so neither the store's creation nor an insert is lost."""
+    import sys
+    import threading
+
+    fresh = spark.newSession()
+    n_threads, n_keys = 16, 200
+    start = threading.Barrier(n_threads)
+
+    def fill(t):
+        start.wait(timeout=60)
+        for i in range(n_keys):
+            MEMO.session_cached(fresh, ("stress", t, i), 0, lambda: (t, i))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=fill, args=(t,)) for t in range(n_threads)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+
+    def missing():
+        raise AssertionError("entry lost")
+
+    for t in range(n_threads):
+        for i in range(n_keys):
+            assert MEMO.session_cached(fresh, ("stress", t, i), 0, missing) == (t, i)
+
+
+def test_dataframe_memo_wiped_and_rebuilt(scratch, spark, sf_dir):
+    """A memo dir deleted mid-session is rebuilt, and the read plan
+    served after it lists the new files, not the deleted ones."""
+    import shutil
+
+    def build():
+        return spark.range(7)
+
+    first = MEMO.dataframe_memo(spark, "wipe", sf_dir, ["region"], build)
+    assert first.count() == 7
+    shutil.rmtree(MEMO.memo_path("wipe", sf_dir, ["region"]))
+    again = MEMO.dataframe_memo(spark, "wipe", sf_dir, ["region"], build)
+    assert again.count() == 7
+
+
+def test_text_layout_wiped_and_rebuilt(scratch, spark, sf_dir):
+    """A bucketed text layout deleted mid-session is rebuilt AND
+    re-declared: the session's catalog entry over the old files would
+    fail with FILE_NOT_EXIST."""
+    import glob
+    import shutil
+
+    from dsci551_edfs_spark.sources.shared_text_layout import token_tf
+
+    n = token_tf(spark, sf_dir).count()
+    (layout,) = glob.glob(os.path.join(scratch, "memo", "tok_tf_b16_*"))
+    shutil.rmtree(layout)
+    assert token_tf(spark, sf_dir).count() == n
+
+
+def test_promote_sweeps_dead_builders_tmp_dirs(scratch, spark, sf_dir):
+    """A killed build leaves ``<memo>.tmp.<pid>`` behind; the next
+    promote of the tag removes it when that pid is dead, and keeps the
+    tmp dir of a live pid (a concurrent builder)."""
+    import subprocess
+    import sys
+
+    path = MEMO.memo_path("sweep", sf_dir, ["region"])
+    gone = subprocess.Popen([sys.executable, "-c", "pass"])
+    gone.wait()
+    dead_tmp = f"{path}.tmp.{gone.pid}"
+    live_tmp = f"{path}.tmp.{os.getppid()}"
+    os.makedirs(dead_tmp)
+    os.makedirs(live_tmp)
+    MEMO.dataframe_memo(spark, "sweep", sf_dir, ["region"], lambda: spark.range(1))
+    assert MEMO.is_ready(path)
+    assert not os.path.exists(dead_tmp)
+    assert os.path.isdir(live_tmp)
 
 
 def test_spread_small_parallelizes_single_partition(spark, sf_dir):

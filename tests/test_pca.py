@@ -69,7 +69,7 @@ def test_pca_project_matches_numpy(spark):
     expect = (x - mean) @ comps.T  # numpy reference projection
     got = {
         r["vec_id"]: (r["pc1_micro"], r["pc2_micro"])
-        for r in pca_project(df, k=2).collect()
+        for r in pca_project(df, comps, mean).collect()
     }
     assert len(got) == len(ids)
     for idx, vid in enumerate(ids):
@@ -80,14 +80,47 @@ def test_pca_project_matches_numpy(spark):
 
 
 def test_pca_pc1_captures_more_variance_than_pc2(spark):
-    from dsci551_edfs_spark.pipeline.pca import pca_project
+    from dsci551_edfs_spark.pipeline.pca import pca_components, pca_project
 
     df = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    _, comps, mean = pca_components(df, k=2)
     proj = np.array(
-        [(r["pc1_micro"], r["pc2_micro"]) for r in pca_project(df, k=2).collect()],
+        [(r["pc1_micro"], r["pc2_micro"])
+         for r in pca_project(df, comps, mean).collect()],
         dtype=np.float64,
     )
     assert proj[:, 0].var() >= proj[:, 1].var()
+
+
+def test_pca_project_query_fits_each_table(spark, tmp_path):
+    """Two parquet tables of the same schema get their own components:
+    `embedding_pca_project` on the second must not serve the first's
+    fit (a cache keyed by the logical-plan string did, since every
+    parquet path prints the same unresolved plan)."""
+    from dsci551_edfs_spark.pipeline.pca import pca_components
+    from dsci551_edfs_spark.queries import QUERIES
+
+    # the two tables' largest variance lies on different axes
+    for name, spread in (("a", [5.0, 2.0, 1.0, 0.5]), ("b", [0.5, 1.0, 2.0, 5.0])):
+        x = np.random.default_rng(0).normal(size=(50, 4)) * spread
+        sf = tmp_path / name
+        sf.mkdir()
+        df = spark.createDataFrame(
+            [(i, [float(v) for v in row]) for i, row in enumerate(x)],
+            "vec_id long, embedding array<float>",
+        )
+        df.write.parquet(str(sf / "embeddings.parquet"))
+        out = {
+            r["vec_id"]: (r["pc1_micro"], r["pc2_micro"])
+            for r in QUERIES["embedding_pca_project"](spark, str(sf)).collect()
+        }
+        table = spark.read.parquet(str(sf / "embeddings.parquet"))
+        ids, xs = _load_np(spark, str(sf))
+        _, comps, mean = pca_components(table, k=2)
+        expect = (xs - mean) @ comps.T
+        for idx, vid in enumerate(ids):
+            for c in range(2):
+                assert abs(out[vid][c] - round(expect[idx, c] * 1e6)) <= 1
 
 
 def test_retrieval_eval_metric_bounds(spark):

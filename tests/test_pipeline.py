@@ -723,7 +723,7 @@ def test_pq_sample_codebooks_recall(spark, sf_dir):
     queries = emb.filter(F.col("vec_id") < 10)
     exact = SIM.brute_force_topk(emb, queries, k=5)
     e = {(r["query_id"], r["neighbor_id"]) for r in exact.collect()}
-    books = _sample_codebooks(emb)
+    books = _sample_codebooks(spark, sf_dir)
     assert books.shape == (16, 64, 4)
     got = SIM.pq_topk(
         emb, queries, k=5, n_subspaces=16, n_codes=64,
