@@ -19,25 +19,31 @@ observable semantics:
 Implemented with the JVM Hadoop FileSystem through the SparkContext so the
 same code runs against any Hadoop-compatible store, not just local disk.
 
-Like the namenode's in-memory inode tree, the catalog keeps a handle per
-table it has resolved (`table`): the `DataFrame` of one
+Like the namenode's in-memory inode tree and block map, the catalog keeps
+a handle per table it has resolved (`table`): the `DataFrame` of one
 `spark.read.parquet` (schema and file index already resolved) and, once
-asked for, its sorted partition keys. A handle is valid for one version
-of the table, stamped by the modification time of the `_SUCCESS` marker
+asked for, the table's PMR partials (`sources/partials.py`): per
+partition key its row count and, per numeric column, the non-null count,
+sum, min and max. The partials answer the aggregates, their `debug`
+channel, `getPartitionLocations` and the sorted partition keys without a
+Spark job; they cost one job per table version and partitions × numeric
+columns values of driver memory. A handle is valid for one version of
+the table, stamped by the modification time of the `_SUCCESS` marker
 that every `put` rewrites, so each request costs one FileSystem stat
-instead of a schema-inference job.
+instead of a schema-inference job; a new stamp or an `rm` drops the
+handle and its partials with it.
 """
 
 from __future__ import annotations
 
 import threading
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from datetime import datetime
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
-from .sources import scan as SCN
+from .sources.partials import Partials, map_partials
 
 __all__ = ["EdfsCatalog", "TableHandle"]
 
@@ -50,14 +56,21 @@ class TableHandle:
 
     stamp: int | None
     df: DataFrame
-    keys: list | None = None
+    _partials: Partials | None = None
+    _lock: threading.Lock = field(default_factory=threading.Lock, repr=False)
+
+    def partials(self) -> Partials:
+        """The table's PMR partials, mapped on first use; concurrent first
+        callers wait for the one Spark job."""
+        with self._lock:
+            if self._partials is None:
+                self._partials = map_partials(self.df)
+            return self._partials
 
     def partition_keys(self) -> list:
-        """Sorted partition keys, computed on first use; a racing second
-        computation stores the same list."""
-        if self.keys is None:
-            self.keys = SCN.list_partitions(self.df)
-        return self.keys
+        """Sorted partition keys, read from the partials."""
+        partials = self.partials()
+        return list(partials.keys) if partials.partitioned else []
 
 
 class EdfsCatalog:
@@ -184,7 +197,11 @@ class EdfsCatalog:
         with self._lock:
             handle = self._handles.get(key)
         if handle is None or handle.stamp != stamp:
-            handle = TableHandle(stamp, self.spark.read.parquet(key))
+            fresh = TableHandle(stamp, self.spark.read.parquet(key))
             with self._lock:
-                self._handles[key] = handle
+                # a request racing on the same version keeps the first
+                # handle, so the version's partials are mapped once
+                handle = self._handles.get(key)
+                if handle is None or handle.stamp != stamp:
+                    handle = self._handles[key] = fresh
         return handle

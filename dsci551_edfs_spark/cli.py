@@ -31,7 +31,18 @@ Intentional divergence: `getPartitionLocations` returns
 to report; each partition gives its key and row count.
 
 Every table a command reads comes from `EdfsCatalog.table`, a handle that
-is resolved once per table version and reused across requests.
+is resolved once per table version and reused across requests. The
+aggregates, their `debug` channel and `getPartitionLocations` are answered
+from the handle's PMR partials (one Spark job per table version, none on
+a warm table).
+
+`debug=true` adds `partitions`: one `{partition, partial, size}` entry per
+EDFS partition of the whole table, also when `hash` prunes the result.
+Partitions are numbered 1..n in the order `getPartitionLocations` lists
+them and `readPartition <path> <n>` reads them; `partial` is the
+aggregate over that partition alone (None when it has no non-null value)
+and `size` its row count, the reference's per-partition
+`{Partition, Input, Output}` (`combined_flask.py:712-717`).
 
 Run: ``python -m dsci551_edfs_spark.cli [--warehouse DIR]`` for a REPL, or
 pass a single command after ``--``.
@@ -108,14 +119,12 @@ class EdfsShell:
         path, col = args[0], args[1]
         debug = len(args) >= 3 and args[2].lower() == "true"
         hash_value = args[3] if len(args) >= 4 else None
-        df = self.catalog.table(path).df
+        partials = self.catalog.table(path).partials()
         fn = {"avg": AGG.get_avg, "max": AGG.get_max, "min": AGG.get_min}[kind]
-        value = fn(df, col, hash_value=hash_value)
+        value = fn(partials, col, hash_value=hash_value)
         out = {"result": AGG.format_result(kind, value)}
         if debug:
-            out["partitions"] = [
-                r.asDict() for r in AGG.partition_debug(df, col, kind).collect()
-            ]
+            out["partitions"] = AGG.partition_debug(partials, col, kind)
         return self._ok(out)
 
     # ---------------------------------------------------------- commands
@@ -158,7 +167,7 @@ class EdfsShell:
                 return self._ok(manifest)
             if cmd == "getPartitionLocations":
                 return self._ok(
-                    SCN.get_partition_locations(self.catalog.table(args[0]).df)
+                    SCN.get_partition_locations(self.catalog.table(args[0]).partials())
                 )
             if cmd == "readPartition":
                 table = self.catalog.table(args[0])

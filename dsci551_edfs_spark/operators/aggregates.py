@@ -1,44 +1,64 @@
 """PMR aggregates: `getAvg` / `getMax` / `getMin` (+count), the reference's
-analytical core (`combined_flask.py:549-802`), re-expressed as single
-Catalyst aggregates.
+analytical core (`combined_flask.py:549-802`), as a map step and a reduce.
 
-The reference hand-rolls partial aggregation: one OS process per partition
-computes `(partial, count)` (`calcAvg/calcMax/calcMin`,
-`combined_flask.py:727-760`) and a reduce step merges partials
-(`combined_flask.py:762-802`). Catalyst performs the identical
-partial(map-side) → final split automatically for `avg/max/min/count`
-(HashAggregateExec partial → exchange of ONE row per partition → final), so
-each of these is a one-liner — and, unlike the reference, scales past one
-machine with zero code change.
+The reference computes one `(partial, size)` pair per partition
+(`calcAvg/calcMax/calcMin`, `combined_flask.py:727-760`) and a reduce step
+merges the pairs (`combined_flask.py:762-802`). The engine keeps that
+split:
+- the map step is `sources.partials.map_partials`: one Spark aggregate
+  grouped by the partition column, giving per partition key the row
+  count and the column's non-null count, sum, min and max;
+- `get_avg/get_max/get_min` are the reduce over those rows, on the
+  driver, and the only reduce.
+
+A `DataFrame` argument runs the map step over the (hash-pruned) frame
+for the one column asked, then the reduce: one Spark job, as one
+Catalyst aggregate would cost. A `Partials` argument is a table's map
+output kept by its catalog handle (`TableHandle.partials`), built once
+per table version for every numeric column; the reduce over it runs no
+Spark job. It holds four values per partition key and numeric column,
+so its memory is partitions × columns, never rows.
+
+The reduce reproduces Spark's answers: the avg sums in Spark's
+accumulator type (double, or a decimal with Spark's result scale and
+HALF_UP rounding), NaN orders above every number, and a partition
+without non-null values contributes nothing, so an all-null column, a
+hash key that selects nothing or an empty table answers None.
 
 Semantic quirk modes (SURVEY.md §2.4):
 - default "spark" mode = SQL-correct null-skipping semantics. For `avg`
   this already EQUALS the reference (its NaN-partition exclusion,
   `combined_flask.py:763-764`, is exactly null-skipping avg).
 - mode="legacy" for max: nulls→0 and result floored at 0
-  (`combined_flask.py:741`, `:777`).
+  (`combined_flask.py:741`, `:777`): max(partition maxes ∪ {0}).
 - mode="legacy_firebase" for min: reduce seeded with 0 — the Firebase
-  backend's divergent bug (`combined_flask.py:1676-1688`) — result is
-  min(spark_min, 0) with nulls→+inf first.
+  backend's divergent bug (`combined_flask.py:1676-1688`) — a double,
+  min(partition mins ∪ {0}).
 
-`hash` partition pruning (`combined_flask.py:459-465`): a filter on the
-ingest partition column; over a `partitionBy` parquet layout Catalyst turns
-this into directory-level partition pruning, reading nothing else.
+`hash` partition pruning (`combined_flask.py:459-465`): over a frame, a
+filter on the ingest partition column, which Catalyst turns into
+directory-level pruning; over partials, the same selection of keys
+(`Partials.select`).
 
-Debug channel (`combined_flask.py:712-717`): per-partition partials via one
-extra `groupBy(spark_partition_id())` aggregate — the Spark-native analog of
-the reference's `{Partition, Input, Output}` explanations.
+Debug channel (`combined_flask.py:712-717`): `partition_debug` lists the
+table's EDFS partitions, numbered 1..n in `readPartition` /
+`getPartitionLocations` order, each with its partial (the same reduce
+over that one partition) and its row count — the reference's
+per-partition `{Partition, Input, Output}`.
 """
 
 from __future__ import annotations
 
-from typing import Any
+import decimal
+from decimal import Decimal
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sources.ingest import PARTITION_COL
+from ..sources.partials import Partials, map_partials
 
 __all__ = [
     "validate_numeric",
@@ -63,14 +83,16 @@ HARDCODED_AVG_COLUMNS = {
     "firebase_getAvgArmCircum": "BMXARMC",
 }
 
+Source = DataFrame | Partials
 
-def validate_numeric(df: DataFrame, col: str) -> None:
+
+def validate_numeric(source: Source, col: str) -> None:
     """Fail-fast type gate. The reference reads partition 1 and checks the
     pandas dtype (`combined_flask.py:563-578`); with a real schema this is a
     zero-IO analysis-time check."""
-    if col not in df.columns:
+    if col not in source.schema.fieldNames():
         raise KeyError(f"column {col!r} does not exist")
-    if not isinstance(df.schema[col].dataType, T.NumericType):
+    if not isinstance(source.schema[col].dataType, T.NumericType):
         raise TypeError(f"column {col!r} is not numeric")
 
 
@@ -86,48 +108,75 @@ def _prune(df: DataFrame, hash_value: Any | None) -> DataFrame:
     return df.filter(F.col(PARTITION_COL) == F.lit(str(hash_value)))
 
 
-def get_avg(df: DataFrame, col: str, hash_value: Any | None = None) -> float | None:
+def _mapped(source: Source, col: str, hash_value: Any | None) -> tuple[list[tuple], T.DataType]:
+    """The map step's `(non-null count, sum, min, max)` rows of `col` for
+    the partitions `hash_value` selects, skipping partitions with no
+    non-null value, and the column's type."""
+    validate_numeric(source, col)
+    if isinstance(source, DataFrame):
+        source = map_partials(_prune(source, hash_value), [col])
+        hash_value = None
+    rows = source.columns[col]
+    return [rows[i] for i in source.select(hash_value) if rows[i][0]], source.schema[col].dataType
+
+
+def _order(v):
+    """Spark's ordering of numbers: NaN above everything."""
+    return (v != v, v)
+
+
+def _avg(rows: list[tuple], dtype: T.DataType):
+    n = sum(r[0] for r in rows)
+    if not n:
+        return None
+    if not isinstance(dtype, T.DecimalType):
+        return sum(r[1] for r in rows) / n
+    # Spark's decimal avg: the exact quotient, HALF_UP at scale s + 4
+    with decimal.localcontext() as ctx:
+        ctx.prec = 100
+        exact = sum(r[1] for r in rows) / Decimal(n)
+        return exact.quantize(Decimal(1).scaleb(-min(dtype.scale + 4, 38)), decimal.ROUND_HALF_UP)
+
+
+def _max(rows: list[tuple], dtype: T.DataType):
+    return max((r[3] for r in rows), key=_order, default=None)
+
+
+def _min(rows: list[tuple], dtype: T.DataType):
+    return min((r[2] for r in rows), key=_order, default=None)
+
+
+def get_avg(source: Source, col: str, hash_value: Any | None = None) -> float | None:
     """Reference `getAvg` (`combined_flask.py:549-597`). Spark's null-skipping
     `avg` matches the reference's NaN-partition exclusion exactly."""
-    validate_numeric(df, col)
-    row = _prune(df, hash_value).agg(F.avg(col).alias("v")).collect()[0]
-    return row["v"]
+    return _avg(*_mapped(source, col, hash_value))
 
 
 def get_max(
-    df: DataFrame, col: str, hash_value: Any | None = None, mode: str = "spark"
+    source: Source, col: str, hash_value: Any | None = None, mode: str = "spark"
 ) -> float | None:
     """Reference `getMax` (`combined_flask.py:599-647`).
 
     legacy mode: nulls→0 before the max, global result floored at 0
     (`combined_flask.py:741`, `:777`)."""
-    validate_numeric(df, col)
-    pruned = _prune(df, hash_value)
+    rows, dtype = _mapped(source, col, hash_value)
     if mode == "legacy":
-        expr = F.greatest(
-            F.max(F.coalesce(F.col(col), F.lit(0))), F.lit(0)
-        ).alias("v")
-    else:
-        expr = F.max(col).alias("v")
-    return pruned.agg(expr).collect()[0]["v"]
+        zero = 0.0 if isinstance(dtype, (T.DoubleType, T.FloatType)) else 0
+        return max([zero, *(r[3] for r in rows)], key=_order)
+    return _max(rows, dtype)
 
 
 def get_min(
-    df: DataFrame, col: str, hash_value: Any | None = None, mode: str = "spark"
+    source: Source, col: str, hash_value: Any | None = None, mode: str = "spark"
 ) -> float | None:
     """Reference `getMin` (`combined_flask.py:649-697`).
 
     legacy_firebase mode reproduces the Firebase 0-seed bug
     (`combined_flask.py:1676-1688`): result = min(min(col nulls→+inf), 0)."""
-    validate_numeric(df, col)
-    pruned = _prune(df, hash_value)
+    rows, dtype = _mapped(source, col, hash_value)
     if mode == "legacy_firebase":
-        expr = F.least(
-            F.min(F.coalesce(F.col(col), F.lit(float("inf")))), F.lit(0.0)
-        ).alias("v")
-    else:
-        expr = F.min(col).alias("v")
-    return pruned.agg(expr).collect()[0]["v"]
+        return float(min([0, *(r[2] for r in rows)], key=_order))
+    return _min(rows, dtype)
 
 
 def get_count(df: DataFrame, col: str | None = None, hash_value: Any | None = None) -> int:
@@ -138,18 +187,35 @@ def get_count(df: DataFrame, col: str | None = None, hash_value: Any | None = No
     return pruned.agg(expr.alias("v")).collect()[0]["v"]
 
 
-def partition_debug(df: DataFrame, col: str, agg: str = "avg") -> DataFrame:
-    """`debug=true` channel (`combined_flask.py:712-717`, `:771-772`): one
-    row per physical partition with its partial aggregate and size.
+_PARTIAL: dict[str, Callable] = {"avg": _avg, "max": _max, "min": _min}
 
-    Runs as a single groupBy over `spark_partition_id()` — no extra scan per
-    partition, unlike the reference's per-process re-reads."""
-    fn = {"avg": F.avg, "max": F.max, "min": F.min}[agg]
-    return (
-        df.groupBy(F.spark_partition_id().alias("partition"))
-        .agg(fn(col).alias("partial"), F.count("*").alias("size"))
-        .orderBy("partition")
+
+def partition_debug(source: Source, col: str, agg: str = "avg"):
+    """`debug=true` channel (`combined_flask.py:712-717`, `:771-772`): one
+    entry per EDFS partition of the whole table, numbered 1..n in
+    `readPartition` order, with its partial aggregate and row count.
+
+    Over partials the entries are dicts and no Spark job runs; over a
+    frame they are a `DataFrame`, after the map step for `col`."""
+    validate_numeric(source, col)
+    partials = map_partials(source, [col]) if isinstance(source, DataFrame) else source
+    dtype = partials.schema[col].dataType
+    rows = [
+        {"partition": i + 1, "partial": _PARTIAL[agg]([r] if r[0] else [], dtype), "size": size}
+        for i, (r, size) in enumerate(zip(partials.columns[col], partials.sizes))
+    ]
+    if not isinstance(source, DataFrame):
+        return rows
+    if agg == "avg":
+        dtype = (
+            T.DecimalType(min(dtype.precision + 4, 38), min(dtype.scale + 4, 38))
+            if isinstance(dtype, T.DecimalType)
+            else T.DoubleType()
+        )
+    schema = T.StructType(
+        [T.StructField("partition", T.LongType()), T.StructField("partial", dtype), T.StructField("size", T.LongType())]
     )
+    return source.sparkSession.createDataFrame(rows, schema)
 
 
 def format_result(kind: str, value: float | None) -> str:

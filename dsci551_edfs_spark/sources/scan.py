@@ -17,9 +17,10 @@ handle — pays no second read or schema inference.
 Spark design: a `cat` is an order-restoring parquet scan; a `readPartition`
 is a **partition-pruned** scan (filter on the Hive partition column reaches
 the DataSource and prunes directories — no data read outside the target
-partition); `getPartitionLocations` is a metadata aggregate over the
-partition column. Replica failover is the storage layer's job and is not
-re-implemented.
+partition); `getPartitionLocations` reads the table's PMR partials
+(`partials.py`), the map step the aggregates reduce, so a caller holding
+them (the shell's catalog handle) answers it without a Spark job. Replica
+failover is the storage layer's job and is not re-implemented.
 """
 
 from __future__ import annotations
@@ -28,14 +29,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .ingest import INDEX_COL, PARTITION_COL
+from .partials import Partials, key_order, map_partials
 
 __all__ = ["cat", "read_partition", "get_partition_locations", "list_partitions"]
-
-
-def _key_order(key):
-    """Sort key for partition values: nulls first, like Spark's ascending
-    order."""
-    return (key is not None, key)
 
 
 def cat(df: DataFrame) -> DataFrame:
@@ -60,7 +56,7 @@ def list_partitions(df: DataFrame) -> list:
     if PARTITION_COL not in df.columns:
         return []
     rows = df.select(PARTITION_COL).distinct().collect()
-    return sorted((r[0] for r in rows), key=_key_order)
+    return sorted((r[0] for r in rows), key=key_order)
 
 
 def read_partition(df: DataFrame, partition: int, keys: list | None = None) -> DataFrame:
@@ -83,24 +79,20 @@ def read_partition(df: DataFrame, partition: int, keys: list | None = None) -> D
     return df.drop(PARTITION_COL, INDEX_COL)
 
 
-def get_partition_locations(df: DataFrame) -> dict:
+def get_partition_locations(source: DataFrame | Partials) -> dict:
     """Partition map: {partition# → {key, rows}}.
 
     The reference returns {replica → {partition# → {datanode → block_id}}}
     (`combined_flask.py:477-487`); replica/datanode placement belongs to the
     storage layer here, so the map reports each partition's key and row
-    count instead. A table without a partition column maps each scan split
-    to `{key: None}`. At most one row per key comes back, so the rows are
-    sorted on the driver rather than by a Spark sort.
+    count instead. `source` is a table frame (one Spark job: the map step
+    without columns) or partials already mapped from it (no job). A table
+    without a partition column is one partition with key None.
     """
-    if PARTITION_COL not in df.columns:
-        n = df.rdd.getNumPartitions()
-        return {"partitions": {i + 1: {"key": None} for i in range(n)}}
-    counts = df.groupBy(PARTITION_COL).agg(F.count("*").alias("rows")).collect()
-    counts.sort(key=lambda r: _key_order(r[PARTITION_COL]))
+    partials = map_partials(source, []) if isinstance(source, DataFrame) else source
     return {
         "partitions": {
-            i + 1: {"key": r[PARTITION_COL], "rows": r["rows"]}
-            for i, r in enumerate(counts)
+            i + 1: {"key": key, "rows": rows}
+            for i, (key, rows) in enumerate(zip(partials.keys, partials.sizes))
         }
     }

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dsci551_edfs_spark.operators import aggregates as agg
+from dsci551_edfs_spark.sources.ingest import PARTITION_COL
 
 
 @pytest.fixture(scope="module")
@@ -82,3 +83,109 @@ def test_agg_against_testdata(spark, sf_dir):
     pruned = li.filter(F.col("l_returnflag") == "A").agg(F.avg("l_quantity")).collect()[0][0]
     df2 = li.withColumn("__edfs_part__", F.col("l_returnflag"))
     assert agg.get_avg(df2, "l_quantity", hash_value="A") == pytest.approx(pruned)
+
+
+# ------------------------------------------- partials vs direct aggregates
+
+
+@pytest.fixture(scope="module")
+def partials_table(spark, tmp_path_factory):
+    """A hash-partitioned table with int, long, double and decimal columns,
+    about 30% nulls, an all-null column and a NaN."""
+    import random
+    from decimal import Decimal
+
+    from dsci551_edfs_spark.sources.ingest import put_dataframe
+
+    r = random.Random(7)
+
+    def maybe(v):
+        return None if r.random() < 0.3 else v
+
+    rows = [
+        (
+            maybe(i % 4),
+            maybe(r.randint(-50, 50)),
+            maybe(r.randint(-(2**40), 2**40)),
+            maybe(r.uniform(-1e6, 1e6)),
+            None,
+            float("nan") if i == 17 else maybe(r.uniform(-5, 5)),
+            maybe(Decimal(r.randint(-99999, 99999)).scaleb(-2)),
+        )
+        for i in range(200)
+    ]
+    schema = "k int, i int, l long, d double, all_null double, with_nan double, dec decimal(10,2)"
+    dest = str(tmp_path_factory.mktemp("partials") / "t")
+    put_dataframe(spark.createDataFrame(rows, schema), dest, 4, "k")
+    return dest
+
+
+def _same(got, want, rel=0.0) -> bool:
+    """Equal, NaN equal to NaN; within `rel` (as floats) when given."""
+    if got is None or want is None:
+        return got is want
+    if rel:
+        got, want = float(got), float(want)
+    if want != want:
+        return got != got
+    return math.isclose(got, want, rel_tol=rel) if rel else got == want
+
+
+@pytest.mark.parametrize("infer_types", [False, True])
+def test_partials_reduce_equals_spark_aggregates(spark, partials_table, infer_types):
+    from pyspark.sql import types as T
+
+    from dsci551_edfs_spark.sources.partials import map_partials
+
+    session = spark
+    if infer_types:
+        session = spark.newSession()
+        session.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "true")
+    df = session.read.parquet(partials_table)
+    partials = map_partials(df)
+    key_type = df.schema[PARTITION_COL].dataType
+    assert isinstance(key_type, T.IntegerType if infer_types else T.StringType)
+    cols = [f.name for f in df.schema.fields if isinstance(f.dataType, T.NumericType)]
+    assert {"i", "l", "d", "all_null", "with_nan", "dec"} <= set(cols)
+
+    for h in [None, *(str(k) for k in partials.keys), "999"]:
+        exprs = []
+        for c in cols:
+            exprs += [
+                F.avg(c),
+                F.max(c),
+                F.min(c),
+                F.greatest(F.max(F.coalesce(F.col(c), F.lit(0))), F.lit(0)),
+                F.least(F.min(F.coalesce(F.col(c), F.lit(float("inf")))), F.lit(0.0)),
+            ]
+        want = agg._prune(df, h).agg(*exprs).collect()[0]
+        for j, c in enumerate(cols):
+            got = [
+                agg.get_avg(partials, c, h),
+                agg.get_max(partials, c, h),
+                agg.get_min(partials, c, h),
+                agg.get_max(partials, c, h, mode="legacy"),
+                agg.get_min(partials, c, h, mode="legacy_firebase"),
+            ]
+            w = want[5 * j : 5 * j + 5]
+            assert _same(got[0], w[0], rel=1e-12), (c, h, "avg", got[0], w[0])
+            for name, g, e in zip(["max", "min", "legacy max", "firebase min"], got[1:], w[1:]):
+                assert _same(g, e), (c, h, name, g, e)
+
+    # the frame path is the same reduce over its own map step
+    assert agg.get_avg(df, "d", "1") == agg.get_avg(partials, "d", "1")
+    assert agg.get_max(df, "dec") == agg.get_max(partials, "dec")
+    # debug lists every partition of the table in partition-map order
+    debug = agg.partition_debug(partials, "i", "max")
+    assert [d["partition"] for d in debug] == list(range(1, len(partials.keys) + 1))
+    assert sum(d["size"] for d in debug) == 200
+    assert [d["partial"] for d in debug] == [agg.get_max(partials, "i", str(k)) for k in partials.keys]
+
+
+def test_hash_needs_a_partition_column(quirks_df):
+    from dsci551_edfs_spark.sources.partials import map_partials
+
+    with pytest.raises(KeyError):
+        agg.get_avg(quirks_df, "plain", hash_value="a")
+    with pytest.raises(KeyError):
+        agg.get_avg(map_partials(quirks_df), "plain", hash_value="a")

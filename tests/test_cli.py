@@ -13,7 +13,6 @@ import pytest
 
 from dsci551_edfs_spark import memo as MEMO
 from dsci551_edfs_spark.cli import EdfsShell, main
-from dsci551_edfs_spark.operators import aggregates as AGG
 from dsci551_edfs_spark.sources.registry import load_table
 
 SCRATCH = os.path.join(MEMO.SCRATCH, "test_cli")
@@ -231,6 +230,9 @@ def test_put_from_another_shell_is_seen(spark, shell):
     assert shell.execute(f"put {old} /shared/t.csv 2 g")["status"] == "EDFS200"
     assert _avg(shell, "/shared/t.csv") == "The overall average is 2.500"
     assert shell.execute("readPartition /shared/t.csv 2")["status"] == "EDFS200"
+    mx = shell.execute("getMax /shared/t.csv v true")["response"]
+    assert mx["result"] == "The overall maximum is 4.000"
+    assert [p["size"] for p in mx["partitions"]] == [2, 2]
 
     other = EdfsShell(spark, shell.catalog.warehouse)
     assert other.execute(f"put {new} /shared/t.csv 2 g")["status"] == "EDFS200"
@@ -238,6 +240,16 @@ def test_put_from_another_shell_is_seen(spark, shell):
     cat = shell.execute("cat /shared/t.csv")["response"]
     assert [r["v"] for r in csv.DictReader(io.StringIO(cat))] == ["5"]
     assert shell.execute("readPartition /shared/t.csv 2")["status"] == "EDFS400"
+    mx = shell.execute("getMax /shared/t.csv v true")["response"]
+    assert mx["result"] == "The overall maximum is 5.000"
+    assert mx["partitions"] == [{"partition": 1, "partial": 5, "size": 1}]
+    locations = shell.execute("getPartitionLocations /shared/t.csv")["response"]
+    assert locations == {"partitions": {1: {"key": "0", "rows": 1}}}
+
+    assert other.execute("rm /shared/t.csv")["status"] == "EDFS200"
+    for cmd in ("getAvg /shared/t.csv v", "getMax /shared/t.csv v true",
+                "getPartitionLocations /shared/t.csv"):
+        assert shell.execute(cmd)["status"] == "EDFS400", cmd
 
 
 def test_default_warehouse_follows_scratch_env(spark, tmp_path, monkeypatch, capsys):
@@ -264,26 +276,35 @@ def _job_group(spark):
         sc.setLocalProperty("spark.job.description", None)
 
 
-def test_warm_aggregate_runs_only_its_own_jobs(spark, shell, nation_csv):
-    assert shell.execute(f"put {nation_csv} /jobs/agg.csv 4 n_regionkey")[
-        "status"
-    ] == "EDFS200"
-    _avg(shell, "/jobs/agg.csv", "n_nationkey")  # resolves the handle
-    df = spark.read.parquet(shell.catalog.table_path("/jobs/agg.csv"))
-
+def test_warm_aggregates_run_no_jobs(spark, shell):
+    path = os.path.join(SCRATCH, "jobs_nhanes.csv")
+    with open(path, "w") as f:
+        f.write("SEQN,g,INDFMIN2\n")
+        for i in range(12):
+            f.write(f"{i},{i % 3},{10 + i}\n")
+    assert shell.execute(f"put {path} /jobs/agg.csv 3 g")["status"] == "EDFS200"
     with _job_group(spark) as jobs:
-        AGG.get_avg(df, "n_nationkey")
-        own = jobs()
+        assert _avg(shell, "/jobs/agg.csv", "INDFMIN2") == "The overall average is 15.500"
+        first = jobs()
+    # a new table version maps its partials once; every aggregate, its
+    # debug channel and the partition map are then answered from them
+    assert first >= 1
+    for cmd in (
+        "getAvg /jobs/agg.csv INDFMIN2",
+        "getMax /jobs/agg.csv INDFMIN2 false 1",
+        "getMin /jobs/agg.csv INDFMIN2 true",
+        "getAvgFamilyIncome /jobs/agg.csv",
+        "getPartitionLocations /jobs/agg.csv",
+    ):
+        with _job_group(spark) as jobs:
+            assert shell.execute(cmd)["status"] == "EDFS200", cmd
+            assert jobs() == 0, cmd
     with _job_group(spark) as jobs:
-        _avg(shell, "/jobs/agg.csv", "n_nationkey")
-        warm = jobs()
-    with _job_group(spark) as jobs:
-        _avg(EdfsShell(spark, shell.catalog.warehouse), "/jobs/agg.csv", "n_nationkey")
+        _avg(EdfsShell(spark, shell.catalog.warehouse), "/jobs/agg.csv", "INDFMIN2")
         cold = jobs()
-    assert own >= 1
-    assert warm == own
-    # a shell that has not read the table yet pays schema inference
-    assert cold > own
+    # a shell that has not read the table yet pays schema inference and
+    # the map step
+    assert cold > 0
 
 
 def test_warm_read_partition_runs_no_job_before_emit(spark, shell, nation_csv, monkeypatch):
@@ -298,4 +319,20 @@ def test_warm_read_partition_runs_no_job_before_emit(spark, shell, nation_csv, m
             EdfsShell, "_emit_csv", lambda self, df: before_emit.append(jobs()) or ""
         )
         assert shell.execute("readPartition /jobs/rp.csv 2")["status"] == "EDFS200"
+    assert before_emit == [0]
+
+
+def test_read_partition_after_aggregate_runs_no_job_before_emit(spark, shell, nation_csv, monkeypatch):
+    assert shell.execute(f"put {nation_csv} /jobs/agg_rp.csv 4 n_regionkey")[
+        "status"
+    ] == "EDFS200"
+    _avg(shell, "/jobs/agg_rp.csv", "n_nationkey")  # maps the partials
+
+    before_emit = []
+    with _job_group(spark) as jobs:
+        monkeypatch.setattr(
+            EdfsShell, "_emit_csv", lambda self, df: before_emit.append(jobs()) or ""
+        )
+        assert shell.execute("readPartition /jobs/agg_rp.csv 1")["status"] == "EDFS200"
+    # the partition keys come from the partials: no second metadata job
     assert before_emit == [0]

@@ -17,6 +17,7 @@ import pytest
 from dsci551_edfs_spark import memo as MEMO
 from dsci551_edfs_spark.cli import EdfsShell
 from dsci551_edfs_spark.http_api import start_server
+from dsci551_edfs_spark.sources.partials import map_partials
 from dsci551_edfs_spark.sources.registry import load_table
 
 SCRATCH = os.path.join(MEMO.SCRATCH, "test_http")
@@ -107,9 +108,18 @@ def test_full_session_over_http(server, nation_csv):
     assert get(server, "rm", path="/data")["status"] == "EDFS200"
 
 
-def test_concurrent_cold_aggregates_agree(server, nation_csv):
-    """8 requests race to resolve one table's handle; every one answers."""
+def test_concurrent_cold_aggregates_agree(server, nation_csv, monkeypatch):
+    """8 requests race to resolve one table's handle and map its partials
+    on a fresh version; the map step runs once and every request answers
+    as a serial run does."""
     from concurrent.futures import ThreadPoolExecutor
+
+    from dsci551_edfs_spark import catalog
+
+    maps = []
+    monkeypatch.setattr(
+        catalog, "map_partials", lambda df, *a: maps.append(1) or map_partials(df, *a)
+    )
 
     out = get(
         server,
@@ -121,19 +131,33 @@ def test_concurrent_cold_aggregates_agree(server, nation_csv):
     )
     assert out["status"] == "EDFS200"
 
-    def avg(_):
-        return get(server, "getAvg", path="/conc/nation.csv", col="n_nationkey")
+    requests = [
+        ("getAvg", {"col": "n_nationkey"}),
+        ("getMax", {"col": "n_nationkey", "debug": "true"}),
+        ("getMin", {"col": "n_nationkey", "hash": "3"}),
+        ("getPartitionLocations", {}),
+    ] * 2
+
+    def one(i):
+        route, params = requests[i]
+        return get(server, route, path="/conc/nation.csv", **params)
 
     interval = sys.getswitchinterval()
     sys.setswitchinterval(1e-6)  # interleave the handler threads finely
     try:
         with ThreadPoolExecutor(8) as pool:
-            futures = [pool.submit(avg, i) for i in range(8)]
+            futures = [pool.submit(one, i) for i in range(8)]
             outs = [f.result(timeout=120) for f in futures]
     finally:
         sys.setswitchinterval(interval)
     assert [o["status"] for o in outs] == ["EDFS200"] * 8
-    assert {o["response"]["result"] for o in outs} == {"The overall average is 12.000"}
+    assert len(maps) == 1
+    assert outs == [one(i) for i in range(8)]
+    assert outs[0]["response"]["result"] == "The overall average is 12.000"
+    assert outs[1]["response"]["result"] == "The overall maximum is 24.000"
+    assert sum(p["size"] for p in outs[1]["response"]["partitions"]) == 25
+    locations = outs[3]["response"]["partitions"].values()
+    assert sum(p["rows"] for p in locations) == 25
 
 
 def test_firebase_alias_family(server, nation_csv):
