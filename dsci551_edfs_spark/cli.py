@@ -69,10 +69,12 @@ DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 
 class EdfsShell:
-    #: cap on rows any single `cat`/`readPartition` emits — the reference
-    #: contract is emit-whole-CSV, which is fine for EDFS-scale tables but
-    #: would OOM the driver on a real one; past the cap the CSV carries a
-    #: trailing truncation marker comment
+    #: cap on rows any single `cat`/`readPartition`/`query` emits — the
+    #: reference contract is emit-whole-CSV, which is fine for EDFS-scale
+    #: tables but would OOM the driver on a real one; past the cap the CSV
+    #: carries a trailing truncation marker comment. The emit holds at most
+    #: cap+1 rows in Python, and each task sends at most cap+1 rows into
+    #: the driver's top-k merge
     max_csv_rows = 100_000
 
     def __init__(self, spark: SparkSession, warehouse: str):
@@ -80,25 +82,27 @@ class EdfsShell:
         self.catalog = EdfsCatalog(spark, warehouse)
 
     def _emit_csv(self, df) -> str:
-        """Stream a frame into CSV text without driver-materializing the
-        whole table: `toLocalIterator` holds ONE partition's rows at a
-        time, and the emit stops at `max_csv_rows` (reference parity is
-        whole-CSV output — `combined_flask.py` cat — but the reference
-        serves KB-scale tables; the cap keeps the contract shape while
-        bounding driver memory on a large table)."""
+        """Write a frame as CSV text, with one bounded Spark job.
+
+        `limit(cap + 1)` over the lazily ordered frames of `sources/scan.py`
+        plans as one `TakeOrderedAndProject` (a top-k: each task keeps its
+        first cap+1 rows in order, the driver merges them) instead of the
+        sample, shuffle and result jobs of a full sort. Driver memory stays
+        bounded by the cap: at most cap+1 rows in Python, at most cap+1
+        rows per task into the merge. The reference emits the whole CSV
+        (`combined_flask.py` cat) but serves KB-scale tables; past
+        `max_csv_rows` the text ends in a `# truncated at N rows` marker
+        instead."""
         import csv as _csv
         import io
 
+        rows = df.limit(self.max_csv_rows + 1).collect()
         buf = io.StringIO()
         w = _csv.writer(buf, lineterminator="\n")
         w.writerow(df.columns)
-        n = 0
-        for row in df.toLocalIterator(prefetchPartitions=True):
-            if n >= self.max_csv_rows:
-                buf.write(f"# truncated at {self.max_csv_rows} rows\n")
-                break
-            w.writerow(row)
-            n += 1
+        w.writerows(rows[: self.max_csv_rows])
+        if len(rows) > self.max_csv_rows:
+            buf.write(f"# truncated at {self.max_csv_rows} rows\n")
         return buf.getvalue()
 
     # ---------------------------------------------------------- helpers

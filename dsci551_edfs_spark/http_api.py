@@ -132,7 +132,9 @@ class EdfsHttpHandler(BaseHTTPRequestHandler):
                 "status": "EDFS500",
             }
             code = 200
-        body = json.dumps(envelope).encode()
+        # `default=str`, as `cli.main` and `repl` print: a `debug` partial
+        # over a decimal column is a `Decimal`
+        body = json.dumps(envelope, default=str).encode()
         self.send_response(code)
         self.send_header("Content-Type", "application/json")
         self.send_header("Content-Length", str(len(body)))

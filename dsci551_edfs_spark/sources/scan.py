@@ -14,9 +14,12 @@ Every function takes the table's `DataFrame` (as the aggregates do), so
 a caller that already holds a resolved table — the shell's catalog
 handle — pays no second read or schema inference.
 
-Spark design: a `cat` is an order-restoring parquet scan; a `readPartition`
-is a **partition-pruned** scan (filter on the Hive partition column reaches
-the DataSource and prunes directories — no data read outside the target
+Spark design: `cat` and `readPartition` return lazily ordered frames, and
+a caller that bounds them with `limit(n)` (the shell's CSV emit) gets a
+top-k plan: one `TakeOrderedAndProject` job over the parquet scan, with no
+range-sampling job and no shuffle. A `readPartition` scan is
+**partition-pruned** (the filter on the Hive partition column reaches the
+DataSource and prunes directories — no data read outside the target
 partition); `getPartitionLocations` reads the table's PMR partials
 (`partials.py`), the map step the aggregates reduce, so a caller holding
 them (the shell's catalog handle) answers it without a Spark job. Replica
@@ -40,9 +43,10 @@ def cat(df: DataFrame) -> DataFrame:
 
     ``monotonically_increasing_id`` is monotone in ingest order, so sorting
     by it restores the original row order; the column is then dropped, as the
-    reference drops ``index``. The sort is a global order-by — at scale,
-    callers that don't need a total order should skip `cat` and scan
-    directly.
+    reference drops ``index``. Unbounded, the sort is a global order-by (a
+    range-sampling job, a shuffle and the result job); bounded by
+    `limit(n)` it plans as one top-k job. At scale, callers that don't need
+    a total order should skip `cat` and scan directly.
     """
     drop = [c for c in (INDEX_COL, PARTITION_COL) if c in df.columns]
     if INDEX_COL in df.columns:

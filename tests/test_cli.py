@@ -123,10 +123,11 @@ def test_clear_and_repl_loop(shell):
     assert repl(shell, input_fn=eof, write=writes.append) == 0
 
 
-def test_cat_emit_is_streamed_and_capped(shell, nation_csv, monkeypatch):
-    """The CSV emit path must not driver-materialize the table: rows
-    stream through toLocalIterator (toPandas would collect everything),
-    and the row cap truncates with an explicit marker."""
+def test_cat_emit_is_bounded_and_capped(shell, nation_csv, monkeypatch):
+    """The CSV emit path must not driver-materialize the table: it
+    collects at most `max_csv_rows + 1` rows (toPandas would collect
+    everything), and the row cap truncates with an explicit marker after
+    the FIRST rows in ingest order."""
     import dsci551_edfs_spark.cli as CLI
 
     shell.execute("mkdir /cap")
@@ -153,10 +154,59 @@ def test_cat_emit_is_streamed_and_capped(shell, nation_csv, monkeypatch):
     data_lines = [
         l for l in body.strip().splitlines()[1:] if not l.startswith("#")
     ]
-    assert len(data_lines) == 10
+    assert [l.split(",")[0] for l in data_lines] == [str(i) for i in range(10)]
     part = shell.execute("readPartition /cap/nation.csv 1")
     assert part["status"] == "EDFS200"
     shell.execute("rm /cap/nation.csv")
+
+
+#: a CSV with a null, quoted strings holding commas and double quotes, a
+#: date, a missing date and doubles that print as `57.0`. Spark's CSV
+#: reader escapes with a backslash, so a doubled `""` is kept as two quote
+#: characters and the value keeps its outer quotes; the emit quotes it again
+GOLDEN_CSV = (
+    "id,name,born,score,note\n"
+    '1,"Smith, ""Jr""",2001-02-03,57.0,\n'
+    "2,plain,2019-12-31,1.5,x\n"
+    '3,,2020-01-01,-0.25,"a,b"\n'
+    '4,"say ""hi""",,100.0,y\n'
+)
+GOLDEN_HEADER = "id,name,born,score,note\n"
+GOLDEN_ROWS = [
+    '1,"""Smith, """"Jr""""""",2001-02-03,57.0,\n',
+    "2,plain,2019-12-31,1.5,x\n",
+    '3,,2020-01-01,-0.25,"a,b"\n',
+    '4,"""say """"hi""""""",,100.0,y\n',
+]
+
+
+def test_emit_text_is_golden(shell, monkeypatch):
+    """`cat` and `readPartition` text, byte for byte: clients compare the
+    ids and the ingest order of these rows, so the emit must not change
+    by one byte (header, quoting, null and number formatting, order,
+    the truncation marker)."""
+    import dsci551_edfs_spark.cli as CLI
+
+    path = os.path.join(SCRATCH, "golden.csv")
+    with open(path, "w") as f:
+        f.write(GOLDEN_CSV)
+    assert shell.execute(f"put {path} /golden/t.csv 2")["status"] == "EDFS200"
+
+    def text(cmd):
+        out = shell.execute(cmd)
+        assert out["status"] == "EDFS200", out
+        return out["response"]
+
+    assert text("cat /golden/t.csv") == GOLDEN_HEADER + "".join(GOLDEN_ROWS)
+    assert text("readPartition /golden/t.csv 1") == GOLDEN_HEADER + "".join(GOLDEN_ROWS[:2])
+    assert text("readPartition /golden/t.csv 2") == GOLDEN_HEADER + "".join(GOLDEN_ROWS[2:])
+
+    monkeypatch.setattr(CLI.EdfsShell, "max_csv_rows", 2)
+    assert text("cat /golden/t.csv") == (
+        GOLDEN_HEADER + "".join(GOLDEN_ROWS[:2]) + "# truncated at 2 rows\n"
+    )
+    assert text("readPartition /golden/t.csv 2") == GOLDEN_HEADER + "".join(GOLDEN_ROWS[2:])
+    shell.execute("rm /golden/t.csv")
 
 
 def test_cli_query_dispatch(shell):
@@ -336,3 +386,21 @@ def test_read_partition_after_aggregate_runs_no_job_before_emit(spark, shell, na
         assert shell.execute("readPartition /jobs/agg_rp.csv 1")["status"] == "EDFS200"
     # the partition keys come from the partials: no second metadata job
     assert before_emit == [0]
+
+
+def test_warm_emits_run_one_job_with_one_stage(spark, shell, nation_csv):
+    """A warm `readPartition` or `cat` is one bounded top-k job
+    (`TakeOrderedAndProject`) with one stage: no range-sampling job and
+    no shuffle, as a full sort read through `toLocalIterator` would add."""
+    assert shell.execute(f"put {nation_csv} /jobs/emit.csv 4 n_regionkey")[
+        "status"
+    ] == "EDFS200"
+    sc = spark.sparkContext
+    for cmd in ("readPartition /jobs/emit.csv 2", "cat /jobs/emit.csv"):
+        assert shell.execute(cmd)["status"] == "EDFS200", cmd  # warms the handle
+        with _job_group(spark) as jobs:
+            group = sc.getLocalProperty("spark.jobGroup.id")
+            assert shell.execute(cmd)["status"] == "EDFS200", cmd
+        assert jobs() == 1, cmd
+        (job,) = sc.statusTracker().getJobIdsForGroup(group)
+        assert len(sc.statusTracker().getJobInfo(job).stageIds) == 1, cmd

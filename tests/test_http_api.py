@@ -160,6 +160,32 @@ def test_concurrent_cold_aggregates_agree(server, nation_csv, monkeypatch):
     assert sum(p["rows"] for p in locations) == 25
 
 
+def test_decimal_debug_partials_answer_an_envelope(spark):
+    """A `debug=true` aggregate over a decimal column carries `Decimal`
+    partials; the handler encodes them as strings, as the CLI prints
+    them, instead of dropping the connection mid-response."""
+    from decimal import Decimal
+
+    from dsci551_edfs_spark.sources.ingest import put_dataframe
+
+    shell = EdfsShell(spark, tempfile.mkdtemp(prefix="wh_", dir=SCRATCH))
+    df = spark.createDataFrame(
+        [(1, Decimal("1.25")), (2, Decimal("3.50"))], "id int, price decimal(10,2)"
+    )
+    put_dataframe(df, shell.catalog.table_path("/dec/t"), 2, "id")
+    srv, _thread = start_server(shell)
+    try:
+        base = f"http://127.0.0.1:{srv.server_address[1]}"
+        out = get(base, "getAvg", path="/dec/t", col="price", debug="true")
+    finally:
+        srv.shutdown()
+    assert out["status"] == "EDFS200"
+    partials = [p["partial"] for p in out["response"]["partitions"]]
+    assert len(partials) == 2 and all(isinstance(p, str) for p in partials)
+    expected = shell.run("getAvg", ["/dec/t", "price", "true"])
+    assert out == json.loads(json.dumps(expected, default=str))
+
+
 def test_firebase_alias_family(server, nation_csv):
     assert get(server, "firebase_mkdir", path="/fb")["status"] == "EDFS200"
     out = get(
