@@ -167,7 +167,7 @@ def leakage_safe_split(
 ) -> DataFrame:
     """Train/val/test split that cannot leak near-duplicates across the
     eval boundary: documents are first grouped into near-dup components
-    (exact n-gram Jaccard edges → HashMin connected components,
+    (exact n-gram Jaccard edges → connected components,
     `dedup.dedup_clusters`), then the md5 bucket is taken of the
     CLUSTER id rather than the doc id — so every member of a near-dup
     family lands on the same side. A plain per-doc split puts ~10% of
@@ -177,7 +177,8 @@ def leakage_safe_split(
 
     Returns ``(doc_id, cluster_id, split)``. Scale posture inherits from
     the two building blocks: sub-quadratic banded edge generation and
-    O(diameter) HashMin rounds (near-dup families are shallow), plus one
+    connected components (a driver fold when the edge list is small,
+    O(log diameter) star rounds otherwise), plus one
     stateless projection for the bucket — no extra shuffle beyond the
     clustering itself."""
     from .dedup import dedup_clusters

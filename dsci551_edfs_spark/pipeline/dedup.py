@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from ..functions.text import fingerprint, tokens, tokens_sql
 from ..plans.hints import spread_small
 from ..functions.vectors import as_double, dot, normalize
+from ..operators.graph import connected_components
 
 __all__ = [
     "exact_dedup_groups",
@@ -49,8 +50,6 @@ __all__ = [
     "tfidf_cosine_pairs",
     "embedding_dup_pairs",
     "plant_embedding_twins",
-    "connected_components",
-    "connected_components_star",
     "dedup_clusters",
     "semantic_dedup",
     "release_cached",
@@ -1619,243 +1618,19 @@ def _pairwise_cosine_broadcast(unit: DataFrame, threshold: float) -> DataFrame:
 # ------------------------------------------------- cluster (the endgame)
 
 
-_CC_COLLECT_CONF = "spark.dsci551.ccCollectEdgeThreshold"
-_CC_COLLECT_DEFAULT = 2_000_000  # symmetric edge rows; ~tens of MB
-
-
-def _cc_collect_fallback(sym: DataFrame) -> DataFrame | None:
-    """Driver union-find over a SMALL (checkpointed, symmetric) edge
-    frame, or None when the edge count exceeds the conf'd threshold.
-    Produces exactly the HashMin fixpoint — (node, label) with label
-    the component's min id over the nodes that appear in edges — via
-    min-rooted union by find with path compression. Deterministic:
-    the result depends only on the edge SET."""
-    spark = sym.sparkSession
-    try:
-        cap = int(spark.conf.get(_CC_COLLECT_CONF, str(_CC_COLLECT_DEFAULT)))
-    except Exception:
-        cap = _CC_COLLECT_DEFAULT
-    if cap <= 0 or sym.count() > cap:  # one cached-RDD scan job
-        return None
-    parent: dict = {}
-
-    def find(x):
-        r = x
-        while parent[r] != r:
-            r = parent[r]
-        while parent[x] != r:  # path compression
-            parent[x], x = r, parent[x]
-        return r
-
-    for row in sym.collect():
-        u, v = row[0], row[1]
-        if u not in parent:
-            parent[u] = u
-        if v not in parent:
-            parent[v] = v
-        ru, rv = find(u), find(v)
-        if ru != rv:
-            # min-rooted union: the root IS the component's min id
-            if rv < ru:
-                ru, rv = rv, ru
-            parent[rv] = ru
-    rows = [(n, find(n)) for n in parent]
-    node_t = sym.schema[0].dataType.simpleString()
-    return spark.createDataFrame(rows, f"node {node_t}, label {node_t}")
-
-
-def connected_components(
-    edges: DataFrame,
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Connected components over an undirected edge list via HashMin label
-    propagation: every node starts labeled with its own id, and each BSP
-    round replaces the label with the min over itself and its neighbors'
-    labels, until a fixpoint.
-
-    Returns ``(node, label)`` where ``label`` is the minimum node id in the
-    component — the canonical representative dedup keeps.
-
-    Scale posture:
-    - one shuffle join + one shuffle agg per round; rounds = graph
-      diameter. Near-dup graphs are overwhelmingly tiny cliques/chains
-      (diameter ≤ ~3), so this settles in a handful of rounds; for
-      adversarially deep graphs swap in the large-star/small-star
-      alternation (Kiveris et al., "Connected Components in MapReduce and
-      Beyond"), which converges in O(log n) rounds on the same join
-      primitive.
-    - ``localCheckpoint`` cuts lineage each round so the plan doesn't grow
-      by one join per iteration.
-    - convergence is detected from ``sum(label)``: labels only ever
-      decrease, so an unchanged sum IS the fixpoint — one scalar agg per
-      round, no full-frame diff join.
-    """
-    sym = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).union(edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")))
-    # every BSP round joins against `sym`; localCheckpoint cuts the edge
-    # GENERATION pipeline (potentially a full LSH dedup) out of the loop —
-    # without it each round re-executes edge discovery from the raw corpus
-    sym = sym.localCheckpoint(eager=True)
-    # collect-when-small fallback (optimization r14, r13 verdict item 6;
-    # guide §1.2): counting the already-checkpointed edge RDD is one
-    # cheap cached-scan job, and when the edge set fits the driver a
-    # union-find produces the IDENTICAL (node, min-id-label) fixpoint in
-    # zero further Spark jobs — vs 2 jobs/round (join+agg checkpoint,
-    # convergence sum) × diameter rounds. The threshold is an enforced
-    # guard, not an assumption: past it the distributed loop runs
-    # unchanged (the 100 TB path). ~2M symmetric edges ≈ tens of MB of
-    # driver memory.
-    small = _cc_collect_fallback(sym)
-    if small is not None:
-        return small
-    labels = (
-        sym.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    prev_sum = labels.agg(F.sum("label")).first()[0]
-    for _ in range(max_iter):
-        nbr = (
-            sym.join(labels, sym.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        labels = (
-            labels.join(nbr, labels.node == nbr.src, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce("nbr_label", "label")
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        cur_sum = labels.agg(F.sum("label")).first()[0]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    return labels
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    max_iter: int = 40,
-) -> DataFrame:
-    """Connected components via the alternating large-star/small-star
-    algorithm (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC 2014) — the deep-graph-safe counterpart to
-    `connected_components`. Same contract: ``(node, label)`` with
-    ``label`` the minimum node id in the component.
-
-    Each round rewrites the edge set with two groupBy passes:
-
-    - **large-star**: per node u over its full (symmetric) neighborhood,
-      m = min(Γ(u) ∪ {u}); every strictly-larger neighbor v > u re-attaches
-      as (v, m).
-    - **small-star**: edges arrive child>parent-oriented from large-star;
-      per node u over its smaller neighbors Γ⁻(u), m = min(Γ⁻(u));
-      every other small neighbor re-attaches as (v, m), plus (u, m).
-
-    Both stars strictly decrease the potential Σ height, and the
-    alternation contracts component diameter geometrically, so the loop
-    converges in **O(log d) rounds regardless of diameter** — vs HashMin's
-    d rounds. A 4096-node path settles in ~10 rounds here where HashMin
-    needs 4096 (pinned in pytest). Use this for graphs that aren't
-    near-dup-shaped (social graphs, citation chains, long event threads);
-    HashMin remains cheaper per round for tiny-diameter dedup cliques.
-
-    Scale posture per round: two shuffle aggs + two shuffle joins on the
-    CURRENT edge set, which only shrinks (stars collapse multi-hop paths
-    immediately). ``localCheckpoint`` cuts lineage every round; the
-    fixpoint test is a 2-scalar agg (count + hash-sum of the canonical
-    edge set), not a frame diff. Raises after ``max_iter`` non-converged
-    rounds rather than returning a wrong labeling."""
-    E = (
-        edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    if not E.take(1):
-        return E.select(F.col("u").alias("node"), F.col("v").alias("label"))
-
-    # same collect-when-small fallback as `connected_components` (r13
-    # verdict item 6): identical (node, min-id-label) result, zero loop
-    # rounds when the deduplicated edge set fits the driver
-    small = _cc_collect_fallback(E)
-    if small is not None:
-        return small
-
-    def _sig(e: DataFrame):
-        row = e.agg(
-            F.count("*").alias("n"),
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-        ).first()
-        return row["n"], row["h"]
-
-    prev = _sig(E)
-    for _ in range(max_iter):
-        # large-star over the symmetric neighborhood
-        sym = E.union(E.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = sym.groupBy("u").agg(F.min("v").alias("mn"))
-        m = F.least(F.col("u"), F.col("mn"))
-        ls = (
-            sym.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), m.alias("v"))
-            .distinct()
-            .localCheckpoint(eager=True)  # 2 consumers: mins2 + the join
-        )
-        # small-star: every edge now has v < u (large-star emits (bigger,
-        # component-ward min)), so Γ⁻(u) is exactly the v side
-        mins2 = ls.groupBy("u").agg(F.min("v").alias("mn"))
-        E = (
-            ls.join(mins2, "u")
-            .filter(F.col("v") != F.col("mn"))
-            .select(F.col("v").alias("u"), F.col("mn").alias("v"))
-            .unionByName(mins2.select("u", F.col("mn").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        cur = _sig(E)
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        raise RuntimeError(
-            f"connected_components_star: no fixpoint in {max_iter} rounds"
-        )
-    # converged edge set is a star forest: (node, component-min); roots
-    # label themselves
-    return (
-        E.select(F.col("u").alias("node"), F.col("v").alias("label"))
-        .unionByName(E.select(F.col("v").alias("node"), F.col("v").alias("label")))
-        .groupBy("node")
-        .agg(F.min("label").alias("label"))
-    )
-
-
 def dedup_clusters(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.5,
-    method: str = "hashmin",
     posting: DataFrame | None = None,
 ) -> DataFrame:
     """Corpus-level dedup assignment: every document gets a ``cluster_id``
     (the min doc id of its near-dup component; singletons cluster to
-    themselves). Pipeline: exact n-gram Jaccard pairs → connected
-    components → left join back onto the corpus. Downstream retention is
-    ``filter(doc_id == cluster_id)``.
+    themselves). Pipeline: exact n-gram Jaccard pairs →
+    `operators.graph.connected_components` → left join back onto the
+    corpus. Downstream retention is ``filter(doc_id == cluster_id)``.
 
     The components table is NOT broadcast-hinted: it has one row per node
     that appears in any near-dup edge — unbounded at corpus scale (a web
@@ -1868,8 +1643,7 @@ def dedup_clusters(
         df, text_col=text_col, id_col=id_col, n=n, threshold=threshold,
         posting=posting,
     ).select("id_a", "id_b")
-    cc = connected_components_star if method == "star" else connected_components
-    comp = cc(edges)
+    comp = connected_components(edges)
     return (
         df.select(id_col)
         .join(comp, F.col(id_col) == F.col("node"), "left")

@@ -9,15 +9,20 @@ standing objection (item 7): those bounds were documented, not
 enforced — a future caller feeding an unbounded key column would get a
 driver OOM instead of an error.
 
-``collect_bounded`` enforces the contract in the same single job the
-collect already paid: ``limit(cap + 1)`` bounds what the driver can
-ever hold (a LocalLimit per partition feeds a single-partition
-GlobalLimit, so executors ship at most cap+1 rows), and one extra row
-past the cap raises with the violating site named. When the input
-really is within the cap, ``limit`` returns every row, in the same
-partition-order concatenation a bare ``collect`` produces — and every
-caller's fold is row-order-insensitive anyway (each one sorts or
-reduces). Caps are set 2-4 orders of magnitude above each site's
+``collect_bounded`` enforces the contract inside the collect itself:
+``limit(cap + 1)`` bounds what the driver can ever hold (executors ship
+at most cap+1 rows), and one extra row past the cap raises with the
+violating site named. The collect of a limit runs as Spark's
+incremental take, not as one job: the first job scans one partition,
+and each further job widens the scan (by up to
+``spark.sql.limit.scaleUpFactor``, 4) until cap+1 rows came back or
+every partition was read. A frame under the cap therefore costs about
+1 + log4(partitions) jobs — measured on a localCheckpointed frame in
+``local[4]``: 1 job at 1 partition, 2 at 4, 3 at 16, 4 at 64 — the same
+whether the guard passes or raises. When the input really is within
+the cap, ``limit`` returns every row, in the same partition-order
+concatenation a bare ``collect`` produces — and every caller's fold is
+row-order-insensitive anyway (each one sorts or reduces). Caps are set 2-4 orders of magnitude above each site's
 structural bound: generous enough to never trip on a legitimate input,
 small enough that the guarded collect stays a few hundred MB of driver
 memory instead of an OOM.
@@ -32,8 +37,10 @@ __all__ = ["collect_bounded"]
 
 def collect_bounded(df: DataFrame, cap: int, what: str) -> list[Row]:
     """Collect ``df`` asserting it holds at most ``cap`` rows; raise
-    ``ValueError`` naming ``what`` otherwise. One job, driver memory
-    bounded at cap+1 rows even when the contract is violated."""
+    ``ValueError`` naming ``what`` otherwise. Driver memory is bounded
+    at cap+1 rows even when the contract is violated; the collect runs
+    as an incremental take of about 1 + log4(partitions) jobs (see the
+    module docstring)."""
     rows = df.limit(cap + 1).collect()
     if len(rows) > cap:
         raise ValueError(

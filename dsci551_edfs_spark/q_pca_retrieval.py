@@ -7,6 +7,7 @@ still lands in the shared QUERIES/ORACLES dicts via @q.
 
 from __future__ import annotations
 
+from .operators.graph import connected_components
 from .queries_base import DD, F, MEMO, MM, ORACLES, SIM, TXT, Window, _t, q
 from .q_pipeline import (
     _DOT_SQL,
@@ -909,12 +910,12 @@ def embedding_single_linkage(spark, sf_dir):
     """Single-linkage clustering of the embedding corpus at a cosine
     threshold: exact pairs (the O(N²) small-corpus baseline from
     `dedup.embedding_dup_pairs`; the RP-LSH variant swaps in for the
-    100 TB path with identical downstream CC) chained through HashMin
-    connected components — every vector labeled with its component's min
-    id, singletons labeling themselves. The DENSITY-agnostic clustering
-    that catches chained semantic families a fixed-k method splits; the
-    recursive-CTE oracle verifies the TRANSITIVE closure, not just
-    pairwise hits."""
+    100 TB path with identical downstream CC) chained through
+    `operators.graph.connected_components` — every vector labeled with
+    its component's min id, singletons labeling themselves. The
+    DENSITY-agnostic clustering that catches chained semantic families a
+    fixed-k method splits; the recursive-CTE oracle verifies the
+    TRANSITIVE closure, not just pairwise hits."""
     emb = _t(spark, sf_dir, "embeddings")
     # labels are a per-corpus-version artifact: computed once (the O(N²)
     # pair scan + CC checkpoints), persisted under the memo store, and
@@ -925,7 +926,7 @@ def embedding_single_linkage(spark, sf_dir):
         "sl_labels",
         sf_dir,
         ["embeddings"],
-        lambda: DD.connected_components(
+        lambda: connected_components(
             DD.embedding_dup_pairs(emb, threshold=0.4, use_lsh=False).select(
                 "id_a", "id_b"
             )
@@ -957,8 +958,8 @@ def embedding_single_linkage(spark, sf_dir):
 def embedding_single_linkage_lsh(spark, sf_dir):
     """The 100 TB production path for single-linkage clustering: RP-LSH
     candidate pairs (banded (table,bucket) shuffle, Σ|bucket|² candidate
-    volume — never N²) → exact cosine verify → the SAME HashMin
-    connected components as `embedding_single_linkage` (which stays
+    volume — never N²) → exact cosine verify → the SAME
+    `connected_components` as `embedding_single_linkage` (which stays
     registered as the exact transitive-closure oracle pin at the 0.4
     production threshold).
 
@@ -977,7 +978,7 @@ def embedding_single_linkage_lsh(spark, sf_dir):
         "sl_labels_lsh",
         sf_dir,
         ["embeddings"],
-        lambda: DD.connected_components(
+        lambda: connected_components(
             DD.embedding_dup_pairs(
                 inflated,
                 threshold=0.95,
@@ -1318,7 +1319,7 @@ def conversion_latency_histogram(spark, sf_dir):
 def golden_record_parts(spark, sf_dir):
     """Entity-resolution endgame (MDM golden record): blocked fuzzy
     pairs (`fuzzy_name_pairs`' discipline — edit distance only within
-    first-token blocks, over the DISTINCT-name table) → exact HashMin
+    first-token blocks, over the DISTINCT-name table) → exact
     connected components (so transitive chains A~B~C merge even when
     A≁C directly) → SURVIVORSHIP: the canonical spelling is the variant
     covering the most rows (tie → lexicographically first), with how
@@ -1358,7 +1359,7 @@ def golden_record_parts(spark, sf_dir):
         .join(ids.withColumnRenamed("p_name", "v").withColumnRenamed("nid", "id_b"), "v")
         .select("id_a", "id_b")
     )
-    labels = DD.connected_components(int_edges)  # (node, label) int ids
+    labels = connected_components(int_edges)  # (node, label) int ids
     named = labels.join(ids, labels.node == ids.nid).select("p_name", "label")
     cluster_name = named.groupBy("label").agg(
         F.min("p_name").alias("cluster_id")

@@ -137,7 +137,7 @@ _CLUSTERS_ORACLE = f"""
 
 @q("dedup_clusters", _CLUSTERS_ORACLE)
 def dedup_clusters(spark, sf_dir):
-    """Corpus-level dedup endgame: exact 3-gram Jaccard edges → HashMin
+    """Corpus-level dedup endgame: exact 3-gram Jaccard edges →
     connected components → every doc labeled with its component's min id
     (singletons label themselves). The DuckDB oracle recomputes the SAME
     components via a recursive CTE, so transitive chains (A~B~C with A≁C)
@@ -154,16 +154,17 @@ def dedup_clusters(spark, sf_dir):
 
 @q("dedup_clusters_star", _CLUSTERS_ORACLE, memo=True)
 def dedup_clusters_star(spark, sf_dir):
-    """Same cluster assignment computed through the alternating
-    large-star/small-star components (Kiveris et al. 2014) instead of
-    HashMin: O(log d) rounds regardless of component diameter, so it's
-    the variant that survives chain-shaped near-dup graphs (serial
-    plagiarism, quote threads) where HashMin's round count equals the
-    chain length. Exact algorithm → shares `dedup_clusters`' recursive-CTE
-    oracle verbatim; both must hash-match the same ground truth.
+    """Same cluster assignment as `dedup_clusters`, served from a
+    per-corpus memo: the components come from the same
+    `operators.graph.connected_components`, whose distributed path is
+    the large-star/small-star loop (Kiveris et al. 2014, O(log d) rounds
+    whatever the component diameter, so chain-shaped near-dup graphs —
+    serial plagiarism, quote threads — stay cheap). Shares
+    `dedup_clusters`' recursive-CTE oracle verbatim; both must
+    hash-match the same ground truth.
 
     Cluster labels are a per-corpus-version artifact (the same contract
-    as the single-linkage labels): the shingle→pair→star-CC pipeline
+    as the single-linkage labels): the shingle→pair→CC pipeline
     runs once, the settled (doc, cluster) table serves every caller."""
     from .sources.shared_text_layout import shingle_posting
 
@@ -177,7 +178,6 @@ def dedup_clusters_star(spark, sf_dir):
         # shingle scan the layout already paid once per corpus
         lambda: DD.dedup_clusters(
             _t(spark, sf_dir, "documents"), n=3, threshold=0.2,
-            method="star",
             posting=shingle_posting(spark, sf_dir),
         ),
     )

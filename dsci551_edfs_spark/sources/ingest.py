@@ -180,11 +180,12 @@ def put(
     """EDFS `put`: local CSV → partitioned Parquet table.
 
     Mirrors `combined_flask.py:324-436` validation: source must exist and be
-    a .csv file.
+    a .csv file. Quotes are read as RFC 4180 (and pandas' ``read_csv``)
+    read them: a doubled ``""`` inside a quoted field is one ``"``.
     """
     if not os.path.exists(source):
         raise FileNotFoundError(f"source does not exist: {source}")
     if not source.endswith(".csv"):
         raise ValueError("put only accepts .csv sources (reference parity)")
-    df = spark.read.csv(source, header=True, inferSchema=True)
+    df = spark.read.csv(source, header=True, inferSchema=True, escape='"')
     return put_dataframe(df, destination, partitions, hash_col)

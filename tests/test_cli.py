@@ -161,9 +161,9 @@ def test_cat_emit_is_bounded_and_capped(shell, nation_csv, monkeypatch):
 
 
 #: a CSV with a null, quoted strings holding commas and double quotes, a
-#: date, a missing date and doubles that print as `57.0`. Spark's CSV
-#: reader escapes with a backslash, so a doubled `""` is kept as two quote
-#: characters and the value keeps its outer quotes; the emit quotes it again
+#: date, a missing date and doubles that print as `57.0`. `put` reads a
+#: doubled `""` inside a quoted field as one quote, and the emit quotes
+#: the value again, so those rows round-trip byte for byte
 GOLDEN_CSV = (
     "id,name,born,score,note\n"
     '1,"Smith, ""Jr""",2001-02-03,57.0,\n'
@@ -173,10 +173,10 @@ GOLDEN_CSV = (
 )
 GOLDEN_HEADER = "id,name,born,score,note\n"
 GOLDEN_ROWS = [
-    '1,"""Smith, """"Jr""""""",2001-02-03,57.0,\n',
+    '1,"Smith, ""Jr""",2001-02-03,57.0,\n',
     "2,plain,2019-12-31,1.5,x\n",
     '3,,2020-01-01,-0.25,"a,b"\n',
-    '4,"""say """"hi""""""",,100.0,y\n',
+    '4,"say ""hi""",,100.0,y\n',
 ]
 
 

@@ -100,6 +100,24 @@ def test_put_csv_end_to_end(spark, tmp_path, dest):
     assert [(r["k"], r["v"]) for r in out] == [("a", 1), ("b", 2), ("a", 3)]
 
 
+def test_put_reads_quoted_fields_as_pandas_does(spark, tmp_path, dest):
+    """RFC 4180 quoting: a doubled quote inside a quoted field is one
+    quote, a quoted comma is data. `put` must store the values the
+    reference's `pd.read_csv` reads from the same file."""
+    import pandas as pd
+
+    src = tmp_path / "quoted.csv"
+    src.write_text(
+        'id,name,note\n'
+        '1,"Smith, ""Jr""",plain\n'
+        '2,"say ""hi""","a,b"\n'
+        '3,"""lead"" and trail","back\\slash"\n'
+    )
+    ingest.put(spark, str(src), dest, 2)
+    got = [tuple(r) for r in scan.cat(spark.read.parquet(dest)).collect()]
+    assert got == list(pd.read_csv(src).itertuples(index=False, name=None))
+
+
 def test_block_subsplit_matches_array_split(spark, dest):
     """max_rows_per_block reproduces the reference's np.array_split block
     membership (combined_flask.py:416-418): 10-row group, cap 4 ->

@@ -316,105 +316,98 @@ def test_connected_components_chain_and_islands(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10}
 
 
-def test_connected_components_deep_chain_lineage_bounded(spark):
-    """A 40-edge path graph needs ~40 HashMin rounds (the min label walks
-    one hop per round): the per-round localCheckpoint keeps the plan tree
-    from embedding one extra join per iteration, so even a diameter-40
-    run settles in bounded time with the correct single component.
-    The r14 collect-when-small fallback is DISABLED here so the
+def test_connected_components_deep_chain_lineage_bounded(spark, monkeypatch):
+    """A 40-edge path graph on the distributed loop: the per-round
+    localCheckpoint keeps the plan tree from embedding one extra join
+    per iteration, so a diameter-40 run settles in bounded time with the
+    correct single component. The driver fold is DISABLED here so the
     distributed loop itself stays under test."""
     import time
 
-    from dsci551_edfs_spark.pipeline.dedup import connected_components
+    from dsci551_edfs_spark.operators import graph as G
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], ["id_a", "id_b"]
     )
-    spark.conf.set("spark.dsci551.ccCollectEdgeThreshold", "0")
-    try:
-        t0 = time.monotonic()
-        got = {
-            r["node"]: r["label"]
-            for r in connected_components(edges).collect()
-        }
-    finally:
-        spark.conf.unset("spark.dsci551.ccCollectEdgeThreshold")
+    monkeypatch.setattr(G, "_DRIVER_FOLD_EDGES", 0)
+    t0 = time.monotonic()
+    got = {
+        r["node"]: r["label"]
+        for r in G.connected_components(edges).collect()
+    }
     assert time.monotonic() - t0 < 120
     assert got == {i: 0 for i in range(41)}
 
 
-def test_star_cc_matches_hashmin_on_random_graph(spark):
-    """Alternating large-star/small-star must produce the exact same
-    (node, label) map as HashMin on an arbitrary multigraph with
-    self-loop-free random edges — stars, cliques, chains, singletons."""
+def _random_multigraph(spark, seed, nodes, n_edges):
     import random
 
-    from dsci551_edfs_spark.pipeline.dedup import (
-        connected_components,
-        connected_components_star,
-    )
-
-    rng = random.Random(7)
-    edges = spark.createDataFrame(
-        [(rng.randrange(300), rng.randrange(300)) for _ in range(250)],
+    rng = random.Random(seed)
+    return spark.createDataFrame(
+        [(rng.randrange(nodes), rng.randrange(nodes)) for _ in range(n_edges)],
         ["id_a", "id_b"],
     ).filter("id_a != id_b")
-    # compare the two DISTRIBUTED loop algorithms (fallback disabled)
-    spark.conf.set("spark.dsci551.ccCollectEdgeThreshold", "0")
-    try:
-        a = sorted(
-            (r["node"], r["label"])
-            for r in connected_components(edges).collect()
-        )
-        b = sorted(
-            (r["node"], r["label"])
-            for r in connected_components_star(edges).collect()
-        )
-    finally:
-        spark.conf.unset("spark.dsci551.ccCollectEdgeThreshold")
-    assert a == b and len(a) > 0
 
 
-def test_cc_collect_fallback_matches_distributed(spark):
-    """r14 collect-when-small fallback (r13 verdict item 6): under the
-    default threshold the driver union-find must produce EXACTLY the
-    distributed HashMin fixpoint — same (node, min-id-label) rows — on
-    a random multigraph, and the conf'd guard must route big-enough
-    edge sets back to the distributed loop (threshold 0 = always
-    distributed, pinned above; here: tiny threshold forces the loop,
-    default takes the fallback, results identical)."""
-    import random
+def _cc_rows(edges):
+    from dsci551_edfs_spark.operators.graph import connected_components
 
-    from dsci551_edfs_spark.pipeline.dedup import connected_components
-
-    rng = random.Random(13)
-    edges = spark.createDataFrame(
-        [(rng.randrange(200), rng.randrange(200)) for _ in range(180)],
-        ["id_a", "id_b"],
-    ).filter("id_a != id_b")
-    fast = sorted(
-        (r["node"], r["label"])
-        for r in connected_components(edges).collect()
+    return sorted(
+        (r["node"], r["label"]) for r in connected_components(edges).collect()
     )
-    spark.conf.set("spark.dsci551.ccCollectEdgeThreshold", "1")
-    try:
-        slow = sorted(
-            (r["node"], r["label"])
-            for r in connected_components(edges).collect()
-        )
-    finally:
-        spark.conf.unset("spark.dsci551.ccCollectEdgeThreshold")
-    assert fast == slow and len(fast) > 0
 
 
-def test_bfs_collect_fallback_matches_distributed(spark):
-    """r14: the driver-BFS fallback must equal the distributed BSP
-    frontier relaxation — same (node, hops) rows, reachable nodes only
-    — on a random graph with an unreachable island; same conf guard as
-    the CC fallback."""
+def test_cc_collect_fallback_matches_distributed(spark, monkeypatch):
+    """Under the default cap the driver union-find must produce EXACTLY
+    the distributed star-loop fixpoint — same (node, min-id-label) rows —
+    on random multigraphs (stars, cliques, chains, singletons), and the
+    cap must route big-enough edge sets back to the distributed loop
+    (a tiny cap forces the loop, the default takes the fold)."""
+    from dsci551_edfs_spark.operators import graph as G
+
+    for edges in (
+        _random_multigraph(spark, 13, 200, 180),
+        _random_multigraph(spark, 7, 300, 250),
+    ):
+        fast = _cc_rows(edges)
+        with monkeypatch.context() as m:
+            m.setattr(G, "_DRIVER_FOLD_EDGES", 1)
+            slow = _cc_rows(edges)
+        assert fast == slow and len(fast) > 0
+
+
+def test_cc_answer_is_independent_of_the_fold_cap(spark, monkeypatch):
+    """Knob invariance: a random multigraph with duplicate edges, a
+    self-loop-only node (999) and a 60-edge path (deeper than any old
+    round cap) gets the same rows from the driver fold and from the
+    distributed loop, with every node that appears in an edge labelled."""
     import random
 
-    from dsci551_edfs_spark.operators.graph import bfs_hops
+    from dsci551_edfs_spark.operators import graph as G
+
+    rng = random.Random(41)
+    e = [(rng.randrange(80), rng.randrange(80)) for _ in range(120)]
+    e += e[:30]  # duplicate edges
+    e += [(999, 999), (999, 999)]  # a node seen only in a self-loop
+    e += [(1000 + i, 1001 + i) for i in range(60)]
+    edges = spark.createDataFrame(e, ["id_a", "id_b"])
+    fold = _cc_rows(edges)
+    monkeypatch.setattr(G, "_DRIVER_FOLD_EDGES", 0)
+    loop = _cc_rows(edges)
+    assert fold == loop
+    got = dict(fold)
+    assert set(got) == {x for t in e for x in t}
+    assert got[999] == 999
+    assert all(got[1000 + i] == 1000 for i in range(61))
+
+
+def test_bfs_collect_fallback_matches_distributed(spark, monkeypatch):
+    """The driver-BFS fallback must equal the distributed BSP frontier
+    relaxation — same (node, hops) rows, reachable nodes only — on a
+    random graph with an unreachable island; same cap as the CC fold."""
+    import random
+
+    from dsci551_edfs_spark.operators import graph as G
 
     rng = random.Random(29)
     e = [(rng.randrange(60), rng.randrange(60)) for _ in range(70)]
@@ -422,46 +415,87 @@ def test_bfs_collect_fallback_matches_distributed(spark):
     edges = spark.createDataFrame(e, ["a", "b"]).filter("a != b")
     src = min(x for t in e for x in t)
     fast = sorted(
-        (r["node"], r["hops"]) for r in bfs_hops(edges, src).collect()
+        (r["node"], r["hops"]) for r in G.bfs_hops(edges, src).collect()
     )
-    spark.conf.set("spark.dsci551.ccCollectEdgeThreshold", "1")
-    try:
-        slow = sorted(
-            (r["node"], r["hops"]) for r in bfs_hops(edges, src).collect()
-        )
-    finally:
-        spark.conf.unset("spark.dsci551.ccCollectEdgeThreshold")
+    monkeypatch.setattr(G, "_DRIVER_FOLD_EDGES", 1)
+    slow = sorted(
+        (r["node"], r["hops"]) for r in G.bfs_hops(edges, src).collect()
+    )
     assert fast == slow and len(fast) > 0
     # the island (nodes 100+) must be absent from both
     assert all(n < 100 for n, _ in fast)
 
 
-def test_star_cc_logarithmic_rounds_on_deep_path(spark):
+def test_bfs_answer_is_independent_of_the_fold_cap(spark, monkeypatch):
+    """Knob invariance on a 45-edge path, deeper than the old 40-round
+    cap: the distributed loop runs to its fixpoint, so both paths return
+    every node at its exact distance."""
+    from dsci551_edfs_spark.operators import graph as G
+
+    edges = spark.createDataFrame([(i, i + 1) for i in range(45)], ["a", "b"])
+
+    def hops():
+        return sorted(
+            (r["node"], r["hops"]) for r in G.bfs_hops(edges, 0).collect()
+        )
+
+    fold = hops()
+    monkeypatch.setattr(G, "_DRIVER_FOLD_EDGES", 0)
+    assert hops() == fold == [(i, i) for i in range(46)]
+
+
+def test_graph_driver_folds_run_three_jobs(spark):
+    """On a small graph `connected_components` and `bfs_hops` each run 3
+    Spark jobs: the count (map + result job), which also materializes
+    the lazy edge checkpoint, and the collect; no eager checkpoint job
+    runs before them. The answer is a local frame."""
+    import uuid
+
+    from dsci551_edfs_spark.operators.graph import bfs_hops, connected_components
+
+    sc = spark.sparkContext
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (7, 8), (9, 9), (2, 3)], ["id_a", "id_b"]
+    )
+    for run in (
+        lambda: connected_components(edges),
+        lambda: bfs_hops(edges, 1, a_col="id_a", b_col="id_b"),
+    ):
+        group = f"jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            run()
+            assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+
+def test_star_cc_logarithmic_rounds_on_deep_path(spark, monkeypatch):
     """The O(log d) claim, pinned: a 1024-node path (diameter 1023) must
-    reach the fixpoint within 12 star rounds — HashMin would need ~1023.
-    max_iter raises on non-convergence, so passing max_iter=12 IS the
-    round-count assertion."""
-    from dsci551_edfs_spark.pipeline.dedup import connected_components_star
+    reach the fixpoint within 12 star rounds. max_iter raises on
+    non-convergence, so passing max_iter=12 IS the round-count
+    assertion."""
+    from dsci551_edfs_spark.operators import graph as G
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(1023)], ["id_a", "id_b"]
     )
-    spark.conf.set("spark.dsci551.ccCollectEdgeThreshold", "0")
-    try:
-        got = {
-            r["node"]: r["label"]
-            for r in connected_components_star(edges, max_iter=12).collect()
-        }
-    finally:
-        spark.conf.unset("spark.dsci551.ccCollectEdgeThreshold")
+    monkeypatch.setattr(G, "_DRIVER_FOLD_EDGES", 0)
+    got = {
+        r["node"]: r["label"]
+        for r in G.connected_components(edges, max_iter=12).collect()
+    }
     assert got == {i: 0 for i in range(1024)}
 
 
-def test_star_cc_empty_edges(spark):
-    from dsci551_edfs_spark.pipeline.dedup import connected_components_star
+def test_star_cc_empty_edges(spark, monkeypatch):
+    from dsci551_edfs_spark.operators import graph as G
 
     em = spark.createDataFrame([], "id_a long, id_b long")
-    assert connected_components_star(em).count() == 0
+    assert G.connected_components(em).count() == 0
+    monkeypatch.setattr(G, "_DRIVER_FOLD_EDGES", 0)
+    assert G.connected_components(em).count() == 0
 
 
 def test_dedup_clusters_transitive_and_singletons(spark):
