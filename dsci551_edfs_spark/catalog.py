@@ -24,14 +24,14 @@ a handle per table it has resolved (`table`): the `DataFrame` of one
 `spark.read.parquet` (schema and file index already resolved) and, once
 asked for, the table's PMR partials (`sources/partials.py`): per
 partition key its row count and, per numeric column, the non-null count,
-sum, min and max. The partials answer the aggregates, their `debug`
-channel, `getPartitionLocations` and the sorted partition keys without a
-Spark job; they cost one job per table version and partitions × numeric
-columns values of driver memory. A handle is valid for one version of
-the table, stamped by the modification time of the `_SUCCESS` marker
-that every `put` rewrites, so each request costs one FileSystem stat
-instead of a schema-inference job; a new stamp or an `rm` drops the
-handle and its partials with it.
+sum, min and max. The partials are the table's one partition map: they
+answer the aggregates, their `debug` channel, `getPartitionLocations` and
+`readPartition`'s numbering without a Spark job; they cost one job per
+table version and partitions × numeric columns values of driver memory.
+A handle is valid for one version of the table, stamped by the
+modification time of the `_SUCCESS` marker that every `put` rewrites, so
+each request costs one FileSystem stat instead of a schema-inference
+job; a new stamp or an `rm` drops the handle and its partials with it.
 """
 
 from __future__ import annotations
@@ -66,11 +66,6 @@ class TableHandle:
             if self._partials is None:
                 self._partials = map_partials(self.df)
             return self._partials
-
-    def partition_keys(self) -> list:
-        """Sorted partition keys, read from the partials."""
-        partials = self.partials()
-        return list(partials.keys) if partials.partitioned else []
 
 
 class EdfsCatalog:

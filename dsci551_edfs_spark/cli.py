@@ -32,9 +32,10 @@ to report; each partition gives its key and row count.
 
 Every table a command reads comes from `EdfsCatalog.table`, a handle that
 is resolved once per table version and reused across requests. The
-aggregates, their `debug` channel and `getPartitionLocations` are answered
-from the handle's PMR partials (one Spark job per table version, none on
-a warm table).
+handle's PMR partials are the table's one partition map (one Spark job
+per table version, none on a warm table): they answer the aggregates,
+their `debug` channel and `getPartitionLocations`, and number the
+partitions `readPartition` reads.
 
 `debug=true` adds `partitions`: one `{partition, partial, size}` entry per
 EDFS partition of the whole table, also when `hash` prunes the result.
@@ -175,7 +176,8 @@ class EdfsShell:
                 )
             if cmd == "readPartition":
                 table = self.catalog.table(args[0])
-                df = SCN.read_partition(table.df, int(args[1]), table.partition_keys())
+                keys = SCN.list_partitions(table.partials())
+                df = SCN.read_partition(table.df, int(args[1]), keys)
                 return self._ok(self._emit_csv(df))
             if cmd == "getAvg":
                 return self._agg("avg", args)

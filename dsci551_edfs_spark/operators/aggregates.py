@@ -1,4 +1,4 @@
-"""PMR aggregates: `getAvg` / `getMax` / `getMin` (+count), the reference's
+"""PMR aggregates: `getAvg` / `getMax` / `getMin`, the reference's
 analytical core (`combined_flask.py:549-802`), as a map step and a reduce.
 
 The reference computes one `(partial, size)` pair per partition
@@ -9,15 +9,16 @@ split:
   grouped by the partition column, giving per partition key the row
   count and the column's non-null count, sum, min and max;
 - `get_avg/get_max/get_min` are the reduce over those rows, on the
-  driver, and the only reduce.
+  driver, and the only reduce. The count every reference map emits
+  (`combined_flask.py:734`) is the partials' row count per key
+  (`Partials.sizes`) and the non-null count per column.
 
-A `DataFrame` argument runs the map step over the (hash-pruned) frame
-for the one column asked, then the reduce: one Spark job, as one
-Catalyst aggregate would cost. A `Partials` argument is a table's map
-output kept by its catalog handle (`TableHandle.partials`), built once
-per table version for every numeric column; the reduce over it runs no
-Spark job. It holds four values per partition key and numeric column,
-so its memory is partitions × columns, never rows.
+The reduce takes a table's `Partials`, the map output kept by its
+catalog handle (`TableHandle.partials`), built once per table version
+for every numeric column; the reduce runs no Spark job. It holds four
+values per partition key and numeric column, so its memory is
+partitions × columns, never rows. A caller holding only a frame maps
+it first (`map_partials(df)`, one Spark job).
 
 The reduce reproduces Spark's answers: the avg sums in Spark's
 accumulator type (double, or a decimal with Spark's result scale and
@@ -35,10 +36,9 @@ Semantic quirk modes (SURVEY.md §2.4):
   backend's divergent bug (`combined_flask.py:1676-1688`) — a double,
   min(partition mins ∪ {0}).
 
-`hash` partition pruning (`combined_flask.py:459-465`): over a frame, a
-filter on the ingest partition column, which Catalyst turns into
-directory-level pruning; over partials, the same selection of keys
-(`Partials.select`).
+`hash` partition pruning (`combined_flask.py:459-465`) selects the
+partition keys equal to the hash value (`Partials.select`), as a filter
+on the ingest partition column would.
 
 Debug channel (`combined_flask.py:712-717`): `partition_debug` lists the
 table's EDFS partitions, numbered 1..n in `readPartition` /
@@ -53,19 +53,15 @@ import decimal
 from decimal import Decimal
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..sources.ingest import PARTITION_COL
-from ..sources.partials import Partials, map_partials
+from ..sources.partials import Partials
 
 __all__ = [
     "validate_numeric",
     "get_avg",
     "get_max",
     "get_min",
-    "get_count",
     "partition_debug",
     "format_result",
     "HARDCODED_AVG_COLUMNS",
@@ -83,41 +79,24 @@ HARDCODED_AVG_COLUMNS = {
     "firebase_getAvgArmCircum": "BMXARMC",
 }
 
-Source = DataFrame | Partials
 
-
-def validate_numeric(source: Source, col: str) -> None:
+def validate_numeric(partials: Partials, col: str) -> None:
     """Fail-fast type gate. The reference reads partition 1 and checks the
     pandas dtype (`combined_flask.py:563-578`); with a real schema this is a
     zero-IO analysis-time check."""
-    if col not in source.schema.fieldNames():
+    if col not in partials.schema.fieldNames():
         raise KeyError(f"column {col!r} does not exist")
-    if not isinstance(source.schema[col].dataType, T.NumericType):
+    if not isinstance(partials.schema[col].dataType, T.NumericType):
         raise TypeError(f"column {col!r} is not numeric")
 
 
-def _prune(df: DataFrame, hash_value: Any | None) -> DataFrame:
-    """Partition pruning by hash value (`combined_flask.py:459-465`).
-
-    Over a Hive `partitionBy` layout this equality filter prunes at the
-    DataSource level (no non-matching directory is even listed)."""
-    if hash_value is None:
-        return df
-    if PARTITION_COL not in df.columns:
-        raise KeyError("table was not ingested with a hash column")
-    return df.filter(F.col(PARTITION_COL) == F.lit(str(hash_value)))
-
-
-def _mapped(source: Source, col: str, hash_value: Any | None) -> tuple[list[tuple], T.DataType]:
+def _mapped(partials: Partials, col: str, hash_value: Any | None) -> tuple[list[tuple], T.DataType]:
     """The map step's `(non-null count, sum, min, max)` rows of `col` for
     the partitions `hash_value` selects, skipping partitions with no
     non-null value, and the column's type."""
-    validate_numeric(source, col)
-    if isinstance(source, DataFrame):
-        source = map_partials(_prune(source, hash_value), [col])
-        hash_value = None
-    rows = source.columns[col]
-    return [rows[i] for i in source.select(hash_value) if rows[i][0]], source.schema[col].dataType
+    validate_numeric(partials, col)
+    rows = partials.columns[col]
+    return [rows[i] for i in partials.select(hash_value) if rows[i][0]], partials.schema[col].dataType
 
 
 def _order(v):
@@ -146,20 +125,20 @@ def _min(rows: list[tuple], dtype: T.DataType):
     return min((r[2] for r in rows), key=_order, default=None)
 
 
-def get_avg(source: Source, col: str, hash_value: Any | None = None) -> float | None:
+def get_avg(partials: Partials, col: str, hash_value: Any | None = None) -> float | None:
     """Reference `getAvg` (`combined_flask.py:549-597`). Spark's null-skipping
     `avg` matches the reference's NaN-partition exclusion exactly."""
-    return _avg(*_mapped(source, col, hash_value))
+    return _avg(*_mapped(partials, col, hash_value))
 
 
 def get_max(
-    source: Source, col: str, hash_value: Any | None = None, mode: str = "spark"
+    partials: Partials, col: str, hash_value: Any | None = None, mode: str = "spark"
 ) -> float | None:
     """Reference `getMax` (`combined_flask.py:599-647`).
 
     legacy mode: nulls→0 before the max, global result floored at 0
     (`combined_flask.py:741`, `:777`)."""
-    rows, dtype = _mapped(source, col, hash_value)
+    rows, dtype = _mapped(partials, col, hash_value)
     if mode == "legacy":
         zero = 0.0 if isinstance(dtype, (T.DoubleType, T.FloatType)) else 0
         return max([zero, *(r[3] for r in rows)], key=_order)
@@ -167,55 +146,32 @@ def get_max(
 
 
 def get_min(
-    source: Source, col: str, hash_value: Any | None = None, mode: str = "spark"
+    partials: Partials, col: str, hash_value: Any | None = None, mode: str = "spark"
 ) -> float | None:
     """Reference `getMin` (`combined_flask.py:649-697`).
 
     legacy_firebase mode reproduces the Firebase 0-seed bug
     (`combined_flask.py:1676-1688`): result = min(min(col nulls→+inf), 0)."""
-    rows, dtype = _mapped(source, col, hash_value)
+    rows, dtype = _mapped(partials, col, hash_value)
     if mode == "legacy_firebase":
         return float(min([0, *(r[2] for r in rows)], key=_order))
     return _min(rows, dtype)
 
 
-def get_count(df: DataFrame, col: str | None = None, hash_value: Any | None = None) -> int:
-    """Implicit partition-size count every reference map emits
-    (`combined_flask.py:734`, `:746`, `:758`)."""
-    pruned = _prune(df, hash_value)
-    expr = F.count(col) if col else F.count("*")
-    return pruned.agg(expr.alias("v")).collect()[0]["v"]
-
-
 _PARTIAL: dict[str, Callable] = {"avg": _avg, "max": _max, "min": _min}
 
 
-def partition_debug(source: Source, col: str, agg: str = "avg"):
+def partition_debug(partials: Partials, col: str, agg: str = "avg") -> list[dict]:
     """`debug=true` channel (`combined_flask.py:712-717`, `:771-772`): one
     entry per EDFS partition of the whole table, numbered 1..n in
-    `readPartition` order, with its partial aggregate and row count.
-
-    Over partials the entries are dicts and no Spark job runs; over a
-    frame they are a `DataFrame`, after the map step for `col`."""
-    validate_numeric(source, col)
-    partials = map_partials(source, [col]) if isinstance(source, DataFrame) else source
+    `readPartition` order, with its partial aggregate and row count. No
+    Spark job runs."""
+    validate_numeric(partials, col)
     dtype = partials.schema[col].dataType
-    rows = [
+    return [
         {"partition": i + 1, "partial": _PARTIAL[agg]([r] if r[0] else [], dtype), "size": size}
         for i, (r, size) in enumerate(zip(partials.columns[col], partials.sizes))
     ]
-    if not isinstance(source, DataFrame):
-        return rows
-    if agg == "avg":
-        dtype = (
-            T.DecimalType(min(dtype.precision + 4, 38), min(dtype.scale + 4, 38))
-            if isinstance(dtype, T.DecimalType)
-            else T.DoubleType()
-        )
-    schema = T.StructType(
-        [T.StructField("partition", T.LongType()), T.StructField("partial", dtype), T.StructField("size", T.LongType())]
-    )
-    return source.sparkSession.createDataFrame(rows, schema)
 
 
 def format_result(kind: str, value: float | None) -> str:

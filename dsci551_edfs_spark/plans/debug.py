@@ -1,14 +1,12 @@
 """Plan inspection & the reference's `debug` explanation channel.
 
 The reference's `debug=true` attaches per-partition {Partition, Input,
-Output} traces (`combined_flask.py:712-717`, `:771-772`). Spark-native
-equivalents:
-- `explain_str(df)` — the formatted physical plan (check for
-  PushedFilters / ReadSchema / WholeStageCodegen spans).
-- `partition_trace(df, aggs)` — one row per physical partition via
-  `spark_partition_id()`.
-- `observed(df, name, *exprs)` — `df.observe` metrics that surface on the
-  driver after an action without a second scan.
+Output} traces (`combined_flask.py:712-717`, `:771-772`); the shell
+serves them per EDFS partition from the table's PMR partials
+(`operators.aggregates.partition_debug`). What is left here is plan
+inspection: `explain_str(df)` is the formatted physical plan (check for
+PushedFilters / PartitionFilters / ReadSchema / WholeStageCodegen spans)
+and `plan_has` asserts on it.
 """
 
 from __future__ import annotations
@@ -16,10 +14,9 @@ from __future__ import annotations
 import io
 from contextlib import redirect_stdout
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-__all__ = ["explain_str", "partition_trace", "observed", "plan_has"]
+__all__ = ["explain_str", "plan_has"]
 
 
 def explain_str(df: DataFrame, mode: str = "formatted") -> str:
@@ -33,21 +30,3 @@ def plan_has(df: DataFrame, needle: str, mode: str = "formatted") -> bool:
     """Assert helper: does the physical plan mention `needle`
     (e.g. 'PushedFilters', 'BroadcastHashJoin', 'PartitionFilters')?"""
     return needle in explain_str(df, mode)
-
-
-def partition_trace(df: DataFrame, *aggs: Column) -> DataFrame:
-    """Per-physical-partition partials — the `debug` channel as ONE extra
-    aggregate instead of the reference's per-process re-reads."""
-    if not aggs:
-        aggs = (F.count("*").alias("size"),)
-    return (
-        df.groupBy(F.spark_partition_id().alias("partition"))
-        .agg(*aggs)
-        .orderBy("partition")
-    )
-
-
-def observed(df: DataFrame, name: str, *exprs: Column) -> DataFrame:
-    """Attach observation metrics (collected free-of-charge with the next
-    action; read via QueryExecutionListener or `df.observe` semantics)."""
-    return df.observe(name, *exprs)

@@ -8,6 +8,7 @@ still lands in the shared QUERIES/ORACLES dicts via @q.
 from __future__ import annotations
 
 from .queries_base import F, ING, SCN, Window, _scratch_dir, _t, q
+from .sources.partials import map_partials
 
 @q("pmr_avg", "SELECT round(avg(l_quantity), 3) AS avg_qty FROM lineitem")
 def pmr_avg(spark, sf_dir):
@@ -112,10 +113,12 @@ def edfs_cat_roundtrip(spark, sf_dir):
 def edfs_read_partition(spark, sf_dir):
     """put hash-partitioned on l_returnflag → readPartition 1 (sorted keys
     A < N < R ⇒ partition 1 = 'A'); a partition-pruned directory read
-    (`combined_flask.py:492-547`)."""
+    (`combined_flask.py:492-547`). The keys come from the table's map
+    step without columns, as the shell numbers them."""
     dest = _scratch_dir("rp")
     ING.put_dataframe(_t(spark, sf_dir, "lineitem"), dest, 3, "l_returnflag")
-    return SCN.read_partition(spark.read.parquet(dest), 1)
+    df = spark.read.parquet(dest)
+    return SCN.read_partition(df, 1, SCN.list_partitions(map_partials(df, [])))
 
 
 # =====================================================================

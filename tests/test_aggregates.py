@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from dsci551_edfs_spark.operators import aggregates as agg
 from dsci551_edfs_spark.sources.ingest import PARTITION_COL
+from dsci551_edfs_spark.sources.partials import map_partials
 
 
 @pytest.fixture(scope="module")
@@ -24,36 +25,45 @@ def quirks_df(spark):
     return spark.createDataFrame(rows, "key string, neg_only double, grouped double, plain double")
 
 
-def test_avg_skips_nulls(quirks_df):
+@pytest.fixture(scope="module")
+def quirks(quirks_df):
+    """The map step of `quirks_df`: no partition column, so one
+    partition with key None."""
+    return map_partials(quirks_df)
+
+
+def test_avg_skips_nulls(quirks):
     # reference: all-NaN partitions excluded from numerator AND denominator
     # (combined_flask.py:763-764) == SQL null-skipping avg
-    assert agg.get_avg(quirks_df, "grouped") == pytest.approx((1 + 3 + 5) / 3)
+    assert agg.get_avg(quirks, "grouped") == pytest.approx((1 + 3 + 5) / 3)
 
 
-def test_max_spark_vs_legacy(quirks_df):
+def test_max_spark_vs_legacy(quirks):
     # Spark-correct max of all-negative column is negative
-    assert agg.get_max(quirks_df, "neg_only") == -1.0
+    assert agg.get_max(quirks, "neg_only") == -1.0
     # legacy (combined_flask.py:741, :777): nulls→0 and floor at 0 ⇒ 0
-    assert agg.get_max(quirks_df, "neg_only", mode="legacy") == 0.0
+    assert agg.get_max(quirks, "neg_only", mode="legacy") == 0.0
 
 
-def test_min_spark_vs_firebase(quirks_df):
-    assert agg.get_min(quirks_df, "plain") == 10.0
+def test_min_spark_vs_firebase(quirks):
+    assert agg.get_min(quirks, "plain") == 10.0
     # firebase 0-seed bug (combined_flask.py:1676-1688): min(min, 0) ⇒ 0
-    assert agg.get_min(quirks_df, "plain", mode="legacy_firebase") == 0.0
+    assert agg.get_min(quirks, "plain", mode="legacy_firebase") == 0.0
 
 
-def test_count(quirks_df):
-    assert agg.get_count(quirks_df) == 5
-    assert agg.get_count(quirks_df, "grouped") == 3  # null-skipping
+def test_count(quirks):
+    # the implicit count every reference map emits (combined_flask.py:734):
+    # rows per partition, and each column's null-skipping count
+    assert sum(quirks.sizes) == 5
+    assert sum(r[0] for r in quirks.columns["grouped"]) == 3
 
 
-def test_validate_rejects_non_numeric(quirks_df):
+def test_validate_rejects_non_numeric(quirks):
     # reference rejects non-numeric cols (combined_flask.py:569-573)
     with pytest.raises(TypeError):
-        agg.get_avg(quirks_df, "key")
+        agg.get_avg(quirks, "key")
     with pytest.raises(KeyError):
-        agg.get_avg(quirks_df, "missing_col")
+        agg.get_avg(quirks, "missing_col")
 
 
 def test_format_three_decimals():
@@ -63,8 +73,9 @@ def test_format_three_decimals():
 
 
 def test_partition_debug(quirks_df):
-    nn = quirks_df.filter(F.col("plain").isNotNull())
-    out = agg.partition_debug(nn.repartition(2), "plain", "avg").collect()
+    nn = quirks_df.filter(F.col("plain").isNotNull()).withColumn(PARTITION_COL, F.col("key"))
+    out = agg.partition_debug(map_partials(nn), "plain", "avg")
+    assert [r["partition"] for r in out] == [1, 2]
     assert sum(r["size"] for r in out) == 4
     total = sum(r["partial"] * r["size"] for r in out if r["partial"] is not None)
     # weighted merge of partials == global sum (the reference's reduce step)
@@ -75,14 +86,16 @@ def test_agg_against_testdata(spark, sf_dir):
     from dsci551_edfs_spark.sources.registry import load_table
 
     li = load_table(spark, sf_dir, "lineitem")
-    a = agg.get_avg(li, "l_quantity")
-    mx = agg.get_max(li, "l_quantity")
-    mn = agg.get_min(li, "l_quantity")
+    partials = map_partials(li, ["l_quantity"])
+    a = agg.get_avg(partials, "l_quantity")
+    mx = agg.get_max(partials, "l_quantity")
+    mn = agg.get_min(partials, "l_quantity")
     assert mn <= a <= mx
     # pruned avg only aggregates matching rows
     pruned = li.filter(F.col("l_returnflag") == "A").agg(F.avg("l_quantity")).collect()[0][0]
-    df2 = li.withColumn("__edfs_part__", F.col("l_returnflag"))
-    assert agg.get_avg(df2, "l_quantity", hash_value="A") == pytest.approx(pruned)
+    df2 = li.withColumn(PARTITION_COL, F.col("l_returnflag"))
+    by_flag = map_partials(df2, ["l_quantity"])
+    assert agg.get_avg(by_flag, "l_quantity", hash_value="A") == pytest.approx(pruned)
 
 
 # ------------------------------------------- partials vs direct aggregates
@@ -135,8 +148,6 @@ def _same(got, want, rel=0.0) -> bool:
 def test_partials_reduce_equals_spark_aggregates(spark, partials_table, infer_types):
     from pyspark.sql import types as T
 
-    from dsci551_edfs_spark.sources.partials import map_partials
-
     session = spark
     if infer_types:
         session = spark.newSession()
@@ -158,7 +169,9 @@ def test_partials_reduce_equals_spark_aggregates(spark, partials_table, infer_ty
                 F.greatest(F.max(F.coalesce(F.col(c), F.lit(0))), F.lit(0)),
                 F.least(F.min(F.coalesce(F.col(c), F.lit(float("inf")))), F.lit(0.0)),
             ]
-        want = agg._prune(df, h).agg(*exprs).collect()[0]
+        # `hash` pruning as a filter on the partition column
+        pruned = df if h is None else df.filter(F.col(PARTITION_COL) == F.lit(h))
+        want = pruned.agg(*exprs).collect()[0]
         for j, c in enumerate(cols):
             got = [
                 agg.get_avg(partials, c, h),
@@ -172,9 +185,6 @@ def test_partials_reduce_equals_spark_aggregates(spark, partials_table, infer_ty
             for name, g, e in zip(["max", "min", "legacy max", "firebase min"], got[1:], w[1:]):
                 assert _same(g, e), (c, h, name, g, e)
 
-    # the frame path is the same reduce over its own map step
-    assert agg.get_avg(df, "d", "1") == agg.get_avg(partials, "d", "1")
-    assert agg.get_max(df, "dec") == agg.get_max(partials, "dec")
     # debug lists every partition of the table in partition-map order
     debug = agg.partition_debug(partials, "i", "max")
     assert [d["partition"] for d in debug] == list(range(1, len(partials.keys) + 1))
@@ -182,10 +192,6 @@ def test_partials_reduce_equals_spark_aggregates(spark, partials_table, infer_ty
     assert [d["partial"] for d in debug] == [agg.get_max(partials, "i", str(k)) for k in partials.keys]
 
 
-def test_hash_needs_a_partition_column(quirks_df):
-    from dsci551_edfs_spark.sources.partials import map_partials
-
+def test_hash_needs_a_partition_column(quirks):
     with pytest.raises(KeyError):
-        agg.get_avg(quirks_df, "plain", hash_value="a")
-    with pytest.raises(KeyError):
-        agg.get_avg(map_partials(quirks_df), "plain", hash_value="a")
+        agg.get_avg(quirks, "plain", hash_value="a")

@@ -567,3 +567,22 @@ def test_no_private_session_caches():
             ]
     assert not id_calls, id_calls
     assert not state, state
+
+
+def test_perfbench_traced_names_resolve():
+    """`perfbench/run.py --trace 1` wraps each `(owner, attr)` of
+    `tracing.TRACED` by name; a rename in the package must not leave one
+    behind. The bench directory is only read: no bytecode is written."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    bench_dir = os.path.join(root, "perfbench")
+    saved = sys.dont_write_bytecode
+    sys.path.insert(0, bench_dir)
+    sys.dont_write_bytecode = True
+    try:
+        tracing = importlib.import_module("tracing")
+    finally:
+        sys.dont_write_bytecode = saved
+        sys.path.remove(bench_dir)
+    assert tracing.TRACED
+    missing = [span for owner, attr, span in tracing.TRACED if not callable(getattr(owner, attr, None))]
+    assert not missing, missing

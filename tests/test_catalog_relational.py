@@ -5,7 +5,7 @@ from pyspark.sql import functions as F
 
 from dsci551_edfs_spark.catalog import EdfsCatalog
 from dsci551_edfs_spark.operators import relational as R
-from dsci551_edfs_spark.plans.debug import explain_str, partition_trace, plan_has
+from dsci551_edfs_spark.plans.debug import explain_str, plan_has
 from dsci551_edfs_spark.sources.registry import load_table
 
 
@@ -73,9 +73,3 @@ def test_set_ops(spark):
     assert sorted(r.x for r in R.except_all(a, b).collect()) == [1]
     assert R.union_all(a, b).count() == 7
     assert sorted(r.x for r in R.distinct(a).collect()) == [1, 2, 3]
-
-
-def test_partition_trace_sums_to_total(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem")
-    tr = partition_trace(li, F.count("*").alias("size"))
-    assert sum(r["size"] for r in tr.collect()) == li.count()

@@ -302,6 +302,53 @@ def test_put_from_another_shell_is_seen(spark, shell):
         assert shell.execute(cmd)["status"] == "EDFS400", cmd
 
 
+def _put_table(spark, shell, kind: str) -> tuple[str, list[int]]:
+    """A table of `kind` in the shell's warehouse: its path and the `v`
+    values of its rows, in ingest order."""
+    from dsci551_edfs_spark.sources.ingest import put_dataframe
+
+    path = f"/numbering/{kind}"
+    dest = shell.catalog.table_path(path)
+    if kind == "hash_null_key":
+        # "" is written as Hive's default partition: a null key
+        rows = [("x", 1), ("", 5), ("y", 2), ("x", 7)]
+        put_dataframe(spark.createDataFrame(rows, "k string, v int"), dest, 3, "k")
+    elif kind == "range_bins":
+        rows = [(i, 10 * i) for i in range(10)]
+        put_dataframe(spark.createDataFrame(rows, "id int, v int"), dest, 3)
+    else:  # a parquet table without a partition column
+        rows = [(i, 3 * i) for i in range(5)]
+        spark.createDataFrame(rows, "id int, v int").coalesce(1).write.mode("overwrite").parquet(dest)
+    return path, [r[1] for r in rows]
+
+
+@pytest.mark.parametrize("kind", ["hash_null_key", "range_bins", "unpartitioned"])
+def test_partition_numbering_agrees(spark, shell, kind):
+    """`getPartitionLocations`, the `debug` channel and `readPartition
+    1..n` number the same partitions in the same order with the same row
+    counts, also for a null partition key and a table without a
+    partition column; `readPartition n+1` is a user error."""
+    path, values = _put_table(spark, shell, kind)
+    locations = shell.execute(f"getPartitionLocations {path}")["response"]["partitions"]
+    n = len(locations)
+    assert list(locations) == list(range(1, n + 1))
+    debug = shell.execute(f"getMax {path} v true")["response"]["partitions"]
+    assert [(d["partition"], d["size"]) for d in debug] == [(i, loc["rows"]) for i, loc in locations.items()]
+
+    read = []
+    for i in range(1, n + 1):
+        out = shell.execute(f"readPartition {path} {i}")
+        assert out["status"] == "EDFS200", (i, out)
+        rows = list(csv.DictReader(io.StringIO(out["response"])))
+        assert len(rows) == locations[i]["rows"], (i, out)
+        read += [int(r["v"]) for r in rows]
+    assert sorted(read) == sorted(values)
+    if n == 1:
+        assert read == values  # the whole table, in ingest order
+    assert shell.execute(f"readPartition {path} {n + 1}")["status"] == "EDFS400"
+    shell.execute(f"rm {path}")
+
+
 def test_default_warehouse_follows_scratch_env(spark, tmp_path, monkeypatch, capsys):
     monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
     assert main(["--", "mkdir", "/m"]) == 0

@@ -1,12 +1,15 @@
 """put → cat / readPartition / getPartitionLocations roundtrips."""
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
 from dsci551_edfs_spark import memo as MEMO
+from dsci551_edfs_spark.plans.debug import explain_str
 from dsci551_edfs_spark.sources import ingest, scan
+from dsci551_edfs_spark.sources.partials import map_partials
 
 SCRATCH = os.path.join(MEMO.SCRATCH, "test_ingest")
 
@@ -34,12 +37,13 @@ def test_null_hash_keys_form_own_partition(spark, dest):
     rows = [("x", 1), ("y", 2), (None, 3), (None, 4), ("", 5)]
     df = spark.createDataFrame(rows, "k string, v int")
     ingest.put_dataframe(df, dest, 2, "k")
-    keys = scan.list_partitions(spark.read.parquet(dest))
+    partials = map_partials(spark.read.parquet(dest), [])
+    keys = scan.list_partitions(partials)
     assert "NULL" in keys
     # an empty-string key is written as Hive's default partition and reads
     # back as a null key, which sorts first, as in Spark's ascending order
     assert keys == [None, "NULL", "x", "y"]
-    locs = scan.get_partition_locations(spark.read.parquet(dest))
+    locs = scan.get_partition_locations(partials)
     assert [v["key"] for v in locs["partitions"].values()] == keys
     by_key = {v["key"]: v["rows"] for v in locs["partitions"].values()}
     assert by_key["NULL"] == 2
@@ -50,7 +54,7 @@ def test_numeric_null_hash_fill_zero(spark, dest):
     rows = [(1.5, 1), (None, 2)]
     df = spark.createDataFrame(rows, "k double, v int")
     ingest.put_dataframe(df, dest, 2, "k")
-    keys = scan.list_partitions(spark.read.parquet(dest))
+    keys = scan.list_partitions(map_partials(spark.read.parquet(dest), []))
     assert any(k in ("0", "0.0") for k in keys)
 
 
@@ -60,26 +64,33 @@ def test_range_binning_fallback(spark, dest):
     df = spark.createDataFrame([(float(i),) for i in range(100)], "x double")
     manifest = ingest.put_dataframe(df, dest, 4, None)
     assert manifest["num_partitions"] == 4
-    keys = scan.list_partitions(spark.read.parquet(dest))
-    assert keys == ["index_0", "index_1", "index_2", "index_3"]
-    locs = scan.get_partition_locations(spark.read.parquet(dest))
+    partials = map_partials(spark.read.parquet(dest), [])
+    assert scan.list_partitions(partials) == ["index_0", "index_1", "index_2", "index_3"]
+    locs = scan.get_partition_locations(partials)
     sizes = [v["rows"] for v in locs["partitions"].values()]
     assert sum(sizes) == 100
     assert max(sizes) - min(sizes) <= 1  # equal-width on uniform data
 
 
 def test_read_partition_pruned_and_bounds(spark, dest):
-    df = spark.createDataFrame([(k, i) for i, k in enumerate("aabbcc")], "k string, v int")
+    # "" is written as Hive's default partition: a null key, partition 1
+    keys_in = ["a", "a", "b", "", "c", "c"]
+    df = spark.createDataFrame([(k, i) for i, k in enumerate(keys_in)], "k string, v int")
     ingest.put_dataframe(df, dest, 3, "k")
-    p1 = scan.read_partition(spark.read.parquet(dest), 1)
-    assert {r["k"] for r in p1.collect()} == {"a"}
-    with pytest.raises(IndexError):
-        scan.read_partition(spark.read.parquet(dest), 4)
-    # the partition filter must reach the scan as a partition filter
-    from dsci551_edfs_spark.plans.debug import explain_str
-
-    raw = spark.read.parquet(dest).filter(F.col(ingest.PARTITION_COL) == "a")
-    assert "PartitionFilters" in explain_str(raw)
+    table = spark.read.parquet(dest)
+    keys = scan.list_partitions(map_partials(table, []))
+    assert keys == [None, "a", "b", "c"]
+    null_part = scan.read_partition(table, 1, keys)
+    a_part = scan.read_partition(table, 2, keys)
+    # the key filter reaches the scan as a partition filter, the null
+    # key's too
+    assert re.search(r"PartitionFilters: \[isnull\(__edfs_part__#\d+\)\]", explain_str(null_part))
+    assert re.search(r"PartitionFilters: \[\(__edfs_part__#\d+ <=> a\)\]", explain_str(a_part))
+    assert [r["v"] for r in null_part.collect()] == [3]
+    assert [(r["k"], r["v"]) for r in a_part.collect()] == [("a", 0), ("a", 1)]
+    for bad in (0, 5):
+        with pytest.raises(IndexError):
+            scan.read_partition(table, bad, keys)
 
 
 def test_put_rejects_non_csv(spark, tmp_path):
