@@ -28,15 +28,22 @@ sum, min and max. The partials are the table's one partition map: they
 answer the aggregates, their `debug` channel, `getPartitionLocations` and
 `readPartition`'s numbering without a Spark job; they cost one job per
 table version and partitions × numeric columns values of driver memory.
+Like a datanode's stored blocks, the handle also keeps the CSV text the
+shell emitted for it (`emit`): per `cat` or `readPartition` partition and
+row cap, made by one Spark job on first use and kept while the rows
+summed over the kept texts stay within that cap, so a repeated emit runs
+no job and a handle's texts hold at most `max_csv_rows` rows.
 A handle is valid for one version of the table, stamped by the
 modification time of the `_SUCCESS` marker that every `put` rewrites, so
 each request costs one FileSystem stat instead of a schema-inference
-job; a new stamp or an `rm` drops the handle and its partials with it.
+job; a new stamp or an `rm` drops the handle, with its partials and
+texts.
 """
 
 from __future__ import annotations
 
 import threading
+from collections.abc import Callable
 from dataclasses import dataclass, field
 from datetime import datetime
 
@@ -58,6 +65,10 @@ class TableHandle:
     df: DataFrame
     _partials: Partials | None = None
     _lock: threading.Lock = field(default_factory=threading.Lock, repr=False)
+    #: (emit key, cap) -> CSV text, and the rows summed over the texts
+    _texts: dict = field(default_factory=dict, repr=False)
+    _text_rows: int = 0
+    _emit_lock: threading.Lock = field(default_factory=threading.Lock, repr=False)
 
     def partials(self) -> Partials:
         """The table's PMR partials, mapped on first use; concurrent first
@@ -66,6 +77,24 @@ class TableHandle:
             if self._partials is None:
                 self._partials = map_partials(self.df)
             return self._partials
+
+    def emit(self, key: tuple, cap: int, make: Callable[[], str]) -> str:
+        """The CSV text of `key` emitted under the row cap `cap`, made by
+        `make` on first use; concurrent first callers wait for the one
+        Spark job. A text is kept while the rows summed over the kept
+        texts stay within `cap`; past that it is served but not kept.
+        `make` must not call `emit`: the emit lock is not reentrant."""
+        with self._emit_lock:
+            text = self._texts.get((key, cap))
+            if text is None:
+                text = make()
+                # lines after the header: the marker line and a quoted
+                # newline overcount, and the cap bounds the rows emitted
+                rows = min(max(text.count("\n") - 1, 0), cap)
+                if self._text_rows + rows <= cap:
+                    self._texts[(key, cap)] = text
+                    self._text_rows += rows
+            return text
 
 
 class EdfsCatalog:

@@ -35,7 +35,11 @@ is resolved once per table version and reused across requests. The
 handle's PMR partials are the table's one partition map (one Spark job
 per table version, none on a warm table): they answer the aggregates,
 their `debug` channel and `getPartitionLocations`, and number the
-partitions `readPartition` reads.
+partitions `readPartition` reads. `cat` and `readPartition` emit CSV text
+with one bounded Spark job (`_emit_csv`) the first time a table version
+is read that way, and the handle keeps the text (`TableHandle.emit`), so
+an identical repeat runs none. `query` reads no table version: every
+`query` runs its emit.
 
 `debug=true` adds `partitions`: one `{partition, partial, size}` entry per
 EDFS partition of the whole table, also when `hash` prunes the result.
@@ -83,7 +87,9 @@ class EdfsShell:
         self.catalog = EdfsCatalog(spark, warehouse)
 
     def _emit_csv(self, df) -> str:
-        """Write a frame as CSV text, with one bounded Spark job.
+        """Write a frame as CSV text, with one bounded Spark job. `cat` and
+        `readPartition` call it only when their table handle has not kept
+        the text yet (`TableHandle.emit`); `query` calls it every time.
 
         `limit(cap + 1)` over the lazily ordered frames of `sources/scan.py`
         plans as one `TakeOrderedAndProject` (a top-k: each task keeps its
@@ -157,8 +163,11 @@ class EdfsShell:
                 # an action envelope the frontend (or REPL) acts on
                 return self._ok({"action": "clear"})
             if cmd == "cat":
-                df = SCN.cat(self.catalog.table(args[0]).df)
-                return self._ok(self._emit_csv(df))
+                table = self.catalog.table(args[0])
+                return self._ok(
+                    table.emit(("cat",), self.max_csv_rows,
+                               lambda: self._emit_csv(SCN.cat(table.df)))
+                )
             if cmd == "rm":
                 return self._ok(self.catalog.rm(args[0]))
             if cmd == "put":
@@ -176,9 +185,14 @@ class EdfsShell:
                 )
             if cmd == "readPartition":
                 table = self.catalog.table(args[0])
+                # keys first, so a map step never runs under the emit lock;
+                # within a version, partition n names the one key keys[n-1]
                 keys = SCN.list_partitions(table.partials())
-                df = SCN.read_partition(table.df, int(args[1]), keys)
-                return self._ok(self._emit_csv(df))
+                n = int(args[1])
+                return self._ok(
+                    table.emit(("readPartition", n), self.max_csv_rows,
+                               lambda: self._emit_csv(SCN.read_partition(table.df, n, keys)))
+                )
             if cmd == "getAvg":
                 return self._agg("avg", args)
             if cmd == "getMax":

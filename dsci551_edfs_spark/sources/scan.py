@@ -22,11 +22,14 @@ shell's catalog handle) answers the map without a Spark job.
 Spark design: `cat` and `readPartition` return lazily ordered frames, and
 a caller that bounds them with `limit(n)` (the shell's CSV emit) gets a
 top-k plan: one `TakeOrderedAndProject` job over the parquet scan, with no
-range-sampling job and no shuffle. A `readPartition` scan is
-**partition-pruned**: its null-safe equality on the Hive partition column
-reaches the DataSource and prunes directories, so no data outside the
-target partition is read, the null key's included. Replica failover is
-the storage layer's job and is not re-implemented.
+range-sampling job and no shuffle. The shell builds and runs such a frame
+once per table version and emit: its table handle keeps the text, so a
+repeated `cat` or `readPartition` calls neither function. A
+`readPartition` scan is **partition-pruned**: its null-safe equality on
+the Hive partition column reaches the DataSource and prunes directories,
+so no data outside the target partition is read, the null key's
+included. Replica failover is the storage layer's job and is not
+re-implemented.
 """
 
 from __future__ import annotations

@@ -6,7 +6,10 @@ import contextlib
 import csv
 import io
 import os
+import shutil
+import sys
 import tempfile
+import threading
 import uuid
 
 import pytest
@@ -21,7 +24,9 @@ SCRATCH = os.path.join(MEMO.SCRATCH, "test_cli")
 @pytest.fixture(scope="module")
 def shell(spark):
     os.makedirs(SCRATCH, exist_ok=True)
-    return EdfsShell(spark, tempfile.mkdtemp(prefix="wh_", dir=SCRATCH))
+    warehouse = tempfile.mkdtemp(prefix="wh_", dir=SCRATCH)
+    yield EdfsShell(spark, warehouse)
+    shutil.rmtree(warehouse, ignore_errors=True)
 
 
 @pytest.fixture(scope="module")
@@ -247,13 +252,25 @@ def _avg(shell, path: str, col: str = "v") -> str:
     return out["response"]["result"]
 
 
+def _values(shell, cmd: str) -> list[str]:
+    """The `v` column of an emit's CSV rows, in order."""
+    out = shell.execute(cmd)
+    assert out["status"] == "EDFS200", (cmd, out)
+    return [r["v"] for r in csv.DictReader(io.StringIO(out["response"]))]
+
+
 def test_overwriting_put_is_read_fresh(shell):
     first = _write_csv("fresh_1.csv", [1, 2, 3])
     second = _write_csv("fresh_2.csv", [10, 20, 30])
     assert shell.execute(f"put {first} /fresh/t.csv 2 g")["status"] == "EDFS200"
     assert _avg(shell, "/fresh/t.csv") == "The overall average is 2.000"
+    assert _values(shell, "cat /fresh/t.csv") == ["1", "2", "3"]
+    assert _values(shell, "readPartition /fresh/t.csv 1") == ["1", "3"]
     assert shell.execute(f"put {second} /fresh/t.csv 2 g")["status"] == "EDFS200"
     assert _avg(shell, "/fresh/t.csv") == "The overall average is 20.000"
+    # the emitted text is the new version's, not the old one kept
+    assert _values(shell, "cat /fresh/t.csv") == ["10", "20", "30"]
+    assert _values(shell, "readPartition /fresh/t.csv 1") == ["10", "30"]
 
 
 def test_rm_drops_the_handle(shell):
@@ -261,7 +278,9 @@ def test_rm_drops_the_handle(shell):
     one_key = _write_csv("rm_2.csv", [7])  # only g=0
     assert shell.execute(f"put {two_keys} /gone/t.csv 2 g")["status"] == "EDFS200"
     assert _avg(shell, "/gone/t.csv") == "The overall average is 2.500"
-    assert shell.execute("readPartition /gone/t.csv 2")["status"] == "EDFS200"
+    assert _values(shell, "readPartition /gone/t.csv 1") == ["1", "3"]
+    assert _values(shell, "readPartition /gone/t.csv 2") == ["2", "4"]
+    assert _values(shell, "cat /gone/t.csv") == ["1", "2", "3", "4"]
 
     assert shell.execute("rm /gone/t.csv")["status"] == "EDFS200"
     assert shell.execute("cat /gone/t.csv")["status"] == "EDFS400"
@@ -269,8 +288,9 @@ def test_rm_drops_the_handle(shell):
 
     assert shell.execute(f"put {one_key} /gone/t.csv 2 g")["status"] == "EDFS200"
     assert _avg(shell, "/gone/t.csv") == "The overall average is 7.000"
-    # partition keys come from the new version too: one key left
-    assert shell.execute("readPartition /gone/t.csv 1")["status"] == "EDFS200"
+    # partition keys and text come from the new version too: one key left
+    assert _values(shell, "readPartition /gone/t.csv 1") == ["7"]
+    assert _values(shell, "cat /gone/t.csv") == ["7"]
     assert shell.execute("readPartition /gone/t.csv 2")["status"] == "EDFS400"
 
 
@@ -279,7 +299,9 @@ def test_put_from_another_shell_is_seen(spark, shell):
     new = _write_csv("other_2.csv", [5])
     assert shell.execute(f"put {old} /shared/t.csv 2 g")["status"] == "EDFS200"
     assert _avg(shell, "/shared/t.csv") == "The overall average is 2.500"
-    assert shell.execute("readPartition /shared/t.csv 2")["status"] == "EDFS200"
+    assert _values(shell, "readPartition /shared/t.csv 1") == ["1", "3"]
+    assert _values(shell, "readPartition /shared/t.csv 2") == ["2", "4"]
+    assert _values(shell, "cat /shared/t.csv") == ["1", "2", "3", "4"]
     mx = shell.execute("getMax /shared/t.csv v true")["response"]
     assert mx["result"] == "The overall maximum is 4.000"
     assert [p["size"] for p in mx["partitions"]] == [2, 2]
@@ -287,8 +309,8 @@ def test_put_from_another_shell_is_seen(spark, shell):
     other = EdfsShell(spark, shell.catalog.warehouse)
     assert other.execute(f"put {new} /shared/t.csv 2 g")["status"] == "EDFS200"
     assert _avg(shell, "/shared/t.csv") == "The overall average is 5.000"
-    cat = shell.execute("cat /shared/t.csv")["response"]
-    assert [r["v"] for r in csv.DictReader(io.StringIO(cat))] == ["5"]
+    assert _values(shell, "cat /shared/t.csv") == ["5"]
+    assert _values(shell, "readPartition /shared/t.csv 1") == ["5"]
     assert shell.execute("readPartition /shared/t.csv 2")["status"] == "EDFS400"
     mx = shell.execute("getMax /shared/t.csv v true")["response"]
     assert mx["result"] == "The overall maximum is 5.000"
@@ -435,19 +457,95 @@ def test_read_partition_after_aggregate_runs_no_job_before_emit(spark, shell, na
     assert before_emit == [0]
 
 
+def _emit_jobs(spark, shell, cmd: str) -> tuple[str, list[int]]:
+    """Run an emit command in a fresh job group: its text and the stage
+    count of each job it ran."""
+    sc = spark.sparkContext
+    with _job_group(spark):
+        group = sc.getLocalProperty("spark.jobGroup.id")
+        out = shell.execute(cmd)
+    assert out["status"] == "EDFS200", (cmd, out)
+    tracker = sc.statusTracker()
+    return out["response"], [len(tracker.getJobInfo(j).stageIds) for j in tracker.getJobIdsForGroup(group)]
+
+
 def test_warm_emits_run_one_job_with_one_stage(spark, shell, nation_csv):
-    """A warm `readPartition` or `cat` is one bounded top-k job
-    (`TakeOrderedAndProject`) with one stage: no range-sampling job and
-    no shuffle, as a full sort read through `toLocalIterator` would add."""
+    """Once the partials are mapped, the first `readPartition` or `cat` of
+    a table version is one bounded top-k job (`TakeOrderedAndProject`)
+    with one stage: no range-sampling job and no shuffle, as a full sort
+    read through `toLocalIterator` would add. Its text is kept on the
+    table handle, so an identical repeat runs no job."""
     assert shell.execute(f"put {nation_csv} /jobs/emit.csv 4 n_regionkey")[
         "status"
     ] == "EDFS200"
-    sc = spark.sparkContext
-    for cmd in ("readPartition /jobs/emit.csv 2", "cat /jobs/emit.csv"):
-        assert shell.execute(cmd)["status"] == "EDFS200", cmd  # warms the handle
-        with _job_group(spark) as jobs:
-            group = sc.getLocalProperty("spark.jobGroup.id")
-            assert shell.execute(cmd)["status"] == "EDFS200", cmd
-        assert jobs() == 1, cmd
-        (job,) = sc.statusTracker().getJobIdsForGroup(group)
-        assert len(sc.statusTracker().getJobInfo(job).stageIds) == 1, cmd
+    assert shell.execute("getPartitionLocations /jobs/emit.csv")["status"] == "EDFS200"
+    for cmd in ("readPartition /jobs/emit.csv 2", "readPartition /jobs/emit.csv 3", "cat /jobs/emit.csv"):
+        first, stages = _emit_jobs(spark, shell, cmd)
+        assert stages == [1], cmd
+        again, stages = _emit_jobs(spark, shell, cmd)
+        assert again == first and stages == [], cmd
+
+
+def test_emit_texts_are_kept_within_the_row_cap(spark, shell, nation_csv, monkeypatch):
+    """A handle keeps emitted texts while the rows summed over them stay
+    within `max_csv_rows`; an emit past that budget is served whole but
+    not kept, so its repeat runs its job again."""
+    monkeypatch.setattr(EdfsShell, "max_csv_rows", 30)
+    assert shell.execute(f"put {nation_csv} /budget/n.csv 4 n_regionkey")[
+        "status"
+    ] == "EDFS200"
+    locations = shell.execute("getPartitionLocations /budget/n.csv")["response"]["partitions"]
+    assert [loc["rows"] for loc in locations.values()] == [5] * 5
+
+    texts = {}
+    for cmd, rows in (("cat /budget/n.csv", 25), ("readPartition /budget/n.csv 1", 5),
+                      ("readPartition /budget/n.csv 2", 5)):
+        texts[cmd], stages = _emit_jobs(spark, shell, cmd)
+        assert stages == [1], cmd
+        assert len(list(csv.DictReader(io.StringIO(texts[cmd])))) == rows, cmd
+        assert "# truncated" not in texts[cmd], cmd
+    # 25 + 5 rows fill the budget of 30: the third text is not kept
+    for cmd, jobs in (("cat /budget/n.csv", 0), ("readPartition /budget/n.csv 1", 0),
+                      ("readPartition /budget/n.csv 2", 1)):
+        again, stages = _emit_jobs(spark, shell, cmd)
+        assert again == texts[cmd] and len(stages) == jobs, cmd
+    shell.execute("rm /budget/n.csv")
+
+
+def test_concurrent_first_emits_run_one_job(shell, nation_csv, monkeypatch):
+    """Concurrent first callers of one emit on a fresh table version wait
+    for one emit and get the same text."""
+    assert shell.execute(f"put {nation_csv} /race/n.csv 4 n_regionkey")[
+        "status"
+    ] == "EDFS200"
+    emits = []
+    emit_csv = EdfsShell._emit_csv
+
+    def counted(self, df):
+        emits.append(df)
+        return emit_csv(self, df)
+
+    monkeypatch.setattr(EdfsShell, "_emit_csv", counted)
+    start = threading.Barrier(8, timeout=60)
+    outs = [None] * 8
+
+    def read(i):
+        start.wait()
+        outs[i] = shell.run("readPartition", ["/race/n.csv", "3"])
+
+    threads = [threading.Thread(target=read, args=(i,)) for i in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert all(o is not None and o["status"] == "EDFS200" for o in outs), outs
+    assert len({o["response"] for o in outs}) == 1
+    assert len(list(csv.DictReader(io.StringIO(outs[0]["response"])))) == 5
+    assert len(emits) == 1
+    shell.execute("rm /race/n.csv")

@@ -6,7 +6,9 @@ Usage: python tools/check_correctness.py [--json PATH] [name ...]
 
 ``--json PATH`` additionally writes the per-query results as a JSON dict
 (same shape as the driver's CORRECTNESS_r{N}.json) so a full-registry
-sweep leaves an auditable artifact in the tree, not just stdout.
+sweep leaves an auditable artifact in the tree, not just stdout. The
+wall time of the whole run, session start included, is printed with
+the tally and written as ``elapsed_s``.
 ``--sf DIR`` points the sweep at another scale factor (default sf0.01 —
 the driver's gate); an sf0.001/sf0.1 sweep is the SF-INVARIANCE check:
 every oracle must hash-match at ANY scale, so an SF-dependent bug
@@ -19,6 +21,7 @@ from __future__ import annotations
 import hashlib
 import os
 import sys
+import time
 
 import duckdb
 
@@ -64,6 +67,7 @@ def _fmt(v) -> str:
 def main() -> int:
     global SF_DIR
 
+    t0 = time.perf_counter()
     argv = sys.argv[1:]
     json_path = None
     if "--json" in argv:
@@ -149,7 +153,8 @@ def main() -> int:
                 print(f"        spark-only: {x}")
             for x in list(dset - sset)[:3]:
                 print(f"        duck-only:  {x}")
-    print(f"\n{len(names) - failures}/{len(names)} passed")
+    elapsed_s = round(time.perf_counter() - t0, 1)
+    print(f"\n{len(names) - failures}/{len(names)} passed in {elapsed_s} s")
     if json_path:
         import json
 
@@ -166,6 +171,7 @@ def main() -> int:
             "git_sha": sha,
             "code_sha": code_sha,
             "sf_dir": SF_DIR,
+            "elapsed_s": elapsed_s,
             "results": results,
         }
         with open(json_path, "w") as f:
