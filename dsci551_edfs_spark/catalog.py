@@ -28,11 +28,15 @@ sum, min and max. The partials are the table's one partition map: they
 answer the aggregates, their `debug` channel, `getPartitionLocations` and
 `readPartition`'s numbering without a Spark job; they cost one job per
 table version and partitions × numeric columns values of driver memory.
-Like a datanode's stored blocks, the handle also keeps the CSV text the
-shell emitted for it (`emit`): per `cat` or `readPartition` partition and
-row cap, made by one Spark job on first use and kept while the rows
-summed over the kept texts stay within that cap, so a repeated emit runs
-no job and a handle's texts hold at most `max_csv_rows` rows.
+The handle also lists the table's data files as Spark's file index
+found them (`files`, no job), so the shell can read a partition's rows
+from exactly the files Spark would read. Like a datanode's stored
+blocks, it keeps the CSV text the shell emitted for it (`emit`): per
+`cat` or `readPartition` partition and row cap, made on first use (from
+the files on the driver when they fit the cap, else by one Spark job)
+and kept while the rows summed over the kept texts stay within that cap,
+so a repeated emit reads nothing and a handle's texts hold at most
+`max_csv_rows` rows.
 A handle is valid for one version of the table, stamped by the
 modification time of the `_SUCCESS` marker that every `put` rewrites, so
 each request costs one FileSystem stat instead of a schema-inference
@@ -65,6 +69,7 @@ class TableHandle:
     df: DataFrame
     _partials: Partials | None = None
     _lock: threading.Lock = field(default_factory=threading.Lock, repr=False)
+    _files: list[str] | None = None
     #: (emit key, cap) -> CSV text, and the rows summed over the texts
     _texts: dict = field(default_factory=dict, repr=False)
     _text_rows: int = 0
@@ -78,19 +83,26 @@ class TableHandle:
                 self._partials = map_partials(self.df)
             return self._partials
 
-    def emit(self, key: tuple, cap: int, make: Callable[[], str]) -> str:
+    def files(self) -> list[str]:
+        """URIs of the table's data files, as the file index of `df`
+        listed them when the handle was read: hidden and `_` files are
+        not among them, nor files added since. No job; listed once."""
+        with self._lock:
+            if self._files is None:
+                self._files = list(self.df.inputFiles())
+            return self._files
+
+    def emit(self, key: tuple, cap: int, make: Callable[[], tuple[str, int]]) -> str:
         """The CSV text of `key` emitted under the row cap `cap`, made by
-        `make` on first use; concurrent first callers wait for the one
-        Spark job. A text is kept while the rows summed over the kept
-        texts stay within `cap`; past that it is served but not kept.
-        `make` must not call `emit`: the emit lock is not reentrant."""
+        `make` on first use, which returns the text and the rows it
+        holds; concurrent first callers wait for the one `make`. A text
+        is kept while the rows summed over the kept texts stay within
+        `cap`; past that it is served but not kept. `make` must not call
+        `emit`: the emit lock is not reentrant."""
         with self._emit_lock:
             text = self._texts.get((key, cap))
             if text is None:
-                text = make()
-                # lines after the header: the marker line and a quoted
-                # newline overcount, and the cap bounds the rows emitted
-                rows = min(max(text.count("\n") - 1, 0), cap)
+                text, rows = make()
                 if self._text_rows + rows <= cap:
                     self._texts[(key, cap)] = text
                     self._text_rows += rows

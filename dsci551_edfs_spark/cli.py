@@ -35,11 +35,13 @@ is resolved once per table version and reused across requests. The
 handle's PMR partials are the table's one partition map (one Spark job
 per table version, none on a warm table): they answer the aggregates,
 their `debug` channel and `getPartitionLocations`, and number the
-partitions `readPartition` reads. `cat` and `readPartition` emit CSV text
-with one bounded Spark job (`_emit_csv`) the first time a table version
-is read that way, and the handle keeps the text (`TableHandle.emit`), so
-an identical repeat runs none. `query` reads no table version: every
-`query` runs its emit.
+partitions `readPartition` reads. The first `cat` or `readPartition` of a
+table version whose rows fit `max_csv_rows` reads them from the table's
+parquet files on the driver (`scan.local_rows`), with no Spark job; a
+larger one, a table off the local filesystem or a read `local_rows`
+cannot prove exact runs one bounded Spark job (`_emit_csv`). The handle
+keeps the text (`TableHandle.emit`), so an identical repeat reads
+nothing. `query` reads no table version: every `query` runs its emit.
 
 `debug=true` adds `partitions`: one `{partition, partial, size}` entry per
 EDFS partition of the whole table, also when `hash` prunes the result.
@@ -86,27 +88,52 @@ class EdfsShell:
         self.spark = spark
         self.catalog = EdfsCatalog(spark, warehouse)
 
-    def _emit_csv(self, df) -> str:
-        """Write a frame as CSV text, with one bounded Spark job. `cat` and
-        `readPartition` call it only when their table handle has not kept
-        the text yet (`TableHandle.emit`); `query` calls it every time.
+    def _emit_csv(self, df) -> tuple[str, int]:
+        """Write a frame as CSV text with one bounded Spark job; returns
+        the text and the rows it holds. `query` calls it every time, and
+        `_emit_table` when the driver cannot read the rows itself.
 
         `limit(cap + 1)` over the lazily ordered frames of `sources/scan.py`
         plans as one `TakeOrderedAndProject` (a top-k: each task keeps its
         first cap+1 rows in order, the driver merges them) instead of the
         sample, shuffle and result jobs of a full sort. Driver memory stays
         bounded by the cap: at most cap+1 rows in Python, at most cap+1
-        rows per task into the merge. The reference emits the whole CSV
-        (`combined_flask.py` cat) but serves KB-scale tables; past
-        `max_csv_rows` the text ends in a `# truncated at N rows` marker
-        instead."""
+        rows per task into the merge."""
+        rows = df.limit(self.max_csv_rows + 1).collect()
+        return self._csv_text(df.columns, rows), min(len(rows), self.max_csv_rows)
+
+    def _emit_table(self, table, partition: int | None = None) -> tuple[str, int]:
+        """`cat` (partition None) or `readPartition <partition>` of a
+        table handle as CSV text and its row count. Rows that fit
+        `max_csv_rows` are read from the table's files on the driver,
+        with no Spark job (`scan.local_rows`); otherwise, or when that
+        read cannot be proved exact, `_emit_csv` runs the scan frame.
+        Call it with the partials already mapped, so no map step runs
+        under the handle's emit lock."""
+        partials = table.partials()
+        keys = SCN.list_partitions(partials)
+        if partition is None:
+            key, size = SCN.ALL, sum(partials.sizes)
+        else:
+            key, size = SCN.partition_key(keys, partition), partials.sizes[partition - 1]
+        if size <= self.max_csv_rows:
+            local = SCN.local_rows(table.df.schema, table.files(), size, key)
+            if local is not None:
+                return self._csv_text(*local), size
+        if partition is None:
+            return self._emit_csv(SCN.cat(table.df))
+        return self._emit_csv(SCN.read_partition(table.df, partition, keys))
+
+    def _csv_text(self, columns: list[str], rows: list) -> str:
+        """The emitted CSV: a header and at most `max_csv_rows` rows; more
+        rows end in a `# truncated at N rows` marker. The reference emits
+        the whole CSV (`combined_flask.py` cat) but serves KB-scale tables."""
         import csv as _csv
         import io
 
-        rows = df.limit(self.max_csv_rows + 1).collect()
         buf = io.StringIO()
         w = _csv.writer(buf, lineterminator="\n")
-        w.writerow(df.columns)
+        w.writerow(columns)
         w.writerows(rows[: self.max_csv_rows])
         if len(rows) > self.max_csv_rows:
             buf.write(f"# truncated at {self.max_csv_rows} rows\n")
@@ -164,9 +191,9 @@ class EdfsShell:
                 return self._ok({"action": "clear"})
             if cmd == "cat":
                 table = self.catalog.table(args[0])
+                table.partials()  # mapped before the emit lock
                 return self._ok(
-                    table.emit(("cat",), self.max_csv_rows,
-                               lambda: self._emit_csv(SCN.cat(table.df)))
+                    table.emit(("cat",), self.max_csv_rows, lambda: self._emit_table(table))
                 )
             if cmd == "rm":
                 return self._ok(self.catalog.rm(args[0]))
@@ -185,13 +212,12 @@ class EdfsShell:
                 )
             if cmd == "readPartition":
                 table = self.catalog.table(args[0])
-                # keys first, so a map step never runs under the emit lock;
+                table.partials()  # mapped before the emit lock
                 # within a version, partition n names the one key keys[n-1]
-                keys = SCN.list_partitions(table.partials())
                 n = int(args[1])
                 return self._ok(
                     table.emit(("readPartition", n), self.max_csv_rows,
-                               lambda: self._emit_csv(SCN.read_partition(table.df, n, keys)))
+                               lambda: self._emit_table(table, n))
                 )
             if cmd == "getAvg":
                 return self._agg("avg", args)
@@ -215,7 +241,7 @@ class EdfsShell:
                 sf_dir = args[1] if len(args) >= 2 else DEFAULT_SF_DIR
                 limit = int(args[2]) if len(args) >= 3 else 20
                 df = QUERIES[name](self.spark, sf_dir).limit(limit)
-                return self._ok(self._emit_csv(df))
+                return self._ok(self._emit_csv(df)[0])
             if cmd == "queries":
                 from .queries import ORACLES, QUERIES
 

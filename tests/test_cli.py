@@ -10,6 +10,7 @@ import shutil
 import sys
 import tempfile
 import threading
+import time
 import uuid
 
 import pytest
@@ -426,37 +427,6 @@ def test_warm_aggregates_run_no_jobs(spark, shell):
     assert cold > 0
 
 
-def test_warm_read_partition_runs_no_job_before_emit(spark, shell, nation_csv, monkeypatch):
-    assert shell.execute(f"put {nation_csv} /jobs/rp.csv 4 n_regionkey")[
-        "status"
-    ] == "EDFS200"
-    assert shell.execute("readPartition /jobs/rp.csv 1")["status"] == "EDFS200"
-
-    before_emit = []
-    with _job_group(spark) as jobs:
-        monkeypatch.setattr(
-            EdfsShell, "_emit_csv", lambda self, df: before_emit.append(jobs()) or ""
-        )
-        assert shell.execute("readPartition /jobs/rp.csv 2")["status"] == "EDFS200"
-    assert before_emit == [0]
-
-
-def test_read_partition_after_aggregate_runs_no_job_before_emit(spark, shell, nation_csv, monkeypatch):
-    assert shell.execute(f"put {nation_csv} /jobs/agg_rp.csv 4 n_regionkey")[
-        "status"
-    ] == "EDFS200"
-    _avg(shell, "/jobs/agg_rp.csv", "n_nationkey")  # maps the partials
-
-    before_emit = []
-    with _job_group(spark) as jobs:
-        monkeypatch.setattr(
-            EdfsShell, "_emit_csv", lambda self, df: before_emit.append(jobs()) or ""
-        )
-        assert shell.execute("readPartition /jobs/agg_rp.csv 1")["status"] == "EDFS200"
-    # the partition keys come from the partials: no second metadata job
-    assert before_emit == [0]
-
-
 def _emit_jobs(spark, shell, cmd: str) -> tuple[str, list[int]]:
     """Run an emit command in a fresh job group: its text and the stage
     count of each job it ran."""
@@ -469,27 +439,87 @@ def _emit_jobs(spark, shell, cmd: str) -> tuple[str, list[int]]:
     return out["response"], [len(tracker.getJobInfo(j).stageIds) for j in tracker.getJobIdsForGroup(group)]
 
 
-def test_warm_emits_run_one_job_with_one_stage(spark, shell, nation_csv):
+def _count_makes(monkeypatch) -> list:
+    """Count the texts the shell makes (`EdfsShell._emit_table`, the
+    `make` of `TableHandle.emit`); returns the list each call appends to."""
+    made = []
+    emit_table = EdfsShell._emit_table
+
+    def counted(self, table, partition=None):
+        made.append(partition)
+        return emit_table(self, table, partition)
+
+    monkeypatch.setattr(EdfsShell, "_emit_table", counted)
+    return made
+
+
+def _no_spark_emit(monkeypatch) -> None:
+    def boom(self, df):
+        raise AssertionError("an emit within the row cap runs no Spark job")
+
+    monkeypatch.setattr(EdfsShell, "_emit_csv", boom)
+
+
+def test_warm_read_partition_runs_no_job_before_emit(spark, shell, nation_csv, monkeypatch):
+    """On a warm table a first `readPartition` within the row cap runs no
+    Spark job at all: the key and row count come from the partials, the
+    rows from the table's files."""
+    assert shell.execute(f"put {nation_csv} /jobs/rp.csv 4 n_regionkey")[
+        "status"
+    ] == "EDFS200"
+    assert shell.execute("readPartition /jobs/rp.csv 1")["status"] == "EDFS200"
+
+    _no_spark_emit(monkeypatch)
+    text, stages = _emit_jobs(spark, shell, "readPartition /jobs/rp.csv 2")
+    assert stages == []
+    assert len(list(csv.DictReader(io.StringIO(text)))) == 5
+
+
+def test_read_partition_after_aggregate_runs_no_job_before_emit(spark, shell, nation_csv, monkeypatch):
+    assert shell.execute(f"put {nation_csv} /jobs/agg_rp.csv 4 n_regionkey")[
+        "status"
+    ] == "EDFS200"
+    _avg(shell, "/jobs/agg_rp.csv", "n_nationkey")  # maps the partials
+
+    # the partition keys come from the partials: no second metadata job,
+    # and the rows from the files: no emit job
+    _no_spark_emit(monkeypatch)
+    text, stages = _emit_jobs(spark, shell, "readPartition /jobs/agg_rp.csv 1")
+    assert stages == []
+    assert len(list(csv.DictReader(io.StringIO(text)))) == 5
+
+
+def test_warm_emits_run_one_job_with_one_stage(spark, shell, nation_csv, monkeypatch):
     """Once the partials are mapped, the first `readPartition` or `cat` of
-    a table version is one bounded top-k job (`TakeOrderedAndProject`)
-    with one stage: no range-sampling job and no shuffle, as a full sort
-    read through `toLocalIterator` would add. Its text is kept on the
-    table handle, so an identical repeat runs no job."""
+    a table version runs no job when its rows fit `max_csv_rows`, and one
+    bounded top-k job (`TakeOrderedAndProject`) with one stage when they
+    do not: no range-sampling job and no shuffle, as a full sort read
+    through `toLocalIterator` would add. Its text is kept on the table
+    handle, so an identical repeat runs no job."""
     assert shell.execute(f"put {nation_csv} /jobs/emit.csv 4 n_regionkey")[
         "status"
     ] == "EDFS200"
     assert shell.execute("getPartitionLocations /jobs/emit.csv")["status"] == "EDFS200"
+    texts = {}
     for cmd in ("readPartition /jobs/emit.csv 2", "readPartition /jobs/emit.csv 3", "cat /jobs/emit.csv"):
-        first, stages = _emit_jobs(spark, shell, cmd)
-        assert stages == [1], cmd
+        texts[cmd], stages = _emit_jobs(spark, shell, cmd)
+        assert stages == [], cmd
         again, stages = _emit_jobs(spark, shell, cmd)
-        assert again == first and stages == [], cmd
+        assert again == texts[cmd] and stages == [], cmd
+
+    monkeypatch.setattr(EdfsShell, "max_csv_rows", 3)
+    for cmd in ("readPartition /jobs/emit.csv 2", "cat /jobs/emit.csv"):
+        capped, stages = _emit_jobs(spark, shell, cmd)
+        assert stages == [1], cmd
+        # the first rows in ingest order, then the marker
+        assert capped == "".join(texts[cmd].splitlines(keepends=True)[:4]) + "# truncated at 3 rows\n", cmd
+    shell.execute("rm /jobs/emit.csv")
 
 
 def test_emit_texts_are_kept_within_the_row_cap(spark, shell, nation_csv, monkeypatch):
     """A handle keeps emitted texts while the rows summed over them stay
     within `max_csv_rows`; an emit past that budget is served whole but
-    not kept, so its repeat runs its job again."""
+    not kept, so its repeat makes its text again."""
     monkeypatch.setattr(EdfsShell, "max_csv_rows", 30)
     assert shell.execute(f"put {nation_csv} /budget/n.csv 4 n_regionkey")[
         "status"
@@ -497,35 +527,50 @@ def test_emit_texts_are_kept_within_the_row_cap(spark, shell, nation_csv, monkey
     locations = shell.execute("getPartitionLocations /budget/n.csv")["response"]["partitions"]
     assert [loc["rows"] for loc in locations.values()] == [5] * 5
 
+    made = _count_makes(monkeypatch)
     texts = {}
     for cmd, rows in (("cat /budget/n.csv", 25), ("readPartition /budget/n.csv 1", 5),
                       ("readPartition /budget/n.csv 2", 5)):
         texts[cmd], stages = _emit_jobs(spark, shell, cmd)
-        assert stages == [1], cmd
+        assert stages == [], cmd
         assert len(list(csv.DictReader(io.StringIO(texts[cmd])))) == rows, cmd
         assert "# truncated" not in texts[cmd], cmd
+    assert len(made) == 3
     # 25 + 5 rows fill the budget of 30: the third text is not kept
-    for cmd, jobs in (("cat /budget/n.csv", 0), ("readPartition /budget/n.csv 1", 0),
-                      ("readPartition /budget/n.csv 2", 1)):
+    for cmd, makes in (("cat /budget/n.csv", 0), ("readPartition /budget/n.csv 1", 0),
+                       ("readPartition /budget/n.csv 2", 1)):
+        before = len(made)
         again, stages = _emit_jobs(spark, shell, cmd)
-        assert again == texts[cmd] and len(stages) == jobs, cmd
+        assert again == texts[cmd] and stages == [] and len(made) - before == makes, cmd
     shell.execute("rm /budget/n.csv")
+
+
+def test_emit_books_exact_rows(spark, shell, monkeypatch):
+    """The emit budget counts rows, not lines: a quoted newline inside a
+    value does not use up a row of `max_csv_rows`."""
+    from dsci551_edfs_spark.sources.ingest import put_dataframe
+
+    rows = [(0, "one\ntwo"), (1, "x"), (0, "y"), (1, "z")]
+    put_dataframe(spark.createDataFrame(rows, "g int, s string"), shell.catalog.table_path("/books/t"), 2, "g")
+    monkeypatch.setattr(EdfsShell, "max_csv_rows", 4)
+    made = _count_makes(monkeypatch)
+    first = shell.execute("readPartition /books/t 1")["response"]
+    assert first == 'g,s\n0,"one\ntwo"\n0,y\n'
+    assert shell.execute("readPartition /books/t 2")["status"] == "EDFS200"
+    # 2 + 2 rows fit the budget of 4, so both texts are kept
+    for n in (1, 2):
+        assert shell.execute(f"readPartition /books/t {n}")["status"] == "EDFS200"
+    assert made == [1, 2]
+    shell.execute("rm /books/t")
 
 
 def test_concurrent_first_emits_run_one_job(shell, nation_csv, monkeypatch):
     """Concurrent first callers of one emit on a fresh table version wait
-    for one emit and get the same text."""
+    for one `make` and get the same text."""
     assert shell.execute(f"put {nation_csv} /race/n.csv 4 n_regionkey")[
         "status"
     ] == "EDFS200"
-    emits = []
-    emit_csv = EdfsShell._emit_csv
-
-    def counted(self, df):
-        emits.append(df)
-        return emit_csv(self, df)
-
-    monkeypatch.setattr(EdfsShell, "_emit_csv", counted)
+    made = _count_makes(monkeypatch)
     start = threading.Barrier(8, timeout=60)
     outs = [None] * 8
 
@@ -547,5 +592,134 @@ def test_concurrent_first_emits_run_one_job(shell, nation_csv, monkeypatch):
     assert all(o is not None and o["status"] == "EDFS200" for o in outs), outs
     assert len({o["response"] for o in outs}) == 1
     assert len(list(csv.DictReader(io.StringIO(outs[0]["response"])))) == 5
-    assert len(emits) == 1
+    assert made == [3]
     shell.execute("rm /race/n.csv")
+
+
+# ------------------------------------------- driver read = Spark top-k
+
+
+@pytest.fixture
+def pacific_tz():
+    """The process's local time zone set to one with DST and a non-zero
+    UTC offset, as `collect()` turns timestamps into local wall clock."""
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = "America/Los_Angeles"
+    time.tzset()
+    yield
+    if old is None:
+        del os.environ["TZ"]
+    else:
+        os.environ["TZ"] = old
+    time.tzset()
+
+
+def _typed_rows() -> list[tuple]:
+    """Rows of every type the driver read converts: nulls everywhere,
+    NaN and -0.0, strings CSV must quote, keys Hive must escape."""
+    from datetime import date, datetime
+    from decimal import Decimal
+
+    strings = ['Smith, "Jr"', "one\ntwo", "", None, "ünï\tcode", 'say ""hi""']
+    keys = ["a b", "x/y", "p%q", "e=f", "h:m", "", None]
+    doubles = [float("nan"), -0.0, None, 1e300, 0.1, -2.5]
+    stamps = [datetime(1969, 12, 31, 23, 59, 59, 999999), datetime(2021, 3, 14, 2, 30), None,
+              datetime(2021, 11, 7, 1, 30), datetime(2038, 1, 19, 3, 14, 8, 5), datetime(2000, 2, 29, 12)]
+    dates = [date(1900, 1, 1), None, date(1969, 12, 31), date(2038, 1, 19), date(2000, 2, 29)]
+    return [
+        (
+            None if i % 5 == 3 else i - 7,  # the range layout bins it, nulls to index_0
+            keys[i % len(keys)],
+            None if i % 4 == 2 else (i % 3) * 2**40 - 5,
+            doubles[i % len(doubles)],
+            None if i % 6 == 5 else float(i) / 3,
+            strings[i % len(strings)],
+            dates[i % len(dates)],
+            None if i % 7 == 6 else i % 2 == 0,
+            stamps[i % len(stamps)],
+            None if i % 8 == 1 else Decimal(i * 7 - 20).scaleb(-18),
+            None if i % 9 == 4 else i % 3,
+        )
+        for i in range(42)
+    ]
+
+
+_TYPED_SCHEMA = (
+    "i int, k string, l long, d double, f float, s string, dt date, b boolean,"
+    " ts timestamp, dec decimal(38,18), g int"
+)
+
+
+@pytest.mark.parametrize("infer_types", [False, True])
+@pytest.mark.parametrize("layout", ["hash_string", "hash_int", "range", "plain"])
+def test_driver_text_equals_spark_text(spark, shell, pacific_tz, layout, infer_types):
+    """For `cat` and every partition, the text of the driver read
+    (`scan.local_rows`) is byte for byte the text of the Spark top-k emit
+    (`_emit_csv` of `scan.cat` / `scan.read_partition`), whatever the
+    layout, the partition-type inference and the local time zone."""
+    from dsci551_edfs_spark.sources import scan as SCN
+    from dsci551_edfs_spark.sources.ingest import PARTITION_COL, put_dataframe
+    from dsci551_edfs_spark.sources.partials import map_partials
+
+    dest = shell.catalog.table_path(f"/equal/{layout}_{infer_types}")
+    frame = spark.createDataFrame(_typed_rows(), _TYPED_SCHEMA)
+    if layout == "plain":
+        frame.coalesce(1).write.mode("overwrite").parquet(dest)
+    else:
+        hash_col = {"hash_string": "k", "hash_int": "g", "range": None}[layout]
+        put_dataframe(frame, dest, 3, hash_col)
+    session = spark
+    if infer_types:
+        session = spark.newSession()
+        session.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "true")
+    df = session.read.parquet(dest)
+    partials = map_partials(df)
+    keys = SCN.list_partitions(partials)
+    if layout != "plain":
+        key_type = df.schema[PARTITION_COL].dataType.simpleString()
+        assert key_type == ("int" if infer_types and layout == "hash_int" else "string")
+    if layout == "hash_string":
+        assert None in keys  # "" is written as Hive's default partition
+
+    def driver_text(size, key):
+        local = SCN.local_rows(df.schema, df.inputFiles(), size, key)
+        assert local is not None, (layout, key)
+        return shell._csv_text(*local)
+
+    assert driver_text(sum(partials.sizes), SCN.ALL) == shell._emit_csv(SCN.cat(df))[0]
+    for n, (key, size) in enumerate(zip(keys, partials.sizes), start=1):
+        spark_text, rows = shell._emit_csv(SCN.read_partition(df, n, keys))
+        assert rows == size and driver_text(size, key) == spark_text, (layout, n, key)
+    shutil.rmtree(dest, ignore_errors=True)
+
+
+def test_driver_read_leaves_inexact_reads_to_spark(spark, shell, tmp_path):
+    """`local_rows` serves only a read it can prove exact: a row count
+    that differs from the partials', files off the local filesystem, a
+    column a file lacks, a type it does not convert, or several unindexed
+    files give None."""
+    from pyspark.sql import types as T
+
+    from dsci551_edfs_spark.sources import scan as SCN
+    from dsci551_edfs_spark.sources.ingest import put_dataframe
+
+    dest = str(tmp_path / "t")
+    put_dataframe(spark.createDataFrame([(i % 2, i) for i in range(6)], "g int, v int"), dest, 2, "g")
+    df = spark.read.parquet(dest)
+    files = df.inputFiles()
+    assert SCN.local_rows(df.schema, files, 3, "0") is not None
+    assert SCN.local_rows(df.schema, files, 4, "0") is None
+    assert SCN.local_rows(df.schema, files, 5, SCN.ALL) is None
+    assert SCN.local_rows(df.schema, [f.replace("file:", "hdfs:", 1) for f in files], 3, "0") is None
+    wider = T.StructType(df.schema.fields + [T.StructField("extra", T.IntegerType())])
+    assert SCN.local_rows(wider, files, 3, "0") is None
+
+    binary = str(tmp_path / "binary")
+    spark.createDataFrame([(bytearray(b"x"),)], "b binary").write.parquet(binary)
+    bf = spark.read.parquet(binary)
+    assert SCN.local_rows(bf.schema, bf.inputFiles(), 1) is None
+
+    loose = str(tmp_path / "loose")
+    spark.createDataFrame([(i,) for i in range(4)], "v int").repartition(2).write.parquet(loose)
+    lf = spark.read.parquet(loose)
+    assert len(lf.inputFiles()) == 2 and SCN.local_rows(lf.schema, lf.inputFiles(), 4) is None

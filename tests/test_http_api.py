@@ -8,7 +8,6 @@ import io
 import json
 import os
 import sys
-import tempfile
 import urllib.parse
 import urllib.request
 
@@ -24,9 +23,8 @@ SCRATCH = os.path.join(MEMO.SCRATCH, "test_http")
 
 
 @pytest.fixture(scope="module")
-def server(spark):
-    os.makedirs(SCRATCH, exist_ok=True)
-    shell = EdfsShell(spark, tempfile.mkdtemp(prefix="wh_", dir=SCRATCH))
+def server(spark, tmp_path_factory):
+    shell = EdfsShell(spark, str(tmp_path_factory.mktemp("wh")))
     srv, _thread = start_server(shell)
     yield f"http://127.0.0.1:{srv.server_address[1]}"
     srv.shutdown()
@@ -160,7 +158,7 @@ def test_concurrent_cold_aggregates_agree(server, nation_csv, monkeypatch):
     assert sum(p["rows"] for p in locations) == 25
 
 
-def test_decimal_debug_partials_answer_an_envelope(spark):
+def test_decimal_debug_partials_answer_an_envelope(spark, tmp_path):
     """A `debug=true` aggregate over a decimal column carries `Decimal`
     partials; the handler encodes them as strings, as the CLI prints
     them, instead of dropping the connection mid-response."""
@@ -168,7 +166,7 @@ def test_decimal_debug_partials_answer_an_envelope(spark):
 
     from dsci551_edfs_spark.sources.ingest import put_dataframe
 
-    shell = EdfsShell(spark, tempfile.mkdtemp(prefix="wh_", dir=SCRATCH))
+    shell = EdfsShell(spark, str(tmp_path))
     df = spark.createDataFrame(
         [(1, Decimal("1.25")), (2, Decimal("3.50"))], "id int, price decimal(10,2)"
     )

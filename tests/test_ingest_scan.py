@@ -6,20 +6,14 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from dsci551_edfs_spark import memo as MEMO
 from dsci551_edfs_spark.plans.debug import explain_str
 from dsci551_edfs_spark.sources import ingest, scan
 from dsci551_edfs_spark.sources.partials import map_partials
 
-SCRATCH = os.path.join(MEMO.SCRATCH, "test_ingest")
-
 
 @pytest.fixture()
-def dest(tmp_path_factory):
-    os.makedirs(SCRATCH, exist_ok=True)
-    import tempfile
-
-    return tempfile.mkdtemp(dir=SCRATCH)
+def dest(tmp_path):
+    return str(tmp_path / "table")
 
 
 def test_put_cat_restores_order(spark, dest):
@@ -160,13 +154,12 @@ def test_block_subsplit_matches_array_split(spark, dest):
     assert ids["g__b0"] == [0, 1, 2, 3] and ids["g__b1"] == [4, 5, 6]
 
 
-def test_edfs_datasource_pushdown_prunes_partitions(spark, sf_dir):
+def test_edfs_datasource_pushdown_prunes_partitions(spark, sf_dir, tmp_path):
     """format('edfs') reads the put layout; EqualTo pushdown on the hash
     column prunes partitions() to one directory; the sentinel partition
     keeps non-matching null rows OUT of an equality result (partial
     pushdown: the row filter stays in Spark's plan)."""
     import os
-    import tempfile
 
     import pyspark.sql.functions as F
 
@@ -179,9 +172,7 @@ def test_edfs_datasource_pushdown_prunes_partitions(spark, sf_dir):
     from pyspark.sql.datasource import EqualTo
 
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    scratch = MEMO.SCRATCH
-    os.makedirs(scratch, exist_ok=True)
-    dest = tempfile.mkdtemp(prefix="eds_t_", dir=scratch)
+    dest = str(tmp_path / "table")
     base = spark.createDataFrame(
         [(1, 0), (2, 0), (3, 1), (4, None), (5, None)],
         "id long, grp int",
@@ -214,13 +205,12 @@ def test_edfs_datasource_pushdown_prunes_partitions(spark, sf_dir):
     )
 
 
-def test_edfs_datasource_pushdown_block_subsplit(spark, sf_dir):
+def test_edfs_datasource_pushdown_block_subsplit(spark, sf_dir, tmp_path):
     """Regression (round-7 ADVICE): on a max_rows_per_block layout the
     partition dirs are '<value>__b<k>' (BLOCK_SUBSPLIT_SEP), and an
     EqualTo-pushed scan must keep ALL of a value's block dirs — the old
     '_b' prefix match pruned every block away and returned zero rows."""
     import os
-    import tempfile
 
     import pyspark.sql.functions as F
 
@@ -232,9 +222,7 @@ def test_edfs_datasource_pushdown_block_subsplit(spark, sf_dir):
     from pyspark.sql.datasource import EqualTo
 
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    scratch = MEMO.SCRATCH
-    os.makedirs(scratch, exist_ok=True)
-    dest = tempfile.mkdtemp(prefix="eds_b_", dir=scratch)
+    dest = str(tmp_path / "table")
     rows = [(i, 7) for i in range(10)] + [(100 + i, 70) for i in range(3)]
     base = spark.createDataFrame(rows, "id long, grp int")
     # grp=7 → 3 blocks (7__b0..2), grp=70 → 1 block (70__b0)
@@ -265,12 +253,11 @@ def test_edfs_datasource_pushdown_block_subsplit(spark, sf_dir):
     assert sorted(r["id"] for r in seventy) == [100, 101, 102]
 
 
-def test_edfs_stream_tail_exactly_once(spark, sf_dir):
+def test_edfs_stream_tail_exactly_once(spark, sf_dir, tmp_path):
     """readStream.format('edfs') tails the layout: the initial batch
     delivers existing files, later batches ONLY the newly appeared ones
     (offset = files consumed), and nothing is delivered twice."""
     import os
-    import tempfile
     import time
 
     import pyspark.sql.functions as F
@@ -278,9 +265,7 @@ def test_edfs_stream_tail_exactly_once(spark, sf_dir):
     from dsci551_edfs_spark.sources.edfs_datasource import register_edfs
     from dsci551_edfs_spark.sources.ingest import put_dataframe
 
-    scratch = MEMO.SCRATCH
-    os.makedirs(scratch, exist_ok=True)
-    dest = tempfile.mkdtemp(prefix="eds_s_", dir=scratch)
+    dest = str(tmp_path / "table")
     base = spark.createDataFrame(
         [(i, i % 3) for i in range(30)], "id long, grp int"
     )
@@ -319,7 +304,7 @@ def test_edfs_stream_tail_exactly_once(spark, sf_dir):
         q.stop()
 
 
-def test_edfs_stream_cursor_restart_exactly_once(spark):
+def test_edfs_stream_cursor_restart_exactly_once(spark, tmp_path):
     """The durable (mtime_ns, relpath) cursor: a query restarted from its
     checkpoint delivers ONLY files that appeared after the committed
     cursor — nothing replayed, nothing skipped — and a writer violating
@@ -327,7 +312,6 @@ def test_edfs_stream_cursor_restart_exactly_once(spark):
     degrades safely to IGNORED instead of splicing into a committed
     range."""
     import os
-    import tempfile
     import time
 
     import pyspark.sql.functions as F
@@ -335,17 +319,15 @@ def test_edfs_stream_cursor_restart_exactly_once(spark):
     from dsci551_edfs_spark.sources.edfs_datasource import register_edfs
     from dsci551_edfs_spark.sources.ingest import put_dataframe
 
-    scratch = MEMO.SCRATCH
-    os.makedirs(scratch, exist_ok=True)
-    dest = tempfile.mkdtemp(prefix="eds_r_", dir=scratch)
-    ckpt = tempfile.mkdtemp(prefix="eds_r_ck_", dir=scratch)
+    dest = str(tmp_path / "table")
+    ckpt = str(tmp_path / "checkpoint")
     base = spark.createDataFrame(
         [(i, i % 2) for i in range(10)], "id long, grp int"
     )
     put_dataframe(base, dest, 2, hash_col="grp")
     register_edfs(spark)
 
-    out = tempfile.mkdtemp(prefix="eds_r_out_", dir=scratch)
+    out = str(tmp_path / "out")
 
     def start():
         # parquet sink: the one in-box sink that supports checkpoint
