@@ -26,15 +26,13 @@ HALF_UP rounding), NaN orders above every number, and a partition
 without non-null values contributes nothing, so an all-null column, a
 hash key that selects nothing or an empty table answers None.
 
-Semantic quirk modes (SURVEY.md §2.4):
-- default "spark" mode = SQL-correct null-skipping semantics. For `avg`
-  this already EQUALS the reference (its NaN-partition exclusion,
-  `combined_flask.py:763-764`, is exactly null-skipping avg).
-- mode="legacy" for max: nulls→0 and result floored at 0
-  (`combined_flask.py:741`, `:777`): max(partition maxes ∪ {0}).
-- mode="legacy_firebase" for min: reduce seeded with 0 — the Firebase
-  backend's divergent bug (`combined_flask.py:1676-1688`) — a double,
-  min(partition mins ∪ {0}).
+Semantics (SURVEY.md §2.4) are SQL-correct null skipping. For `avg`
+this already EQUALS the reference (its NaN-partition exclusion,
+`combined_flask.py:763-764`, is exactly null-skipping avg). The
+reference's two quirks are served as registered queries, not here:
+`pmr_legacy_max` (max with nulls→0, floored at 0, `combined_flask.py:741`,
+`:777`) and `pmr_legacy_min_firebase` (min seeded with 0, the Firebase
+backend's bug, `combined_flask.py:1676-1688`).
 
 `hash` partition pruning (`combined_flask.py:459-465`) selects the
 partition keys equal to the hash value (`Partials.select`), as a filter
@@ -131,31 +129,14 @@ def get_avg(partials: Partials, col: str, hash_value: Any | None = None) -> floa
     return _avg(*_mapped(partials, col, hash_value))
 
 
-def get_max(
-    partials: Partials, col: str, hash_value: Any | None = None, mode: str = "spark"
-) -> float | None:
-    """Reference `getMax` (`combined_flask.py:599-647`).
-
-    legacy mode: nulls→0 before the max, global result floored at 0
-    (`combined_flask.py:741`, `:777`)."""
-    rows, dtype = _mapped(partials, col, hash_value)
-    if mode == "legacy":
-        zero = 0.0 if isinstance(dtype, (T.DoubleType, T.FloatType)) else 0
-        return max([zero, *(r[3] for r in rows)], key=_order)
-    return _max(rows, dtype)
+def get_max(partials: Partials, col: str, hash_value: Any | None = None) -> float | None:
+    """Reference `getMax` (`combined_flask.py:599-647`)."""
+    return _max(*_mapped(partials, col, hash_value))
 
 
-def get_min(
-    partials: Partials, col: str, hash_value: Any | None = None, mode: str = "spark"
-) -> float | None:
-    """Reference `getMin` (`combined_flask.py:649-697`).
-
-    legacy_firebase mode reproduces the Firebase 0-seed bug
-    (`combined_flask.py:1676-1688`): result = min(min(col nulls→+inf), 0)."""
-    rows, dtype = _mapped(partials, col, hash_value)
-    if mode == "legacy_firebase":
-        return float(min([0, *(r[2] for r in rows)], key=_order))
-    return _min(rows, dtype)
+def get_min(partials: Partials, col: str, hash_value: Any | None = None) -> float | None:
+    """Reference `getMin` (`combined_flask.py:649-697`)."""
+    return _min(*_mapped(partials, col, hash_value))
 
 
 _PARTIAL: dict[str, Callable] = {"avg": _avg, "max": _max, "min": _min}

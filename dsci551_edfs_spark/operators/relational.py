@@ -11,9 +11,6 @@ Scale notes baked in:
 - `join(..., broadcast_hint=True)` wraps the right side in
   `F.broadcast` — a dimension under the broadcast threshold skips the
   shuffle of the fact table entirely (sort-merge → broadcast-hash).
-- `top_k` is `orderBy().limit(k)`: Catalyst executes it as
-  TakeOrderedAndProject — per-partition partial top-k then a single merge,
-  never a global sort of all rows.
 - Set ops and dedup map to built-ins, which already do partial
   aggregation map-side.
 """
@@ -25,7 +22,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["join", "top_k", "union_all", "intersect", "except_all", "distinct"]
+__all__ = ["join", "intersect", "distinct"]
 
 
 def join(
@@ -41,22 +38,8 @@ def join(
     return left.join(r, on=on, how=how)
 
 
-def top_k(df: DataFrame, order: Sequence[Column | str], k: int) -> DataFrame:
-    """Deterministic top-k — callers should include a unique tiebreaker
-    column in ``order``. Executes as TakeOrderedAndProject (no global sort)."""
-    return df.orderBy(*order).limit(k)
-
-
-def union_all(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.unionByName(b)
-
-
 def intersect(a: DataFrame, b: DataFrame, all: bool = False) -> DataFrame:
     return a.intersectAll(b) if all else a.intersect(b)
-
-
-def except_all(a: DataFrame, b: DataFrame, all: bool = False) -> DataFrame:
-    return a.exceptAll(b) if all else a.subtract(b)
 
 
 def distinct(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:

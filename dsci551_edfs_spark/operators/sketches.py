@@ -7,8 +7,6 @@ counterparts exist in the relational layer; tests pin relative error.
 
 - ``approx_ndv``: HyperLogLog++ distinct count, rsd-tunable. Partial
   sketches merge map-side, so the shuffle is O(sketch), not O(ndv).
-- ``approx_quantiles``: Greenwald-Khanna quantiles within
-  ``relativeError`` of true rank — single pass, no sort.
 - ``frequent_items``: itemset sampling (Karp et al.) for heavy hitters
   above the support threshold.
 """
@@ -22,7 +20,6 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "approx_ndv",
-    "approx_quantiles",
     "frequent_items",
     "count_min_build",
     "count_min_estimate",
@@ -102,21 +99,6 @@ def approx_ndv(df: DataFrame, cols: Sequence[str], rsd: float = 0.05) -> DataFra
     """One row of HLL++ distinct-count estimates, one column per input."""
     return df.agg(
         *[F.approx_count_distinct(c, rsd=rsd).alias(f"ndv_{c}") for c in cols]
-    )
-
-
-def approx_quantiles(
-    df: DataFrame,
-    col: str,
-    probabilities: Sequence[float] = (0.25, 0.5, 0.75, 0.95),
-    relative_error: float = 0.01,
-) -> DataFrame:
-    """(probability, value) rows from a single-pass GK sketch."""
-    values = df.approxQuantile(col, list(probabilities), relative_error)
-    spark = df.sparkSession
-    return spark.createDataFrame(
-        [(float(p), float(v)) for p, v in zip(probabilities, values)],
-        "probability double, value double",
     )
 
 

@@ -36,7 +36,6 @@ __all__ = [
     "ngram_overlap_contamination",
     "multi_n_overlap",
     "decontaminate",
-    "decontam_gate",
     "semantic_decontam",
 ]
 
@@ -258,24 +257,6 @@ def decontaminate(
         .select(F.col("id").alias(id_col))
     )
     return train.join(flagged, id_col, "left_anti")
-
-
-def decontam_gate(
-    docs: DataFrame, flagged: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """Enforce an OFFLINE-computed contamination list on a document feed —
-    batch or streaming. ``flagged`` is the (small) id list produced by
-    ``ngram_overlap_contamination`` over the historical corpus; ``docs``
-    may be a Structured Streaming frame, in which case this is a
-    stateless stream-static left_anti join (re-planned and broadcast per
-    micro-batch, zero streaming state) — the production enforcement
-    shape: the expensive overlap scan runs offline on the cluster, the
-    ingest stream only pays a broadcast-hash probe per row. Batch and
-    streaming runs of this function are row-identical (pinned in
-    tests/test_streaming.py)."""
-    return docs.join(
-        F.broadcast(flagged.select(id_col).distinct()), id_col, "left_anti"
-    )
 
 
 def semantic_decontam(

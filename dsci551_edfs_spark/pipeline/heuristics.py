@@ -17,8 +17,8 @@ Design notes (100 TB posture):
   both sides.
 - Filters return ALL rows with per-rule flags plus a ``keep`` verdict
   (rather than silently dropping), so a 100 TB run can audit rule-by-rule
-  drop rates before committing to a destructive pass. ``*_clean`` variants
-  apply the verdict.
+  drop rates before committing to a destructive pass. ``c4_clean``
+  applies the verdict.
 """
 
 from __future__ import annotations
@@ -30,7 +30,6 @@ __all__ = [
     "c4_line_flags",
     "c4_clean",
     "gopher_quality_flags",
-    "gopher_clean",
     "GOPHER_REQUIRED_STOPWORDS",
 ]
 
@@ -197,10 +196,3 @@ def gopher_quality_flags(
         hits.cast("long").alias("stopword_hits"),
         keep.alias("keep"),
     )
-
-
-def gopher_clean(docs: DataFrame, **kwargs) -> DataFrame:
-    """Apply the Gopher verdict: surviving doc ids + metrics only."""
-    id_col = kwargs.get("id_col", "doc_id")
-    flags = gopher_quality_flags(docs, **kwargs)
-    return flags.filter("keep").drop("keep")

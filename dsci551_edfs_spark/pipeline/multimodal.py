@@ -67,7 +67,6 @@ __all__ = [
     "media_phash",
     "resize_media",
     "frame_sample",
-    "chunk_audio",
 ]
 
 HEADER_LEN = 36  # 5+3+1+6+1+6+1+4+1+7+1 fixed ASCII bytes
@@ -412,47 +411,6 @@ def frame_sample(
         F.col("frame_idx"),
         F.col("_flen").cast("long").alias("frame_bytes"),
         F.md5(F.hex(frame)).alias("frame_sig"),
-    )
-
-
-def chunk_audio(
-    df: DataFrame,
-    chunk_ms: int = 250,
-    bytes_per_sec: int = 1000,
-    media_col: str = "media",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Split audio payloads into fixed-duration chunks (frame_sample's
-    audio twin): chunk byte-length = sample_rate-scaled duration, last
-    partial chunk kept. Same pure-JVM sequence/explode/substring shape —
-    one slice pass, no shuffle, no Python.
-
-    `bytes_per_sec` stands in for bytes-per-sample x channels (a real
-    PCM decode would read these from the codec header)."""
-    payload_len = F.octet_length(F.col(media_col)) - HEADER_LEN
-    rate = F.col("media_meta.sample_rate")
-    chunk_len = F.greatest(
-        F.ceil(rate * chunk_ms / 1000 * bytes_per_sec / F.lit(8000)).cast("int"),
-        F.lit(1),
-    )
-    auds = df.filter(F.col("media_meta.kind") == "aud").select(
-        id_col,
-        media_col,
-        chunk_len.alias("_clen"),
-        payload_len.alias("_plen"),
-        F.explode(
-            F.sequence(F.lit(0), F.floor((payload_len - 1) / chunk_len).cast("int"))
-        ).alias("chunk_idx"),
-    )
-    chunk = F.expr(
-        f"substring({media_col}, {HEADER_LEN} + 1 + chunk_idx * _clen, "
-        "least(_clen, _plen - chunk_idx * _clen))"
-    )
-    return auds.select(
-        F.col(id_col),
-        F.col("chunk_idx"),
-        F.octet_length(chunk).cast("long").alias("chunk_bytes"),
-        F.md5(F.hex(chunk)).alias("chunk_sig"),
     )
 
 

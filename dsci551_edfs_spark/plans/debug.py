@@ -5,8 +5,7 @@ Output} traces (`combined_flask.py:712-717`, `:771-772`); the shell
 serves them per EDFS partition from the table's PMR partials
 (`operators.aggregates.partition_debug`). What is left here is plan
 inspection: `explain_str(df)` is the formatted physical plan (check for
-PushedFilters / PartitionFilters / ReadSchema / WholeStageCodegen spans)
-and `plan_has` asserts on it.
+PushedFilters / PartitionFilters / ReadSchema / WholeStageCodegen spans).
 """
 
 from __future__ import annotations
@@ -16,7 +15,7 @@ from contextlib import redirect_stdout
 
 from pyspark.sql import DataFrame
 
-__all__ = ["explain_str", "plan_has"]
+__all__ = ["explain_str"]
 
 
 def explain_str(df: DataFrame, mode: str = "formatted") -> str:
@@ -24,9 +23,3 @@ def explain_str(df: DataFrame, mode: str = "formatted") -> str:
     with redirect_stdout(buf):
         df.explain(mode=mode)
     return buf.getvalue()
-
-
-def plan_has(df: DataFrame, needle: str, mode: str = "formatted") -> bool:
-    """Assert helper: does the physical plan mention `needle`
-    (e.g. 'PushedFilters', 'BroadcastHashJoin', 'PartitionFilters')?"""
-    return needle in explain_str(df, mode)

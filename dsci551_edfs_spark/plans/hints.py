@@ -19,10 +19,10 @@ back to broadcast if the RUNTIME size turns out small — propagated
 estimates overestimate post-aggregation cardinality, and that is the safe
 direction here: worst case is one extra shuffle, never an OOM).
 
-Threshold conf: ``spark.dsci551.broadcastEstimateThreshold`` (bytes,
-default 256 MiB of *estimated* input — deliberately larger than the
-classic 10 MB autoBroadcastJoinThreshold because non-CBO estimates for
-an aggregate propagate the pre-aggregation child size).
+The threshold is the module constant ``_BROADCAST_ESTIMATE_BYTES``
+(256 MiB of *estimated* input — deliberately larger than the classic
+10 MB autoBroadcastJoinThreshold because non-CBO estimates for an
+aggregate propagate the pre-aggregation child size).
 """
 
 from __future__ import annotations
@@ -32,8 +32,7 @@ from pyspark.sql import functions as F
 
 __all__ = ["broadcast_if_small", "plan_size_estimate", "spread_small"]
 
-_THRESHOLD_CONF = "spark.dsci551.broadcastEstimateThreshold"
-_DEFAULT_THRESHOLD = 256 << 20
+_BROADCAST_ESTIMATE_BYTES = 256 << 20
 
 
 def plan_size_estimate(df: DataFrame) -> int:
@@ -48,15 +47,11 @@ def plan_size_estimate(df: DataFrame) -> int:
     return size if isinstance(size, int) else int(size.toString())
 
 
-def broadcast_if_small(df: DataFrame, threshold_bytes: int | None = None) -> DataFrame:
-    """Apply ``F.broadcast`` only when the plan-estimated size is under
-    the threshold; otherwise return ``df`` unhinted and let the planner /
-    AQE choose from runtime sizes."""
-    if threshold_bytes is None:
-        threshold_bytes = int(
-            df.sparkSession.conf.get(_THRESHOLD_CONF, str(_DEFAULT_THRESHOLD))
-        )
-    if plan_size_estimate(df) <= threshold_bytes:
+def broadcast_if_small(df: DataFrame) -> DataFrame:
+    """Apply ``F.broadcast`` only when the plan-estimated size is at most
+    ``_BROADCAST_ESTIMATE_BYTES``; otherwise return ``df`` unhinted and
+    let the planner / AQE choose from runtime sizes."""
+    if plan_size_estimate(df) <= _BROADCAST_ESTIMATE_BYTES:
         return F.broadcast(df)
     return df
 

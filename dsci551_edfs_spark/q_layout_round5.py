@@ -38,9 +38,8 @@ from .q_curation import _DECONTAM_CTES
 def zorder_zvalues(spark, sf_dir):
     """Morton z-value per order row over integer-exact bucket ids
     (o_custkey % 256, bigint(o_totalprice) % 256 — deterministic on both
-    engines; the min/max-normalized bucketing lives in
-    sources/layout.py:zorder_layout and is pinned in tests). The oracle
-    restates the 4-step magic-mask spread bit-for-bit."""
+    engines). The oracle restates the 4-step magic-mask spread
+    bit-for-bit."""
     from .sources.layout import zvalue16
 
     o = _t(spark, sf_dir, "orders")

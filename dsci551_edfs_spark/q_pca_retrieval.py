@@ -1891,14 +1891,10 @@ def udtf_token_chunks(spark, sf_dir):
     """,
 )
 def streaming_sessions_tws(spark, sf_dir):
-    """Batch face of the transformWithStateInPandas session assembler
-    (streaming/tws_sessions.py): one row per completed session. The
-    streaming run keeps ONE fixed-width tuple per ACTIVE user (state ∝
-    active users, not events) and closes quiet sessions with event-time
-    TIMERS — the Spark-4 arbitrary-stateful API this engine uses where
-    emission must happen on silence, which no row-driven operator can
-    express. State machine pinned equal to this plan in
-    tests/test_streaming.py (wiring test protobuf-gated)."""
+    """One row per completed session (streaming/tws_sessions.py
+    `sessions_batch`): gaps-and-islands over user-keyed windows, a
+    session closing after 30 minutes of inactivity, aggregated to
+    (user_id, start_s, end_s, n_events)."""
     from .streaming.tws_sessions import sessions_batch
 
     return sessions_batch(_t(spark, sf_dir, "events"))

@@ -543,27 +543,13 @@ def json_schema_audit(spark, sf_dir):
     """,
 )
 def events_tumbling_window(spark, sf_dir):
-    """10-minute tumbling window aggregate (batch mode — the streaming
-    variant in streaming/ shares the same window semantics; Spark window
-    start = epoch-floored boundary, equal to the oracle's
-    hour-trunc + 10-min floor)."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy(
-            F.window("ts", "10 minutes").alias("w"),
-            "event_type",
-        )
-        .agg(
-            F.count("*").alias("cnt"),
-            F.round(F.sum("value"), 3).alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "cnt",
-            "sum_value",
-        )
-    )
+    """10-minute tumbling window aggregate: `streaming.windows.tumbling_agg`
+    over the batch events table (the same function runs a stream). Spark
+    window start = epoch-floored boundary, equal to the oracle's
+    hour-trunc + 10-min floor."""
+    from .streaming.windows import tumbling_agg
+
+    return tumbling_agg(_t(spark, sf_dir, "events"))
 
 
 # =====================================================================

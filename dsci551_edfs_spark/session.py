@@ -18,7 +18,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "stop_spark"]
+__all__ = ["get_spark"]
 
 
 def get_spark(app_name: str = "edfs-spark", extra_conf: dict | None = None) -> SparkSession:
@@ -54,9 +54,3 @@ def get_spark(app_name: str = "edfs-spark", extra_conf: dict | None = None) -> S
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

@@ -23,9 +23,9 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
-__all__ = ["write_bucketed", "bucketed_join"]
+__all__ = ["write_bucketed"]
 
 
 def write_bucketed(
@@ -53,19 +53,3 @@ def write_bucketed(
     if sort:
         writer = writer.sortBy(*keys)
     writer.saveAsTable(table)
-
-
-def bucketed_join(
-    spark: SparkSession,
-    left_table: str,
-    right_table: str,
-    on: str | Sequence[str],
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join two same-bucket-count tables on their bucket key.
-
-    With both sides bucketed identically this plans as a shuffle-free
-    sort-merge join: zero Exchange operators, each task streams exactly one
-    bucket pair."""
-    on_cols = [on] if isinstance(on, str) else list(on)
-    return spark.table(left_table).join(spark.table(right_table), on_cols, how)

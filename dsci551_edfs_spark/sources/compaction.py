@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["plan_compaction", "compaction_summary"]
+__all__ = ["plan_compaction"]
 
 
 def plan_compaction(
@@ -87,13 +87,4 @@ def plan_compaction(
             F.floor(F.col("_before") / F.lit(int(target_bytes))).cast("long"),
         )
         .drop("_before")
-    )
-
-
-def compaction_summary(plan: DataFrame, size_col: str = "bytes") -> DataFrame:
-    """Per-group audit of a `plan_compaction` result: file count and
-    total bytes — what a maintenance job logs before rewriting."""
-    return plan.groupBy("out_group").agg(
-        F.count("*").cast("long").alias("n_files"),
-        F.sum(size_col).cast("long").alias("group_bytes"),
     )

@@ -1,5 +1,5 @@
-"""EDFS as a first-class Spark format: ``spark.read.format("edfs")`` via
-the Python DataSource API (Spark 4, SPARK-44076).
+"""EDFS as a first-class Spark batch format: ``spark.read.format("edfs")``
+via the Python DataSource API (Spark 4, SPARK-44076).
 
 The rest of the `sources` package reads EDFS layouts with
 `spark.read.parquet` plus layout knowledge baked into each call site.
@@ -38,12 +38,11 @@ from urllib.parse import unquote
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    DataSourceStreamReader,
     EqualTo,
     InputPartition,
 )
 
-from .ingest import BLOCK_SUBSPLIT_SEP, PARTITION_COL
+from .ingest import PARTITION_COL
 
 __all__ = ["EdfsDataSource", "register_edfs"]
 
@@ -89,15 +88,7 @@ class _EdfsReader(DataSourceReader):
     def partitions(self) -> Sequence[InputPartition]:
         dirs = _partition_dirs(self.path)
         if self.pushed_value is not None:
-            want = self.pushed_value
-            dirs = [
-                d
-                for d in dirs
-                # exact hash-value dir, or its block-subsplit children
-                # (named f"{value}{BLOCK_SUBSPLIT_SEP}{k}" by ingest)
-                if _dir_value(d) == want
-                or _dir_value(d).startswith(want + BLOCK_SUBSPLIT_SEP)
-            ]
+            dirs = [d for d in dirs if _dir_value(d) == self.pushed_value]
         return [_EdfsPartition(os.path.join(self.path, d)) for d in dirs]
 
     def read(self, partition: _EdfsPartition) -> Iterator:
@@ -134,85 +125,7 @@ class EdfsDataSource(DataSource):
     def reader(self, schema) -> DataSourceReader:
         return _EdfsReader(self.options, [f.name for f in schema.fields])
 
-    def streamReader(self, schema) -> "DataSourceStreamReader":
-        return _EdfsStreamReader(self.options, [f.name for f in schema.fields])
-
 
 def register_edfs(spark) -> None:
     """Idempotently register the EDFS format with a session."""
     spark.dataSource.register(EdfsDataSource)
-
-
-class _EdfsStreamFile(InputPartition):
-    def __init__(self, file_path: str):
-        self.file_path = file_path
-
-
-class _EdfsStreamReader(DataSourceStreamReader):
-    """Tail an EDFS layout as a PARTITION-PARALLEL stream: each
-    micro-batch maps one InputPartition per newly appeared parquet file,
-    read executor-side as Arrow RecordBatches — the data-plane shape
-    (the previous SimpleDataSourceStreamReader funneled every row through
-    the driver).
-
-    Offset contract: a durable CURSOR ``{"t": mtime_ns, "p": relpath}``
-    — the max (mtime_ns, relpath) consumed — not a file COUNT. A count
-    over the (mtime, path) sort mis-slices when mtimes tie at coarse fs
-    granularity or a file lands with an earlier mtime (rows skipped or
-    replayed after restart); the cursor makes every committed range
-    ``start < (t, p) <= end`` deterministic from the filesystem alone,
-    so restart replay is exactly-once. A writer violating the
-    monotone-mtime append assumption (shared with Spark's own
-    FileStreamSource) now degrades SAFELY: its file sorts below the
-    cursor and is ignored, never spliced into a committed range.
-
-    At 100 TB the same shape holds: `partitions()` is a metadata listing
-    (object-store LIST), each file is one task, and the Arrow batches
-    never touch the driver."""
-
-    def __init__(self, options: dict, schema_names: Sequence[str]):
-        self.path = options["path"]
-        self.schema_names = list(schema_names)
-
-    @staticmethod
-    def _key(off: dict) -> tuple[int, str]:
-        return (off["t"], off["p"])
-
-    def _files(self) -> list[tuple[int, str]]:
-        out = []
-        for d in _partition_dirs(self.path):
-            dd = os.path.join(self.path, d)
-            for f in os.listdir(dd):
-                if f.endswith(".parquet"):
-                    p = os.path.join(dd, f)
-                    out.append(
-                        (os.stat(p).st_mtime_ns, os.path.relpath(p, self.path))
-                    )
-        return sorted(out)
-
-    def initialOffset(self) -> dict:
-        return {"t": -1, "p": ""}
-
-    def latestOffset(self) -> dict:
-        files = self._files()
-        if not files:
-            return self.initialOffset()
-        t, p = files[-1]
-        return {"t": t, "p": p}
-
-    def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
-        lo, hi = self._key(start), self._key(end)
-        return [
-            _EdfsStreamFile(os.path.join(self.path, p))
-            for t, p in self._files()
-            if lo < (t, p) <= hi
-        ]
-
-    def read(self, partition: _EdfsStreamFile) -> Iterator:
-        import pyarrow.parquet as pq
-
-        table = pq.read_table(partition.file_path, columns=self.schema_names)
-        yield from table.to_batches()
-
-    def commit(self, end: dict) -> None:
-        pass

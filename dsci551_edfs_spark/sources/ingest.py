@@ -28,6 +28,10 @@ Spark design:
 - Range fallback = equal-width bins on the first column computed with one
   min/max agg + ``width_bucket``-style arithmetic (the reference's
   ``pd.cut``), written as partition column ``index_{i}``.
+- The reference's per-group block chunking (``np.array_split`` of a hash
+  group into size-capped blocks, `combined_flask.py:402,416-418`) is not
+  reproduced: a hash group is one partition directory, and the storage
+  layer splits its files into blocks.
 - Replication / datanode placement is delegated to the storage layer
   (HDFS/object store) and intentionally NOT re-implemented.
 """
@@ -36,18 +40,13 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 PARTITION_COL = "__edfs_part__"
 INDEX_COL = "index"
 NULL_STRING_SENTINEL = "NULL"
-# Separator prepended to the block number when a hash group is subsplit
-# into size-capped blocks (`_block_subsplit`): value "7" → dirs "7__b0",
-# "7__b1", ... Shared with the DataSource's pushdown pruning so the two
-# sides can never drift.
-BLOCK_SUBSPLIT_SEP = "__b"
 
 __all__ = ["put", "put_dataframe", "PARTITION_COL", "INDEX_COL"]
 
@@ -91,45 +90,16 @@ def _range_partition_expr(df: DataFrame, num_partitions: int):
     return F.concat(F.lit("index_"), bin_id.cast("long").cast("string"))
 
 
-def _block_subsplit(out: DataFrame, max_rows_per_block: int) -> DataFrame:
-    """Optional per-group block chunking (`combined_flask.py:402,416-418`):
-    the reference splits each hash group into ceil(n/cap) near-equal
-    contiguous blocks via ``np.array_split``; this reproduces the identical
-    block membership so multi-block groups number the same way.
-
-    array_split math: k = ceil(n/cap); the first n % k blocks hold
-    ceil(n/k) rows, the rest floor(n/k), in row order. Costs one window
-    shuffle keyed on the partition value — ingest-time only, and exactly
-    the shuffle the write's `repartition(PARTITION_COL)` needs anyway."""
-    grp = Window.partitionBy(PARTITION_COL)
-    rn0 = F.row_number().over(grp.orderBy(INDEX_COL)) - 1
-    n = F.count("*").over(grp)
-    k = F.ceil(n / F.lit(max_rows_per_block))
-    q = (n / k).cast("long")  # floor block size
-    r = n % k  # first r blocks get q+1 rows
-    big = r * (q + 1)
-    block = F.when(rn0 < big, (rn0 / (q + 1)).cast("long")).otherwise(
-        r + ((rn0 - big) / q).cast("long")
-    )
-    return out.withColumn(
-        PARTITION_COL,
-        F.concat(F.col(PARTITION_COL), F.lit(BLOCK_SUBSPLIT_SEP), block.cast("string")),
-    )
-
-
 def put_dataframe(
     df: DataFrame,
     destination: str,
     partitions: int,
     hash_col: str | None = None,
-    max_rows_per_block: int | None = None,
 ) -> dict:
-    """Partition an already-loaded DataFrame and write it as Parquet.
+    """Partition an already-loaded DataFrame and write it as Parquet,
+    one partition directory per hash value (or range bin).
 
     Returns a small manifest dict (partition column, partition count).
-    `max_rows_per_block` opts into the reference's per-group block
-    chunking (see `_block_subsplit`); default None maps one partition
-    directory per hash value, whose query semantics are identical.
     """
     df = df.withColumn(INDEX_COL, F.monotonically_increasing_id())
     if hash_col is not None:
@@ -139,8 +109,6 @@ def put_dataframe(
     else:
         part_expr = _range_partition_expr(df, partitions)
     out = df.withColumn(PARTITION_COL, part_expr)
-    if max_rows_per_block is not None:
-        out = _block_subsplit(out, max_rows_per_block)
     # Hive-style layout → partition-pruned scans for readPartition /
     # hash-pruned aggregates. One file per partition value per task is fine
     # here; at 100 TB add .repartition(PARTITION_COL) first so each

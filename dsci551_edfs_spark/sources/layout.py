@@ -1,32 +1,20 @@
-"""Multi-dimensional data layout: Z-order (Morton) clustering for
-two-column data skipping on plain parquet.
+"""Morton (Z-order) z-values as Catalyst expressions.
 
-A table range-partitioned and sorted on ONE column skips beautifully on
-that column and not at all on any other. Interleaving the bits of two
-bucketized dimensions into a Morton z-value and laying the table out in
-z-order gives every file a tight min/max envelope on BOTH dimensions —
-the same trick Delta's OPTIMIZE ZORDER and Iceberg's z-ordered rewrites
-apply, reproduced here with nothing but Catalyst expressions +
-``repartitionByRange``.
-
-Scale notes:
-- The z-value is pure codegen bit-math (the classic 4-step magic-mask
-  spread), so the layout pass costs one range shuffle — the same price as
-  any global sort — and no Python anywhere.
-- ``repartitionByRange`` on the z-value gives ordered output files whose
-  parquet footer min/max stats prune on both dimensions; the
-  effectiveness contract (per-file spans shrink on BOTH dims vs a
-  single-column sort) is pinned in tests/test_layout.py.
-- Bucketization to 2^bits cells bounds the value domain; 16 bits/dim
-  (65536 cells) is plenty — skip granularity is files, not cells.
+Interleaving the bits of two bucketized dimensions into a Morton z-value
+and laying a table out in z-order gives every file a tight min/max
+envelope on BOTH dimensions — the trick behind Delta's OPTIMIZE ZORDER
+and Iceberg's z-ordered rewrites. The z-value is pure codegen bit-math
+(the classic 4-step magic-mask spread): no Python, and exactly
+restatable in any SQL dialect with <<, &, |. `zorder_zvalues` serves it
+over integer-exact bucket ids.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = ["spread_bits16", "zvalue16", "zorder_layout", "spread_bits10_3", "zvalue3"]
+__all__ = ["spread_bits16", "zvalue16"]
 
 _MASKS16 = (
     (8, 0x00FF00FF),
@@ -51,78 +39,3 @@ def zvalue16(a: Column, b: Column) -> Column:
     even positions, b's at odd. Inputs must already be in [0, 65536)."""
     return spread_bits16(a).bitwiseOR(F.shiftleft(spread_bits16(b), 1))
 
-
-def zorder_layout(
-    df: DataFrame,
-    col_a: str,
-    col_b: str,
-    n_partitions: int = 32,
-    bits: int = 8,
-    bounds: tuple[float, float, float, float] | None = None,
-) -> DataFrame:
-    """Return ``df`` re-laid-out in z-order on (col_a, col_b): both
-    columns are min/max-normalized into 2^bits buckets (bounds from one
-    scalar-agg pass unless provided), bucket ids interleave into ``_z``,
-    and the frame is range-partitioned + sorted on ``_z``.
-
-    Write the result with ``.write.parquet`` and every file carries tight
-    footer min/max on BOTH columns — a filter on either dimension prunes
-    files. The two jobs (bounds scan + layout shuffle) are each one pass;
-    pass ``bounds`` to skip the scan when stats are already known."""
-    if bounds is None:
-        row = df.agg(
-            F.min(col_a), F.max(col_a), F.min(col_b), F.max(col_b)
-        ).first()
-        if row is None or row[0] is None:
-            raise ValueError(
-                "zorder_layout: cannot derive bounds from an empty frame "
-                "(or all-null layout columns); pass bounds= explicitly"
-            )
-        bounds = tuple(float(v) for v in row)
-    amin, amax, bmin, bmax = bounds
-    cells = (1 << bits) - 1
-
-    def bucket(c: str, lo: float, hi: float) -> Column:
-        span = (hi - lo) or 1.0
-        return F.least(
-            F.floor((F.col(c) - F.lit(lo)) / F.lit(span) * (cells + 1)),
-            F.lit(cells),
-        ).cast("long")
-
-    z = zvalue16(bucket(col_a, amin, amax), bucket(col_b, bmin, bmax))
-    return (
-        df.withColumn("_z", z)
-        .repartitionByRange(n_partitions, "_z")
-        .sortWithinPartitions("_z")
-    )
-
-
-# 3-dim interleave: spread 10 bits so bit i lands at position 3i
-_MASKS10_3 = (
-    (16, 0x030000FF),
-    (8, 0x0300F00F),
-    (4, 0x030C30C3),
-    (2, 0x09249249),
-)
-
-
-def spread_bits10_3(c: Column) -> Column:
-    """Spread the low 10 bits of ``c`` to every 3rd position — the 3-dim
-    magic-mask half (same 4-step shape as the 2-dim spread)."""
-    x = c.cast("long").bitwiseAND(F.lit(0x3FF))
-    for shift, mask in _MASKS10_3:
-        x = (x.bitwiseOR(F.shiftleft(x, shift))).bitwiseAND(F.lit(mask))
-    return x
-
-
-def zvalue3(a: Column, b: Column, c: Column) -> Column:
-    """Morton z-value of three 10-bit bucket ids (30-bit result): a's
-    bits at positions 3i, b's at 3i+1, c's at 3i+2. Inputs in [0, 1024).
-    Three-column data skipping — the practical ceiling for z-ordering
-    (beyond ~3 dims the curve's locality, and therefore file envelope
-    tightness, degrades)."""
-    return (
-        spread_bits10_3(a)
-        .bitwiseOR(F.shiftleft(spread_bits10_3(b), 1))
-        .bitwiseOR(F.shiftleft(spread_bits10_3(c), 2))
-    )

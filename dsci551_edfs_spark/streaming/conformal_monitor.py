@@ -41,7 +41,6 @@ from .sinks import write_batch_idempotent
 from .windows import stream_from_parquet
 
 __all__ = [
-    "frozen_featurizer_state",
     "batch_coverage_counts",
     "conformal_coverage_stream",
     "LAST_TIMINGS",
@@ -58,26 +57,6 @@ COVERAGE_TARGET_MICRO = 900_000
 #:   stream_startup_s   .start() -> first foreachBatch invocation
 #:   stream_drain_s     first batch -> stream termination
 LAST_TIMINGS: dict[str, float] = {}
-
-
-def frozen_featurizer_state(
-    ref_docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-):
-    """(df_table persisted+frozen, n_ref): the train-time featurizer
-    state the monitor ships with the model — `quality_gate.py`'s
-    `frozen_featurizer` (corpus-level token document frequencies; a
-    micro-batch scored with batch-local IDF computes a DIFFERENT
-    featurization than training did — the classic train/serve skew),
-    additionally persisted and counted HERE so the frozen state
-    materializes once before the stream starts instead of re-running
-    the reference tokenize pass inside every batch."""
-    from ..pipeline.dedup import _persist
-    from .quality_gate import frozen_featurizer
-
-    dfr, n_ref = frozen_featurizer(ref_docs, text_col, id_col)
-    dfr = _persist(dfr)
-    dfr.count()  # freeze BEFORE the stream starts (train-time state)
-    return dfr, n_ref
 
 
 def batch_coverage_counts(

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-__all__ = ["user_running_stats", "run_stateful_update"]
+__all__ = ["user_running_stats"]
 
 _OUT_SCHEMA = T.StructType(
     [
@@ -148,27 +148,4 @@ def user_running_stats(
         stateStructType=_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=conf,
-    )
-
-
-def run_stateful_update(stream_df: DataFrame, name: str) -> DataFrame:
-    """Drain a stateful update-mode stream into a memory sink and return
-    the LATEST emitted row per user (update mode re-emits a key each time
-    its state changes; the last emission is the final state)."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    from pyspark.sql import Window
-
-    sink = stream_df.sparkSession.table(name)
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        sink.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
     )

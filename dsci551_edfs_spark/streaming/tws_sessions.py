@@ -1,165 +1,24 @@
-"""Timer-driven streaming sessionization on transformWithStateInPandas —
-the Spark-4 arbitrary-stateful-processing API (SPARK-46815, the successor
-to applyInPandasWithState with first-class timers, TTL state, and
-composite state types).
+"""Session-grain sessionization: one row per completed session.
 
-Why this exists next to the SQL session window (`windows.session_agg`)
-and the batch gaps-and-islands (`queries.sessionize_events`): a session
-ASSEMBLER must emit one row per completed session — including sessions
-that end because the user went quiet, which no inner operator over
-arriving rows can see. The event-time TIMER is the primitive for that:
-every open session registers a timer at ``last_event + gap``; when the
-watermark passes it, `handleExpiredTimer` fires, the session row is
-emitted, and the per-user state is cleared. State is one fixed-width
-tuple per ACTIVE user (not per event), so the state store carries
-|active users| rows regardless of throughput — the 100 TB/day shape.
-
-Semantics: sessions close after ``gap_s`` of inactivity, and EVERY
-emission is gated by the event-time watermark — a session leaves state
-only when ``watermark >= end + gap``, i.e. when no event that could
-still arrive (all are ≥ watermark by the stream's own late-data
-contract) can extend or bridge it. State is therefore a LIST of open
-candidate sessions per user (out-of-order data within the watermark can
-hold several apart-by-more-than-gap islands open at once), and each
-batch folds its events in by interval-merge: any event or session
-within ``gap`` of another merges (starts/ends extend both ways, counts
-sum) — so late-but-within-watermark events re-open and bridge islands
-instead of corrupting them. Stale timers (superseded by later activity)
-degrade to no-ops: the callback emits only what the CURRENT watermark
-has actually sealed.
-
-Batch twin: `sessions_batch` (same gaps-and-islands plan the
-`sessionize_events` oracle verifies, aggregated to session grain);
-stream == batch is pinned in tests/test_streaming.py over a ts-ordered
-feed with a checkpoint-restart final eviction.
-
-Dependency gate: the transformWithState Python wiring talks to Spark's
-state server over protobuf; in containers without ``google.protobuf``
-the STREAM run cannot start (the batch twin and the state machine are
-dependency-free). tests/test_streaming.py skips the wiring pin when
-protobuf is absent and always runs the state-machine equivalence tests
-(SessionAssembler driven directly against `sessions_batch`).
+`sessions_batch` is the gaps-and-islands plan (user-keyed windows, the
+shape the `sessionize_events` oracle verifies) aggregated to session
+grain: a session closes after ``gap_s`` of inactivity and reports
+``(user_id, start_s, end_s, n_events)``. It serves the
+`streaming_sessions_tws` query.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.stateful_processor import (
-    ExpiredTimerInfo,
-    StatefulProcessor,
-    StatefulProcessorHandle,
-    TimerValues,
-)
 
-__all__ = ["SessionAssembler", "sessions_stream", "sessions_batch"]
-
-OUTPUT_SCHEMA = "user_id long, start_s long, end_s long, n_events long"
-
-
-class SessionAssembler(StatefulProcessor):
-    """Per-user session state machine: interval-merge events into the
-    open candidate sessions, emit a session only once the watermark
-    seals it (``watermark >= end + gap``) — correct for any arrival
-    order within the watermark, since an event the stream can still
-    deliver (ts ≥ watermark) can never touch a sealed session."""
-
-    def __init__(self, gap_s: int = 1800):
-        self.gap_s = gap_s
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self.handle = handle
-        self.state = handle.getListState(
-            "open_sessions", "start_s long, end_s long, n_events long"
-        )
-
-    def _emit(self, key, sessions) -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "user_id": [int(key[0])] * len(sessions),
-                "start_s": [s[0] for s in sessions],
-                "end_s": [s[1] for s in sessions],
-                "n_events": [s[2] for s in sessions],
-            }
-        )
-
-    def handleInputRows(
-        self, key, rows, timerValues: TimerValues
-    ) -> Iterator[pd.DataFrame]:
-        items: list[list[int]] = (
-            [list(s) for s in self.state.get()] if self.state.exists() else []
-        )
-        for pdf in rows:
-            items.extend(
-                [t, t, 1]
-                for t in (pdf["ts"].astype("int64") // 1_000_000_000).tolist()
-            )
-        # interval-merge: anything within `gap` of its predecessor joins
-        # it — one pass over the (sessions + single-event) islands sorted
-        # by start handles in-order, out-of-order, and bridging alike
-        items.sort(key=lambda s: (s[0], s[1]))
-        merged: list[list[int]] = []
-        for s in items:
-            if merged and s[0] - merged[-1][1] <= self.gap_s:
-                merged[-1][1] = max(merged[-1][1], s[1])
-                merged[-1][2] += s[2]
-            else:
-                merged.append(s)
-        self.state.put([tuple(s) for s in merged])
-        # one close-time timer per open island; superseded expiries
-        # simply fire as no-ops (registration is append, not replace)
-        for s in merged:
-            self.handle.registerTimer((s[1] + self.gap_s) * 1000)
-        return iter(())  # emission is exclusively watermark-gated
-
-    def handleExpiredTimer(
-        self, key, timerValues: TimerValues, expiredTimerInfo: ExpiredTimerInfo
-    ) -> Iterator[pd.DataFrame]:
-        if not self.state.exists():
-            return
-        wm = timerValues.getCurrentWatermarkInMs()
-        sealed, still_open = [], []
-        for s in self.state.get():
-            (sealed if (s[1] + self.gap_s) * 1000 <= wm else still_open).append(s)
-        if not sealed:
-            return  # stale timer: every island was extended past it
-        if still_open:
-            self.state.put(still_open)
-        else:
-            self.state.clear()
-        yield self._emit(key, sorted(sealed))
-
-    def close(self) -> None:
-        pass
-
-
-def sessions_stream(
-    events: DataFrame,
-    gap_s: int = 1800,
-    watermark: str = "1 seconds",
-) -> DataFrame:
-    """(user_id, start_s, end_s, n_events) per COMPLETED session over a
-    streaming events frame. Event-time timers require a watermarked
-    input; output is append-mode (each session exactly once)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            SessionAssembler(gap_s),
-            OUTPUT_SCHEMA,
-            outputMode="Append",
-            timeMode="EventTime",
-        )
-    )
+__all__ = ["sessions_batch"]
 
 
 def sessions_batch(events: DataFrame, gap_s: int = 1800) -> DataFrame:
-    """Batch twin: gaps-and-islands sessionization (user-keyed windows —
-    the same plan shape `sessionize_events` pins against DuckDB)
-    aggregated to session grain."""
+    """Gaps-and-islands sessionization (user-keyed windows — the same
+    plan shape `sessionize_events` pins against DuckDB) aggregated to
+    session grain."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     ts_s = F.col("ts").cast("long")

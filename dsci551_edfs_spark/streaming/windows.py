@@ -4,7 +4,10 @@ The reference has no streaming surface (SURVEY.md §2.5); these are the
 Spark-native additions: watermarked tumbling/sliding/session windows and
 stateful dedup. Every transformation here is expressed so that the SAME
 function works on a batch DataFrame and a streaming one — the batch run is
-the oracle for the streaming run (and the DuckDB oracle for both).
+the oracle for the streaming run (and the DuckDB oracle for both). The
+registered queries (`events_tumbling_window`, the sliding/session/dedup
+event queries) call these functions on the batch events table;
+tests/test_streaming.py drains the same plans through a memory sink.
 
 Scale notes:
 - Watermark bounds state: without it a windowed agg keeps every window
@@ -27,7 +30,6 @@ __all__ = [
     "sliding_agg",
     "session_agg",
     "dedup_events",
-    "run_available_now",
     "static_enrich",
 ]
 
@@ -121,21 +123,6 @@ def dedup_events(
             id_cols
         )
     return events.dropDuplicates(id_cols)
-
-
-def run_available_now(stream_df: DataFrame, name: str) -> DataFrame:
-    """Drain all available input through the streaming plan into a memory
-    sink (complete mode) and return the result as a batch DataFrame —
-    the batch-equivalence harness used by the tests."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return stream_df.sparkSession.table(name)
 
 
 def static_enrich(

@@ -41,14 +41,10 @@ def test_avg_skips_nulls(quirks):
 def test_max_spark_vs_legacy(quirks):
     # Spark-correct max of all-negative column is negative
     assert agg.get_max(quirks, "neg_only") == -1.0
-    # legacy (combined_flask.py:741, :777): nulls→0 and floor at 0 ⇒ 0
-    assert agg.get_max(quirks, "neg_only", mode="legacy") == 0.0
 
 
 def test_min_spark_vs_firebase(quirks):
     assert agg.get_min(quirks, "plain") == 10.0
-    # firebase 0-seed bug (combined_flask.py:1676-1688): min(min, 0) ⇒ 0
-    assert agg.get_min(quirks, "plain", mode="legacy_firebase") == 0.0
 
 
 def test_count(quirks):
@@ -166,8 +162,6 @@ def test_partials_reduce_equals_spark_aggregates(spark, partials_table, infer_ty
                 F.avg(c),
                 F.max(c),
                 F.min(c),
-                F.greatest(F.max(F.coalesce(F.col(c), F.lit(0))), F.lit(0)),
-                F.least(F.min(F.coalesce(F.col(c), F.lit(float("inf")))), F.lit(0.0)),
             ]
         # `hash` pruning as a filter on the partition column
         pruned = df if h is None else df.filter(F.col(PARTITION_COL) == F.lit(h))
@@ -177,12 +171,10 @@ def test_partials_reduce_equals_spark_aggregates(spark, partials_table, infer_ty
                 agg.get_avg(partials, c, h),
                 agg.get_max(partials, c, h),
                 agg.get_min(partials, c, h),
-                agg.get_max(partials, c, h, mode="legacy"),
-                agg.get_min(partials, c, h, mode="legacy_firebase"),
             ]
-            w = want[5 * j : 5 * j + 5]
+            w = want[3 * j : 3 * j + 3]
             assert _same(got[0], w[0], rel=1e-12), (c, h, "avg", got[0], w[0])
-            for name, g, e in zip(["max", "min", "legacy max", "firebase min"], got[1:], w[1:]):
+            for name, g, e in zip(["max", "min"], got[1:], w[1:]):
                 assert _same(g, e), (c, h, name, g, e)
 
     # debug lists every partition of the table in partition-map order

@@ -586,3 +586,161 @@ def test_perfbench_traced_names_resolve():
     assert tracing.TRACED
     missing = [span for owner, attr, span in tracing.TRACED if not callable(getattr(owner, attr, None))]
     assert not missing, missing
+
+
+# -------------------------------------------------------- reachability
+
+_DEF_NODES = ("FunctionDef", "AsyncFunctionDef", "ClassDef")
+
+
+def _module_name(root, path):
+    parts = list(path.relative_to(root).with_suffix("").parts)
+    if parts[-1] == "__init__":
+        parts.pop()
+    return ".".join(parts)
+
+
+def _import_bindings(mod, tree, is_pkg):
+    """name -> {("mod", module) | ("from", module, attr)} for every
+    import anywhere in the file (function-local imports included)."""
+    import ast
+
+    out = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                name = a.asname or a.name.split(".")[0]
+                out.setdefault(name, set()).add(
+                    ("mod", a.name if a.asname else name)
+                )
+        elif isinstance(node, ast.ImportFrom):
+            src = node.module or ""
+            if node.level:
+                base = mod.split(".") if is_pkg else mod.split(".")[:-1]
+                base = base[: len(base) - node.level + 1]
+                src = ".".join(base + ([node.module] if node.module else []))
+            for a in node.names:
+                out.setdefault(a.asname or a.name, set()).add(
+                    ("from", src, a.name)
+                )
+    return out
+
+
+def test_every_package_def_is_reached():
+    """Every top-level def and class of the package is reached from a
+    served entry point: the `@q` query bodies, package module-level code
+    (`__all__` aside), `__spark_entry__.py`, `bench.py`, `tools/` and
+    `perfbench/`, closed transitively over the bodies of reached defs.
+    A name resolves through the module's own defs and its imports,
+    `module.attr` through the module it names, and an attribute on any
+    other receiver (`obj.attr`) reaches every def of that name. Tests
+    are not roots: a def only a test calls fails here."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    pkg = root / "dsci551_edfs_spark"
+    entry = [root / "bench.py", root / "__spark_entry__.py"]
+    entry += sorted((root / "tools").rglob("*.py"))
+    entry += sorted((root / "perfbench").rglob("*.py"))
+    files = {}
+    for path in [*sorted(pkg.rglob("*.py")), *entry]:
+        files[_module_name(root, path)] = (path, ast.parse(path.read_text()))
+    pkg_mods = {m for m, (p, _) in files.items() if pkg in p.parents}
+    defs = {
+        m: {
+            n.name: n
+            for n in files[m][1].body
+            if type(n).__name__ in _DEF_NODES
+        }
+        for m in pkg_mods
+    }
+    binds = {
+        m: _import_bindings(m, tree, p.name == "__init__.py")
+        for m, (p, tree) in files.items()
+    }
+
+    def resolve_attr(mod, name, seen=frozenset()):
+        if (mod, name) in seen:
+            return set()
+        if name in defs.get(mod, {}):
+            return {(mod, name)}
+        if f"{mod}.{name}" in files:
+            return {("mod", f"{mod}.{name}")}
+        out = set()
+        for b in binds.get(mod, {}).get(name, ()):
+            out |= resolve_binding(b, seen | {(mod, name)})
+        return out
+
+    def resolve_binding(b, seen=frozenset()):
+        return {b} if b[0] == "mod" else resolve_attr(b[1], b[2], seen)
+
+    def resolve(mod, node):
+        if isinstance(node, ast.Name):
+            out = {(mod, node.id)} if node.id in defs.get(mod, {}) else set()
+            for b in binds[mod].get(node.id, ()):
+                out |= resolve_binding(b)
+            return out
+        if isinstance(node, ast.Attribute):
+            mods = [r[1] for r in resolve(mod, node.value) if r[0] == "mod"]
+            if mods:
+                return set().union(*(resolve_attr(x, node.attr) for x in mods))
+            return {(x, node.attr) for x in defs if node.attr in defs[x]}
+        return set()
+
+    def refs(mod, nodes):
+        out = set()
+        for top in nodes:
+            for node in ast.walk(top):
+                if isinstance(node, ast.Attribute) or (
+                    isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load)
+                ):
+                    out |= {r for r in resolve(mod, node) if r[0] != "mod"}
+        return out
+
+    def is_query(node):
+        return any(
+            isinstance(d, ast.Call)
+            and getattr(d.func, "id", getattr(d.func, "attr", None)) == "q"
+            for d in node.decorator_list
+        )
+
+    reached = set()
+    frontier = set()
+    for mod, (_, tree) in files.items():
+        if mod not in pkg_mods:
+            frontier |= refs(mod, [tree])
+            continue
+        module_code = []
+        for n in tree.body:
+            if type(n).__name__ in _DEF_NODES:
+                # decorators, defaults and bases run at import time
+                module_code += n.decorator_list
+                if isinstance(n, ast.ClassDef):
+                    module_code += n.bases + [k.value for k in n.keywords]
+                else:
+                    module_code += n.args.defaults
+                    module_code += [d for d in n.args.kw_defaults if d]
+                if is_query(n):
+                    frontier.add((mod, n.name))
+            elif not isinstance(n, (ast.Import, ast.ImportFrom)) and not (
+                isinstance(n, ast.Assign)
+                and any(getattr(t, "id", None) == "__all__" for t in n.targets)
+            ):
+                module_code.append(n)
+        frontier |= refs(mod, module_code)
+    while frontier:
+        reached |= frontier
+        frontier = {
+            r
+            for mod, name in frontier
+            for r in refs(mod, [defs[mod][name]])
+        } - reached
+
+    unreached = [
+        f"{mod}.{name}"
+        for mod in sorted(defs)
+        for name in defs[mod]
+        if (mod, name) not in reached
+    ]
+    assert not unreached, f"package defs no entry point reaches: {unreached}"

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from dsci551_edfs_spark import memo as MEMO
 from dsci551_edfs_spark.plans.debug import explain_str
-from dsci551_edfs_spark.sources.bucketing import bucketed_join, write_bucketed
+from dsci551_edfs_spark.sources.bucketing import write_bucketed
 from dsci551_edfs_spark.sources.registry import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -36,9 +36,13 @@ def bucketed(spark):
     shutil.rmtree(SCRATCH, ignore_errors=True)
 
 
+def _bucketed_join(spark):
+    return spark.table("lineitem_b").join(spark.table("orders_b"), "o_orderkey")
+
+
 def _joined(spark):
     return (
-        bucketed_join(spark, "lineitem_b", "orders_b", "o_orderkey")
+        _bucketed_join(spark)
         .groupBy("o_orderstatus")
         .agg(
             F.count("*").alias("n"),
@@ -71,9 +75,7 @@ def test_bucketed_join_has_no_shuffle(spark, bucketed):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        plan = explain_str(
-            bucketed_join(spark, "lineitem_b", "orders_b", "o_orderkey")
-        )
+        plan = explain_str(_bucketed_join(spark))
         assert "SortMergeJoin" in plan
         assert "Exchange hashpartitioning" not in plan
     finally:

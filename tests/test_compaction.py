@@ -1,13 +1,10 @@
 """Compaction planner contracts: the greedy size-descending packing rule,
-its overflow bound, partitioning-determinism, and the audit summary."""
+its overflow bound and partitioning-determinism."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from dsci551_edfs_spark.sources.compaction import (
-    compaction_summary,
-    plan_compaction,
-)
+from dsci551_edfs_spark.sources.compaction import plan_compaction
 
 
 @pytest.fixture()
@@ -39,7 +36,11 @@ def test_group_bytes_bounded(spark, files):
     overflow bound of sequential fill."""
     target = 4000
     plan = plan_compaction(files, target)
-    summ = compaction_summary(plan).collect()
+    summ = (
+        plan.groupBy("out_group")
+        .agg(F.sum("bytes").cast("long").alias("group_bytes"))
+        .collect()
+    )
     max_file = files.agg(F.max("bytes")).first()[0]
     last = max(r["out_group"] for r in summ)
     for r in summ:

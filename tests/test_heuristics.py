@@ -80,16 +80,6 @@ def test_gopher_flags_rules(spark):
     assert rows[1]["stopword_hits"] == 1     # only 'the' from the list
 
 
-def test_gopher_clean_applies_verdict(spark):
-    long_good = " ".join(["the and of walk stone"] * 12)
-    df = spark.createDataFrame(
-        [(1, long_good), (2, "tiny")], "doc_id long, text string"
-    )
-    kept = HEU.gopher_clean(df, min_stopword_hits=1)
-    assert [r["doc_id"] for r in kept.collect()] == [1]
-    assert "keep" not in kept.columns
-
-
 def test_group_sample_topk_deterministic(spark, sf_dir):
     from dsci551_edfs_spark.sources.registry import load_table
 

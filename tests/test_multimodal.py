@@ -138,30 +138,6 @@ def test_byte_histogram(media):
     assert row["mean_byte"] == pytest.approx(sum(payload) / len(payload))
 
 
-def test_chunk_audio(media):
-    from pyspark.sql import functions as F
-
-    chunks = MM.chunk_audio(media, chunk_ms=250)
-    # only audio rows chunk
-    kinds = chunks.join(media, "doc_id").select("media_meta.kind").distinct().collect()
-    assert [k["kind"] for k in kinds] == ["aud"]
-    # chunks tile the payload exactly: sum(chunk_bytes) == payload size
-    sizes = {
-        r["doc_id"]: r["total"]
-        for r in chunks.groupBy("doc_id")
-        .agg(F.sum("chunk_bytes").alias("total"))
-        .collect()
-    }
-    payloads = {
-        r["doc_id"]: len(bytes(r["media"])) - MM.HEADER_LEN
-        for r in media.filter("media_meta.kind = 'aud'").collect()
-    }
-    assert sizes == payloads
-    # chunk signatures are distinct within a doc (content varies)
-    one = chunks.filter("doc_id = 1").collect()
-    assert len({r["chunk_sig"] for r in one}) == len(one)
-
-
 def test_real_image_codec_through_hook(spark):
     """A REAL image codec drops into the exact codec= call site the
     deterministic fake occupies: container payloads are genuine PNGs, the

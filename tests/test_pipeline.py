@@ -957,17 +957,13 @@ def test_hybrid_rrf_fuses_both_legs(spark):
     assert order[0] == 1  # two mid ranks beat any single first place at k=60
 
 
-def test_ivf_index_persist_roundtrip_and_pruning(spark, sf_dir):
+def test_ivf_index_persist_roundtrip_and_pruning(spark, sf_dir, tmp_path):
     """Disk-backed IVF: save (hive-partitioned by centroid) → load →
     pruned probe must return EXACTLY the in-memory ivf_topk results, and
     the pruned scan's plan must show PartitionFilters on the centroid
     partition column (the probe reads only its bucket directories)."""
-    import os
-    import tempfile
-
     from pyspark.sql import functions as F
 
-    from dsci551_edfs_spark import memo as MEMO
     from dsci551_edfs_spark.pipeline import similarity as SIM
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -978,9 +974,7 @@ def test_ivf_index_persist_roundtrip_and_pruning(spark, sf_dir):
         for r in SIM.ivf_topk(bucketed, cents, queries, k=5, n_probe=4).collect()
     }
 
-    scratch = MEMO.SCRATCH
-    os.makedirs(scratch, exist_ok=True)
-    path = tempfile.mkdtemp(prefix="ivf_idx_", dir=scratch)
+    path = str(tmp_path / "ivf_idx")
     SIM.save_ivf_index(bucketed, cents, path)
     loaded, cents2 = SIM.load_ivf_index(spark, path)
     assert (cents2 == cents).all()

@@ -7,7 +7,7 @@ import re
 
 import pytest
 
-from dsci551_edfs_spark.plans.debug import explain_str, plan_has
+from dsci551_edfs_spark.plans.debug import explain_str
 from dsci551_edfs_spark.queries import QUERIES
 
 SF = "/root/testdata/sf0.001"
@@ -273,42 +273,43 @@ def test_tfidf_dictionary_join_is_broadcast():
     assert "WindowGroupLimit" in plan, plan
 
 
-def test_broadcast_guard_flips_on_oversized_dictionary():
+def test_broadcast_guard_flips_on_oversized_dictionary(monkeypatch):
     """broadcast_if_small declines the hint when Catalyst's size estimate
     exceeds the threshold: the vocab-sized joins in tfidf/pmi must flip
     to a shuffled strategy instead of forcing an 8 GB+ broadcast on a
     100x-vocab corpus."""
+    from dsci551_edfs_spark.plans import hints
     from dsci551_edfs_spark.plans.hints import broadcast_if_small
 
+    default = hints._BROADCAST_ESTIMATE_BYTES
     orders = _spark.read.parquet(f"{SF}/orders.parquet")
     dim = orders.groupBy("o_custkey").count()
     # under threshold: hint applied (a new hinted frame is returned)
-    assert broadcast_if_small(dim, threshold_bytes=1 << 40) is not dim
+    monkeypatch.setattr(hints, "_BROADCAST_ESTIMATE_BYTES", 1 << 40)
+    assert broadcast_if_small(dim) is not dim
     # over threshold: frame returned unhinted, identity preserved
-    assert broadcast_if_small(dim, threshold_bytes=1) is dim
+    monkeypatch.setattr(hints, "_BROADCAST_ESTIMATE_BYTES", 1)
+    assert broadcast_if_small(dim) is dim
 
-    # end-to-end through the conf. autoBroadcastJoinThreshold is disabled
-    # so the planner can't independently re-broadcast from its own small
-    # test-scale estimate — at 100x vocab BOTH the guard and the planner
-    # see an over-threshold estimate, which is the scenario modeled here.
-    conf = "spark.dsci551.broadcastEstimateThreshold"
+    # end-to-end through a registered query. autoBroadcastJoinThreshold
+    # is disabled so the planner can't independently re-broadcast from
+    # its own small test-scale estimate — at 100x vocab BOTH the guard
+    # and the planner see an over-threshold estimate, which is the
+    # scenario modeled here.
     auto = "spark.sql.autoBroadcastJoinThreshold"
     _spark.conf.set(auto, "-1")
     try:
         # guard declines at a 1-byte threshold: shuffled join (the
         # scalar corpus-total stays a broadcast nested-loop, always 1 row)
-        _spark.conf.set(conf, "1")
         plan = _plan("tfidf_keywords")
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan, plan
         assert "BroadcastHashJoin" not in plan, plan
         # guard fires at the default threshold: the HINT alone (planner
         # auto-broadcast still off) restores the broadcast shape
-        _spark.conf.unset(conf)
+        monkeypatch.setattr(hints, "_BROADCAST_ESTIMATE_BYTES", default)
         assert "BroadcastHashJoin" in _plan("tfidf_keywords")
     finally:
         _spark.conf.unset(auto)
-        if _spark.conf.get(conf, None):
-            _spark.conf.unset(conf)
 
 
 def test_pmi_scans_corpus_once():

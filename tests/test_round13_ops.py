@@ -329,15 +329,13 @@ def test_conformal_batch_partials_are_additive(spark, sf_dir):
     from dsci551_edfs_spark.q_analytics_b import _lr_trained_model
     from dsci551_edfs_spark.q_round13 import _conformal_t4
     from dsci551_edfs_spark.queries import _t
-    from dsci551_edfs_spark.streaming.conformal_monitor import (
-        batch_coverage_counts,
-        frozen_featurizer_state,
-    )
+    from dsci551_edfs_spark.streaming.conformal_monitor import batch_coverage_counts
+    from dsci551_edfs_spark.streaming.quality_gate import frozen_featurizer
 
     d = _t(spark, sf_dir, "documents")
     w, bias = _lr_trained_model(spark, sf_dir)
     t4 = _conformal_t4(spark, sf_dir)
-    dfr, n_ref = frozen_featurizer_state(d)
+    dfr, n_ref = frozen_featurizer(d)
     whole = batch_coverage_counts(d, dfr, n_ref, w, bias, t4).collect()[0]
     lo = batch_coverage_counts(
         d.filter(F.col("doc_id") % 2 == 0), dfr, n_ref, w, bias, t4

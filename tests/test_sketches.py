@@ -51,13 +51,6 @@ def test_hll_own_error_and_merge_losslessness(orders, spark, sf_dir):
     assert merged == direct
 
 
-def test_approx_quantiles_bracket_exact(orders):
-    rows = SK.approx_quantiles(orders, "o_totalprice", (0.5,), 0.01).collect()
-    got = rows[0]["value"]
-    lo, hi = orders.approxQuantile("o_totalprice", [0.47, 0.53], 0.0)
-    assert lo <= got <= hi
-
-
 def test_frequent_items_exact_shares(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events")
     out = {r["event_type"]: r["share"] for r in

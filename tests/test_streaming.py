@@ -3,25 +3,31 @@ equal its batch run over the same input (the oracle chain is then
 streaming == batch == DuckDB SQL)."""
 
 import os
-import tempfile
 
 import pytest
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
-from dsci551_edfs_spark import memo as MEMO
 from dsci551_edfs_spark.sources.registry import load_table
 from dsci551_edfs_spark.streaming import windows as SW
 
-SCRATCH = os.path.join(MEMO.SCRATCH, "test_streaming")
-
 
 @pytest.fixture(scope="module")
-def event_dir(spark, sf_dir):
+def event_dir(spark, sf_dir, tmp_path_factory):
     """Events re-written as a multi-file parquet dir (micro-batched by the
     file source) with a proper TimestampType column."""
-    os.makedirs(SCRATCH, exist_ok=True)
-    d = tempfile.mkdtemp(dir=SCRATCH)
+    d = str(tmp_path_factory.mktemp("events"))
     load_table(spark, sf_dir, "events").repartition(6).write.mode("overwrite").parquet(d)
     return d
+
+
+def _dirs(tmp_path, *names):
+    """One new directory per name under the test's tmp_path."""
+    out = []
+    for name in names:
+        (tmp_path / name).mkdir()
+        out.append(str(tmp_path / name))
+    return out
 
 
 def _batch(spark, d):
@@ -37,9 +43,44 @@ def _as_sets(df):
     return {tuple(r) for r in df.collect()}
 
 
+def _run_available_now(stream_df, name):
+    """Drain all available input through the streaming plan into a memory
+    sink (complete mode) and return the result as a batch DataFrame."""
+    q = (
+        stream_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("complete")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return stream_df.sparkSession.table(name)
+
+
+def _run_stateful_update(stream_df, name):
+    """Drain a stateful update-mode stream into a memory sink and return
+    the LATEST emitted row per user (update mode re-emits a key each time
+    its state changes; the last emission is the final state)."""
+    q = (
+        stream_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    sink = stream_df.sparkSession.table(name)
+    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
+    return (
+        sink.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
+
 def test_streaming_tumbling_equals_batch(spark, event_dir):
     batch = SW.tumbling_agg(_batch(spark, event_dir))
-    stream = SW.run_available_now(
+    stream = _run_available_now(
         SW.tumbling_agg(_stream(spark, event_dir)), "tumbling_t"
     )
     assert _as_sets(stream) == _as_sets(batch)
@@ -48,7 +89,7 @@ def test_streaming_tumbling_equals_batch(spark, event_dir):
 
 def test_streaming_sliding_equals_batch(spark, event_dir):
     batch = SW.sliding_agg(_batch(spark, event_dir))
-    stream = SW.run_available_now(
+    stream = _run_available_now(
         SW.sliding_agg(_stream(spark, event_dir)), "sliding_t"
     )
     assert _as_sets(stream) == _as_sets(batch)
@@ -58,17 +99,17 @@ def test_streaming_session_equals_batch(spark, event_dir):
     # unbounded watermark: files arrive in arbitrary ts order, and session
     # merging must see every event for strict batch equivalence
     batch = SW.session_agg(_batch(spark, event_dir))
-    stream = SW.run_available_now(
+    stream = _run_available_now(
         SW.session_agg(_stream(spark, event_dir), watermark="3650 days"), "session_t"
     )
     assert _as_sets(stream) == _as_sets(batch)
 
 
-def test_streaming_dedup(spark, event_dir):
+def test_streaming_dedup(spark, event_dir, tmp_path):
     # duplicate the input stream by unioning it with itself: dedup must
     # collapse it back to the original row count
     ev = _batch(spark, event_dir)
-    dup_dir = tempfile.mkdtemp(dir=SCRATCH)
+    dup_dir = str(tmp_path / "dup")
     ev.union(ev).write.mode("overwrite").parquet(dup_dir)
     schema = ev.schema
     stream = SW.dedup_events(
@@ -86,18 +127,15 @@ def test_streaming_dedup(spark, event_dir):
     assert got == ev.count()
 
 
-def test_watermark_drops_late_rows(spark, event_dir):
+def test_watermark_drops_late_rows(spark, event_dir, tmp_path):
     """Rows older than the watermark horizon must be dropped: feed the main
     data in batch 1, advance the watermark, then deliver year-old events in
     batch 2."""
     import glob
     import shutil
 
-    import pyspark.sql.functions as F
-
     ev = _batch(spark, event_dir)
-    watch = tempfile.mkdtemp(dir=SCRATCH)
-    stage = tempfile.mkdtemp(dir=SCRATCH)
+    watch, stage = _dirs(tmp_path, "watch", "stage")
 
     def deliver(df, tag):
         out = os.path.join(stage, tag)
@@ -126,13 +164,11 @@ def test_watermark_drops_late_rows(spark, event_dir):
 
 def test_stateful_running_stats_equals_batch(spark, event_dir):
     """applyInPandasWithState final state per user == batch groupBy."""
-    from pyspark.sql import functions as F
-
     from dsci551_edfs_spark.streaming import stateful as ST
 
     ev = _batch(spark, event_dir)
     batch = ST.user_running_stats(ev)
-    stream = ST.run_stateful_update(
+    stream = _run_stateful_update(
         ST.user_running_stats(_stream(spark, event_dir)), "stateful_t"
     )
     b = {r["user_id"]: r for r in batch.collect()}
@@ -146,8 +182,6 @@ def test_stateful_running_stats_equals_batch(spark, event_dir):
 
 def test_stream_stream_interval_join_equals_batch(spark, event_dir):
     """Two watermarked streams joined on key + time range == batch join."""
-    import pyspark.sql.functions as F
-
     from dsci551_edfs_spark.streaming.windows import interval_join
 
     def split(df):
@@ -183,14 +217,11 @@ def test_stream_stream_interval_join_equals_batch(spark, event_dir):
     assert batch.count() > 0
 
 
-def test_parquet_sink_with_checkpoint(spark, event_dir):
+def test_parquet_sink_with_checkpoint(spark, event_dir, tmp_path):
     """File sink + checkpoint: exactly-once delivery to parquet; restarting
     the query against the same checkpoint must not duplicate rows."""
-    import tempfile
-
     ev = _batch(spark, event_dir)
-    out = tempfile.mkdtemp(dir=SCRATCH)
-    ckpt = tempfile.mkdtemp(dir=SCRATCH)
+    out, ckpt = _dirs(tmp_path, "out", "ckpt")
 
     def run():
         q = (
@@ -213,8 +244,6 @@ def test_parquet_sink_with_checkpoint(spark, event_dir):
 def test_stream_static_enrich_equals_batch(spark, event_dir):
     """Stream-static broadcast join: the streaming run (append mode, no
     state) must equal the batch join row-for-row."""
-    from pyspark.sql import functions as F
-
     dim = (
         _batch(spark, event_dir)
         .select("user_id").distinct()
@@ -242,14 +271,12 @@ class _FileFeed:
     """Deliver parquet micro-batches into a watched dir, poll the memory
     sink / query progress. Shared by the two timeout-eviction tests."""
 
-    def __init__(self, spark):
+    def __init__(self, spark, tmp_path):
         import pandas as pd
 
         self.spark = spark
         self.pd = pd
-        os.makedirs(SCRATCH, exist_ok=True)
-        self.watch = tempfile.mkdtemp(dir=SCRATCH)
-        self.stage = tempfile.mkdtemp(dir=SCRATCH)
+        self.watch, self.stage = _dirs(tmp_path, "watch", "stage")
         self.q = None
 
     def deliver(self, tag, rows):
@@ -266,8 +293,6 @@ class _FileFeed:
             shutil.copy(f, os.path.join(self.watch, f"{tag}_{i}.parquet"))
 
     def rows(self, name, uid):
-        from pyspark.sql import functions as F
-
         return [
             r["n_events"]
             for r in self.spark.table(name).filter(F.col("user_id") == uid).collect()
@@ -291,7 +316,7 @@ class _FileFeed:
         raise AssertionError(f"timed out waiting for {what}")
 
 
-def test_stateful_event_timeout_evicts_dormant_key(spark):
+def test_stateful_event_timeout_evicts_dormant_key(spark, tmp_path):
     """EventTimeTimeout eviction is watermark-driven, so the full
     semantics are deterministic regardless of processing speed: a key
     whose last event falls timeout_ms behind the watermark is evicted
@@ -308,7 +333,7 @@ def test_stateful_event_timeout_evicts_dormant_key(spark):
     """
     from dsci551_edfs_spark.streaming import stateful as ST
 
-    feed = _FileFeed(spark)
+    feed = _FileFeed(spark, tmp_path)
     feed.deliver(
         "b1",
         [
@@ -355,7 +380,7 @@ def test_stateful_event_timeout_evicts_dormant_key(spark):
     assert max(k2) == 3, k2
 
 
-def test_stateful_processing_timeout_evicts(spark):
+def test_stateful_processing_timeout_evicts(spark, tmp_path):
     """ProcessingTimeTimeout: wall-clock dormancy eviction. How many
     micro-batches a key survives depends on scheduling latency, so this
     test asserts only the load-robust half of the contract — a dormant
@@ -366,7 +391,7 @@ def test_stateful_processing_timeout_evicts(spark):
     """
     from dsci551_edfs_spark.streaming import stateful as ST
 
-    feed = _FileFeed(spark)
+    feed = _FileFeed(spark, tmp_path)
     feed.deliver(
         "b1",
         [
@@ -398,49 +423,7 @@ def test_stateful_processing_timeout_evicts(spark):
     assert sorted(set(k1)) == [1, 2], k1
 
 
-def test_stream_decontam_gate_equals_batch(spark, sf_dir):
-    """Stateless stream-static anti-join gate: streaming enforcement of an
-    offline contamination list must equal the batch anti-join exactly."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from dsci551_edfs_spark.pipeline import decontam as DC
-    from dsci551_edfs_spark.pipeline.curation import md5_bucket
-
-    docs = load_table(spark, sf_dir, "documents")
-    os.makedirs(SCRATCH, exist_ok=True)
-    d = tempfile.mkdtemp(dir=SCRATCH)
-    docs.repartition(5).write.mode("overwrite").parquet(d)
-
-    bench = docs.filter(md5_bucket("doc_id", 100) < 5)
-    train_ids = docs.filter(md5_bucket("doc_id", 100) >= 5)
-    flagged = (
-        DC.ngram_overlap_contamination(train_ids, bench, n=3, min_overlap=2)
-        .filter("contaminated")
-        .select("doc_id")
-    )
-    flagged.persist().count()  # static side: computed once, reused per batch
-
-    batch = DC.decontam_gate(spark.read.parquet(d), flagged).select("doc_id")
-    schema = spark.read.parquet(d).schema
-    stream_in = SW.stream_from_parquet(spark, d, schema, max_files=2)
-    gated = DC.decontam_gate(stream_in, flagged).select("doc_id")
-    q = (
-        gated.writeStream.format("memory")
-        .queryName("decontam_gate_t")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    stream = spark.table("decontam_gate_t")
-    assert _as_sets(stream) == _as_sets(batch)
-    assert 0 < stream.count() < docs.count()  # gate dropped something
-    flagged.unpersist()
-
-
-def test_exactly_once_sink_idempotent_replay(spark, event_dir):
+def test_exactly_once_sink_idempotent_replay(spark, event_dir, tmp_path):
     """The foreachBatch parquet sink must (a) land every input row exactly
     once across micro-batches, (b) absorb a replay of an already-committed
     batch without duplicating, and (c) restart from the checkpoint without
@@ -448,14 +431,10 @@ def test_exactly_once_sink_idempotent_replay(spark, event_dir):
     import glob
     import shutil
 
-    from pyspark.sql import functions as F
-
     from dsci551_edfs_spark.streaming import sinks as SK
 
     ev = _batch(spark, event_dir)
-    watch = tempfile.mkdtemp(dir=SCRATCH)
-    out = tempfile.mkdtemp(dir=SCRATCH)
-    ckpt = tempfile.mkdtemp(dir=SCRATCH)
+    watch, out, ckpt, stage = _dirs(tmp_path, "watch", "out", "ckpt", "stage")
     for i, f in enumerate(glob.glob(os.path.join(event_dir, "*.parquet"))):
         shutil.copy(f, os.path.join(watch, f"a_{i}.parquet"))
 
@@ -477,7 +456,6 @@ def test_exactly_once_sink_idempotent_replay(spark, event_dir):
 
     # (c) restart from checkpoint with one new file: only new rows land
     extra = ev.limit(7).withColumn("event_id", F.col("event_id") + 10_000_000)
-    stage = tempfile.mkdtemp(dir=SCRATCH)
     extra.coalesce(1).write.mode("overwrite").parquet(stage)
     for i, f in enumerate(glob.glob(os.path.join(stage, "*.parquet"))):
         shutil.copy(f, os.path.join(watch, f"b_{i}.parquet"))
@@ -522,57 +500,7 @@ def test_cdc_apply_last_writer_wins(spark, tmp_path):
     assert vdirs == ["target_v0", "target_v1", "target_v2"]
 
 
-def test_dedup_ingest_stream_equals_sequential_batch(spark, sf_dir):
-    """The streaming near-dup ingest gate must equal applying
-    incremental_minhash_dedup shard-by-shard in feed order: a batch-2 doc
-    near-dup of a batch-1 SURVIVOR is dropped (state accumulates), a
-    near-dup of the seed corpus is dropped, clean docs pass."""
-    import tempfile
-
-    from dsci551_edfs_spark.pipeline import dedup as DD
-    from dsci551_edfs_spark.streaming.ingest_dedup import dedup_ingest_stream
-
-    seed = load_table(spark, sf_dir, "documents").select("doc_id", "text").limit(50)
-    base_text = {r["doc_id"]: r["text"] for r in seed.limit(1).collect()}
-    seed_id = next(iter(base_text))
-
-    os.makedirs(SCRATCH, exist_ok=True)
-    feed = tempfile.mkdtemp(dir=SCRATCH)
-    base = tempfile.mkdtemp(dir=SCRATCH)
-
-    b1 = [
-        (9_000_001, "novel passage about distributed joins " * 8),
-        (9_000_002, base_text[seed_id] + " appended"),      # dup of seed
-    ]
-    b2 = [
-        (9_000_003, "novel passage about distributed joins " * 8 + " tail"),
-        # dup of b1 survivor 9_000_001
-        (9_000_004, "entirely different second batch content " * 8),
-    ]
-    for i, rows in enumerate([b1, b2]):
-        spark.createDataFrame(rows, "doc_id long, text string").coalesce(
-            1
-        ).write.mode("append").parquet(feed)
-
-    final = dedup_ingest_stream(
-        spark, seed, feed, base, threshold=0.5, max_files=1
-    )
-    got = {r["doc_id"] for r in final.collect()}
-
-    # sequential batch reference
-    ref = seed
-    for rows in [b1, b2]:
-        shard = spark.createDataFrame(rows, "doc_id long, text string")
-        ref = ref.unionByName(
-            DD.incremental_minhash_dedup(shard, ref, threshold=0.5)
-        )
-    want = {r["doc_id"] for r in ref.collect()}
-    assert got == want
-    assert 9_000_001 in got and 9_000_004 in got
-    assert 9_000_002 not in got            # dup of seed corpus
-    assert 9_000_003 not in got            # dup of earlier batch survivor
-
-def test_stream_stream_interval_left_outer_equals_batch(spark, event_dir):
+def test_stream_stream_interval_left_outer_equals_batch(spark, event_dir, tmp_path):
     """Watermarked LEFT-OUTER stream-stream join == batch left join.
 
     Outer-null rows emit only when the GLOBAL watermark (the min across
@@ -590,17 +518,13 @@ def test_stream_stream_interval_left_outer_equals_batch(spark, event_dir):
     """
     import time
 
-    import pyspark.sql.functions as F
-
     from dsci551_edfs_spark.streaming.windows import (
         interval_join,
         stream_from_parquet,
     )
 
     ev = _batch(spark, event_dir)
-    d = tempfile.mkdtemp(dir=SCRATCH)
-    out = tempfile.mkdtemp(dir=SCRATCH)
-    ckpt = tempfile.mkdtemp(dir=SCRATCH)
+    d, out, ckpt = _dirs(tmp_path, "feed", "out", "ckpt")
 
     # ts-ordered delivery: quartile files with strictly increasing mtime
     bounds = [
@@ -684,357 +608,3 @@ def test_stream_stream_interval_left_outer_equals_batch(spark, event_dir):
     # the outer rows are the point: some purchase must have no prior view
     assert any(v is None for _, v in bset)
     assert any(v is not None for _, v in bset)
-
-
-def _protobuf_available():
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _protobuf_available(),
-    reason="PERMANENT in this container: transformWithState wiring needs "
-    "google.protobuf (state-server protocol); no module on disk and no "
-    "pypi route (verified round 12 — see .claude/skills/verify/SKILL.md). "
-    "The SessionAssembler state machine is covered dependency-free below",
-)
-def test_tws_sessionization_equals_batch(spark, event_dir):
-    """transformWithStateInPandas session assembler == batch
-    gaps-and-islands sessions. Event-time timers close quiet sessions:
-    the ts-ordered feed advances the watermark monotonically, the
-    far-future flush event (user -1) pushes it past every real session's
-    close time, and the checkpoint restart fires the tail timers."""
-    import time
-
-    import pyspark.sql.functions as F
-
-    from dsci551_edfs_spark.streaming.tws_sessions import (
-        sessions_batch,
-        sessions_stream,
-    )
-    from dsci551_edfs_spark.streaming.windows import stream_from_parquet
-
-    ev = _batch(spark, event_dir)
-    d = tempfile.mkdtemp(dir=SCRATCH)
-    out = tempfile.mkdtemp(dir=SCRATCH)
-    ckpt = tempfile.mkdtemp(dir=SCRATCH)
-
-    bounds = [
-        r["p"]
-        for r in ev.selectExpr(
-            "explode(percentile(cast(ts AS BIGINT), array(0.25, 0.5, 0.75))) AS p"
-        ).collect()
-    ]
-    ts_s = F.col("ts").cast("long")
-    for a, b in zip([None] + bounds, bounds + [None]):
-        part = ev
-        if a is not None:
-            part = part.filter(ts_s > a)
-        if b is not None:
-            part = part.filter(ts_s <= b)
-        part.coalesce(1).write.mode("append").parquet(d)
-        time.sleep(1.1)
-    flush = ev.orderBy(F.col("ts").desc()).limit(1).select(
-        F.lit(-999).cast(ev.schema["event_id"].dataType).alias("event_id"),
-        F.lit(-1).cast(ev.schema["user_id"].dataType).alias("user_id"),
-        F.lit("view").alias("event_type"),
-        (F.col("ts") + F.expr("INTERVAL 2 HOURS")).alias("ts"),
-        *[
-            F.lit(None).cast(ev.schema[c].dataType).alias(c)
-            for c in ev.columns
-            if c not in ("event_id", "user_id", "event_type", "ts")
-        ],
-    ).select(*ev.columns)
-    flush.coalesce(1).write.mode("append").parquet(d)
-
-    schema = spark.read.parquet(d).schema
-
-    def run_once():
-        stream = sessions_stream(stream_from_parquet(spark, d, schema, max_files=1))
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    run_once()
-    run_once()  # restart: the no-data batch fires the tail timers
-
-    batch = sessions_batch(spark.read.parquet(d)).filter("user_id >= 0")
-    stream_res = spark.read.parquet(out).filter("user_id >= 0")
-    bset, sset = _as_sets(batch), _as_sets(stream_res)
-    assert bset == sset
-    assert len(bset) > 0
-    # multi-event sessions must exist, or the fold is untested
-    assert any(n > 1 for _, _, _, n in bset)
-
-
-class _FakeListState:
-    def __init__(self):
-        self.v = []
-
-    def exists(self):
-        return bool(self.v)
-
-    def get(self):
-        return iter(self.v)
-
-    def put(self, rows):
-        self.v = [tuple(r) for r in rows]
-
-    def clear(self):
-        self.v = []
-
-
-class _FakeHandle:
-    def __init__(self):
-        self.states = {}
-        self.timers = []
-
-    def getListState(self, name, schema, ttlDurationMs=None):
-        return self.states.setdefault(name, _FakeListState())
-
-    def registerTimer(self, ms):
-        self.timers.append(ms)
-
-
-class _FakeTimerInfo:
-    def __init__(self, ms):
-        self.ms = ms
-
-    def getExpiryTimeInMs(self):
-        return self.ms
-
-
-class _FakeTimerValues:
-    """The runtime hands the CURRENT watermark to the timer callback;
-    the fake fires a timer exactly when the watermark reaches it."""
-
-    def __init__(self, wm_ms):
-        self.wm_ms = wm_ms
-
-    def getCurrentWatermarkInMs(self):
-        return self.wm_ms
-
-
-def _drive_assembler(events_by_user, batches, gap_s=1800):
-    """Run SessionAssembler exactly the way the operator would: per-key
-    batches of pandas frames in event-time batch order, then fire every
-    registered timer in ms order against a final watermark at +inf."""
-    import pandas as pd
-
-    from dsci551_edfs_spark.streaming.tws_sessions import SessionAssembler
-
-    out = []
-    procs = {}
-    for uid in events_by_user:
-        p = SessionAssembler(gap_s)
-        h = _FakeHandle()
-        p.init(h)
-        p._h = h
-        procs[uid] = p
-    for lo, hi in batches:
-        for uid, ts in events_by_user.items():
-            batch_ts = [t for t in ts if lo <= t < hi]
-            if not batch_ts:
-                continue
-            pdf = pd.DataFrame(
-                {"ts": pd.to_datetime(pd.Series(batch_ts), unit="s")}
-            )
-            for df in procs[uid].handleInputRows((uid,), iter([pdf]), None):
-                out.extend(df.itertuples(index=False, name=None))
-    # end of stream: watermark → ∞, fire timers in order (stale ones
-    # first, each seeing the watermark that expired it)
-    for uid, p in procs.items():
-        for ms in sorted(set(p._h.timers)):
-            for df in p.handleExpiredTimer(
-                (uid,), _FakeTimerValues(2**62), _FakeTimerInfo(ms)
-            ):
-                out.extend(df.itertuples(index=False, name=None))
-    return set(out)
-
-
-def test_tws_state_machine_equals_batch_sessions(spark, event_dir):
-    """SessionAssembler (driven directly, no state server) == the batch
-    gaps-and-islands sessions — covers the fold, in-batch closure,
-    cross-batch continuation, timer closure, and the stale-timer guard."""
-    import pyspark.sql.functions as F
-
-    from dsci551_edfs_spark.streaming.tws_sessions import sessions_batch
-
-    ev = _batch(spark, event_dir)
-    rows = ev.select("user_id", F.col("ts").cast("long").alias("t")).collect()
-    by_user = {}
-    for r in rows:
-        by_user.setdefault(r["user_id"], []).append(r["t"])
-    for ts in by_user.values():
-        ts.sort()
-    tmin = min(t for ts in by_user.values() for t in ts)
-    tmax = max(t for ts in by_user.values() for t in ts) + 1
-    step = (tmax - tmin) // 5 + 1
-    batches = [(tmin + i * step, tmin + (i + 1) * step) for i in range(6)]
-    got = _drive_assembler(by_user, batches)
-    expect = _as_sets(sessions_batch(ev))
-    assert got == expect
-    assert any(n > 1 for _, _, _, n in expect)
-
-
-def test_tws_stale_timer_does_not_split_session(spark):
-    """A timer registered for an earlier quiet period must NOT close a
-    session that later activity extended (the stale-timer guard)."""
-    import pandas as pd
-
-    from dsci551_edfs_spark.streaming.tws_sessions import SessionAssembler
-
-    p = SessionAssembler(gap_s=100)
-    h = _FakeHandle()
-    p.init(h)
-    mk = lambda ts: pd.DataFrame(  # noqa: E731
-        {"ts": pd.to_datetime(pd.Series(ts), unit="s")}
-    )
-    out = list(p.handleInputRows((7,), iter([mk([1000])]), None))
-    out += list(p.handleInputRows((7,), iter([mk([1050])]), None))
-    assert out == []  # still one open session
-    assert h.timers == [(1000 + 100) * 1000, (1050 + 100) * 1000]
-    # the FIRST (stale) timer fires — the watermark has only reached its
-    # own expiry, which the extended session outlives: must be a no-op
-    assert (
-        list(
-            p.handleExpiredTimer(
-                (7,), _FakeTimerValues(h.timers[0]), _FakeTimerInfo(h.timers[0])
-            )
-        )
-        == []
-    )
-    assert h.states["open_sessions"].exists()
-    # the true close timer fires: one session, both events
-    res = list(
-        p.handleExpiredTimer(
-            (7,), _FakeTimerValues(h.timers[1]), _FakeTimerInfo(h.timers[1])
-        )
-    )
-    assert len(res) == 1
-    assert list(res[0].itertuples(index=False, name=None)) == [(7, 1000, 1050, 2)]
-    assert not h.states["open_sessions"].exists()
-
-
-def test_tws_out_of_order_within_watermark(spark):
-    """The ADVICE round-6 scenario: cross-batch out-of-order events that
-    a value-state assembler mangled (premature emission; session end
-    moving backwards). A late-but-within-watermark event must EXTEND the
-    island it falls before, and an event landing between two open
-    islands must BRIDGE them into one session."""
-    import pandas as pd
-
-    from dsci551_edfs_spark.streaming.tws_sessions import SessionAssembler
-
-    mk = lambda ts: pd.DataFrame(  # noqa: E731
-        {"ts": pd.to_datetime(pd.Series(ts), unit="s")}
-    )
-    p = SessionAssembler(gap_s=100)
-    h = _FakeHandle()
-    p.init(h)
-    # batch 1: two islands (watermark lags, so both stay open)
-    assert list(p.handleInputRows((9,), iter([mk([1000, 1280])]), None)) == []
-    assert sorted(h.states["open_sessions"].v) == [
-        (1000, 1000, 1),
-        (1280, 1280, 1),
-    ]
-    # batch 2, out of order: 1090 extends island 1 forward, 950 extends
-    # it backward, 1190 bridges both islands into one session
-    assert (
-        list(p.handleInputRows((9,), iter([mk([1090, 950, 1190])]), None))
-        == []
-    )
-    assert h.states["open_sessions"].v == [(950, 1280, 5)]
-    # watermark finally passes end+gap: exactly one merged session
-    res = list(
-        p.handleExpiredTimer(
-            (9,), _FakeTimerValues((1280 + 100) * 1000), _FakeTimerInfo(0)
-        )
-    )
-    assert len(res) == 1
-    assert list(res[0].itertuples(index=False, name=None)) == [
-        (9, 950, 1280, 5)
-    ]
-    assert not h.states["open_sessions"].exists()
-
-
-def test_dedup_ingest_from_edfs_stream_source(spark, sf_dir):
-    """End-to-end crawl shape: shards LAND IN AN EDFS LAYOUT, the
-    format('edfs') streaming source tails them, and the near-dup gate
-    filters each micro-batch against the accumulating corpus — the two
-    round-6 capabilities composed. Same dup/survivor semantics as the
-    parquet-feed test."""
-    import tempfile
-    import time
-
-    import pyspark.sql.functions as F
-
-    from dsci551_edfs_spark.pipeline import dedup as DD
-    from dsci551_edfs_spark.sources.edfs_datasource import register_edfs
-    from dsci551_edfs_spark.sources.ingest import put_dataframe
-    from dsci551_edfs_spark.streaming.ingest_dedup import dedup_ingest_stream
-
-    seed = load_table(spark, sf_dir, "documents").select("doc_id", "text").limit(50)
-    base_text = {r["doc_id"]: r["text"] for r in seed.limit(1).collect()}
-    seed_id = next(iter(base_text))
-
-    os.makedirs(SCRATCH, exist_ok=True)
-    layout = tempfile.mkdtemp(dir=SCRATCH)
-    base = tempfile.mkdtemp(dir=SCRATCH)
-
-    b1 = [
-        (9_100_001, "novel essay about stream sources " * 8),
-        (9_100_002, base_text[seed_id] + " appended"),  # dup of seed
-    ]
-    b2 = [
-        (9_100_003, "novel essay about stream sources " * 8 + " tail"),
-        (9_100_004, "fresh second shard body " * 8),
-    ]
-    # shard 1 creates the layout; shard 2 lands later (append, later mtime)
-    put_dataframe(
-        spark.createDataFrame(b1, "doc_id long, text string"), layout, 1
-    )
-    time.sleep(1.1)
-    # append into the existing range partition dir like a later crawl drop
-    import glob
-
-    pdir = glob.glob(os.path.join(layout, "__edfs_part__=*"))[0]
-    spark.createDataFrame(b2, "doc_id long, text string").withColumn(
-        "index", F.lit(999).cast("long")
-    ).select("doc_id", "text", "index").coalesce(1).write.mode(
-        "append"
-    ).parquet(pdir)
-
-    register_edfs(spark)
-    feed = (
-        spark.readStream.format("edfs")
-        .option("path", layout)
-        .load()
-        .select("doc_id", "text")
-    )
-    final = dedup_ingest_stream(
-        spark, seed, feed_dir="", base_dir=base, threshold=0.5, stream_df=feed
-    )
-    got = {r["doc_id"] for r in final.collect()}
-
-    ref = seed
-    for rows in [b1, b2]:
-        shard = spark.createDataFrame(rows, "doc_id long, text string")
-        ref = ref.unionByName(
-            DD.incremental_minhash_dedup(shard, ref, threshold=0.5)
-        )
-    want = {r["doc_id"] for r in ref.collect()}
-    assert got == want
-    assert 9_100_001 in got and 9_100_004 in got
-    assert 9_100_002 not in got
-    assert 9_100_003 not in got

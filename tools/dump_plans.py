@@ -28,6 +28,7 @@ def main() -> None:
     names = sys.argv[2:] or list(bench.HEADLINE)
 
     from dsci551_edfs_spark import get_spark
+    from dsci551_edfs_spark.plans.debug import explain_str
     from dsci551_edfs_spark.queries import QUERIES, warm_memos
 
     spark = get_spark("edfs-plan-dump")
@@ -36,10 +37,7 @@ def main() -> None:
 
     os.makedirs(OUT_DIR, exist_ok=True)
     for name in names:
-        df = QUERIES[name](spark, SF_DIR)
-        txt = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-            df._jdf.queryExecution(), "formatted"
-        )
+        txt = explain_str(QUERIES[name](spark, SF_DIR))
         path = os.path.join(OUT_DIR, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(txt)
